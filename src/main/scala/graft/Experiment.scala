@@ -43,7 +43,10 @@ import graft.similarity.Similarity
   * same split a cluster job would see. Eval runs off the written parquet
   * (Blocks.read), not the live plan, so the blocking pipeline executes
   * exactly once end-to-end — the reference does the same round-trip
-  * (experiment.py:571-575).
+  * (experiment.py:571-575). `eval` is one Spark action
+  * ([[graft.eval.Evaluation.score]]): the written blocking's candidate
+  * pairs, a `--compare` blocking (which runs lazily inside it, so
+  * `eval` pays for its assignment) and gold all meet in one group-by.
   */
 object Experiment {
 
@@ -479,35 +482,31 @@ object Experiment {
       dataset: BlockingDataset, leftLen: Long, rightLen: Long): String =
     dataset.gold match {
       case Some(g) =>
-        val r = Evaluation.evaluate(persisted, g, leftLen, rightLen)
-        val metrics = r.toMap.toSeq.sortBy(_._1)
-          .map { case (k, v) => s""""$k":${fmtD(v)}""" }.mkString(",")
-        // optional comparison: one name → A10 pairwise Dice of TP sets
+        // optional comparison, scored in the same action as this run's
+        // blocking: one name → A10 pairwise Dice of TP sets
         // (eval.py:329-331); several comma-separated names → the N-way
         // report (eval.py:457-521 multiple_block_comparison as the
         // per-blocker report form): this run's blocking plus each named
         // blocker, metrics + dice-vs-best + joined-h3r improvement.
-        val dice = c.compare.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).collect {
-          case Seq(name) =>
-            val other = blockerFor(c.copy(blocker = name)).assign(
-              dataset.left, dataset.right, dataset.leftRel, dataset.rightRel)
-            s""","compare_blocker":"$name","dice_tp":${
-              fmtD(Evaluation.diceOfTruePositives(persisted, other, g))}"""
-          case names if names.size > 1 =>
-            val others = names.map { n =>
-              n -> blockerFor(c.copy(blocker = n)).assign(
-                dataset.left, dataset.right, dataset.leftRel, dataset.rightRel)
-            }
+        def assign(name: String) = blockerFor(c.copy(blocker = name)).assign(
+          dataset.left, dataset.right, dataset.leftRel, dataset.rightRel)
+        val (r, dice) = c.compare.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq) match {
+          case Some(Seq(name)) =>
+            val s = Evaluation.score(Seq(persisted), Seq(assign(name)), g)
+            (s.eval(0, leftLen, rightLen),
+              s""","compare_blocker":"$name","dice_tp":${fmtD(s.dice(0, 1))}""")
+          case Some(names) if names.size > 1 =>
             // primary blocking first; disambiguate a compare name that
             // collides with it (or with an earlier duplicate)
             val seen = scala.collection.mutable.Set(c.blocker)
-            val labeled = (c.blocker -> persisted) +: others.map { case (n, b) =>
+            val labeled = (c.blocker -> persisted) +: names.map { n =>
               var label = n; var i = 1
               while (seen(label)) { i += 1; label = s"${n}_$i" }
-              seen += label; label -> b
+              seen += label; label -> assign(n)
             }
-            val report = Evaluation.comparisonReport(
-              dataset.left.df.sparkSession, labeled, g, leftLen, rightLen)
+            val s = Evaluation.score(labeled.map(_._2), Nil, g)
+            val report = Evaluation.scoredReport(
+              dataset.left.df.sparkSession, labeled.map(_._1), s, leftLen, rightLen)
             val rows = report.collect().map { r =>
               s"""{"blocker":${renderJsonScalar(r.getString(0))},""" +
                 s""""is_best":${r.getBoolean(1)},"tp":${r.getLong(2)},"pairs":${r.getLong(3)},""" +
@@ -516,8 +515,11 @@ object Experiment {
                 s""""h3r":${fmtD(r.getDouble(8))},"dice_vs_best":${fmtD(r.getDouble(9))},""" +
                 s""""improvement_h3r":${fmtD(r.getDouble(10))}}"""
             }
-            s""","comparison":${rows.mkString("[", ",", "]")}"""
-        }.getOrElse("")
+            (s.eval(0, leftLen, rightLen), s""","comparison":${rows.mkString("[", ",", "]")}""")
+          case _ => (Evaluation.evaluate(persisted, g, leftLen, rightLen), "")
+        }
+        val metrics = r.toMap.toSeq.sortBy(_._1)
+          .map { case (k, v) => s""""$k":${fmtD(v)}""" }.mkString(",")
         s""""tp":${r.truePositive},"fp":${r.falsePositive},"fn":${r.falseNegative},""" +
           s""""pairs":${r.compWithBlocking},"comp_without_blocking":${r.compWithoutBlocking},$metrics$dice"""
       case None => s""""pairs":${persisted.distinctPairs.count()}"""

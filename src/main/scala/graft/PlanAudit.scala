@@ -23,8 +23,6 @@ object PlanAudit {
   private val allow: Map[String, String] = Map(
     "ann_brute_topk" -> "documented exact baseline: brute-force cosine over a broadcast query side",
     "dd_embedding_neardup" -> "documented exact O(n²) baseline (the _lsh variant is the scale path)",
-    "a8_eval_metrics" -> "one-row totals frame joined to one-row TP counts",
-    "a10_dice_tp" -> "one-row scalar assembly after distributed TP set algebra",
     "w5_sinkhorn_rerank" -> "per-block dense re-rank over broadcast-small candidate lists",
     "m13_csls_knn" -> "neighborhood-statistics join over the bounded candidate list",
     "m13_nicdm_knn" -> "neighborhood-statistics join over the bounded candidate list",

@@ -27,13 +27,11 @@ object Gold {
   }
 
   /** Bucketed sink for gold pair tables (the [[Blocks.writeBucketed]]
-    * treatment): bucketed + sorted on BOTH pair columns — the TP join
-    * ([[graft.eval.Evaluation]]) keys on the full pair, and Spark only
-    * consumes a bucket spec when the join keys match the bucket keys
-    * exactly (subset co-partitioning is off by default). Candidate-pair
-    * tables written with the same bucket count join with no exchange and
-    * no sort. [[Evaluation]] broadcasts gold when it is small (the usual
-    * case); this is the path for gold standards too large to
+    * treatment): bucketed + sorted on BOTH pair columns — a join keyed on
+    * the full pair consumes the bucket spec only when the join keys match
+    * the bucket keys exactly (subset co-partitioning is off by default).
+    * Candidate-pair tables written with the same bucket count join with
+    * no exchange and no sort: the path for gold standards too large to
     * broadcast. */
   def writeBucketed(
       pairs: DataFrame, table: String, path: String, buckets: Int): Unit = {

@@ -7,9 +7,10 @@ import graft.functions.Num
 
 /** Blocking-quality metrics (reference src/klinker/eval.py:144-326).
   *
-  * Fully distributed: candidate pairs stay a DataFrame (double explode +
-  * distinct), the gold standard is broadcast into the TP join — the
-  * reference's own `spark_eval.py:6-36` formulation, never the
+  * Fully distributed: candidate pairs stay a DataFrame (double explode),
+  * and one group-by over the pairs of every scored blocking plus the gold
+  * rows is both the distinct and the gold match ([[Evaluation.score]]) —
+  * the set algebra of the reference's `spark_eval.py:6-36`, never the
   * driver-collecting `all_pairs` path (eval.py:201-215).
   */
 final case class EvalResult(
@@ -44,69 +45,99 @@ final case class EvalResult(
 
 object Evaluation {
 
-  /** gold: DataFrame(left_id, right_id) by position.
-    *
-    * Broadcast contract: by default the gold standard is BROADCAST into
-    * the TP join — gold is benchmark-sized (labeled match pairs, the
-    * reference's contract throughout eval.py) and broadcasting keeps the
-    * candidate side shuffle-free no matter how many pairs blocking
-    * generates. If gold ever outgrows the driver/executor broadcast
-    * budget (pathological: machine-generated gold at corpus scale), pass
-    * `broadcastGold = false` for a plain shuffle hash join — identical
-    * metrics (spec-asserted), one extra exchange on the candidate side. */
-  def evaluate(blocks: Blocks, gold: DataFrame, leftLen: Long, rightLen: Long,
-               broadcastGold: Boolean = true): EvalResult =
-    evaluateMany(Seq("_" -> blocks), gold, leftLen, rightLen, broadcastGold)("_")
+  // Blockings one scoring action can take: mask bits 0 until 62.
+  private val MaxBlockings = 62
+  // A gold row whose ids are both non-null: the only gold a pair can match.
+  private val GoldBit = 1L << 62
+  // A gold row with a null id counts in |gold| but, as under an equi-join,
+  // is never a true positive; its own bit keeps a candidate pair with the
+  // same null id from turning it into one.
+  private val NullGoldBit = 1L << 63
 
-  /** Reserved `_blocker` tag for the gold-count branch of the fused
-    * counting action ([[evaluateMany]]). */
-  private val GoldTag = "__gold"
+  /** The counts of one [[score]] action: the number of distinct
+    * `(left_id, right_id)` pairs per membership mask, where bit i marks
+    * the pairs of blocking i. Blocking i is one of the `evaluated` when
+    * i < `evaluated`; only those have a known candidate-pair count. */
+  private[graft] final class Scores private[Evaluation] (masks: Seq[(Long, Long)], evaluated: Int) {
+    private def count(bits: Long): Long =
+      masks.iterator.collect { case (m, n) if (m & bits) == bits => n }.sum
 
-  /** Evaluate N blockings against one gold in ONE Spark action: each
-    * blocking's distinct candidate pairs are tagged with its name,
-    * left-joined against the (broadcast) gold flags, unioned with a
-    * gold-count branch, and rolled up per tag — so N evaluations plus
-    * the gold cardinality cost one job instead of 2N+... separate
-    * actions (the round-18 action-fusion lever; identical counts, hence
-    * identical metrics, to N [[evaluate]] calls by construction: each
-    * branch is the exact per-blocker plan the single-blocker form ran,
-    * and a blocker whose candidate stream is empty simply contributes
-    * no group row → (pairs 0, tp 0), the same row an ungrouped agg over
-    * an empty frame produced). */
-  def evaluateMany(blocks: Seq[(String, Blocks)], gold: DataFrame,
-                   leftLen: Long, rightLen: Long,
-                   broadcastGold: Boolean = true): Map[String, EvalResult] = {
-    require(blocks.nonEmpty, "evaluateMany needs at least one blocking")
-    require(blocks.map(_._1).distinct.size == blocks.size, "duplicate blocker names")
-    require(!blocks.exists(_._1 == GoldTag), s"blocker name '$GoldTag' is reserved")
+    /** |gold|: distinct gold rows, null ids included. */
+    val gold: Long = count(GoldBit) + count(NullGoldBit)
+
+    /** |TP_i|. */
+    def tp(i: Int): Long = count(GoldBit | 1L << i)
+
+    /** |TP_i ∩ TP_j|. */
+    def tpBoth(i: Int, j: Int): Long = count(GoldBit | 1L << i | 1L << j)
+
+    /** |TP_i ∪ TP_j|. */
+    def tpEither(i: Int, j: Int): Long = tp(i) + tp(j) - tpBoth(i, j)
+
+    /** Sørensen-Dice coefficient of TP_i and TP_j (eval.py:329-331). */
+    def dice(i: Int, j: Int): Double = {
+      val (a, b) = (tp(i), tp(j))
+      if (a + b == 0) 0.0 else 2.0 * tpBoth(i, j) / (a + b)
+    }
+
+    /** The metrics of evaluated blocking i. */
+    def eval(i: Int, leftLen: Long, rightLen: Long): EvalResult = {
+      require(i < evaluated, s"blocking $i was scored by its true positives only")
+      val (pairs, t) = (count(1L << i), tp(i))
+      EvalResult(t, pairs - t, gold - t, pairs, leftLen * rightLen)
+    }
+
+    /** The joint evaluation of blockings i and j ([[fromJoinedEvals]]). */
+    def joined(i: Int, j: Int, leftLen: Long, rightLen: Long): EvalResult =
+      fromJoinedEvals(eval(i, leftLen, rightLen), eval(j, leftLen, rightLen), tpEither(i, j))
+  }
+
+  /** gold: DataFrame(left_id, right_id) by position, ids cast to string. */
+  private def goldPairs(gold: DataFrame): DataFrame = {
     val Array(gl, gr) = gold.columns.take(2)
-    // Gold is a SET (eval.py gold_pair_set): dedup before the join, else
-    // duplicate gold rows multiply candidate rows through the left join
-    // and inflate pairs/tp.
-    val g = gold.select(col(gl).cast("string").as("left_id"),
-                        col(gr).cast("string").as("right_id")).distinct()
-    val flagged = g.withColumn("_g", lit(1))
-    val gb = if (broadcastGold) broadcast(flagged) else flagged
-    val tagged = blocks.map { case (n, b) =>
-      b.distinctPairs
-        .join(gb, Seq("left_id", "right_id"), "left")
-        .select(lit(n).as("_blocker"), col("_g"))
-    }.reduce(_ unionByName _)
-      // gold-count branch: pairs == tp == |gold| for the reserved tag
-      .unionByName(g.select(lit(GoldTag).as("_blocker"), lit(1).as("_g")))
-    val counts = tagged.groupBy("_blocker")
-      .agg(count(lit(1)).as("pairs"), count(col("_g")).as("tp"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val goldCount = counts.get(GoldTag).map(_._1).getOrElse(0L)
-    blocks.map { case (n, _) =>
-      val (pairs, tp) = counts.getOrElse(n, (0L, 0L))
-      n -> EvalResult(
-        truePositive = tp,
-        falsePositive = pairs - tp,
-        falseNegative = goldCount - tp,
-        compWithBlocking = pairs,
-        compWithoutBlocking = leftLen * rightLen)
-    }.toMap
+    gold.select(col(gl).cast("string").as("left_id"), col(gr).cast("string").as("right_id"))
+  }
+
+  /** Score blockings against gold in ONE Spark action. Blockings in
+    * `evaluated` (indices 0 until its size) enter by their candidate
+    * pairs ([[Blocks.pairs]]); blockings in `compared` (the indices after)
+    * enter only by their true positives, the O(Σ|L| + Σ|R|) stream of
+    * [[truePositivePairs]], so they have no pair count. Each row carries
+    * its blocking's bit and each gold row a top bit; one group-by on the
+    * pair ORs the bits together, and that group-by is the distinct (gold
+    * is a set, as eval.py's gold_pair_set). A count per mask then yields
+    * every pair count, |TP_i|, |TP_i ∩ TP_j| and |gold|, with no join
+    * against gold for the evaluated blockings. */
+  private[graft] def score(evaluated: Seq[Blocks], compared: Seq[Blocks], gold: DataFrame): Scores = {
+    val n = evaluated.size + compared.size
+    require(n > 0, "scoring needs at least one blocking")
+    require(n <= MaxBlockings, s"one scoring action takes at most $MaxBlockings blockings, got $n")
+    val g = goldPairs(gold)
+    val goldRows = g.select(col("left_id"), col("right_id"),
+      when(col("left_id").isNull || col("right_id").isNull, lit(NullGoldBit))
+        .otherwise(lit(GoldBit)).as("_m"))
+    val streams = evaluated.map(_.pairs) ++ compared.map(tpStream(_, g, broadcastGold = true))
+    val rows = streams.zipWithIndex.foldLeft(goldRows) { case (acc, (p, i)) =>
+      acc.unionByName(p.select(col("left_id").cast("string").as("left_id"),
+        col("right_id").cast("string").as("right_id"), lit(1L << i).as("_m")))
+    }
+    val masks = rows.groupBy("left_id", "right_id").agg(bit_or(col("_m")).as("_m"))
+      .groupBy("_m").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    new Scores(masks, evaluated.size)
+  }
+
+  /** Blocking-quality metrics of one blocking: one [[score]] action. */
+  def evaluate(blocks: Blocks, gold: DataFrame, leftLen: Long, rightLen: Long): EvalResult =
+    score(Seq(blocks), Nil, gold).eval(0, leftLen, rightLen)
+
+  /** Evaluate N blockings against one gold in ONE Spark action ([[score]]);
+    * identical to N [[evaluate]] calls. */
+  def evaluateMany(blocks: Seq[(String, Blocks)], gold: DataFrame,
+                   leftLen: Long, rightLen: Long): Map[String, EvalResult] = {
+    require(blocks.map(_._1).distinct.size == blocks.size, "duplicate blocker names")
+    val s = score(blocks.map(_._2), Nil, gold)
+    blocks.zipWithIndex.map { case ((n, _), i) => n -> s.eval(i, leftLen, rightLen) }.toMap
   }
 
   /** The metrics as a one-row DataFrame (rounded) — the oracle-checkable
@@ -142,14 +173,21 @@ object Evaluation {
     * merely shares the key. (xxhash64 over the full row is deterministic —
     * unlike monotonically_increasing_id — so the two explode scans agree
     * without a persist; identical duplicate rows collide harmlessly since
-    * their pair sets are identical and the result is distinct'd.) */
+    * their pair sets are identical and the result is distinct'd.)
+    *
+    * Broadcast contract: by default gold is BROADCAST into the join — gold
+    * is benchmark-sized (labeled match pairs, the reference's contract
+    * throughout eval.py), so the explode side stays shuffle-free however
+    * large the blocks are. If gold ever outgrows the broadcast budget,
+    * pass `broadcastGold = false` for a plain shuffle join: the same pairs
+    * (spec-asserted), one more exchange on the explode side. */
   def truePositivePairs(blocks: Blocks, gold: DataFrame,
-                        broadcastGold: Boolean = true): DataFrame = {
-    val Array(gl, gr) = gold.columns.take(2)
-    val gp = gold.select(col(gl).cast("string").as("left_id"),
-                         col(gr).cast("string").as("right_id"))
-    // same broadcast contract as [[evaluate]]
-    val g = if (broadcastGold) broadcast(gp) else gp
+                        broadcastGold: Boolean = true): DataFrame =
+    tpStream(blocks, goldPairs(gold), broadcastGold).distinct()
+
+  /** [[truePositivePairs]] before its distinct, over normalized gold. */
+  private def tpStream(blocks: Blocks, goldPairs: DataFrame, broadcastGold: Boolean): DataFrame = {
+    val g = if (broadcastGold) broadcast(goldPairs) else goldPairs
     val rows = blocks.df.select(
       xxhash64(col(Blocks.KeyCol), col(Blocks.LeftCol), col(Blocks.RightCol)).as("_row"),
       col(Blocks.LeftCol), col(Blocks.RightCol))
@@ -157,28 +195,14 @@ object Evaluation {
     val er = rows.select(col("_row"), explode(col(Blocks.RightCol)).as("right_id"))
     el.join(g, Seq("left_id"))
       .join(er, Seq("_row", "right_id"), "left_semi")
-      .select("left_id", "right_id").distinct()
+      .select("left_id", "right_id")
   }
 
   /** Sørensen-Dice coefficient of two blockings' true-positive sets
-    * (eval.py:329-331) — distributed set algebra, no driver sets. All
-    * three scalars (|A|, |B|, |A∩B|) come from ONE full-outer join with
-    * presence flags in a single action, so each TP plan (a full
-    * explode+join per blocking) is evaluated exactly once — no persists,
-    * no triple execution. TP frames are distinct, so the outer join is
-    * key-unique per side and the flag sums are exact set cardinalities. */
-  def diceOfTruePositives(a: Blocks, b: Blocks, gold: DataFrame): Double = {
-    val tpA = truePositivePairs(a, gold).withColumn("_a", lit(1L))
-    val tpB = truePositivePairs(b, gold).withColumn("_b", lit(1L))
-    val r = tpA.join(tpB, Seq("left_id", "right_id"), "full_outer")
-      .agg(
-        count(col("_a")).as("na"),
-        count(col("_b")).as("nb"),
-        count(when(col("_a").isNotNull && col("_b").isNotNull, 1)).as("ni"))
-      .head()
-    val (na, nb, ni) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    if (na + nb == 0) 0.0 else 2.0 * ni / (na + nb)
-  }
+    * (eval.py:329-331) — distributed set algebra, no driver sets: one
+    * [[score]] action over the two true-positive streams. */
+  def diceOfTruePositives(a: Blocks, b: Blocks, gold: DataFrame): Double =
+    score(Nil, Seq(a, b), gold).dice(0, 1)
 
   /** Joint evaluation of two blockings WITHOUT re-blocking — the
     * reference's `Evaluation.from_joined_evals` (eval.py:262-279): the
@@ -209,72 +233,15 @@ object Evaluation {
       compWithoutBlocking = a.compWithoutBlocking)
   }
 
-  /** |TP_a ∪ TP_b| — one union-distinct count over the two TP plans. */
+  /** |TP_a ∪ TP_b| — one [[score]] action over the two TP streams. */
   def jointTruePositiveCount(a: Blocks, b: Blocks, gold: DataFrame): Long =
-    truePositivePairs(a, gold).unionByName(truePositivePairs(b, gold))
-      .distinct().count()
+    score(Nil, Seq(a, b), gold).tpEither(0, 1)
 
   /** End-to-end joint evaluation of two blockings in ONE Spark action:
-    * the two per-blocker counting branches of [[evaluateMany]] plus a
-    * third tagged branch carrying |TP_a ∪ TP_b| (the distinct TP union,
-    * built from the shuffle-free [[truePositivePairs]] plans), rolled up
-    * per tag in one job — vs. the former two evals + two gold counts +
-    * one union count (five actions). Counts, and hence the joined
-    * metrics, are identical by construction. */
+    * both evaluations and |TP_a ∪ TP_b| come from one [[score]]. */
   def joinedEvaluate(a: Blocks, b: Blocks, gold: DataFrame,
-                     leftLen: Long, rightLen: Long): EvalResult = {
-    val JointTag = "__joint"
-    val Array(gl, gr) = gold.columns.take(2)
-    val g = gold.select(col(gl).cast("string").as("left_id"),
-                        col(gr).cast("string").as("right_id")).distinct()
-    val flagged = broadcast(g.withColumn("_g", lit(1)))
-    def candBranch(n: String, b: Blocks) =
-      b.distinctPairs
-        .join(flagged, Seq("left_id", "right_id"), "left")
-        .select(lit(n).as("_blocker"), col("_g"))
-    val jointBranch = truePositivePairs(a, gold)
-      .unionByName(truePositivePairs(b, gold)).distinct()
-      .select(lit(JointTag).as("_blocker"), lit(1).as("_g"))
-    val counts = candBranch("_a", a)
-      .unionByName(candBranch("_b", b))
-      .unionByName(g.select(lit(GoldTag).as("_blocker"), lit(1).as("_g")))
-      .unionByName(jointBranch)
-      .groupBy("_blocker")
-      .agg(count(lit(1)).as("pairs"), count(col("_g")).as("tp"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val goldCount = counts.get(GoldTag).map(_._1).getOrElse(0L)
-    def res(n: String) = {
-      val (pairs, tp) = counts.getOrElse(n, (0L, 0L))
-      EvalResult(tp, pairs - tp, goldCount - tp, pairs, leftLen * rightLen)
-    }
-    fromJoinedEvals(res("_a"), res("_b"),
-      counts.get(JointTag).map(_._1).getOrElse(0L))
-  }
-
-  /** All pairwise TP-set cardinalities for N blockings in ONE shuffle
-    * chain: tag each blocking's TP pairs, aggregate the set of blockings
-    * per gold pair, expand to ordered blocker pairs, count. Returns
-    * ordered-pair counts; the diagonal (n, n) is |TP_n|. N is small
-    * (blockers under comparison), the gold-pair space is
-    * benchmark-sized — the n² driver map is a few dozen longs, while the
-    * reference holds every TP SET in driver memory (eval.py:150-166).
-    * Each TP plan executes once, vs the reference's n² pairwise set ops
-    * re-touching each set n−1 times. */
-  private def tpIntersections(
-      blocks: Seq[(String, Blocks)], gold: DataFrame): Map[(String, String), Long] = {
-    val tagged = blocks.map { case (name, b) =>
-      truePositivePairs(b, gold)
-        .select(col("left_id"), col("right_id"), lit(name).as("blocker"))
-    }.reduce(_.unionByName(_))
-    tagged.groupBy("left_id", "right_id")
-      .agg(collect_set("blocker").as("bs"))
-      .select(explode(col("bs")).as("a"), col("bs"))
-      .select(col("a"), explode(col("bs")).as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-      .toMap
-  }
+                     leftLen: Long, rightLen: Long): EvalResult =
+    score(Seq(a, b), Nil, gold).joined(0, 1, leftLen, rightLen)
 
   private def pct(joined: Double, base: Double): Double =
     if (base == 0) 0.0 else (joined - base) / base
@@ -284,36 +251,27 @@ object Evaluation {
     * pair of blockings, two rows (base, other) with the percent
     * improvement each metric gains when the base is joined with the
     * other (`(joined − base) / base`), plus the Dice coefficient of
-    * their TP sets. Each blocking is evaluated ONCE and all TP-set
-    * intersections come from one aggregation ([[tpIntersections]]) —
-    * n evaluations + 1 shuffle, vs the reference's n² driver set ops. */
+    * their TP sets. Every evaluation and TP-set intersection comes from
+    * one [[score]] action, vs the reference's n² driver set ops. */
   def multipleBlockComparison(
       spark: SparkSession, blocks: Seq[(String, Blocks)], gold: DataFrame,
       leftLen: Long, rightLen: Long,
       improvementMetrics: Seq[String] = Seq("h3r"),
       scale: Int = 6): DataFrame = {
     require(blocks.map(_._1).distinct.size == blocks.size, "duplicate blocker names")
-    val evals = evaluateMany(blocks, gold, leftLen, rightLen)
-    val inter = tpIntersections(blocks, gold)
-    def tp(n: String) = inter.getOrElse((n, n), 0L)
+    val s = score(blocks.map(_._2), Nil, gold)
     val names = blocks.map(_._1)
     val rows = for {
       i <- names.indices; j <- (i + 1) until names.size
-      (a, b) = (names(i), names(j))
     } yield {
-      val ni = inter.getOrElse((a, b), 0L)
-      val (na, nb) = (tp(a), tp(b))
-      val dice = if (na + nb == 0) 0.0 else 2.0 * ni / (na + nb)
-      val joined = fromJoinedEvals(evals(a), evals(b), na + nb - ni)
-      def improvements(base: String) =
-        improvementMetrics.map(m => pct(joined.metric(m), evals(base).metric(m)))
-      Seq((a, b, improvements(a), dice), (b, a, improvements(b), dice))
+      val joined = s.joined(i, j, leftLen, rightLen)
+      def improvements(base: Int) = improvementMetrics.map(m =>
+        pct(joined.metric(m), s.eval(base, leftLen, rightLen).metric(m)))
+      Seq((names(i), names(j), improvements(i), s.dice(i, j)),
+        (names(j), names(i), improvements(j), s.dice(i, j)))
     }
     import spark.implicits._
-    val flat = rows.flatten.map { case (base, other, ims, dice) =>
-      (base, other, ims, dice)
-    }
-    val df = flat.toDF("base", "other", "_ims", "dice_tp")
+    val df = rows.flatten.toDF("base", "other", "_ims", "dice_tp")
     val imCols = improvementMetrics.zipWithIndex.map { case (m, i) =>
       Num.stableRound(col("_ims").getItem(i), scale).as(s"improvement_$m")
     }
@@ -326,27 +284,28 @@ object Evaluation {
     * plus how it relates to the BEST blocking (highest h3r, ties by
     * name): Dice of TP sets vs best and the percent h3r improvement the
     * best would gain by joining with it (what this blocker ADDS on top
-    * of the best — 0 for the best itself). Same cost shape as
-    * [[multipleBlockComparison]]. */
+    * of the best — 0 for the best itself). One [[score]] action. */
   def comparisonReport(
       spark: SparkSession, blocks: Seq[(String, Blocks)], gold: DataFrame,
       leftLen: Long, rightLen: Long, scale: Int = 6): DataFrame = {
     require(blocks.map(_._1).distinct.size == blocks.size, "duplicate blocker names")
-    val evals = evaluateMany(blocks, gold, leftLen, rightLen)
-    val inter = tpIntersections(blocks, gold)
-    def tp(n: String) = inter.getOrElse((n, n), 0L)
-    val best = blocks.map(_._1).maxBy(n => (evals(n).h3r, n))(
+    scoredReport(spark, blocks.map(_._1), score(blocks.map(_._2), Nil, gold),
+      leftLen, rightLen, scale)
+  }
+
+  /** [[comparisonReport]] over scores already taken: `names(i)` names
+    * evaluated blocking i of `s`. */
+  private[graft] def scoredReport(spark: SparkSession, names: Seq[String], s: Scores,
+                   leftLen: Long, rightLen: Long, scale: Int = 6): DataFrame = {
+    val evals = names.indices.map(s.eval(_, leftLen, rightLen))
+    val best = names.indices.maxBy(i => (evals(i).h3r, names(i)))(
       Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.String.reverse))
-    val rows = blocks.map { case (name, _) =>
-      val e = evals(name)
-      val (na, nb) = (tp(name), tp(best))
-      val ni = if (name == best) na else inter.getOrElse((name, best), 0L)
-      val dice = if (na + nb == 0) 0.0 else 2.0 * ni / (na + nb)
+    val rows = names.indices.map { i =>
+      val e = evals(i)
       val addOnBest =
-        if (name == best) 0.0
-        else pct(fromJoinedEvals(evals(best), e, na + nb - ni).h3r, evals(best).h3r)
-      (name, name == best, e.truePositive, e.compWithBlocking,
-        e.recall, e.precision, e.fMeasure, e.reductionRatio, e.h3r, dice, addOnBest)
+        if (i == best) 0.0 else pct(s.joined(best, i, leftLen, rightLen).h3r, evals(best).h3r)
+      (names(i), i == best, e.truePositive, e.compWithBlocking,
+        e.recall, e.precision, e.fMeasure, e.reductionRatio, e.h3r, s.dice(i, best), addOnBest)
     }
     import spark.implicits._
     rows.toDF("blocker", "is_best", "tp", "pairs", "recall", "precision",

@@ -1335,6 +1335,17 @@ object StreamingOps {
       .as[TokenRecord]
   }
 
+  /** The `SPARK_GRAFT_REPLAY_PARTS` override of [[replayWaves]]' state
+    * partition count: a positive integer. Anything else fails loudly here
+    * instead of surfacing an obscure error (or an invalid partition count)
+    * from deep inside the stream start. */
+  def replayParts(v: String): Int = {
+    val n = v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_REPLAY_PARTS must be an integer, got '$v'"))
+    require(n >= 1, s"SPARK_GRAFT_REPLAY_PARTS must be at least 1, got $n")
+    n
+  }
+
   /** Drive `op` through N deterministic micro-batches (one per wave of
     * a MemoryStream) and return the memory sink's accumulated rows as a
     * BATCH DataFrame — the replay harness the TTL-eviction oracles use
@@ -1369,18 +1380,7 @@ object StreamingOps {
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val derived = math.min(sessionParts,
       math.max(4, waves.map(_.size).sum / 1000))
-    // validated override: clamp to ≥1 and fail loudly on a non-numeric
-    // value instead of surfacing an obscure NumberFormatException (or an
-    // invalid partition count) from deep inside the stream start
-    val parts = sys.env.get("SPARK_GRAFT_REPLAY_PARTS") match {
-      case Some(v) =>
-        val n = try v.trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_REPLAY_PARTS must be an integer, got '$v'")
-        }
-        math.max(1, n)
-      case None => derived
-    }
+    val parts = sys.env.get("SPARK_GRAFT_REPLAY_PARTS").map(replayParts).getOrElse(derived)
     // clone the session so the partition setting cannot leak into the
     // caller's conf (same SparkContext, own SQLConf/catalog) — but carry
     // the caller's MODIFIED runtime confs onto the clone first:
@@ -1388,9 +1388,13 @@ object StreamingOps {
     // conf.set (e.g. a st_ttl_* replay disabling noDataMicroBatches to
     // exercise idle-batch expiry) would otherwise silently not apply to
     // the replay query (ADVICE r18).
+    // The caller's checkpoint location is never carried: a same-named
+    // memory-sink replay would resume its stale state instead of starting
+    // fresh.
     val ss = spark.newSession()
     spark.conf.getAll.foreach { case (k, v) =>
-      if (ss.conf.isModifiable(k) && ss.conf.getOption(k) != Some(v))
+      if (k != "spark.sql.streaming.checkpointLocation" &&
+          ss.conf.isModifiable(k) && ss.conf.getOption(k) != Some(v))
         ss.conf.set(k, v)
     }
     ss.conf.set("spark.sql.shuffle.partitions", parts)

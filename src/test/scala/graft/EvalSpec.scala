@@ -1,6 +1,6 @@
 package graft
 
-import graft.eval.Evaluation
+import graft.eval.{EvalResult, Evaluation}
 
 /** Eval-metric goldens (reference tests/test_eval.py:75-111; BASELINE.md). */
 class EvalSpec extends SparkSpec {
@@ -123,9 +123,6 @@ class EvalSpec extends SparkSpec {
 
   test("shuffle-join gold path returns identical metrics to broadcast") {
     val b = blocksOf(example)
-    val bc = Evaluation.evaluate(b, gold, 8, 7)
-    val sh = Evaluation.evaluate(b, gold, 8, 7, broadcastGold = false)
-    assert(bc == sh)
     val tpBc = Evaluation.truePositivePairs(b, gold).collect().toSet
     val tpSh = Evaluation.truePositivePairs(b, gold, broadcastGold = false).collect().toSet
     assert(tpBc == tpSh && tpBc.nonEmpty)
@@ -143,5 +140,46 @@ class EvalSpec extends SparkSpec {
     // 'no' adds no TPs on top of best but doubles cost → improvement < 0
     assert(rows("no").getDouble(10) < 0.0)
     assert(rows("no").getDouble(9) == 0.0)
+  }
+
+  // Hostile fixture: null ids inside block arrays and in gold, duplicate
+  // gold rows, and a true positive (A:1-B:1) both blockings find. As
+  // under an equi-join against gold, a pair with a null id counts as a
+  // candidate but never as a true positive; |gold| counts distinct gold
+  // rows, null ids included.
+  private lazy val hostileGold = Seq[(String, String)](
+    ("A:1", "B:1"), ("A:1", "B:1"), ("A:2", "B:2"), ("A:3", "B:3"),
+    (null, "B:4"), (null, "B:4"), ("A:5", null)).toDF("l", "r")
+  private def hostileA = blocksOf(Map(
+    "0" -> (Seq("A:1", null), Seq("B:1", "B:4")),
+    "1" -> (Seq("A:2", "A:5"), Seq("B:2", null)),
+    "2" -> (Seq("A:1"), Seq("B:1"))))
+  private def hostileB = blocksOf(Map(
+    "0" -> (Seq("A:1", "A:3"), Seq("B:1", "B:3")),
+    "1" -> (Seq(null), Seq("B:4"))))
+
+  test("hostile inputs: null ids, duplicate gold, a shared true positive") {
+    assert(Evaluation.evaluate(hostileA, hostileGold, 8, 7) == EvalResult(2, 6, 3, 8, 56))
+    assert(Evaluation.evaluate(hostileB, hostileGold, 8, 7) == EvalResult(2, 3, 3, 5, 56))
+    assert(Evaluation.diceOfTruePositives(hostileA, hostileB, hostileGold) == 0.5)
+    assert(Evaluation.jointTruePositiveCount(hostileA, hostileB, hostileGold) == 3)
+    assert(Evaluation.joinedEvaluate(hostileA, hostileB, hostileGold, 8, 7) ==
+      EvalResult(3, 9, 2, 13, 56))
+    val report = Evaluation.comparisonReport(spark,
+      Seq("a" -> hostileA, "b" -> hostileB), hostileGold, 8, 7).collect().map(_.toSeq)
+    assert(report.toSeq == Seq(
+      Seq("a", false, 2L, 8L, 0.4, 0.25, 0.307692, 0.857143, 0.545455, 0.5, 0.211872),
+      Seq("b", true, 2L, 5L, 0.4, 0.4, 0.4, 0.910714, 0.555858, 1.0, 0.0)))
+  }
+
+  test("one scoring action takes at most 62 blockings") {
+    val b = blocksOf(example)
+    val many = (0 until 63).map(i => s"b$i" -> b)
+    intercept[IllegalArgumentException] {
+      Evaluation.evaluateMany(many, gold, 8, 7)
+    }
+    intercept[IllegalArgumentException] {
+      Evaluation.comparisonReport(spark, many, gold, 8, 7)
+    }
   }
 }

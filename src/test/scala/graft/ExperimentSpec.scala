@@ -274,13 +274,19 @@ class ExperimentSpec extends SparkSpec {
   test("--compare emits the A10 dice of the two blockers' TP sets") {
     val data = openEaFixture()
     val out = java.nio.file.Files.createTempDirectory("exp_cmp").toString
-    val json = Experiment.run(spark, Experiment.parseArgs(Array(
+    val c = Experiment.parseArgs(Array(
       "--data", data, "--blocker", "token", "--out", out,
-      "--compare", "unique-name", "--no-write")))
+      "--compare", "unique-name", "--no-write"))
+    val json = Experiment.run(spark, c)
     assert(json.contains(""""compare_blocker":"unique-name""""))
     val dice = """"dice_tp":([0-9.]+)""".r.findFirstMatchIn(json)
-      .getOrElse(fail(s"missing dice_tp in $json")).group(1).toDouble
-    assert(dice >= 0.0 && dice <= 1.0)
+      .getOrElse(fail(s"missing dice_tp in $json")).group(1)
+    // the same two blockings, scored on their own
+    val ds = Experiment.loadDataset(spark, c)
+    def assign(name: String) = Experiment.blockerFor(c.copy(blocker = name))
+      .assign(ds.left, ds.right, ds.leftRel, ds.rightRel)
+    val direct = Evaluation.diceOfTruePositives(assign("token"), assign("unique-name"), ds.gold.get)
+    assert(dice == String.format(java.util.Locale.ROOT, "%.6f", Double.box(direct)))
   }
 
   test("--compare with several names emits the N-way blocker report") {

@@ -1690,4 +1690,11 @@ class StreamingSpec extends SparkSpec {
         && got("5").n_hits == 1L)
     } finally sq.stop()
   }
+
+  test("SPARK_GRAFT_REPLAY_PARTS: a positive integer, anything else fails loudly") {
+    assert(StreamingOps.replayParts(" 3 ") == 3)
+    Seq("0", "-1", "x").foreach { v =>
+      intercept[IllegalArgumentException](StreamingOps.replayParts(v))
+    }
+  }
 }
