@@ -11,6 +11,68 @@ import org.apache.spark.sql.SparkSession
   * per-executor shape of the target cluster.
   */
 object Bench {
+
+  /** The driver keeps only the last this-many chars of stdout. */
+  private[graft] val TailWindow = 2000
+
+  // Locale.ROOT formatting everywhere a double lands in JSON: `f"%.3f"`
+  // uses the JVM default locale, and comma decimals break bench.json.
+  private def d3(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  private def d2(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+
+  /** The last lines Bench prints, in order. The driver parses JSON lines
+    * out of its [[TailWindow]]; the full line is longer, so its head is
+    * cut and BENCH_r*.json records parsed:null. So the run ends with a
+    * compact line guaranteed to fit: headline total + the slowest
+    * queries that fit a 1500-char map budget (2 decimals), with the
+    * omission counted. The complete map lives in the `out` file and on
+    * stderr.
+    *
+    * Immediately BEFORE it, a short per-task-maxima line for the slowest
+    * rows ([tasks, max_task_shuffle_records] — the load-INSENSITIVE
+    * adjudication columns): wall seconds on this box stretch up to ~10×
+    * under ambient hypervisor load, so a regressed-seconds row with
+    * unchanged maxima is mechanically a load window, not a plan change
+    * (VERDICT r18 item 6). Its budget is what the compact line leaves of
+    * the window, and it keeps a prefix of the slowest-first order (a
+    * faster short-named row never displaces a slower one). When the
+    * compact line leaves no room even for an empty maxima line, only
+    * the compact line is returned. The compact line is LAST and
+    * byte-compatible with prior rounds.
+    *
+    * `results` rows are (query, seconds, ok, metrics JSON). */
+  private[graft] def tailLines(results: Seq[(String, Double, Boolean, String)],
+      total: Double, failed: String, sfDir: String, out: String): Seq[String] = {
+    val bySlow = results.sortBy(-_._2)
+    val budget = 1500
+    val kept = scala.collection.mutable.ArrayBuffer.empty[String]
+    var used = 0
+    bySlow.foreach { case (k, v, _, _) =>
+      val ent = "\"" + k + "\":" + d2(v)
+      if (used + ent.length + 1 <= budget) { kept += ent; used += ent.length + 1 }
+    }
+    val omitted = results.size - kept.size
+    val compact =
+      s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":${kept.mkString("{", ",", "}")},"queries_omitted":$omitted,"n_queries":${results.size},"failed":$failed,"sf":"$sfDir","full":"$out"}"""
+    // both lines and their newlines inside the window
+    val (head, tail) = ("""{"metric":"maxima","top":{""", "}}")
+    val mBudget = TailWindow - compact.length - 2 - head.length - tail.length
+    val entries = bySlow.map { case (k, _, _, m) =>
+      val tasks = "\"tasks\":([0-9]+)".r.findFirstMatchIn(m).map(_.group(1)).getOrElse("0")
+      val recs = "\"max_task_shuffle_records\":([0-9]+)".r
+        .findFirstMatchIn(m).map(_.group(1)).getOrElse("0")
+      "\"" + k + "\":[" + tasks + "," + recs + "]"
+    }
+    // length of the comma-joined first n entries; keep the longest prefix
+    // that fits, i.e. stop at the first entry that does not
+    val joined = entries.scanLeft(-1)(_ + _.length + 1).tail
+    val mKept = entries.zip(joined).takeWhile(_._2 <= mBudget).map(_._1)
+    val maxima = head + mKept.mkString(",") + tail
+    if (mBudget >= 0) Seq(maxima, compact) else Seq(compact)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -67,12 +129,6 @@ object Bench {
         Some((name, dt, ok, metrics))
       }
     }
-    // Locale.ROOT formatting everywhere a double lands in JSON: `f"%.3f"`
-    // uses the JVM default locale, and comma decimals break bench.json.
-    def d3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def d2(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + d3(v) }.mkString("{", ",", "}")
     val ms = results.map { case (k, _, _, m) => "\"" + k + "\":" + m }.mkString("{", ",", "}")
     val failed = results.collect { case (k, _, false, _) => "\"" + k + "\"" }.mkString("[", ",", "]")
@@ -94,45 +150,7 @@ object Bench {
       else sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_run.json")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(out), (json + "\n").getBytes("UTF-8"))
-    // The driver keeps only the LAST 2000 chars of stdout and parses JSON
-    // lines out of that window; the full 83-query line above is longer, so
-    // its head is cut and BENCH_r*.json records parsed:null. Emit a final
-    // compact line guaranteed to fit: headline total + the slowest queries
-    // that fit a 1500-char map budget (2 decimals), with the omission
-    // counted. The complete map lives in the `out` file and on stderr.
-    //
-    // Immediately BEFORE it, a short per-task-maxima line for the slowest
-    // rows ([tasks, max_task_shuffle_records] — the load-INSENSITIVE
-    // adjudication columns): wall seconds on this box stretch up to ~10×
-    // under ambient hypervisor load, so a regressed-seconds row with
-    // unchanged maxima is mechanically a load window, not a plan change
-    // (VERDICT r18 item 6). Budgeted so maxima line + compact line
-    // together stay under the driver's 2000-char tail window, with the
-    // compact line LAST and byte-compatible with prior rounds.
-    val bySlowM = results.sortBy(-_._2)
-    val mKept = scala.collection.mutable.ArrayBuffer.empty[String]
-    var mUsed = 0
-    val mBudget = 280
-    bySlowM.foreach { case (k, _, _, m) =>
-      val tasks = "\"tasks\":([0-9]+)".r.findFirstMatchIn(m).map(_.group(1)).getOrElse("0")
-      val recs = "\"max_task_shuffle_records\":([0-9]+)".r
-        .findFirstMatchIn(m).map(_.group(1)).getOrElse("0")
-      val ent = "\"" + k + "\":[" + tasks + "," + recs + "]"
-      if (mUsed + ent.length + 1 <= mBudget) { mKept += ent; mUsed += ent.length + 1 }
-    }
-    println(s"""{"metric":"maxima","top":${mKept.mkString("{", ",", "}")}}""")
-    val budget = 1500
-    val bySlow = results.sortBy(-_._2)
-    val kept = scala.collection.mutable.ArrayBuffer.empty[String]
-    var used = 0
-    bySlow.foreach { case (k, v, _, _) =>
-      val ent = "\"" + k + "\":" + d2(v)
-      if (used + ent.length + 1 <= budget) { kept += ent; used += ent.length + 1 }
-    }
-    val omitted = results.size - kept.size
-    val compact =
-      s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":${kept.mkString("{", ",", "}")},"queries_omitted":$omitted,"n_queries":${results.size},"failed":$failed,"sf":"$sfDir","full":"$out"}"""
-    println(compact)
+    tailLines(results, total, failed, sfDir, out).foreach(println)
     spark.stop()
   }
 }

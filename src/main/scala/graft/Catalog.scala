@@ -1,388 +1,15 @@
 package graft
 
-import graft.queries._
-
 /** Generated operator catalog (VERDICT r9 item 8): one row per
   * registered driver query — the name a user runs, the library API it
   * exercises, and what it computes (with the scale design inline).
   *
-  * `runMain graft.Catalog` regenerates `docs/OPERATORS.md`; CatalogSpec
-  * fails the build when (a) a query is registered without a catalog row
-  * (or a row outlives its query), or (b) the checked-in doc drifts from
-  * [[render]] — the doc cannot silently lag the registry.
+  * The row is the query's own record (`QueryDef.api` / `QueryDef.desc`),
+  * so a query without a row does not compile. `runMain graft.Catalog`
+  * regenerates `docs/OPERATORS.md`; CatalogSpec fails the build when the
+  * checked-in doc drifts from [[render]].
   */
 object Catalog {
-
-  final case class Entry(api: String, desc: String)
-
-  /** Module groups in SURVEY.md §2 order. */
-  def modules: Seq[(String, Map[String, QueryDef])] = Seq(
-    "Core blocking & text primitives" -> CoreQueries.defs,
-    "Relational frames, importance & graph" -> RelationalQueries.defs,
-    "Similarity search, encoders & embedding blockers" -> SimilarityQueries.defs,
-    "Deduplication & corpus curation" -> DedupQueries.defs,
-    "Events, streaming & multimodal" -> EventQueries.defs,
-    "Propagation encoders & blocker evaluation" -> EncoderQueries.defs)
-
-  val entries: Map[String, Entry] = Map(
-    // ---- core --------------------------------------------------------------
-    "q1_agg" -> Entry("DataFrame.groupBy.agg",
-      "TPC-H Q1-style lineitem aggregate — the smoke-test plan (scan → partial agg → final agg, one shuffle)."),
-    "src_ntriples_roundtrip" -> Entry("Rdf.toNTriples / Rdf.loadNTriples",
-      "Raw RDF source round-trip: corpus serialized to N-Triples (escape encoding), re-parsed by the distributed line parser (codegen'd unescape, no shuffle), pivoted back — hash-checked byte equality against the original, with adversarial quote/backslash/newline characters injected."),
-    "s2_clean_datatype" -> Entry("Text.stripDatatype",
-      "RDF literal cleaning: strips `\"v\"^^xsd:type` wrappers to the bare value (reference S2)."),
-    "s3_cluster_gold" -> Entry("BlockingDataset.goldFromClusterFile",
-      "Gold from an eche cluster dump (S3): per-run dump built and written inside the query, parsed back through the production loader; the oracle computes the inter-dataset pairs independently."),
-    "p2_concat_wide" -> Entry("EntityFrame.concatValues",
-      "Wide-frame value concatenation: all non-id attributes cast, null-filled and space-joined per entity."),
-    "p3_concat_triple" -> Entry("EntityFrame.concatValues",
-      "Triple-frame concatenation: tail values grouped per head entity into one text blob (map-side combine)."),
-    "a3_token_counts" -> Entry("Text.tokenize",
-      "Corpus token counts after lowercasing, min-length and stopword filtering (F1 tokenizer)."),
-    "f2_qgrams" -> Entry("Text.qgrams",
-      "Character q-gram expansion of attribute values (F2) — the shingle primitive for string similarity."),
-    "j1_standard_blocker" -> Entry("StandardBlocker.assign",
-      "Key-equality blocking on one attribute: per-key id sets on both sides joined through the block key."),
-    "tb_token_blocker" -> Entry("TokenBlocker.assign",
-      "Token blocking end-to-end: concat → tokenize → explode → per-token id sets → inner key join; hot tokens cappable pre-join via maxBlockComparisons."),
-    "a8_eval_metrics" -> Entry("Evaluation.evaluateDF",
-      "Blocking quality metrics (recall/precision/F1/reduction-ratio/h3r) from one candidate-pairs pass: pairs and gold meet in one bit_or group-by, no gold join."),
-    // ---- relational --------------------------------------------------------
-    "u3_reverse_rel" -> Entry("Relational.reverseRel",
-      "Adds inverse relation triples (`_inv_` prefixed) — U3; one narrow projection + union, no shuffle."),
-    "a6_count_entities" -> Entry("Relational.countEntities",
-      "Distinct entity count over heads∪tails (A6) — exact, plus an approx_count_distinct HLL variant."),
-    "a4_rel_importance" -> Entry("Relational.relationImportance",
-      "Relation importance: per-relation entity coverage ratio (A4/F6 arithmetic)."),
-    "a5_name_importance" -> Entry("Relational.nameImportance",
-      "Name-property importance: coverage × distinctness per attribute name (A5)."),
-    "p8_filter_importance" -> Entry("Relational.filterImportance",
-      "Keeps each entity's top-n most important relations — broadcast importance join + per-entity window (P8/J6/W1)."),
-    "w1_top_name_props" -> Entry("Window.partitionBy + row_number",
-      "Top-n name properties per entity by importance — the W1 window form with a deterministic tiebreak."),
-    "j5_neighbor_concat" -> Entry("Relational.neighborConcat",
-      "Concatenates each entity's neighbors' attribute text through the relation graph (J5) — one join + one agg."),
-    "srt_relational_token_blocker" -> Entry("SimpleRelationalBlocker.assign",
-      "Composite relational token blocker: attribute token blocks ∪ neighbor-text token blocks (§2.9 wiring, oracled end-to-end)."),
-    "a7_block_stats" -> Entry("Blocks.statistics",
-      "Block statistics (A7): block count, min/max/mean sizes, comparison count from array sizes — no pair enumeration."),
-    "p10_block_cap" -> Entry("Blocks.cap",
-      "Drops blocks whose |L|·|R| exceeds a comparison budget (P10) — the pre-enumeration safety valve."),
-    "j3_combine_blocks" -> Entry("Blocks.outerCombine",
-      "Outer combine of two blockings (J3): full-outer on key, id arrays unioned distinct."),
-    "w3_purge" -> Entry("Blocks.purge",
-      "Purge-threshold from the block-size cumsum knee (W3) then filters oversized blocks — two tiny aggs, no pair work."),
-    "p5_sample_semijoin" -> Entry("DataFrame.sample + left_semi",
-      "Deterministic hash-sampling of entities with a semi-join restriction of their triples (P5)."),
-    "un_unique_name_blocker" -> Entry("UniqueNameBlocker.assign",
-      "Singleton blocks from attribute values held by exactly one entity per side (J2/P7) — the high-precision first pass."),
-    "p6_anti_filter" -> Entry("HybridBlockers",
-      "Anti-join filter removing entities already covered by unique-value blocks before the expensive pass (P6)."),
-    "rel_pagerank" -> Entry("PageRank.pageRank",
-      "PageRank over the entity graph: contribution table shuffled once (hash-partitioned by src, persisted); only node-sized ranks move per iteration; lineage checkpointed."),
-    "rel_communities" -> Entry("PageRank.labelPropagation",
-      "Label-propagation communities with deterministic min-label ties — same one-shuffle-per-round arcs reuse as PageRank."),
-    "diag_token_skew" -> Entry("Diagnostics.keySkew",
-      "One-row key-skew profile (n_keys, max share, count percentiles, p99/p50 ratio) — the measurement before choosing caps/salting; exact percentile here, percentile_approx at corpus scale."),
-    "diag_token_skew_approx" -> Entry("Diagnostics.keySkewApprox",
-      "keySkew with percentile_approx percentiles — bounded-memory sketch merge instead of the exact single-reducer sort; the GK rank contract is checked in-plan (invariant-graded oracle)."),
-    "diag_heavy_hitters" -> Entry("Diagnostics.heavyHitters",
-      "Top-N heaviest keys with cumulative share via TakeOrderedAndProject (no global sort) — the concrete list to cap or salt."),
-    // ---- similarity / encoders --------------------------------------------
-    "mh_minhash_lsh_blocker" -> Entry("MinHashLSHBlocker.assign",
-      "MinHash-LSH blocking: per-entity signatures → banded bucket keys → bucket equi-join; (b,r) from the datasketch threshold rule."),
-    "mh_mllib_minhash_blocker" -> Entry("MlLibMinHashBlocker.assign",
-      "MLlib MinHashLSH approxSimilarityJoin wrapped as a blocker — invariant-graded oracle (library RNG is not SQL-replayable)."),
-    "mh_lsh_tuning" -> Entry("MinHash.lshTuningCurve",
-      "LSH (b,r) S-curve table: collision probability at threshold grid per banding — the tuning surface, pure arithmetic."),
-    "m3_tfidf_token_blocker" -> Entry("TfIdfFilteredTokenBlocker.assign",
-      "Token blocking restricted to each entity's top TF-IDF tokens (M3) — IDF from one doc-frequency agg, threshold filter before the join."),
-    "j10_token_overlap" -> Entry("PartitioningTokenBlocker.assign",
-      "Sparse token-overlap product (M2/J10): candidates from the token equi-join, overlap counted per pair; size-switched broadcast vs shuffle join with hot-token cap."),
-    "ann_brute_topk" -> Entry("Similarity.topKCosine",
-      "Brute-force cosine top-k over embeddings — the exact ANN baseline (codegen'd dot product, per-query window)."),
-    "m13_csls_knn" -> Entry("Similarity.cslsRerank",
-      "CSLS hubness-corrected kNN (M13): mean neighbor similarity both directions re-scores the top-k."),
-    "m13_nicdm_knn" -> Entry("Similarity.nicdmRerank",
-      "NICDM hubness reduction (M13, kiez 'nicdm'): distances rescaled by sqrt of both endpoints' mean local distance scale over the candidate graph."),
-    "m13_ls_knn" -> Entry("Similarity.localScalingRerank",
-      "Local-scaling hubness reduction (M13, kiez 'ls'): exp(−d²/(σq·σx)) with σ = scaleK-th candidate distance each side."),
-    "m13_mp_knn" -> Entry("Similarity.mutualProximityRerank",
-      "Empiric mutual proximity (M13, kiez 'mp'): joint farther-probability over both candidate views — pure rank arithmetic, density-immune."),
-    "m13_dsl_knn" -> Entry("Similarity.dslRerank",
-      "DisSimLocal hubness reduction (M13, kiez 'dsl'): d² minus each endpoint's squared distance to its scaleK-candidate centroid — the vector-aware member, completing the kiez method set."),
-    "ann_ivf_label" -> Entry("Similarity.ivfTopK",
-      "IVF ANN: KMeans-free deterministic coarse centroids, candidates only from the query's nearest cells."),
-    "ann_ivf_multiprobe" -> Entry("Similarity.ivfTopK",
-      "IVF with multiprobe: nprobe nearest cells per query widen recall at bounded candidate cost."),
-    "ann_pq_encode" -> Entry("Similarity.pqEncode",
-      "Product-quantization encoding: per-subspace codebooks, embeddings → code bytes (the 100×-compression layout)."),
-    "ann_pq_adc_topk" -> Entry("Similarity.pqTopK",
-      "PQ asymmetric-distance top-k: query-to-codebook lookup tables broadcast, scan costs table lookups not float ops."),
-    "ann_ivf_pq_topk" -> Entry("Similarity.ivfPqTopK",
-      "IVF+PQ: coarse cells prune the corpus, PQ ADC ranks inside cells — the billion-scale ANN layout."),
-    "ann_ivf_pq_residual" -> Entry("Similarity.ivfPqTopK",
-      "IVF+PQ on residuals (vector − centroid) — finer quantization at identical storage."),
-    "ann_ivf_pq_saved" -> Entry("IndexStore.save/load/search",
-      "Persisted IVF-PQ index round-trip: centroids+codes built once, saved as parquet, reloaded and searched — bit-identical to the direct operator (shared oracle)."),
-    "ann_ivf_pq_append" -> Entry("IndexStore.assignBuckets/appendIvfPq",
-      "Incremental index ingest: a bucketless delta routed to its nearest IVF cell, PQ-encoded against the FIXED base geometry and appended — O(delta) daily arrivals, oracle replays the full path."),
-    "st_ann_serve" -> Entry("AnnServing.serveIvfPq",
-      "Streaming ANN serving against a static IVF-PQ index: row-local probe selection, stream-static code join, flatMapGroupsWithState top-k (no window) — stateless per micro-batch."),
-    "ann_hyperplane_lsh" -> Entry("Similarity.hyperplaneBucket",
-      "Sign-LSH bucketing: md5-deterministic hyperplanes hash embeddings to bucket keys (SQL-replayable)."),
-    "ann_lsh_topk" -> Entry("Similarity.lshTopK",
-      "Sign-LSH kNN: bucket equi-join candidates + exact cosine re-rank — the EmbeddingKnnBlocker scale path."),
-    "ann_ivf_recall" -> Entry("Similarity.ivfTopK vs topKCosine",
-      "Recall@k of IVF against the exact baseline with a pinned floor — the honest-approximation gate."),
-    "ann_ivf_recall_curve" -> Entry("Similarity.ivfRecallCurve",
-      "Recall-vs-nprobe curve from ONE clustering pass serving the whole probe sweep."),
-    "dd_embedding_neardup" -> Entry("Similarity.selfJoinNearDup",
-      "Exact embedding cosine near-dup pairs — the documented O(n²) baseline; `dd_embedding_neardup_lsh` is the scale sibling."),
-    "dd_embedding_neardup_lsh" -> Entry("Similarity.bucketedNearDup",
-      "Embedding near-dup via sign-LSH buckets: pair work confined to bucket-mates, capped per bucket."),
-    "dd_embedding_decontam" -> Entry("Similarity.embeddingDecontam",
-      "Embedding decontamination: train docs cosine-close to any eval doc are flagged via bucketed join."),
-    "m11_cluster_blocks" -> Entry("EmbeddingBlocker",
-      "Cluster-ID blocking from embedding space (M11): deterministic coarse clustering, one block per cluster."),
-    "m11_kmeans_blocker" -> Entry("KMeansClusterBlocker.assign",
-      "MLlib KMeans cluster blocker (M11 variant) — invariant-graded oracle; iterations are the inherent cost."),
-    "m11_dbscan_blocks" -> Entry("Density.dbscanStar",
-      "DBSCAN* density clustering (HDBSCAN's fixed-eps slice): core distances, mutual-reachability edges, components of core points; noise genuinely unassigned. Oracle replays the full algorithm incl. a recursive-CTE transitive closure."),
-    "m11_hdbscan_blocks" -> Entry("Density.hdbscanFlatCut",
-      "HDBSCAN flat cut over an eps ladder: per-level DBSCAN* components, condensed-tree stability, excess-of-mass selection — per-branch eps, the hierarchy extraction the fixed-eps slice lacks. Oracle replays the whole algorithm incl. the eom DP unrolled per birth level."),
-    "m12_token_cluster_blocker" -> Entry("TokenClusteringTokenBlocker.assign",
-      "Attribute/token clustering blocker (M12): tokens clustered by co-occurrence, blocks keyed by cluster id."),
-    "m12_token_cluster_minhash" -> Entry("TokenClusteringMinHashLSHBlocker.assign",
-      "M12 variant with MinHash-LSH inside token clusters — cluster scoping bounds the banded join."),
-    "m11_auto_ladder" -> Entry("Density.autoEpsLadder",
-      "The data-derived eps ladder (--eps-ladder auto): per-point minimum mutual reachability, evenly-spaced distinct radii — the derivation oracled independently in SQL."),
-    "m11_hdbscan_auto" -> Entry("Density.hdbscanFlatCutAuto",
-      "The COMPOSED --eps-ladder auto path: derive the ladder from the data's first-connection radii, then run the eom flat cut. Oracle re-derives the ladder in SQL on a closed-form-radius fixture, gates on the constants, and replays the full cut."),
-    "m11_hdbscan_exact" -> Entry("Density.hdbscanExact",
-      "EXACT HDBSCAN — the continuous mutual-reachability dendrogram with no eps ladder: distributed Borůvka MST + a value-set-sized driver condensed tree (continuous λ stability, eom). Oracle replays the complete-ladder flat cut — a different algorithm — on a known-radius fixture."),
-    "m12_density_pipeline" -> Entry("AttributeClusteringBlocker + DensityClusterAssigner",
-      "The composed density blocking pipeline on a synthesized 200-token vocabulary: table-vector encode → HDBSCAN flat cut → size-gated noise keys → block join, full SQL replay."),
-    "st_ttl_curation_replay" -> Entry("StreamingCuration.verdicts (stateTtl)",
-      "Multi-wave replay of the TTL'd dup-canonical store: in-horizon dups, any-sighting refresh, horizon-on-access eviction with canonical re-election — the third TTL state store's divergent multi-batch semantics, oracled wave by wave."),
-    "st_incremental_token_pairs" -> Entry("StreamingOps.incrementalTokenBlocks",
-      "Streaming incremental token blocking: per-token state holds capped id lists; new docs pair only against state."),
-    "m4_sif_embedding" -> Entry("AverageEmbeddingEncoder",
-      "SIF-weighted average word embedding per entity (M4): a/(a+freq) weights from one frequency agg."),
-    "src_oaei_pipeline" -> Entry("Rdf.loadOaei / TokenBlocker / Evaluation",
-      "Raw OAEI bundle end-to-end: source/target N-Triples + Alignment reference.xml built from customer/supplier, loaded through the format sniff, token-blocked, and J7/A8-evaluated; oracle recomputes blocking+metrics straight from the tables."),
-    "s4_blocks_roundtrip" -> Entry("Blocks.write/writeNN/writeComposite/read",
-      "S4/S5 block persistence: normal, NN (null-padded scalar columns), and composite layouts written and layout-sniffed back; oracle replays only the semantics so any IO loss breaks the hash."),
-    "m4_table_embedding" -> Entry("TableTokenEncoder",
-      "M4 production form: real (token, vector) table lookup-join with unknown-token skip + SIF over real corpus frequencies."),
-    "s7_embedding_cache" -> Entry("CachedEncoder / EmbeddingStore",
-      "Embedding cache round-trip (S7): encode-miss saves, second encode must HIT (meta-matched parquet read, asserted); the hit's vectors share m4_sif_embedding's oracle verbatim."),
-    "m4_sif_pc_embedding" -> Entry("SifEncoder",
-      "SIF + first-principal-component removal (M5 step): PC via distributed Gram matrix + driver-side eigh on d×d."),
-    "m5_pca_reduce" -> Entry("PcaReducer",
-      "PCA dimensionality reduction of embeddings — Gram-matrix eigendecomposition, d×d never data-sized."),
-    // ---- dedup / text ------------------------------------------------------
-    "dd_exact" -> Entry("Dedup.exactDuplicates",
-      "Exact duplicate groups by content hash — one hash-groupBy, the cheapest dedup pass."),
-    "dd_bloom_refresh" -> Entry("Dedup.bloomRefreshDedup",
-      "Incremental exact dedup with a Bloom prefilter (codegen'd BloomMightContain plan literal): only maybe-dup rows pay the corpus join."),
-    "dd_minhash_neardup" -> Entry("Dedup.minHashNearDupPairs",
-      "MinHash-LSH near-dup pairs: shingles → signatures → banded buckets → bucket join + exact Jaccard verify; hot-bucket cap bounds skew."),
-    "dd_containment" -> Entry("Dedup.minHashContainmentPairs",
-      "Containment (subset) detection via MinHash: asymmetric overlap estimate flags docs swallowed by bigger docs."),
-    "dd_lsh_recall" -> Entry("Dedup.lshRecall",
-      "Empirical LSH recall gate: exact-Jaccard truth on a deterministic doc sample vs the production banding, plus the MMDS S-curve expectation."),
-    "dd_incremental_sig" -> Entry("Dedup.minHashNearDupAgainstSig",
-      "Production incremental near-dup: delta joins the corpus' STORED signature table — nothing corpus-sized recomputed or cached."),
-    "dd_incremental_neardup" -> Entry("Dedup.minHashNearDupAgainst",
-      "Incremental near-dup of a delta against a corpus (both as raw text) — the bootstrap form of `dd_incremental_sig`."),
-    "dd_ngram_jaccard" -> Entry("Dedup.ngramJaccardPairs",
-      "N-gram shingle Jaccard near-dup pairs with doc-frequency capped shingles — the bucketed classic."),
-    "dd_dup_components" -> Entry("Dedup.components",
-      "Connected components over dup pairs (frontier-based large-star/small-star, union-find property-tested) → cluster ids."),
-    "dd_cluster_histogram" -> Entry("Dedup.clusterHistogram",
-      "Duplicate-cluster size histogram — the dedup report surface (groupBy twice, tiny output)."),
-    "dd_keep_list" -> Entry("Dedup.keepList",
-      "Keep-list: one representative per dup cluster (min id), everything else marked for drop."),
-    "dd_keep_best" -> Entry("Dedup.keepBest",
-      "Quality-aware keep-best per cluster — deterministic (score, id) ordering, avoids nondeterministic max_by."),
-    "dd_shard_assign" -> Entry("Dedup.shardAssignment",
-      "Deterministic export sharding: content-addressed shard id (md5-long mod n) — reproducible output layout."),
-    "dd_span_dedup" -> Entry("Dedup.spanDedup",
-      "Within-doc repeated-span removal (ExactSubstr-style) — fully linear rolling-hash pass, no pairwise stage."),
-    "dd_crossdoc_spans" -> Entry("Dedup.crossDocSpans",
-      "Cross-document repeated spans (ExactSubstr cross-doc half): maximal token ranges shared with another doc — one gram doc-freq shuffle + per-doc island merge, boilerplate cappable."),
-    "dd_crossdoc_cut" -> Entry("Dedup.crossDocCut",
-      "Removes tokens covered by cross-doc shared windows, keeping within-doc-only repeats — the cut form of dd_crossdoc_spans."),
-    "dd_decontaminate" -> Entry("Dedup.decontaminate",
-      "Train/eval decontamination by shared n-grams: train docs containing any eval n-gram are flagged via semi-join."),
-    "dd_simhash" -> Entry("Dedup.simHashNearDupPairs",
-      "SimHash 64-bit fingerprints from token hashes — the bit-vote signature primitive."),
-    "dd_simhash_neardup" -> Entry("Dedup.simHashNearDupPairs",
-      "SimHash near-dup: banded bit-block candidates + Hamming verify — never all-pairs."),
-    "st_stream_dedup" -> Entry("StreamingOps.streamExactDedup",
-      "Streaming exact dedup with TTL state (flatMapGroupsWithState) — state rows = distinct hashes, expired by watermark."),
-    "st_stream_neardup" -> Entry("StreamingOps.streamNearDup",
-      "Streaming near-dup: band-bucket state holds SIGNATURES only, per-bucket admission cap — state measured flat under ×10 re-delivery."),
-    "st_ttl_neardup_replay" -> Entry("StreamingOps.streamMinHashNearDupWithTtl",
-      "Multi-wave TTL replay: three deterministic MemoryStream waves pin watermark-driven eviction, refresh-extends-life and re-admission; the oracle replays the horizon rule wave by wave in SQL."),
-    "st_ttl_token_replay" -> Entry("StreamingOps.incrementalTokenBlocksWithTtl",
-      "Multi-wave TTL replay of the incremental token blocker: per-entry eviction, refresh, and the re-admit duplicate-pair divergence, hashed against a per-wave SQL state replay."),
-    "pipe_refine_corpus" -> Entry("Dedup + TextAnalysis pipeline",
-      "End-to-end curation pipeline: quality gate → near-dup drop → shard assignment, one composed plan."),
-    "st_pipe_refine" -> Entry("StreamingOps pipeline",
-      "The refinement pipeline as a stream: gate + stateful dedup + shard tag per micro-batch."),
-    "pipe_semantic_dedup" -> Entry("Similarity.clusterNearDup",
-      "Semantic (embedding-cluster) dedup composed with keep-list and shard assignment — SemDeDup-style."),
-    "cur_verdicts" -> Entry("Curation.verdicts",
-      "\"Tag, don't drop\" curation verdicts: langid gate → quality rules → exact-dup canonical → decontamination, one row per input doc with first-failure drop_stage attribution."),
-    "cur_funnel" -> Entry("Curation.funnel",
-      "Per-source funnel report over the verdict table: stage drop counts + surviving token mass — the gate-cost dashboard."),
-    "st_curation_verdicts" -> Entry("StreamingCuration.verdicts",
-      "Curation at ingest: the verdict funnel streaming-safe — row-local tagging, codegen'd exact-set window-probe decontamination (WindowHitCount), one fMGWS for the first-seen dup canonical."),
-    "tx_langid" -> Entry("TextAnalysis.langId",
-      "N-gram/lexicon language ID with per-language scores — one pass of row-local signals."),
-    "tx_quality" -> Entry("TextAnalysis.qualityScore",
-      "Quality signals per doc: length, punctuation/stopword ratios, ws + BPE-ish token counts."),
-    "tx_corpus_profile" -> Entry("TextAnalysis profile agg",
-      "Per-source corpus dashboard: means of the row-local quality signals (grid-rational rounding)."),
-    "tx_source_overlap" -> Entry("Dedup.sketchOverlap",
-      "Pairwise source vocabulary overlap from mergeable union-MinHash sketches — one min-agg per source, then sources² arithmetic."),
-    "tx_quality_filter" -> Entry("TextAnalysis.qualityFilter",
-      "The quality gate: thresholded composite score, pushdown-friendly single filter."),
-    "tx_quality_classifier" -> Entry("QualityClassifier.fit/score",
-      "GPT-3-style discriminative quality pump: LR trained on reference-vs-degraded, corpus scored as a literal-weight codegen projection (invariant-graded oracle)."),
-    "tx_source_cap" -> Entry("Window per source",
-      "Per-source document cap keeping the quality-ranked head — batch form of a per-key rate limiter."),
-    "tx_token_budget" -> Entry("TextAnalysis.tokenBudget",
-      "Token-budget selection: two-phase distributed cumsum (driver prefix bounded by groups×buckets) cuts the corpus at N tokens."),
-    "tx_pack_sequences" -> Entry("TextAnalysis.packSequences",
-      "Training-sequence packing to a context length via the distributed cumsum — no driver-side loop."),
-    "tx_pack_bins" -> Entry("TextAnalysis.packBins",
-      "First-fit-style bin packing of docs into fixed-token bins, bucketed to stay distributed."),
-    "tx_chunk_windows" -> Entry("TextAnalysis.chunkWindows",
-      "Overlapping token-window chunking per document (posexplode over computed offsets)."),
-    "tx_weighted_sample" -> Entry("TextAnalysis.weightedSample",
-      "Deterministic weighted sampling by content hash — reproducible without a global sort."),
-    "tx_bpe_merges" -> Entry("TextAnalysis.bpeMerges",
-      "BPE merge learning: iterative pair-count aggs, pairless rounds are no-ops; vocab stays driver-tiny."),
-    "tx_bpe_encode" -> Entry("TextAnalysis.bpeEncode",
-      "BPE encoding with the learned merge table broadcast — token counts per doc."),
-    "tx_pii_redact" -> Entry("TextAnalysis.piiRedact",
-      "Multi-pattern PII redaction (emails/phones/ids) — chained regexp_replace, portable RE2-safe patterns."),
-    "tx_lm_score" -> Entry("TextAnalysis.lmScore",
-      "Unigram LM log-probability scoring against corpus-derived frequencies (broadcast vocab)."),
-    "tx_lm_bigram" -> Entry("TextAnalysis.lmBigramScore",
-      "Bigram LM scoring with backoff — the stronger fluency signal, same broadcast shape."),
-    "tx_lm_buckets" -> Entry("TextAnalysis.lmBuckets",
-      "CCNet head/middle/tail buckets at per-group LM-score terciles — exact percentiles broadcast back."),
-    "tx_entropy" -> Entry("TextAnalysis.tokenEntropy",
-      "Per-doc token entropy — low-entropy (repetitive/templated) docs surface for gating."),
-    "tx_split_assign" -> Entry("TextAnalysis.splitAssign",
-      "Deterministic train/val/test assignment by content hash — stable across runs and partitionings."),
-    "tx_mix_sample" -> Entry("TextAnalysis.mixtureSample",
-      "Mixture sampling to target per-source proportions with content-addressed stochastic rounding."),
-    "tx_temperature_mix" -> Entry("TextAnalysis.temperatureSample",
-      "Temperature-weighted source mixing (p^(1/T) renormalized) — the multilingual-sampling classic."),
-    "tx_dsir_weight" -> Entry("TextAnalysis.dsirWeights",
-      "DSIR importance weights: hashed n-gram feature log-ratios target vs raw — one agg per side + broadcast ratio table."),
-    "tx_repetition" -> Entry("TextAnalysis.repetitionSignals",
-      "Repetition signals (dup line/paragraph/n-gram fractions) — the Gopher-style gates, row-local."),
-    "tx_nfc_normalize" -> Entry("TextOps.normalize",
-      "Unicode NFC normalization via a codegen'd JDK-Normalizer expression (SQL: graft_normalize) — composed/decomposed encodings hash identically after it; DuckDB nfc_normalize oracle."),
-    "tx_fingerprint" -> Entry("TextAnalysis.fingerprint",
-      "Rolling-hash document fingerprint over token windows — the winnowing primitive."),
-    "tx_winnow" -> Entry("TextAnalysis.winnow",
-      "Winnowing fingerprint selection: per-doc min-hash windows (never a global window), position-bounded."),
-    "tx_winnow_pairs" -> Entry("TextAnalysis.winnowPairs",
-      "Cross-doc winnow fingerprint matches: equi-join on selected fingerprints, lag-dedup reusing the min-window sort."),
-    "tx_winnow_pairs_capped" -> Entry("TextAnalysis.winnowPairs",
-      "winnowPairs with the hot-fingerprint cap ENGAGED (maxHashDocs) and folded into the oracle — the boilerplate-skew lever, hash-verified."),
-    "tx_vocab_growth" -> Entry("TextAnalysis.vocabGrowth",
-      "Heaps-law vocabulary growth curve: distinct vocab at doc-count checkpoints in one pass."),
-    "tx_punkt_learn" -> Entry("TextAnalysis.punktLearnAbbrevs",
-      "Punkt abbreviation LEARNING (Kiss & Strunk LLR + the three published factors) as one type-keyed aggregate + one-row totals broadcast; survivors feed the nltk splitter's extraAbbrevs seam (--abbrev-learn)."),
-    // ---- events / streaming / multimodal -----------------------------------
-    "ev_window_agg" -> Entry("StreamingOps.windowedEventAgg",
-      "Tumbling event-time window aggregation — identical frame batch and streaming (spec-asserted parity)."),
-    "ev_json_extract" -> Entry("get_json_object / from_json",
-      "Typed extraction from the events JSON payload column — schema-on-read without a UDF."),
-    "ev_top_users_per_type" -> Entry("Window.partitionBy + rank",
-      "Top-n users per event type (W2) — per-type window with deterministic ties."),
-    "ev_compact_latest" -> Entry("StreamingOps.compactLatest",
-      "CDC compaction to latest-per-key (max_by-free: (ts, tiebreak) window) — batch form."),
-    "st_compact_latest" -> Entry("StreamingOps.streamCompactLatest",
-      "Streaming CDC compaction with keyed state — one row per key, updates collapse in-state."),
-    "ev_sessionize" -> Entry("StreamingOps.sessionize",
-      "Gap-based sessionization via lag + cumulative session ids — one user-keyed shuffle."),
-    "ev_session_windows" -> Entry("StreamingOps.sessionWindowAgg",
-      "Native session_window aggregation — the Structured Streaming session form on batch data."),
-    "ev_interval_join" -> Entry("StreamingOps.intervalJoin",
-      "Interval (range) join events×spans through a bucketed equi-join — range predicates never become a nested loop."),
-    "ev_interval_join_outer" -> Entry("StreamingOps.intervalJoin",
-      "Outer interval join: unmatched left rows survive with null span columns, same bucket plan."),
-    "ev_asof_join" -> Entry("StreamingOps.asofJoin",
-      "As-of join (latest quote ≤ event ts) via union + last_value window — no per-row subquery."),
-    "ev_asof_join_bucketed" -> Entry("StreamingOps.asofJoinBucketed",
-      "As-of join for hot keys: time-bucketed equi-join carries only bucket-local candidates — the 100 TB shape."),
-    "st_asof_join" -> Entry("StreamingOps.streamAsofJoin",
-      "Streaming as-of join with keyed quote state and watermark expiry."),
-    "ev_rate_limit" -> Entry("StreamingOps.rateLimit",
-      "Per-key rate limiting (first N per window) — deterministic window + filter, batch form."),
-    "ev_rate_limited_join" -> Entry("StreamingOps.rateLimitedIntervalJoin",
-      "Rate limiter composed with the interval join — admission control before join fan-out."),
-    "ev_funnel" -> Entry("EventAnalytics.funnel",
-      "K-stage funnel in ONE user-keyed shuffle (ordered-stage scan per user, hot-user bound) — not O(k²) self-joins."),
-    "st_funnel" -> Entry("StreamingOps.streamFunnel",
-      "Streaming funnel: per-user O(1) stage-progress state, population-bounded."),
-    "ev_retention" -> Entry("EventAnalytics.retention",
-      "Cohort retention matrix: first-seen cohort × activity period, two aggs."),
-    "st_retention" -> Entry("StreamingOps.streamRetention",
-      "Streaming retention with per-user first-seen state."),
-    "ev_markov_transitions" -> Entry("EventAnalytics.markovTransitions",
-      "Event-type Markov transition matrix via lag over per-user ordered streams."),
-    "st_markov" -> Entry("StreamingOps.streamMarkov",
-      "Streaming Markov transitions: last-state-per-user keyed state."),
-    "ev_mad_outliers" -> Entry("EventAnalytics.madOutliers",
-      "Robust MAD outlier flags with interpolated median cut — approx-quantile based, no global sort."),
-    "ev_value_quantiles" -> Entry("EventAnalytics.valueQuantiles",
-      "Per-type value quantiles (exact grid via window ranks) — the distribution report."),
-    "ev_hll_users" -> Entry("approx_count_distinct",
-      "Distinct users per type, exact + HLL sketch with pinned within-5% invariant oracle."),
-    "ev_rolling_zscore" -> Entry("EventAnalytics.rollingZScore",
-      "Rolling z-score anomaly signal over a trailing event window per key."),
-    "ev_zorder_stats" -> Entry("EventAnalytics.zOrderStats",
-      "Z-order (Morton) interleave of (ts, user) with per-file-bucket min/max overlap stats — the layout-clustering evidence."),
-    "mm_decode_meta" -> Entry("Multimodal.decodeImageMeta",
-      "Image header decode (real ImageIO) → typed width/height/format metadata; per-partition codec init."),
-    "mm_frame_sample" -> Entry("Multimodal.sampleFrames",
-      "Deterministic frame sampling from video-like binaries (zero-length guarded) — the mapPartitions plumbing, stub codec."),
-    "mm_resize" -> Entry("Multimodal.resizeImages",
-      "Bilinear image resize over binary columns — batch-shaped, codec-pluggable."),
-    "mm_features" -> Entry("Multimodal.decodeFeatures",
-      "Pixel feature extraction (channel means/edges) from decoded images."),
-    "mm_phash_dedup" -> Entry("Multimodal.decodeFeatures + hash",
-      "Perceptual-hash duplicate groups from quantized features — group form, never pairwise."),
-    // ---- propagation encoders & evaluation ---------------------------------
-    "m8_graph_propagation" -> Entry("GraphPropagationEncoder.encode",
-      "GCN-style neighbor averaging over the relation graph (2 rounds) on hashed token features — one join per round, degree-normalized."),
-    "m9_lightea_embedding" -> Entry("LightEAEncoder.encode",
-      "LightEA three-view (entity/relation/attribute) propagation — sparse joins, no training."),
-    "w5_sinkhorn_rerank" -> Entry("Sinkhorn.rescale",
-      "Sinkhorn row/column normalization re-ranking of kNN candidate scores (W5) — iterations over the candidate table only."),
-    "a10_dice_tp" -> Entry("Evaluation.diceOfTruePositives",
-      "Dice coefficient of two blockings' TP sets — TP via explode+semi-join (no pair enumeration), all three scalars from ONE bit_or group-by action."),
-    "a11_joined_eval" -> Entry("Evaluation.joinedEvaluate",
-      "Joint metrics of two blockings without re-blocking (from_joined_evals algebra): TP-union + summed comparisons."),
-    "a11_multi_compare" -> Entry("Evaluation.multipleBlockComparison",
-      "N-way blocker comparison: per-pair joined-h3r improvement + TP Dice; all n evaluations and intersections from ONE bit_or group-by action (never n² set ops). Token blocking capped via maxBlockComparisons."),
-    "a12_blocker_report" -> Entry("Evaluation.comparisonReport",
-      "Per-blocker report vs the best blocking (own metrics, Dice-vs-best, h3r a best+this join would add) — same cost shape as the N-way compare."),
-    "m11_kmeans_blocker" -> Entry("KMeansClusterBlocker.assign",
-      "MLlib KMeans blocker over propagation embeddings — invariant-graded oracle."),
-    "emb_knn_blocker" -> Entry("EmbeddingKnnBlocker.assign",
-      "NN-blocks from embedding kNN (J4): per-left top-k neighbor blocks via the sign-LSH path."))
 
   def render(): String = {
     val sb = new StringBuilder
@@ -393,11 +20,10 @@ object Catalog {
     sb ++= "summary oracles (noted inline). CatalogSpec keeps this file and the\n"
     sb ++= "registry in lockstep. `st_`-prefixed queries run the streaming operator\n"
     sb ++= "on batch data (their MemoryStream parity lives in the specs).\n"
-    modules.foreach { case (title, defs) =>
+    SparkEntry.modules.foreach { case (title, defs) =>
       sb ++= s"\n## $title\n\n| query | API | what it computes |\n|---|---|---|\n"
-      defs.keys.toSeq.sorted.foreach { q =>
-        val e = entries(q)
-        sb ++= s"| `$q` | `${e.api}` | ${e.desc} |\n"
+      defs.sortBy(_._1).foreach { case (q, d) =>
+        sb ++= s"| `$q` | `${d.api}` | ${d.desc} |\n"
       }
     }
     sb.result()
@@ -408,6 +34,6 @@ object Catalog {
       args.headOption.getOrElse("docs/OPERATORS.md"))
     Option(path.getParent).foreach(java.nio.file.Files.createDirectories(_))
     java.nio.file.Files.writeString(path, render())
-    System.err.println(s"[catalog] wrote $path (${entries.size} entries)")
+    System.err.println(s"[catalog] wrote $path (${SparkEntry.queries.size} entries)")
   }
 }

@@ -12,13 +12,13 @@ import graft.text.TextAnalysis
   * survive 100×?" for the top-cost batch family (VERDICT r9 item 1 —
   * the batch analog of StreamRehearsal's boundedness runs).
   *
-  * Runs the operators on [[ScaleRehearsal.skewedDocs]] corpora at ×1,
-  * ×10 and ×100 the base SF (salted near-duplicate copies + a
-  * boilerplate paragraph on a fifth of all documents) and records, per
-  * operator per factor, wall seconds and the load-insensitive per-task
-  * maxima (input / shuffle-read bytes / shuffle records / spill). The
-  * judgment row is the GROWTH RATIO of the per-task maxima across each
-  * ×10 step: data grows 10× per step, so
+  * Runs the operators on [[skewedDocs]] corpora at ×1, ×10 and ×100 the
+  * base SF (salted near-duplicate copies + a boilerplate paragraph on a
+  * fifth of all documents — the "license header" pathology that melts
+  * naive LSH) and records, per operator per factor, wall seconds and
+  * the load-insensitive per-task maxima (input / shuffle-read bytes /
+  * shuffle records / spill). The judgment row is the GROWTH RATIO of
+  * the per-task maxima across each ×10 step: data grows 10× per step, so
   *
   *   - ratio ≪ 10 (ideally ~1): the plan sheds scale into MORE tasks —
   *     AQE re-plans reducer counts toward the advisory partition size
@@ -42,10 +42,35 @@ import graft.text.TextAnalysis
   *   - wall seconds are secondary (this box is load-noisy); the maxima
   *     are the adjudicated signal, same rule as bench.json.
   *
-  * Usage: `runMain graft.ScaleCurve [sfDir] [factors] [cap]`
-  * (defaults: /root/testdata/sf0.01, 1,10,100, 256).
+  * This is the one batch scale harness: every operator row runs unless
+  * the optional 4th argument names a comma-separated subset.
+  *
+  * Usage: `runMain graft.ScaleCurve [sfDir] [factors] [cap] [ops]`
+  * (defaults: /root/testdata/sf0.01, 1,10,100, 256, every row). Rows
+  * merge into `SPARK_GRAFT_CURVE_OUT` (default `scale_curve.json`).
   */
 object ScaleCurve {
+
+  /** The skewed corpus: `copies` salted duplicates of every document,
+    * with a shared boilerplate paragraph appended to every doc whose
+    * base id hashes into a fifth of the space. Salting the text with the
+    * copy ordinal keeps copies NEAR-duplicates (jaccard just under 1)
+    * rather than exact ones, so the LSH path does real verify work. */
+  def skewedDocs(spark: SparkSession, dir: String, copies: Int): DataFrame = {
+    val boiler = "licensed under the apache license version 2 0 you may not " +
+      "use this file except in compliance with the license you may obtain " +
+      "a copy of the license at www apache org licenses"
+    spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id").cast("string").as("base_id"), col("text"))
+      .select(col("base_id"), col("text"),
+        explode(sequence(lit(0), lit(copies - 1))).as("copy"))
+      .select(
+        concat(col("base_id"), lit("_"), col("copy")).as("id"),
+        concat(
+          col("text"), lit(" salt"), col("copy"),
+          when(pmod(Text.md5Long(col("base_id")), lit(5)) === 0,
+            lit(" " + boiler)).otherwise(lit(""))).as("text"))
+  }
 
   final case class Cell(
       wallS: Double, maxIn: Long, maxShufRead: Long, maxShufWrite: Long,
@@ -154,6 +179,11 @@ object ScaleCurve {
           sh.filter(Text.md5Long(col("id")) % 4 === 0),
           numPerm = 16, bands = 4, threshold = 0.2,
           estPrefilter = 0.375, maxBucketSize = cap).count()),
+      // containment (A ⊂ B) pairs over the same capped band buckets:
+      // the boilerplate paragraph makes a fifth of the corpus contain it
+      "containment" -> (() =>
+        Dedup.minHashContainmentPairs(sh, 16, 4, 0.5, maxBucketSize = cap)
+          .count()),
       "keep_best" -> (() =>
         Dedup.keepBest(
           docs.select(col("id"), length(col("text")).as("score")),
@@ -482,15 +512,8 @@ object ScaleCurve {
         rounds.toLong
       }))
 
-    val allOpNames = Seq("lsh_recall", "winnow_pairs_capped", "incremental_sig",
-      "incremental_neardup", "keep_best", "pagerank_hubbed",
-      "communities_hubbed", "tfidf_token_blocker", "crossdoc_spans",
-      "crossdoc_cut", "curation_verdicts",
-      "simhash_neardup", "kmeans_blocker", "mllib_minhash_blocker",
-      "pagerank_copurchase", "joined_eval", "blocker_report", "density_ladder",
-      "winnow_pairs_uncapped", "filter_importance", "reverse_rel_sorted",
-      "lightea", "cluster_histogram", "cluster_histogram_lsh",
-      "keep_best_lsh", "components_chain", "density_exact")
+    // row names from the rows themselves: building the thunks runs nothing
+    val allOpNames = ops(spark.emptyDataFrame, spark.emptyDataFrame, 1).map(_._1)
     // optional 4th arg restricts to named ops (fast iteration / partial
     // regeneration — the JSON merge below keeps the other rows)
     val opNames = args.drop(3).headOption
@@ -498,7 +521,7 @@ object ScaleCurve {
     require(opNames.forall(allOpNames.contains),
       s"unknown op in filter; known: ${allOpNames.mkString(",")}")
     val results = factors.map { copies =>
-      val docs = ScaleRehearsal.skewedDocs(spark, dir, copies)
+      val docs = skewedDocs(spark, dir, copies)
         .persist()
       val sh = docs.select(col("id"),
           explode(Text.wordShingles(

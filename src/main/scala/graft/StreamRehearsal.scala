@@ -8,12 +8,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.Text
 import graft.streaming.StreamingOps
 
-/** Streaming counterpart of [[ScaleRehearsal]]: feed the ×N skewed
-  * corpus through the stateful operators in rate-limited micro-batches
-  * and record, PER BATCH, the stream's own state-store size
-  * (`stateOperators.numRowsTotal`) and trigger duration — the evidence
-  * that state stays bounded by the admission caps while load keeps
-  * arriving:
+/** Streaming counterpart of [[ScaleCurve]]: feed the ×N skewed
+  * corpus ([[ScaleCurve.skewedDocs]]) through the stateful operators in
+  * rate-limited micro-batches and record, PER BATCH, the stream's own
+  * state-store size (`stateOperators.numRowsTotal`) and trigger
+  * duration — the evidence that state stays bounded by the admission
+  * caps while load keeps arriving:
   *
   *   - `streamMinHashNearDup`: state rows = band buckets; the injected
   *     boilerplate bucket saturates at `maxIdsPerBucket` signatures and
@@ -171,7 +171,7 @@ object StreamRehearsal {
     // by arrival wave (copy ordinal): every wave re-delivers a
     // near-duplicate of the whole base corpus — the worst case for
     // near-dup state, and the boilerplate bucket gets hotter every wave.
-    val docs = ScaleRehearsal.skewedDocs(spark, dir, copies)
+    val docs = ScaleCurve.skewedDocs(spark, dir, copies)
       .select(col("id"),
         Text.wordShingles(
           Text.tokenize(col("text"), minLength = 1, stopwords = Nil), 3)

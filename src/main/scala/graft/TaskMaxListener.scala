@@ -13,7 +13,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * what an executor must hold, regardless of cluster size.
   *
   * Shared by [[Bench]] (per-query metrics in bench.json) and
-  * [[ScaleRehearsal]] (skew rehearsal table). Reset between measured
+  * [[ScaleCurve]] (per-operator growth curves). Reset between measured
   * units; flush the listener bus (ListenerBridge.flushListenerBus)
   * before reading — task-end events are delivered asynchronously.
   */

@@ -823,11 +823,13 @@ object Dedup {
     var cached = init                                   // persisted handle to unpersist
     var labels = init.select("id", "component")         // full (id, component) view
     var frontier = init.filter(col("_chg")).select("id", "component")
-    // round-1 convergence probe; count(), NOT isEmpty, for the same
-    // full-materialization reason as the loop probe below. Empty edge
-    // list ⇒ empty init ⇒ done immediately.
-    var done = frontier.count() == 0L
-    var i = 1                                           // propagation rounds run so far
+    // round-1 convergence probe: one full scan of init (NOT an isEmpty
+    // probe, for the same full-materialization reason as the loop probe
+    // below) counts its nodes and its round-1 frontier. Empty edge list
+    // ⇒ empty init ⇒ done with no round run at all.
+    val probe = init.agg(count(lit(1)), count(when(col("_chg"), true))).head()
+    var done = probe.getLong(1) == 0L
+    var i = if (probe.getLong(0) == 0L) 0 else 1        // propagation rounds run so far
     while (!done && i < maxIterations) {
       val nbrMin = edges
         .join(frontier.select(col("id").as("src"), col("component")), Seq("src"))

@@ -25,7 +25,7 @@ object CoreQueries {
   def docFrame(s: org.apache.spark.sql.SparkSession, dir: String): EntityFrame =
     EntityFrame(table(s, dir, "documents").select(col("doc_id"), col("text")), "documents", "doc_id")
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // ---- warm-up relational aggregation (TPC-H Q1 shape) -----------------
     "q1_agg" -> QueryDef(
@@ -42,7 +42,9 @@ object CoreQueries {
              |  floor((sum(l_extendedprice)) * 1e2 + 0.5) / 1e2 AS sum_base,
              |  floor((avg(l_discount)) * 1e6 + 0.5) / 1e6 AS avg_disc,
              |  count(*) AS count_order
-             |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+             |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      api = "DataFrame.groupBy.agg",
+      desc = "TPC-H Q1-style lineitem aggregate — the smoke-test plan (scan → partial agg → final agg, one shuffle)."),
 
     // ---- S1: raw RDF source round-trip ----------------------------------
     // The N-Triples parse path proven on corpus data: documents are
@@ -81,7 +83,9 @@ object CoreQueries {
       Some("""SELECT doc_id,
              |  text || '"\' || chr(10) || chr(9) || 'é' AS text_rt,
              |  'http://g/src/' || source AS source_rt
-             |FROM documents ORDER BY doc_id""".stripMargin)),
+             |FROM documents ORDER BY doc_id""".stripMargin),
+      api = "Rdf.toNTriples / Rdf.loadNTriples",
+      desc = "Raw RDF source round-trip: corpus serialized to N-Triples (escape encoding), re-parsed by the distributed line parser (codegen'd unescape, no shuffle), pivoted back — hash-checked byte equality against the original, with adversarial quote/backslash/newline characters injected."),
 
     // ---- S1 end-to-end: raw OAEI bundle → blocking → eval -----------------
     // The reference's OAEI experiment shape (ea_dataset.py:28-110 +
@@ -181,7 +185,9 @@ object CoreQueries {
            |  floor((rr) * 1e6 + 0.5) / 1e6 AS reduction_ratio,
            |  floor((CASE WHEN rr + rec = 0 THEN 0 ELSE 2*rr*rec/(rr+rec) END) * 1e6 + 0.5) / 1e6 AS h3r
            |FROM x""".stripMargin
-      }),
+      },
+      api = "Rdf.loadOaei / TokenBlocker / Evaluation",
+      desc = "Raw OAEI bundle end-to-end: source/target N-Triples + Alignment reference.xml built from customer/supplier, loaded through the format sniff, token-blocked, and J7/A8-evaluated; oracle recomputes blocking+metrics straight from the tables."),
 
     // ---- S3: gold from a cluster dump, end-to-end ------------------------
     // The eche PrefixedClusterHelper text format proven on corpus data:
@@ -217,7 +223,9 @@ object CoreQueries {
              |FROM documents e JOIN documents o
              |  ON e.doc_id % 49 = o.doc_id % 49
              |WHERE e.doc_id % 2 = 0 AND o.doc_id % 2 = 1
-             |ORDER BY a, b""".stripMargin)),
+             |ORDER BY a, b""".stripMargin),
+      api = "BlockingDataset.goldFromClusterFile",
+      desc = "Gold from an eche cluster dump (S3): per-run dump built and written inside the query, parsed back through the production loader; the oracle computes the inter-dataset pairs independently."),
 
     // ---- S1/S2: load + literal cleaning ---------------------------------
     "s2_clean_datatype" -> QueryDef(
@@ -226,7 +234,9 @@ object CoreQueries {
           Text.stripDatatype(concat(col("c_name"), lit("^^xsd:string"))).as("cleaned"))
         .orderBy("c_custkey"),
       Some("""SELECT c_custkey, split_part(c_name || '^^xsd:string', '^^', 1) AS cleaned
-             |FROM customer ORDER BY c_custkey""".stripMargin)),
+             |FROM customer ORDER BY c_custkey""".stripMargin),
+      api = "Text.stripDatatype",
+      desc = "RDF literal cleaning: strips `\"v\"^^xsd:type` wrappers to the bare value (reference S2)."),
 
     // ---- P2: concat_values on a wide frame ------------------------------
     "p2_concat_wide" -> QueryDef(
@@ -237,7 +247,9 @@ object CoreQueries {
         f.concatValues().withColumnRenamed(EntityFrame.ConcCol, "txt").orderBy("c_custkey")
       },
       Some("""SELECT c_custkey, trim(concat_ws(' ', coalesce(c_name, ''), coalesce(c_mktsegment, ''))) AS txt
-             |FROM customer ORDER BY c_custkey""".stripMargin)),
+             |FROM customer ORDER BY c_custkey""".stripMargin),
+      api = "EntityFrame.concatValues",
+      desc = "Wide-frame value concatenation: all non-id attributes cast, null-filled and space-joined per entity."),
 
     // ---- P3: concat_values on a triple frame (unpivot + groupBy head) ---
     "p3_concat_triple" -> QueryDef(
@@ -255,7 +267,9 @@ object CoreQueries {
              |  UNION ALL
              |  SELECT cast(c_custkey AS varchar), 'c_mktsegment', c_mktsegment FROM customer)
              |SELECT head AS id, string_agg(DISTINCT trim(tail), ' ' ORDER BY trim(tail)) AS txt
-             |FROM triples WHERE tail IS NOT NULL GROUP BY head ORDER BY id""".stripMargin)),
+             |FROM triples WHERE tail IS NOT NULL GROUP BY head ORDER BY id""".stripMargin),
+      api = "EntityFrame.concatValues",
+      desc = "Triple-frame concatenation: tail values grouped per head entity into one text blob (map-side combine)."),
 
     // ---- F1/A3: tokenizer + global token counts --------------------------
     "a3_token_counts" -> QueryDef(
@@ -265,7 +279,9 @@ object CoreQueries {
         .orderBy(col("token")),
       Some(s"""SELECT key AS token, count(*) AS n FROM (
               |${duckTokens("doc_id", "text", "documents")})
-              |GROUP BY key ORDER BY token""".stripMargin)),
+              |GROUP BY key ORDER BY token""".stripMargin),
+      api = "Text.tokenize",
+      desc = "Corpus token counts after lowercasing, min-length and stopword filtering (F1 tokenizer)."),
 
     // ---- F2: character q-grams -------------------------------------------
     "f2_qgrams" -> QueryDef(
@@ -273,7 +289,9 @@ object CoreQueries {
         .select(col("p_partkey"), explode(Text.qgrams(col("p_name"), 3)).as("gram"))
         .orderBy(col("p_partkey"), col("gram")),
       Some("""SELECT p_partkey, unnest([substring(p_name, i, 3) for i in range(1, len(p_name)-1)]) AS gram
-             |FROM part ORDER BY p_partkey, gram""".stripMargin)),
+             |FROM part ORDER BY p_partkey, gram""".stripMargin),
+      api = "Text.qgrams",
+      desc = "Character q-gram expansion of attribute values (F2) — the shingle primitive for string similarity."),
 
     // ---- J1/A1: standard blocking customer×supplier on nationkey --------
     "j1_standard_blocker" -> QueryDef(
@@ -303,7 +321,9 @@ object CoreQueries {
              |  FROM supplier GROUP BY 1)
              |SELECT block_key, left_ids, right_ids,
              |       cast(left_size AS int) AS left_size, cast(right_size AS int) AS right_size
-             |FROM lb JOIN rb USING (block_key) ORDER BY block_key""".stripMargin)),
+             |FROM lb JOIN rb USING (block_key) ORDER BY block_key""".stripMargin),
+      api = "StandardBlocker.assign",
+      desc = "Key-equality blocking on one attribute: per-key id sets on both sides joined through the block key."),
 
     // ---- S4/S5: blocks → parquet → blocks, all three layouts --------------
     // The reference's block persistence dispatch end-to-end
@@ -361,7 +381,9 @@ object CoreQueries {
              |  JOIN rb ON cast(c.c_nationkey AS varchar) = rb.block_key)
              |SELECT block_key, left_ids, right_ids FROM normal
              |UNION ALL SELECT block_key, left_ids, right_ids FROM nn
-             |ORDER BY block_key, left_ids""".stripMargin)),
+             |ORDER BY block_key, left_ids""".stripMargin),
+      api = "Blocks.write/writeNN/writeComposite/read",
+      desc = "S4/S5 block persistence: normal, NN (null-padded scalar columns), and composite layouts written and layout-sniffed back; oracle replays only the semantics so any IO loss breaks the hash."),
 
     // ---- flagship: token blocking, documents split even/odd --------------
     "tb_token_blocker" -> QueryDef(
@@ -385,7 +407,9 @@ object CoreQueries {
               |lb AS (SELECT key, array_to_string(list_sort(list(id)), ',') AS left_ids FROM lt GROUP BY key),
               |rb AS (SELECT key, array_to_string(list_sort(list(id)), ',') AS right_ids FROM rt GROUP BY key)
               |SELECT key AS block_key, left_ids, right_ids
-              |FROM lb JOIN rb USING (key) ORDER BY block_key""".stripMargin)),
+              |FROM lb JOIN rb USING (key) ORDER BY block_key""".stripMargin),
+      api = "TokenBlocker.assign",
+      desc = "Token blocking end-to-end: concat → tokenize → explode → per-token id sets → inner key join; hot tokens cappable pre-join via maxBlockComparisons."),
 
     // ---- J7/A8: full evaluation metrics ----------------------------------
     "a8_eval_metrics" -> QueryDef(
@@ -419,6 +443,8 @@ object CoreQueries {
              |  floor((CASE WHEN rec + prec = 0 THEN 0 ELSE 2*rec*prec/(rec+prec) END) * 1e6 + 0.5) / 1e6 AS f_measure,
              |  floor((rr) * 1e6 + 0.5) / 1e6 AS reduction_ratio,
              |  floor((CASE WHEN rr + rec = 0 THEN 0 ELSE 2*rr*rec/(rr+rec) END) * 1e6 + 0.5) / 1e6 AS h3r
-             |FROM x""".stripMargin))
+             |FROM x""".stripMargin),
+      api = "Evaluation.evaluateDF",
+      desc = "Blocking quality metrics (recall/precision/F1/reduction-ratio/h3r) from one candidate-pairs pass: pairs and gold meet in one bit_or group-by, no gold join.")
   )
 }

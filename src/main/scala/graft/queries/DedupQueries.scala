@@ -229,7 +229,7 @@ object DedupQueries {
     s"$ctes,\n$tail"
   }
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // ---- exact dedup on canonical token-set key ---------------------------
     "dd_exact" -> QueryDef(
@@ -242,7 +242,9 @@ object DedupQueries {
               |SELECT dup_key, array_to_string(list_sort(list(DISTINCT id)), ',') AS ids,
               |       count(DISTINCT id) AS n
               |FROM canon GROUP BY dup_key HAVING count(DISTINCT id) >= 2
-              |ORDER BY dup_key""".stripMargin)),
+              |ORDER BY dup_key""".stripMargin),
+      api = "Dedup.exactDuplicates",
+      desc = "Exact duplicate groups by content hash — one hash-groupBy, the cheapest dedup pass."),
 
     // ---- bloom-prefiltered exact refresh dedup ---------------------------
     // bloom behavior is unobservable in the output (the verify join makes
@@ -264,7 +266,9 @@ object DedupQueries {
               |       FROM t WHERE cast(id AS bigint) % 4 = 0 GROUP BY id)
               |SELECT n.id, n.dup_key, c.dup_key IS NOT NULL AS in_corpus
               |FROM nk n LEFT JOIN (SELECT DISTINCT dup_key FROM ck) c USING (dup_key)
-              |ORDER BY n.id""".stripMargin)),
+              |ORDER BY n.id""".stripMargin),
+      api = "Dedup.bloomRefreshDedup",
+      desc = "Incremental exact dedup with a Bloom prefilter (codegen'd BloomMightContain plan literal): only maybe-dup rows pay the corpus join."),
 
     // ---- streaming exact dedup (batch form of the stateful operator) -----
     // single-batch run of streamExactDedup ≡ keep the (seq, id)-minimal
@@ -286,7 +290,9 @@ object DedupQueries {
               |  SELECT id, md5(array_to_string(list_sort(list(DISTINCT key)), ' ')) AS dup_key
               |  FROM ($docTokensSql) GROUP BY id)
               |SELECT dup_key, min(id::bigint)::varchar AS keep_id
-              |FROM canon GROUP BY dup_key ORDER BY dup_key""".stripMargin)),
+              |FROM canon GROUP BY dup_key ORDER BY dup_key""".stripMargin),
+      api = "StreamingOps.streamExactDedup",
+      desc = "Streaming exact dedup with TTL state (flatMapGroupsWithState) — state rows = distinct hashes, expired by watermark."),
 
     // ---- streaming NEAR-dup (batch form of the stateful operator) --------
     // single-batch run of streamMinHashNearDup ≡ band-bucket self-join +
@@ -332,7 +338,9 @@ object DedupQueries {
            |              JOIN sig sb ON sb.id = c.id_b)
            |SELECT id_a, id_b, est FROM est WHERE est >= 0.375
            |ORDER BY id_a, id_b""".stripMargin
-      }),
+      },
+      api = "StreamingOps.streamNearDup",
+      desc = "Streaming near-dup: band-bucket state holds SIGNATURES only, per-bucket admission cap — state measured flat under ×10 re-delivery."),
 
     // ---- §2.10: TTL near-dup — multi-wave horizon-rule replay -------------
     // The one divergent behavior of streamMinHashNearDupWithTtl vs its
@@ -460,7 +468,9 @@ object DedupQueries {
            |WHERE p.est >= 0.375
            |GROUP BY 1, 2, 3
            |ORDER BY 1, 2""".stripMargin
-      }),
+      },
+      api = "StreamingOps.streamMinHashNearDupWithTtl",
+      desc = "Multi-wave TTL replay: three deterministic MemoryStream waves pin watermark-driven eviction, refresh-extends-life and re-admission; the oracle replays the horizon rule wave by wave in SQL."),
 
     // ---- MinHash-LSH near-dup (3-token shingles, jaccard ≥ 0.2) ----------
     // Shingles, not tokens: a tiny shared vocabulary makes token-set
@@ -502,7 +512,9 @@ object DedupQueries {
            |           JOIN sizes sb ON sb.id = id_b
            |WHERE i / (sa.sz + sb.sz - i) >= 0.2
            |ORDER BY id_a, id_b""".stripMargin
-      }),
+      },
+      api = "Dedup.minHashNearDupPairs",
+      desc = "MinHash-LSH near-dup pairs: shingles → signatures → banded buckets → bucket join + exact Jaccard verify; hot-bucket cap bounds skew."),
 
     // ---- directed containment pairs (Broder's containment vs resemblance) -
     "dd_containment" -> QueryDef(
@@ -535,7 +547,9 @@ object DedupQueries {
            |SELECT id_from, id_to,
            |       floor(c * 1e6 + 0.5) / 1e6 AS containment
            |FROM dirs WHERE c >= 0.5 ORDER BY id_from, id_to""".stripMargin
-      }),
+      },
+      api = "Dedup.minHashContainmentPairs",
+      desc = "Containment (subset) detection via MinHash: asymmetric overlap estimate flags docs swallowed by bigger docs."),
 
     // ---- empirical LSH recall gate (measure before the corpus dedup) -----
     // ground truth = exact-Jaccard pairs on a deterministic md5-mod
@@ -590,7 +604,9 @@ object DedupQueries {
            |         ELSE (n_candidates - n_caught)::double / n_candidates END)
            |        * 1e6 + 0.5) / 1e6 AS false_candidate_rate
            |FROM docs, agg""".stripMargin
-      }),
+      },
+      api = "Dedup.lshRecall",
+      desc = "Empirical LSH recall gate: exact-Jaccard truth on a deterministic doc sample vs the production banding, plus the MMDS S-curve expectation."),
 
     // ---- incremental near-dup: new batch (doc_id % 4 = 0) vs corpus -------
     // corpus×corpus candidates never form; id_b is always from the new
@@ -634,7 +650,9 @@ object DedupQueries {
            |           JOIN sizes sb ON sb.id = id_b
            |WHERE i / (sa.sz + sb.sz - i) >= 0.2
            |ORDER BY id_a, id_b""".stripMargin
-      }),
+      },
+      api = "Dedup.minHashNearDupAgainstSig",
+      desc = "Production incremental near-dup: delta joins the corpus' STORED signature table — nothing corpus-sized recomputed or cached."),
 
     // batch, id_a from either side (new-new pairs canonical once).
     "dd_incremental_neardup" -> QueryDef(
@@ -671,7 +689,9 @@ object DedupQueries {
            |           JOIN sizes sb ON sb.id = id_b
            |WHERE i / (sa.sz + sb.sz - i) >= 0.2
            |ORDER BY id_a, id_b""".stripMargin
-      }),
+      },
+      api = "Dedup.minHashNearDupAgainst",
+      desc = "Incremental near-dup of a delta against a corpus (both as raw text) — the bootstrap form of `dd_incremental_sig`."),
 
     // ---- n-gram (3-shingle) Jaccard near-dup ------------------------------
     "dd_ngram_jaccard" -> QueryDef(
@@ -692,7 +712,9 @@ object DedupQueries {
               |FROM inter JOIN sizes sa ON sa.id = id_a
               |           JOIN sizes sb ON sb.id = id_b
               |WHERE i / (sa.sz + sb.sz - i) >= 0.1
-              |ORDER BY id_a, id_b""".stripMargin)),
+              |ORDER BY id_a, id_b""".stripMargin),
+      api = "Dedup.ngramJaccardPairs",
+      desc = "N-gram shingle Jaccard near-dup pairs with doc-frequency capped shingles — the bucketed classic."),
 
     // ---- duplicate-cluster formation over the near-dup pair graph --------
     // connected components via min-label propagation; oracle = recursive
@@ -723,7 +745,9 @@ object DedupQueries {
               |  UNION
               |  SELECT s.dst, r.lbl FROM reach r JOIN sym s ON s.src = r.id)
               |SELECT id, min(lbl) AS component
-              |FROM reach GROUP BY id ORDER BY id""".stripMargin)),
+              |FROM reach GROUP BY id ORDER BY id""".stripMargin),
+      api = "Dedup.components",
+      desc = "Connected components over dup pairs (frontier-based large-star/small-star, union-find property-tested) → cluster ids."),
 
     // ---- duplicate-cluster size histogram (dedup effectiveness report) ----
     // cluster sizes from the component labels plus the singleton count
@@ -764,7 +788,9 @@ object DedupQueries {
               |  SELECT 1, (SELECT count(*) FROM documents)
               |            - (SELECT count(*) FROM comp))
               |SELECT cluster_size, sum(n_clusters)::bigint AS n_clusters
-              |FROM hist GROUP BY 1 ORDER BY 1""".stripMargin)),
+              |FROM hist GROUP BY 1 ORDER BY 1""".stripMargin),
+      api = "Dedup.clusterHistogram",
+      desc = "Duplicate-cluster size histogram — the dedup report surface (groupBy twice, tiny output)."),
 
     // ---- corpus keep-list: the dedup pipeline's final answer --------------
     // every doc survives unless a component's non-minimal member; the
@@ -802,7 +828,9 @@ object DedupQueries {
               |       CASE WHEN c.component = cast(d.doc_id AS varchar) THEN NULL
               |            ELSE c.component END AS kept_by
               |FROM documents d LEFT JOIN comp c ON c.id = cast(d.doc_id AS varchar)
-              |ORDER BY id""".stripMargin)),
+              |ORDER BY id""".stripMargin),
+      api = "Dedup.keepList",
+      desc = "Keep-list: one representative per dup cluster (min id), everything else marked for drop."),
 
     // ---- quality-aware keep-list: keep the BEST duplicate, not the first --
     // same component graph as dd_keep_list; representative = max n_chars
@@ -851,7 +879,9 @@ object DedupQueries {
               |FROM documents d
               |LEFT JOIN comp c ON c.id = cast(d.doc_id AS varchar)
               |LEFT JOIN rep r ON r.component = c.component
-              |ORDER BY id""".stripMargin)),
+              |ORDER BY id""".stripMargin),
+      api = "Dedup.keepBest",
+      desc = "Quality-aware keep-best per cluster — deterministic (score, id) ordering, avoids nondeterministic max_by."),
 
     // ---- deterministic export sharding (pipeline tail) --------------------
     // content-addressed shard per id (md5-long mod 16), mirroring
@@ -862,7 +892,9 @@ object DedupQueries {
         .orderBy("id"),
       Some("""SELECT cast(doc_id AS varchar) AS id,
              |       (('0x'||substr(md5(cast(doc_id AS varchar)), 1, 15))::bigint % 16)::int AS shard
-             |FROM documents ORDER BY id""".stripMargin)),
+             |FROM documents ORDER BY id""".stripMargin),
+      api = "Dedup.shardAssignment",
+      desc = "Deterministic export sharding: content-addressed shard id (md5-long mod n) — reproducible output layout."),
 
     // ---- END-TO-END corpus refinement (the charter in one plan) ----------
     // quality gate → near-dup keep-list over survivors → content-addressed
@@ -933,7 +965,9 @@ object DedupQueries {
            |FROM q LEFT JOIN comp c ON c.id = q.id
            |WHERE c.component IS NULL OR c.component = q.id
            |ORDER BY q.id""".stripMargin
-      }),
+      },
+      api = "Dedup + TextAnalysis pipeline",
+      desc = "End-to-end curation pipeline: quality gate → near-dup drop → shard assignment, one composed plan."),
 
     // ---- STREAMING end-to-end corpus refinement ---------------------------
     // The streaming analog of pipe_refine_corpus, run in batch mode
@@ -1007,7 +1041,9 @@ object DedupQueries {
            |FROM q LEFT JOIN dropped d ON d.id = q.id
            |WHERE d.id IS NULL
            |ORDER BY q.id""".stripMargin
-      }),
+      },
+      api = "StreamingOps pipeline",
+      desc = "The refinement pipeline as a stream: gate + stateful dedup + shard tag per micro-batch."),
 
     // ---- SemDeDup: embedding-cluster semantic dedup (pairs → keep → shard)
     // SemDeDup (Abbas et al. 2023): within-cluster cosine near-dups →
@@ -1059,7 +1095,9 @@ object DedupQueries {
              |       (('0x'||substr(md5(ids.id), 1, 15))::bigint % 16)::int AS shard
              |FROM (SELECT DISTINCT id FROM e) ids LEFT JOIN comp c ON c.id = ids.id
              |WHERE c.component IS NULL OR c.component = ids.id
-             |ORDER BY ids.id""".stripMargin)),
+             |ORDER BY ids.id""".stripMargin),
+      api = "Similarity.clusterNearDup",
+      desc = "Semantic (embedding-cluster) dedup composed with keep-list and shard assignment — SemDeDup-style."),
 
     // ---- Span-level exact dedup + benchmark decontamination ---------------
     // Both operate on ORDERED whitespace tokens (position matters), not the
@@ -1092,7 +1130,9 @@ object DedupQueries {
              |       coalesce(k.n_kept, 0)::bigint AS n_kept,
              |       coalesce(k.kept_text, '') AS kept_text
              |FROM toks LEFT JOIN kept k ON k.id = toks.id
-             |ORDER BY toks.id""".stripMargin)),
+             |ORDER BY toks.id""".stripMargin),
+      api = "Dedup.spanDedup",
+      desc = "Within-doc repeated-span removal (ExactSubstr-style) — fully linear rolling-hash pass, no pairwise stage."),
 
     // ---- cross-doc exact-substring dedup (ExactSubstr, cross-doc half) ---
     // maximal spans of 8-token windows shared with ANOTHER document, and
@@ -1121,7 +1161,9 @@ object DedupQueries {
              |                     THEN 1 ELSE 0 END AS brk FROM m))
              |SELECT id, min(p)::bigint AS span_start,
              |       (max(p) + 8 - min(p))::bigint AS span_len, count(*) AS n_windows
-             |FROM isl GROUP BY id, isl ORDER BY id, span_start""".stripMargin)),
+             |FROM isl GROUP BY id, isl ORDER BY id, span_start""".stripMargin),
+      api = "Dedup.crossDocSpans",
+      desc = "Cross-document repeated spans (ExactSubstr cross-doc half): maximal token ranges shared with another doc — one gram doc-freq shuffle + per-doc island merge, boilerplate cappable."),
 
     "dd_crossdoc_cut" -> QueryDef(
       (s, dir) => Dedup.crossDocCut(table(s, dir, "documents"), "doc_id", "text", 8)
@@ -1152,7 +1194,9 @@ object DedupQueries {
              |       coalesce(k.n_kept, 0)::bigint AS n_kept,
              |       coalesce(k.kept_text, '') AS kept_text
              |FROM toks LEFT JOIN kept k ON k.id = toks.id
-             |ORDER BY toks.id""".stripMargin)),
+             |ORDER BY toks.id""".stripMargin),
+      api = "Dedup.crossDocCut",
+      desc = "Removes tokens covered by cross-doc shared windows, keeping within-doc-only repeats — the cut form of dd_crossdoc_spans."),
 
     "dd_decontaminate" -> QueryDef(
       (s, dir) => {
@@ -1182,13 +1226,17 @@ object DedupQueries {
              |       coalesce(h.n_hits, 0) > 0 AS contaminated
              |FROM toks t LEFT JOIN hits h ON h.id = t.id
              |WHERE t.source <> 'src0'
-             |ORDER BY t.id""".stripMargin)),
+             |ORDER BY t.id""".stripMargin),
+      api = "Dedup.decontaminate",
+      desc = "Train/eval decontamination by shared n-grams: train docs containing any eval n-gram are flagged via semi-join."),
 
     // ---- SimHash fingerprints + near-dup ----------------------------------
     "dd_simhash" -> QueryDef(
       (s, dir) => SimHash.fingerprint(docTokens(s, dir))
         .orderBy("id"),
-      Some(s"""SELECT * FROM (${SimHash.fingerprintSql(docTokensSql)}) ORDER BY id""".stripMargin)),
+      Some(s"""SELECT * FROM (${SimHash.fingerprintSql(docTokensSql)}) ORDER BY id""".stripMargin),
+      api = "Dedup.simHashNearDupPairs",
+      desc = "SimHash 64-bit fingerprints from token hashes — the bit-vote signature primitive."),
 
     "dd_simhash_neardup" -> QueryDef(
       (s, dir) => Dedup.simHashNearDupPairs(docTokens(s, dir), maxHamming = 10)
@@ -1207,7 +1255,9 @@ object DedupQueries {
            |SELECT id_a, id_b, bit_count(xor(fa, fb)) AS hamming
            |FROM cand WHERE bit_count(xor(fa, fb)) <= 10
            |ORDER BY id_a, id_b""".stripMargin
-      }),
+      },
+      api = "Dedup.simHashNearDupPairs",
+      desc = "SimHash near-dup: banded bit-block candidates + Hamming verify — never all-pairs."),
 
     // ---- text analysis ----------------------------------------------------
     "tx_langid" -> QueryDef(
@@ -1232,7 +1282,9 @@ object DedupQueries {
         s"""SELECT doc_id, $best AS lang_pred, s_en AS en_score
            |FROM (SELECT doc_id, text, $scoreExprs FROM documents)
            |ORDER BY doc_id""".stripMargin
-      }),
+      },
+      api = "TextAnalysis.langId",
+      desc = "N-gram/lexicon language ID with per-language scores — one pass of row-local signals."),
 
     "tx_quality" -> QueryDef(
       (s, dir) => table(s, dir, "documents")
@@ -1255,7 +1307,9 @@ object DedupQueries {
            |        regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
            |      FROM documents)
            |ORDER BY doc_id""".stripMargin
-      }),
+      },
+      api = "TextAnalysis.qualityScore",
+      desc = "Quality signals per doc: length, punctuation/stopword ratios, ws + BPE-ish token counts."),
 
     // ---- per-source corpus profile (the reporting surface) ----------------
     // one groupBy over row-local signals: the dashboard numbers a corpus
@@ -1291,7 +1345,9 @@ object DedupQueries {
            |       ${Num.gridSafeRoundSql("avg(q) / 1e6", 4)} AS mean_quality,
            |       count(DISTINCT lang) AS n_langs
            |FROM d GROUP BY source ORDER BY source""".stripMargin
-      }),
+      },
+      api = "TextAnalysis profile agg",
+      desc = "Per-source corpus dashboard: means of the row-local quality signals (grid-rational rounding)."),
 
     // ---- pairwise source vocabulary overlap from mergeable sketches ------
     // union-MinHash property: a source's signature is the element-wise
@@ -1315,7 +1371,10 @@ object DedupQueries {
            |       (($matches) * 62500)::bigint AS est_jaccard_e6
            |FROM sig a JOIN sig b ON a.id < b.id
            |ORDER BY grp_a, grp_b""".stripMargin
-      }),
+      },
+      api = "Dedup.sketchOverlap",
+      desc = "Pairwise source vocabulary overlap from mergeable union-MinHash sketches — one min-agg per source, then sources² arithmetic.",
+      auditAllow = Some("group-count-sized sketch cross (sources² rows; each group pre-collapsed to one signature)")),
 
     // ---- composite quality GATE (C4/Gopher-style keep/drop decision) ------
     // first-failing rule names the drop reason; thresholds chosen so the
@@ -1345,7 +1404,9 @@ object DedupQueries {
            |  FROM s)
            |SELECT doc_id, n_tokens, dup_frac_e6, reason, reason IS NULL AS keep
            |FROM r ORDER BY doc_id""".stripMargin
-      }),
+      },
+      api = "TextAnalysis.qualityFilter",
+      desc = "The quality gate: thresholded composite score, pushdown-friendly single filter."),
 
     // ---- END-TO-END curation verdicts ("tag, don't drop" funnel) ----------
     // Every independently-oracled stage (tx_langid gate, tx_quality_filter
@@ -1365,7 +1426,9 @@ object DedupQueries {
             allowedLangs = Seq("en", "de", "fr"), contamN = 4)
           .orderBy("id")
       },
-      Some(s"$curationVerdictsSql\nSELECT * FROM v ORDER BY id")),
+      Some(s"$curationVerdictsSql\nSELECT * FROM v ORDER BY id"),
+      api = "Curation.verdicts",
+      desc = "\"Tag, don't drop\" curation verdicts: langid gate → quality rules → exact-dup canonical → decontamination, one row per input doc with first-failure drop_stage attribution."),
 
     // same verdicts through the STREAMING-safe plan (row-local tagging,
     // codegen'd exact-set window-probe contamination, fMGWS dedup
@@ -1383,7 +1446,9 @@ object DedupQueries {
           .toDF()
           .orderBy("id")
       },
-      Some(s"$curationVerdictsSql\nSELECT * FROM v ORDER BY id")),
+      Some(s"$curationVerdictsSql\nSELECT * FROM v ORDER BY id"),
+      api = "StreamingCuration.verdicts",
+      desc = "Curation at ingest: the verdict funnel streaming-safe — row-local tagging, codegen'd exact-set window-probe decontamination (WindowHitCount), one fMGWS for the first-seen dup canonical."),
 
     // ---- §2.10 curation TTL: multi-wave canonical-horizon replay ----------
     // The divergent MULTI-batch semantics of the TTL'd dup-canonical
@@ -1509,7 +1574,9 @@ object DedupQueries {
            |       count(*) AS emits
            |FROM em GROUP BY 1, 2, 3
            |ORDER BY id, dup_of""".stripMargin
-      }),
+      },
+      api = "StreamingCuration.verdicts (stateTtl)",
+      desc = "Multi-wave replay of the TTL'd dup-canonical store: in-horizon dups, any-sighting refresh, horizon-on-access eviction with canonical re-election — the third TTL state store's divergent multi-batch semantics, oracled wave by wave."),
 
     // funnel report over the same verdicts, per source: stage drop counts
     // + surviving token mass — the dashboard a corpus owner reads before
@@ -1536,7 +1603,9 @@ object DedupQueries {
              |       count(*) FILTER (WHERE keep) AS n_kept,
              |       coalesce(sum(n_tokens) FILTER (WHERE keep), 0)::bigint AS kept_tokens
              |FROM v JOIN documents d ON cast(d.doc_id AS varchar) = v.id
-             |GROUP BY d.source ORDER BY d.source""".stripMargin)),
+             |GROUP BY d.source ORDER BY d.source""".stripMargin),
+      api = "Curation.funnel",
+      desc = "Per-source funnel report over the verdict table: stage drop counts + surviving token mass — the gate-cost dashboard."),
 
     // ---- discriminative quality classifier (GPT-3-style quality pump) ----
     // train LR on reference-vs-degraded (bootstrap negatives: stopword-
@@ -1596,7 +1665,10 @@ object DedupQueries {
            |        FROM c) AS mean_stop_ratio,
            |       true AS range_ok, true AS pos_acc_ok, true AS neg_acc_ok,
            |       true AS separation_ok""".stripMargin
-      }),
+      },
+      api = "QualityClassifier.fit/score",
+      desc = "GPT-3-style discriminative quality pump: LR trained on reference-vs-degraded, corpus scored as a literal-weight codegen projection (invariant-graded oracle).",
+      auditAllow = Some("one-row invariant-summary scalars crossJoined for the single-row output")),
 
     // ---- per-source document cap (batch crawl throttle) -------------------
     // keep the 10 highest-quality docs per source (the batch analog of the
@@ -1635,7 +1707,9 @@ object DedupQueries {
            |  FROM q)
            |SELECT doc_id, source, quality_e6, rk::int AS rk
            |FROM ranked WHERE rk <= 10 ORDER BY source, rk""".stripMargin
-      }),
+      },
+      api = "Window per source",
+      desc = "Per-source document cap keeping the quality-ranked head — batch form of a per-key rate limiter."),
 
     // ---- Per-source token-budget selection --------------------------------
     // "fill a training budget": content-addressed priority order, keep ⇔
@@ -1656,7 +1730,9 @@ object DedupQueries {
              |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
              |      FROM d)
              |SELECT grp, id, n_tokens, cum::bigint AS cum_tokens, cum <= 300 AS keep
-             |FROM c ORDER BY grp, id""".stripMargin)),
+             |FROM c ORDER BY grp, id""".stripMargin),
+      api = "TextAnalysis.tokenBudget",
+      desc = "Token-budget selection: two-phase distributed cumsum (driver prefix bounded by groups×buckets) cuts the corpus at N tokens."),
 
     // ---- deterministic sequence packing (training-bin assignment) --------
     // same md5-priority order and distributed cumsum as tx_token_budget;
@@ -1675,7 +1751,9 @@ object DedupQueries {
              |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prev
              |      FROM d)
              |SELECT grp, id, n_tokens, (prev // 200)::bigint AS bin
-             |FROM c ORDER BY grp, id""".stripMargin)),
+             |FROM c ORDER BY grp, id""".stripMargin),
+      api = "TextAnalysis.packSequences",
+      desc = "Training-sequence packing to a context length via the distributed cumsum — no driver-side loop."),
 
     // ---- overlapping token-window chunking (RAG/embedding prep) ----------
     // row-local: whitespace split + window arithmetic + per-chunk md5 in
@@ -1696,7 +1774,9 @@ object DedupQueries {
              |             l[chunk_idx * 48 + 1 : chunk_idx * 48 + 64] AS ck FROM e)
              |SELECT id, chunk_idx, chunk_start::int AS chunk_start,
              |       len(ck) AS n_tok, md5(array_to_string(ck, ' ')) AS chunk_md5
-             |FROM w ORDER BY id, chunk_idx""".stripMargin)),
+             |FROM w ORDER BY id, chunk_idx""".stripMargin),
+      api = "TextAnalysis.chunkWindows",
+      desc = "Overlapping token-window chunking per document (posexplode over computed offsets)."),
 
     // ---- deterministic weighted sampling (Efraimidis-Spirakis A-ES) ------
     // per-source top-10 by u^(1/w), u content-addressed (md5 of id),
@@ -1718,7 +1798,9 @@ object DedupQueries {
              |r AS (SELECT grp, id, w, row_number() OVER (PARTITION BY grp
              |          ORDER BY key DESC, id ASC) AS rank FROM k)
              |SELECT grp, id, w, rank::int AS rank FROM r
-             |WHERE rank <= 10 ORDER BY grp, rank""".stripMargin)),
+             |WHERE rank <= 10 ORDER BY grp, rank""".stripMargin),
+      api = "TextAnalysis.weightedSample",
+      desc = "Deterministic weighted sampling by content hash — reproducible without a global sort."),
 
     // ---- distributed BPE merge learning (Sennrich et al. 2016) -----------
     // corpus → (word, count) vocabulary ONCE; each round = vocab-sized
@@ -1728,7 +1810,9 @@ object DedupQueries {
       (s, dir) => TextAnalysis.bpeMerges(
           table(s, dir, "documents"), "text", rounds = 8)
         .orderBy("round"),
-      Some(bpeMergesSql(8))),
+      Some(bpeMergesSql(8)),
+      api = "TextAnalysis.bpeMerges",
+      desc = "BPE merge learning: iterative pair-count aggs, pairless rounds are no-ops; vocab stays driver-tiny."),
 
     // ---- BPE application (the encode side of the learned merges) ---------
     // per-document word vs subword counts after the 8 learned merges —
@@ -1738,7 +1822,9 @@ object DedupQueries {
       (s, dir) => TextAnalysis.bpeEncode(
           table(s, dir, "documents"), "doc_id", "text", rounds = 8)
         .orderBy("id"),
-      Some(bpeEncodeSql(8))),
+      Some(bpeEncodeSql(8)),
+      api = "TextAnalysis.bpeEncode",
+      desc = "BPE encoding with the learned merge table broadcast — token counts per doc."),
 
     // ---- packed-bin materialization (the training samples themselves) ----
     // members concatenated in the same md5-priority order that packed
@@ -1761,7 +1847,9 @@ object DedupQueries {
              |       sum(n_tokens)::bigint AS bin_tokens,
              |       string_agg(txt, ' ' ORDER BY pri, id) AS text
              |FROM c GROUP BY grp, (prev // 200)::bigint
-             |ORDER BY grp, bin""".stripMargin)),
+             |ORDER BY grp, bin""".stripMargin),
+      api = "TextAnalysis.packBins",
+      desc = "First-fit-style bin packing of docs into fixed-token bins, bucketed to stay distributed."),
 
     // ---- PII redaction audit -------------------------------------------
     // The corpus text carries no PII, so the query plants deterministic
@@ -1805,7 +1893,9 @@ object DedupQueries {
            |    '$ipRe', '<IP>', 'g'),
            |    '$phoneRe', '<PHONE>', 'g') AS redacted
            |FROM e ORDER BY id""".stripMargin
-      }),
+      },
+      api = "TextAnalysis.piiRedact",
+      desc = "Multi-pattern PII redaction (emails/phones/ids) — chained regexp_replace, portable RE2-safe patterns."),
 
     // ---- unigram-LM quality scoring (reference slice = src0) -------------
     // ln() is irrational for every smoothed ratio here, so stableRound
@@ -1829,7 +1919,10 @@ object DedupQueries {
                       "avg(-ln((coalesce(rc.c, 0) + 1.0) / (tot.n + tot.v + 1.0)))", 6)} AS nll_e6
            |FROM dt LEFT JOIN rc ON rc.tok = dt.key, tot
            |GROUP BY dt.id ORDER BY dt.id""".stripMargin
-      }),
+      },
+      api = "TextAnalysis.lmScore",
+      desc = "Unigram LM log-probability scoring against corpus-derived frequencies (broadcast vocab).",
+      auditAllow = Some("one-row (N, V) reference-totals broadcast into the smoothed log-prob projection")),
 
     // ---- CCNet head/middle/tail perplexity buckets (Wenzek et al. 2019) --
     // Thresholds are exact interpolated percentiles of the 6dp-rounded
@@ -1866,7 +1959,10 @@ object DedupQueries {
            |            WHEN s.nll_e6 <= thr.t2 THEN 'middle'
            |            ELSE 'tail' END AS bucket
            |FROM s JOIN thr USING (grp) ORDER BY s.id""".stripMargin
-      }),
+      },
+      api = "TextAnalysis.lmBuckets",
+      desc = "CCNet head/middle/tail buckets at per-group LM-score terciles — exact percentiles broadcast back.",
+      auditAllow = Some("one-row (N, V) reference-totals broadcast (the lmScore stage; thresholds themselves ride a groups-sized broadcast hash join)")),
 
     // ---- token entropy (information-density quality signal) --------------
     "tx_entropy" -> QueryDef(
@@ -1882,7 +1978,9 @@ object DedupQueries {
              |       floor((ln(sum(c)::double)
              |              - sum(c * ln(c)) / sum(c)::double) * 1e6 + 0.5) / 1e6
              |         AS entropy
-             |FROM tc GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+             |FROM tc GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+      api = "TextAnalysis.tokenEntropy",
+      desc = "Per-doc token entropy — low-entropy (repetitive/templated) docs surface for gating."),
 
     // ---- bigram LM scoring, stupid backoff (Brants et al. 2007) ---------
     "tx_lm_bigram" -> QueryDef(
@@ -1920,7 +2018,10 @@ object DedupQueries {
            |SELECT id, count(*) AS n_bigrams,
            |       floor((avg(-ln(s))) * 1e6 + 0.5) / 1e6 AS nll_e6
            |FROM s GROUP BY id ORDER BY id""".stripMargin
-      }),
+      },
+      api = "TextAnalysis.lmBigramScore",
+      desc = "Bigram LM scoring with backoff — the stronger fluency signal, same broadcast shape.",
+      auditAllow = Some("one-row (N, V) model-totals broadcast into the backoff projection (TextAnalysis.lmBigramScore)")),
 
     // ---- deterministic stratified split ----------------------------------
     "tx_split_assign" -> QueryDef(
@@ -1935,7 +2036,9 @@ object DedupQueries {
              |             ('0x'||substr(md5(cast(doc_id AS varchar)), 1, 15))::bigint
              |               / 1152921504606846976.0 AS f
              |      FROM documents)
-             |ORDER BY id""".stripMargin)),
+             |ORDER BY id""".stripMargin),
+      api = "TextAnalysis.splitAssign",
+      desc = "Deterministic train/val/test assignment by content hash — stable across runs and partitionings."),
 
     // ---- deterministic mixture resampling --------------------------------
     // src0 up-samples 2.5×, src1 down-samples to 0.25×, everything else
@@ -1958,7 +2061,9 @@ object DedupQueries {
              |      FROM d)
              |SELECT grp, id, r.copy AS copy
              |FROM n, range(0, 3) r(copy) WHERE r.copy < n.n
-             |ORDER BY grp, id, copy""".stripMargin)),
+             |ORDER BY grp, id, copy""".stripMargin),
+      api = "TextAnalysis.mixtureSample",
+      desc = "Mixture sampling to target per-source proportions with content-addressed stochastic rounding."),
 
     // ---- temperature (α=0.5) source re-balancing --------------------------
     // weights computed FROM the data: w(g) = (p_g^α / Σ p^α) / p_g; same
@@ -1985,7 +2090,10 @@ object DedupQueries {
              |      FROM d)
              |SELECT grp, id, r.copy AS copy, floor(w * 1e6 + 0.5) / 1e6 AS w_e6
              |FROM x, range(0, 8) r(copy) WHERE r.copy < x.nn
-             |ORDER BY grp, id, copy""".stripMargin)),
+             |ORDER BY grp, id, copy""".stripMargin),
+      api = "TextAnalysis.temperatureSample",
+      desc = "Temperature-weighted source mixing (p^(1/T) renormalized) — the multilingual-sampling classic.",
+      auditAllow = Some("one-row N and Z totals crossJoin(broadcast) into the groups-sized weight table")),
 
     // ---- DSIR importance weights (hashed unigram+bigram LLR) --------------
     // target model = the corpus's 'en' slice; raw model = whole corpus.
@@ -2020,7 +2128,10 @@ object DedupQueries {
              |       floor((avg(ln((coalesce(tc, 0) + 1.0) / (tt + 1024.0))
              |                  - ln((rc + 1.0) / (rt + 1024.0)))) * 1e6 + 0.5) / 1e6 AS dsir_e6
              |FROM cf JOIN rc USING (bkt) LEFT JOIN tc USING (bkt) CROSS JOIN tot
-             |GROUP BY id ORDER BY id""".stripMargin)),
+             |GROUP BY id ORDER BY id""".stripMargin),
+      api = "TextAnalysis.dsirWeights",
+      desc = "DSIR importance weights: hashed n-gram feature log-ratios target vs raw — one agg per side + broadcast ratio table.",
+      auditAllow = Some("one-row model-totals crossJoin(broadcast) into the bucket-bounded LLR join")),
 
     "tx_repetition" -> QueryDef(
       (s, dir) => TextAnalysis.repetitionSignals(table(s, dir, "documents"))
@@ -2064,7 +2175,9 @@ object DedupQueries {
           |  floor(dup3_chars::double / total_chars * 1e6)::bigint AS dup_trigram_frac_e6
           |FROM (SELECT DISTINCT doc_id, total_chars, m, m_distinct FROM stats) s
           |JOIN top2 USING (doc_id) JOIN dup3 USING (doc_id)
-          |ORDER BY doc_id""".stripMargin)),
+          |ORDER BY doc_id""".stripMargin),
+      api = "TextAnalysis.repetitionSignals",
+      desc = "Repetition signals (dup line/paragraph/n-gram fractions) — the Gopher-style gates, row-local."),
 
     // ---- Unicode NFC normalization (codegen'd JDK Normalizer) ------------
     // the corpus-prep identity step: composed and decomposed encodings of
@@ -2095,7 +2208,9 @@ object DedupQueries {
              |       length(nfc_normalize(raw))::bigint AS len_nfc,
              |       raw <> nfc_normalize(raw) AS changed,
              |       md5(nfc_normalize(raw)) AS nfc_md5
-             |FROM raws ORDER BY doc_id""".stripMargin)),
+             |FROM raws ORDER BY doc_id""".stripMargin),
+      api = "TextOps.normalize",
+      desc = "Unicode NFC normalization via a codegen'd JDK-Normalizer expression (SQL: graft_normalize) — composed/decomposed encodings hash identically after it; DuckDB nfc_normalize oracle."),
 
     "tx_fingerprint" -> QueryDef(
       (s, dir) => table(s, dir, "documents")
@@ -2113,7 +2228,9 @@ object DedupQueries {
            |        t -> ('0x'||substr(md5(t), 1, 15))::bigint)),
            |    (acc, h) -> (acc * 31 + h) % ${TextAnalysis.FingerprintMod}) AS fp
            |FROM documents ORDER BY doc_id""".stripMargin
-      }),
+      },
+      api = "TextAnalysis.fingerprint",
+      desc = "Rolling-hash document fingerprint over token windows — the winnowing primitive."),
 
     // ---- winnowing fingerprints (MOSS; Schleimer et al. SIGMOD 2003) ----
     // char-8-gram hashes, window 4, min-with-rightmost-tie selection; the
@@ -2148,7 +2265,9 @@ object DedupQueries {
              |         1048575 - sel % 1048576 AS fp_pos
              |  FROM sel WHERE pos >= 3)
              |SELECT doc_id, count(*) AS n_fp, sum(h)::bigint AS fp_sum
-             |FROM fp GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+             |FROM fp GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+      api = "TextAnalysis.winnow",
+      desc = "Winnowing fingerprint selection: per-doc min-hash windows (never a global window), position-bounded."),
 
     // ---- winnowing-fingerprint near-dup pairs ----------------------------
     // ordered-substring overlap: a shared fingerprint witnesses a shared
@@ -2163,7 +2282,9 @@ object DedupQueries {
              |  FROM fp a JOIN fp b ON a.h = b.h AND a.doc_id < b.doc_id
              |  GROUP BY 1, 2)
              |SELECT id_a, id_b, shared FROM p WHERE shared >= 5
-             |ORDER BY id_a, id_b""".stripMargin)),
+             |ORDER BY id_a, id_b""".stripMargin),
+      api = "TextAnalysis.winnowPairs",
+      desc = "Cross-doc winnow fingerprint matches: equi-join on selected fingerprints, lag-dedup reusing the min-window sort."),
 
     // ---- capped variant: the 100×-scale lever itself, hash-checked -------
     // maxHashDocs = 32 drops every fingerprint hash held by more than 32
@@ -2184,7 +2305,9 @@ object DedupQueries {
              |  FROM fpc a JOIN fpc b ON a.h = b.h AND a.doc_id < b.doc_id
              |  GROUP BY 1, 2)
              |SELECT id_a, id_b, shared FROM p WHERE shared >= 5
-             |ORDER BY id_a, id_b""".stripMargin)),
+             |ORDER BY id_a, id_b""".stripMargin),
+      api = "TextAnalysis.winnowPairs",
+      desc = "winnowPairs with the hot-fingerprint cap ENGAGED (maxHashDocs) and folded into the oracle — the boilerplate-skew lever, hash-verified."),
 
     // ---- vocabulary growth curve (Heaps' law observable) -----------------
     "tx_vocab_growth" -> QueryDef(
@@ -2207,7 +2330,10 @@ object DedupQueries {
               |  SELECT decile, count(*) AS n_docs
               |  FROM documents, cp WHERE doc_id < thr GROUP BY 1)
               |SELECT decile, n_docs, vocab
-              |FROM v JOIN d USING (decile) ORDER BY decile""".stripMargin)),
+              |FROM v JOIN d USING (decile) ORDER BY decile""".stripMargin),
+      api = "TextAnalysis.vocabGrowth",
+      desc = "Heaps-law vocabulary growth curve: distinct vocab at doc-count checkpoints in one pass.",
+      auditAllow = Some("10-row checkpoint table crossJoin(broadcast) into the vocab-keyed rollup (TextAnalysis.vocabGrowth)")),
 
     // ---- F1: Punkt abbreviation learning (Kiss & Strunk 2006) -----------
     // Closed-form fixture (the documents table carries no periods): 200
@@ -2276,6 +2402,9 @@ object DedupQueries {
              |SELECT token, c_period, c_plain,
              |       floor(s * 1e6 + 0.5) / 1e6 AS score,
              |       s >= 0.3 AS is_abbrev
-             |FROM scored ORDER BY token""".stripMargin))
+             |FROM scored ORDER BY token""".stripMargin),
+      api = "TextAnalysis.punktLearnAbbrevs",
+      desc = "Punkt abbreviation LEARNING (Kiss & Strunk LLR + the three published factors) as one type-keyed aggregate + one-row totals broadcast; survivors feed the nltk splitter's extraAbbrevs seam (--abbrev-learn).",
+      auditAllow = Some("one-row corpus-totals crossJoin(broadcast) into the vocabulary-sized candidate table (TextAnalysis.punktLearnAbbrevs)"))
   )
 }

@@ -285,7 +285,7 @@ object EncoderQueries {
        |    GROUP BY e.dst, f.pos) msg
        |  ON own.id = msg.id AND own.pos = msg.pos)""".stripMargin
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // ---- M8/M10: GCN-style propagation, 2 rounds --------------------------
     "m8_graph_propagation" -> QueryDef(
@@ -314,7 +314,10 @@ object EncoderQueries {
               |-- "+ 0.0" folds IEEE -0.0 (DuckDB keeps the sign of a negative
               |-- value that rounds to zero) to +0.0, matching Spark's output.
               |SELECT id, pos::int AS pos, floor(((v) + 1e-9) * 1e4 + 0.5) / 1e4 + 0.0 AS v
-              |FROM f2 ORDER BY id, pos""".stripMargin)),
+              |FROM f2 ORDER BY id, pos""".stripMargin),
+      api = "GraphPropagationEncoder.encode",
+      desc = "GCN-style neighbor averaging over the relation graph (2 rounds) on hashed token features — one join per round, degree-normalized.",
+      auditAllow = Some("one-row degree-normalization scalar broadcast")),
 
     // ---- M9: LightEA three-view propagation, depth 2 ----------------------
     // oracle replays the three views in SQL: direction-tagged edges,
@@ -378,7 +381,10 @@ object EncoderQueries {
               |-- value that rounds to zero) to +0.0, matching Spark's output.
               |SELECT s.id, s.pos::int AS pos,
               |       floor((CASE WHEN fn.nrm = 0 THEN s.v ELSE s.v / fn.nrm END) * 1e4 + 0.5) / 1e4 + 0.0 AS v
-              |FROM stack s JOIN fn USING (id) ORDER BY id, pos""".stripMargin)),
+              |FROM stack s JOIN fn USING (id) ORDER BY id, pos""".stripMargin),
+      api = "LightEAEncoder.encode",
+      desc = "LightEA three-view (entity/relation/attribute) propagation — sparse joins, no training.",
+      auditAllow = Some("one-row norm scalars broadcast per channel")),
 
     // ---- W5: Sinkhorn re-ranking over kNN candidates ----------------------
     "w5_sinkhorn_rerank" -> QueryDef(
@@ -426,7 +432,10 @@ object EncoderQueries {
              |SELECT left_id,
              |  row_number() OVER (PARTITION BY left_id ORDER BY s DESC, right_id ASC)::int AS rank,
              |  right_id, floor((s * 1e6) * 1e2 + 0.5) / 1e2 AS s_scaled
-             |FROM i2c ORDER BY left_id, rank""".stripMargin)),
+             |FROM i2c ORDER BY left_id, rank""".stripMargin),
+      api = "Sinkhorn.rescale",
+      desc = "Sinkhorn row/column normalization re-ranking of kNN candidate scores (W5) — iterations over the candidate table only.",
+      auditAllow = Some("per-block dense re-rank over broadcast-small candidate lists")),
 
     // ---- A11/A12: joint + N-way blocker evaluation ------------------------
     // Three cheap SQL-expressible blockings over the documents parity
@@ -443,7 +452,9 @@ object EncoderQueries {
           Evaluation.resultDF(s, Evaluation.joinedEvaluate(tok, lang, gold, nl, nr)),
           tok.df, lang.df, src.df)
       },
-      Some(multiBlockSqlPrefix + joinedEvalSqlTail)),
+      Some(multiBlockSqlPrefix + joinedEvalSqlTail),
+      api = "Evaluation.joinedEvaluate",
+      desc = "Joint metrics of two blockings without re-blocking (from_joined_evals algebra): TP-union + summed comparisons."),
 
     "a11_multi_compare" -> QueryDef(
       (s, dir) => {
@@ -453,7 +464,9 @@ object EncoderQueries {
             Seq("lang" -> lang, "src" -> src, "tok" -> tok), gold, nl, nr),
           tok.df, lang.df, src.df)
       },
-      Some(multiBlockSqlPrefix + multiCompareSqlTail)),
+      Some(multiBlockSqlPrefix + multiCompareSqlTail),
+      api = "Evaluation.multipleBlockComparison",
+      desc = "N-way blocker comparison: per-pair joined-h3r improvement + TP Dice; all n evaluations and intersections from ONE bit_or group-by action (never n² set ops). Token blocking capped via maxBlockComparisons."),
 
     "a12_blocker_report" -> QueryDef(
       (s, dir) => {
@@ -463,7 +476,9 @@ object EncoderQueries {
             Seq("lang" -> lang, "src" -> src, "tok" -> tok), gold, nl, nr),
           tok.df, lang.df, src.df)
       },
-      Some(multiBlockSqlPrefix + blockerReportSqlTail)),
+      Some(multiBlockSqlPrefix + blockerReportSqlTail),
+      api = "Evaluation.comparisonReport",
+      desc = "Per-blocker report vs the best blocking (own metrics, Dice-vs-best, h3r a best+this join would add) — same cost shape as the N-way compare."),
 
     // ---- A10: dice overlap of two blockings' true-positive sets -----------
     "a10_dice_tp" -> QueryDef(
@@ -497,7 +512,9 @@ object EncoderQueries {
               |  (SELECT count(*) FROM tpb) AS nb,
               |  (SELECT count(*) FROM tpa SEMI JOIN tpb USING (l, r)) AS ni)
               |SELECT floor((CASE WHEN na + nb = 0 THEN 0
-              |             ELSE 2.0 * ni / (na + nb) END) * 1e6 + 0.5) / 1e6 AS dice FROM m""".stripMargin)),
+              |             ELSE 2.0 * ni / (na + nb) END) * 1e6 + 0.5) / 1e6 AS dice FROM m""".stripMargin),
+      api = "Evaluation.diceOfTruePositives",
+      desc = "Dice coefficient of two blockings' TP sets — TP via explode+semi-join (no pair enumeration), all three scalars from ONE bit_or group-by action."),
 
     // ---- M11 (real clustering) + kNN embedding blocker: invariant-graded --
     // MLlib KMeans internals aren't SQL-reproducible, so instead of
@@ -566,7 +583,10 @@ object EncoderQueries {
               |SELECT (SELECT count(*) FROM g) AS n_gold,
               |       (SELECT count(*) FROM enc) AS n_left,
               |       true AS membership_ok, true AS n_blocks_ok,
-              |       true AS recall_ok""".stripMargin)),
+              |       true AS recall_ok""".stripMargin),
+      api = "KMeansClusterBlocker.assign",
+      desc = "MLlib KMeans blocker over propagation embeddings — invariant-graded oracle.",
+      auditAllow = Some("MLlib KMeans internals broadcast centroids")),
 
     "emb_knn_blocker" -> QueryDef(
       (s, dir) => {
@@ -620,6 +640,9 @@ object EncoderQueries {
               |SELECT (SELECT count(*) FROM g) AS n_gold,
               |       (SELECT count(*) FROM enc) AS n_left,
               |       true AS coverage_ok, true AS k_ok,
-              |       true AS recall_ok""".stripMargin))
+              |       true AS recall_ok""".stripMargin),
+      api = "EmbeddingKnnBlocker.assign",
+      desc = "NN-blocks from embedding kNN (J4): per-left top-k neighbor blocks via the sign-LSH path.",
+      auditAllow = Some("strategy-selected ANN path; small-side broadcast by construction"))
   )
 }

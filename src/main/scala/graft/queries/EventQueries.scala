@@ -18,7 +18,7 @@ object EventQueries {
     * Iglewicz & Hoaglin 1993). */
   private val MadCut = 3.5
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // ---- tumbling-window aggregation (the streaming headline) ------------
     "ev_window_agg" -> QueryDef(
@@ -26,7 +26,9 @@ object EventQueries {
         .orderBy("win_start", "event_type"),
       Some("""SELECT epoch(time_bucket(INTERVAL 1 HOUR, ts))::bigint AS win_start,
              |       event_type, count(*) AS n, floor((sum(value)) * 1e4 + 0.5) / 1e4 AS sum_value
-             |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+             |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      api = "StreamingOps.windowedEventAgg",
+      desc = "Tumbling event-time window aggregation — identical frame batch and streaming (spec-asserted parity)."),
 
     // ---- JSON prop extraction --------------------------------------------
     "ev_json_extract" -> QueryDef(
@@ -38,7 +40,9 @@ object EventQueries {
         .orderBy("event_type"),
       Some("""SELECT event_type, count(*) AS n,
              |       floor((avg(json_extract_string(props, '$.k')::int)) * 1e6 + 0.5) / 1e6 AS avg_k
-             |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
+             |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+      api = "get_json_object / from_json",
+      desc = "Typed extraction from the events JSON payload column — schema-on-read without a UDF."),
 
     // ---- W2-style top-k per group ----------------------------------------
     "ev_top_users_per_type" -> QueryDef(
@@ -60,7 +64,9 @@ object EventQueries {
              |      ORDER BY total DESC, user_id ASC) AS rank
              |  FROM totals)
              |SELECT event_type, user_id, total, rank::int AS rank
-             |FROM ranked WHERE rank <= 3 ORDER BY event_type, rank""".stripMargin)),
+             |FROM ranked WHERE rank <= 3 ORDER BY event_type, rank""".stripMargin),
+      api = "Window.partitionBy + rank",
+      desc = "Top-n users per event type (W2) — per-type window with deterministic ties."),
 
     // ---- CDC last-write-wins compaction ----------------------------------
     // changelog → final state: latest (ts, event_id) row per
@@ -78,7 +84,9 @@ object EventQueries {
              |  FROM events)
              |SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us,
              |       floor((value) * 1e6 + 0.5) / 1e6 AS value
-             |FROM r WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin)),
+             |FROM r WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin),
+      api = "StreamingOps.compactLatest",
+      desc = "CDC compaction to latest-per-key (max_by-free: (ts, tiebreak) window) — batch form."),
 
     // ---- gap-based sessionization ----------------------------------------
     "ev_sessionize" -> QueryDef(
@@ -99,7 +107,9 @@ object EventQueries {
              |              THEN 1 ELSE 0 END AS new_session
              |  FROM lagged)
              |SELECT user_id, sum(new_session)::bigint AS n_sessions, count(*) AS n_events
-             |FROM flags GROUP BY user_id ORDER BY user_id""".stripMargin)),
+             |FROM flags GROUP BY user_id ORDER BY user_id""".stripMargin),
+      api = "StreamingOps.sessionize",
+      desc = "Gap-based sessionization via lag + cumulative session ids — one user-keyed shuffle."),
 
     // ---- event-time interval join (stream-stream join, batch form) --------
     // clicks joined to purchases by the same user within 30 minutes after
@@ -122,7 +132,9 @@ object EventQueries {
              |       c.us // 1000000 AS l_sec, p.us // 1000000 AS r_sec
              |FROM c JOIN p ON c.user_id = p.user_id
              |  AND p.us >= c.us AND p.us <= c.us + 1800000000
-             |ORDER BY c.user_id, l_id, r_id""".stripMargin)),
+             |ORDER BY c.user_id, l_id, r_id""".stripMargin),
+      api = "StreamingOps.intervalJoin",
+      desc = "Interval (range) join events×spans through a bucketed equi-join — range predicates never become a nested loop."),
 
     // ---- event-time interval join, LEFT OUTER (unmatched clicks kept) -----
     "ev_interval_join_outer" -> QueryDef(
@@ -142,7 +154,9 @@ object EventQueries {
              |       c.us // 1000000 AS l_sec, p.us // 1000000 AS r_sec
              |FROM c LEFT JOIN p ON c.user_id = p.user_id
              |  AND p.us >= c.us AND p.us <= c.us + 1800000000
-             |ORDER BY c.user_id, l_id, r_id""".stripMargin)),
+             |ORDER BY c.user_id, l_id, r_id""".stripMargin),
+      api = "StreamingOps.intervalJoin",
+      desc = "Outer interval join: unmatched left rows survive with null span columns, same bucket plan."),
 
     // ---- as-of join: purchase → latest click within 30 min ---------------
     // the oracle states the same contract through the OPPOSITE algorithm
@@ -170,7 +184,9 @@ object EventQueries {
              |    AND c.us <= p.us AND c.us >= p.us - 1800000000)
              |SELECT user_id, l_id, r_id, l_us // 1000000 AS l_sec,
              |       r_us // 1000000 AS r_sec
-             |FROM cand WHERE rk = 1 ORDER BY user_id, l_id""".stripMargin)),
+             |FROM cand WHERE rk = 1 ORDER BY user_id, l_id""".stripMargin),
+      api = "StreamingOps.asofJoin",
+      desc = "As-of join (latest quote ≤ event ts) via union + last_value window — no per-row subquery."),
 
     // ---- as-of join, bucketed scale path (same contract, same oracle) ----
     // hourly buckets so the carry machinery is genuinely exercised at
@@ -198,7 +214,9 @@ object EventQueries {
              |    AND c.us <= p.us AND c.us >= p.us - 1800000000)
              |SELECT user_id, l_id, r_id, l_us // 1000000 AS l_sec,
              |       r_us // 1000000 AS r_sec
-             |FROM cand WHERE rk = 1 ORDER BY user_id, l_id""".stripMargin)),
+             |FROM cand WHERE rk = 1 ORDER BY user_id, l_id""".stripMargin),
+      api = "StreamingOps.asofJoinBucketed",
+      desc = "As-of join for hot keys: time-bucketed equi-join carries only bucket-local candidates — the 100 TB shape."),
 
     // ---- streaming as-of join, batch form ---------------------------------
     // single-batch run of streamAsofJoin: the per-key (us, side, id) sort
@@ -234,7 +252,9 @@ object EventQueries {
              |    AND c.us <= p.us AND c.us >= p.us - 1800000000)
              |SELECT user_id, l_id, r_id, l_us // 1000000 AS l_sec,
              |       r_us // 1000000 AS r_sec
-             |FROM cand WHERE rk = 1 ORDER BY user_id, l_id""".stripMargin)),
+             |FROM cand WHERE rk = 1 ORDER BY user_id, l_id""".stripMargin),
+      api = "StreamingOps.streamAsofJoin",
+      desc = "Streaming as-of join with keyed quote state and watermark expiry."),
 
     // ---- per-key event-time rate limiting (batch form of the stateful op) --
     // single-batch run of StreamingOps.rateLimit ≡ row_number per
@@ -267,7 +287,9 @@ object EventQueries {
              |  FROM r)
              |SELECT key, id, win_start, seq::int AS seq_in_win
              |FROM ranked WHERE seq <= 2
-             |ORDER BY key, win_start, seq_in_win""".stripMargin)),
+             |ORDER BY key, win_start, seq_in_win""".stripMargin),
+      api = "StreamingOps.rateLimit",
+      desc = "Per-key rate limiting (first N per window) — deterministic window + filter, batch form."),
 
     // ---- rate-limited interval join (composed pipeline front door) --------
     // clicks capped at 2/user/hour, survivors interval-joined to purchases
@@ -302,7 +324,9 @@ object EventQueries {
              |FROM capped c JOIN p ON c.user_id = p.user_id
              |  AND p.us >= c.us AND p.us <= c.us + 1800000000
              |WHERE c.seq <= 2
-             |ORDER BY c.user_id, l_id, r_id""".stripMargin)),
+             |ORDER BY c.user_id, l_id, r_id""".stripMargin),
+      api = "StreamingOps.rateLimitedIntervalJoin",
+      desc = "Rate limiter composed with the interval join — admission control before join fan-out."),
 
     // ---- session windows (built-in session_window, batch form) ------------
     // new-session rule is ts >= prev + gap at MICRO precision (Spark's
@@ -332,7 +356,9 @@ object EventQueries {
              |       ((max(us) + 1800000000) // 1000000) AS sess_end,
              |       count(*) AS n_events
              |FROM sess GROUP BY user_id, sid
-             |ORDER BY user_id, sess_start""".stripMargin)),
+             |ORDER BY user_id, sess_start""".stripMargin),
+      api = "StreamingOps.sessionWindowAgg",
+      desc = "Native session_window aggregation — the Structured Streaming session form on batch data."),
 
     // ---- multimodal: metadata decode over binary columns ------------------
     // runs the REAL per-partition ImageIO decode path; the synthetic
@@ -356,7 +382,9 @@ object EventQueries {
              |       md5(text) AS content_hash,
              |       (('0x'||substr(md5(text), 1, 15))::bigint % 1280 + 1)::int AS width,
              |       (('0x'||substr(md5(text||'h'), 1, 15))::bigint % 720 + 1)::int AS height
-             |FROM documents ORDER BY id""".stripMargin)),
+             |FROM documents ORDER BY id""".stripMargin),
+      api = "Multimodal.decodeImageMeta",
+      desc = "Image header decode (real ImageIO) → typed width/height/format metadata; per-partition codec init."),
 
     // ---- multimodal: frame sampling over binary ---------------------------
     // ASCII corpus → byte offsets == char offsets, so the oracle slices
@@ -376,7 +404,9 @@ object EventQueries {
              |SELECT id, frame_idx,
              |       md5(substring(text, frame_idx * 32 + 1, 32)) AS frame_hash,
              |       least(32, nb - frame_idx * 32)::int AS frame_bytes
-             |FROM f WHERE frame_idx % 2 = 0 ORDER BY id, frame_idx""".stripMargin)),
+             |FROM f WHERE frame_idx % 2 = 0 ORDER BY id, frame_idx""".stripMargin),
+      api = "Multimodal.sampleFrames",
+      desc = "Deterministic frame sampling from video-like binaries (zero-length guarded) — the mapPartitions plumbing, stub codec."),
 
     // ---- multimodal: real resize path (JDK ImageIO decode→scale→encode);
     // the synthetic corpus is text, so every blob takes the deterministic
@@ -398,7 +428,9 @@ object EventQueries {
              |       greatest((octet_length(encode(text)) * 50) // 100, 1)::int AS n_bytes,
              |       md5(substring(text, 1, greatest((octet_length(encode(text)) * 50) // 100, 1))) AS hash,
              |       false AS resized
-             |FROM documents ORDER BY id""".stripMargin)),
+             |FROM documents ORDER BY id""".stripMargin),
+      api = "Multimodal.resizeImages",
+      desc = "Bilinear image resize over binary columns — batch-shaped, codec-pluggable."),
 
     // ---- multimodal: per-partition feature extraction ---------------------
     // runs the REAL decodeFeatures path (pixel luminance histograms for
@@ -435,7 +467,9 @@ object EventQueries {
              |SELECT g.id, g.bucket::int AS bucket,
              |       coalesce(c.c, 0) / g.n AS v, false AS decoded
              |FROM grid g LEFT JOIN counts c ON g.id = c.id AND g.bucket = c.bucket
-             |ORDER BY g.id, g.bucket""".stripMargin)),
+             |ORDER BY g.id, g.bucket""".stripMargin),
+      api = "Multimodal.decodeFeatures",
+      desc = "Pixel feature extraction (channel means/edges) from decoded images."),
 
     // ---- multimodal: perceptual-hash duplicate groups ---------------------
     // quantized perceptual hash over the decoded feature vectors: phash =
@@ -487,7 +521,9 @@ object EventQueries {
              |SELECT phash, array_to_string(list_sort(list(DISTINCT id)), ',') AS ids,
              |       count(DISTINCT id) AS n
              |FROM bk GROUP BY phash HAVING count(DISTINCT id) >= 2
-             |ORDER BY phash""".stripMargin))
+             |ORDER BY phash""".stripMargin),
+      api = "Multimodal.decodeFeatures + hash",
+      desc = "Perceptual-hash duplicate groups from quantized features — group form, never pairwise.")
   ) ++ Map(
 
     // ---- ordered funnel (signup → view → purchase, 7-day horizon) --------
@@ -521,7 +557,9 @@ object EventQueries {
              |       (SELECT count(*) FROM s1) AS users
              |UNION ALL SELECT 2, 'view', (SELECT count(*) FROM s2)
              |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
-             |ORDER BY stage""".stripMargin)),
+             |ORDER BY stage""".stripMargin),
+      api = "EventAnalytics.funnel",
+      desc = "K-stage funnel in ONE user-keyed shuffle (ordered-stage scan per user, hot-user bound) — not O(k²) self-joins."),
 
     // ---- cohort retention matrix -----------------------------------------
     "ev_retention" -> QueryDef(
@@ -537,7 +575,9 @@ object EventQueries {
              |  WHERE date_diff('day', cohort, day) <= 30)
              |SELECT strftime(cohort, '%Y-%m-%d') AS cohort_day,
              |       day_offset::int AS day_offset, count(*) AS users
-             |FROM j GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+             |FROM j GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      api = "EventAnalytics.retention",
+      desc = "Cohort retention matrix: first-seen cohort × activity period, two aggs."),
 
     // ---- robust outliers: median/MAD modified z (Iglewicz-Hoaglin) -------
     // three keyed passes (med → MAD → count); exact percentile parity with
@@ -559,7 +599,9 @@ object EventQueries {
              |                 AND 0.6745 * abs(value - s.med) > $MadCut * s.mad
              |                THEN 1 ELSE 0 END)::bigint AS n_outliers
              |FROM events JOIN s USING (event_type)
-             |GROUP BY 1 ORDER BY 1""".stripMargin)),
+             |GROUP BY 1 ORDER BY 1""".stripMargin),
+      api = "EventAnalytics.madOutliers",
+      desc = "Robust MAD outlier flags with interpolated median cut — approx-quantile based, no global sort."),
 
     // ---- exact per-type value quantiles ----------------------------------
     // Spark's exact `percentile` vs DuckDB quantile_cont — both
@@ -572,7 +614,9 @@ object EventQueries {
              |  floor((quantile_cont(value, 0.50)) * 1e4 + 0.5) / 1e4 AS p50,
              |  floor((quantile_cont(value, 0.90)) * 1e4 + 0.5) / 1e4 AS p90,
              |  floor((quantile_cont(value, 0.99)) * 1e4 + 0.5) / 1e4 AS p99
-             |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
+             |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+      api = "EventAnalytics.valueQuantiles",
+      desc = "Per-type value quantiles (exact grid via window ranks) — the distribution report."),
 
     // ---- first-order Markov transition matrix ----------------------------
     "ev_markov_transitions" -> QueryDef(
@@ -589,7 +633,9 @@ object EventQueries {
              |SELECT from_type, to_type, n,
              |       floor((n::double / sum(n) OVER (PARTITION BY from_type))
              |             * 1e6 + 0.5) / 1e6 AS p
-             |FROM c ORDER BY from_type, to_type""".stripMargin)),
+             |FROM c ORDER BY from_type, to_type""".stripMargin),
+      api = "EventAnalytics.markovTransitions",
+      desc = "Event-type Markov transition matrix via lag over per-user ordered streams."),
 
     // ---- streaming Markov transitions, batch form ------------------------
     // single-batch run of streamMarkov ≡ the batch lag-window operator
@@ -626,7 +672,9 @@ object EventQueries {
              |  WHERE date_diff('day', cohort, day) <= 30)
              |SELECT strftime(cohort, '%Y-%m-%d') AS cohort_day,
              |       day_offset::int AS day_offset, count(*) AS users
-             |FROM j GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+             |FROM j GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      api = "StreamingOps.streamRetention",
+      desc = "Streaming retention with per-user first-seen state."),
 
     "st_markov" -> QueryDef(
       (s, dir) => {
@@ -655,7 +703,9 @@ object EventQueries {
              |SELECT from_type, to_type, n,
              |       floor((n::double / sum(n) OVER (PARTITION BY from_type))
              |             * 1e6 + 0.5) / 1e6 AS p
-             |FROM c ORDER BY from_type, to_type""".stripMargin)),
+             |FROM c ORDER BY from_type, to_type""".stripMargin),
+      api = "StreamingOps.streamMarkov",
+      desc = "Streaming Markov transitions: last-state-per-user keyed state."),
 
     // ---- mergeable HLL sketches with an honest tolerance gate ------------
     // the 100-TB architecture: per-DAY DataSketches HLL partials built
@@ -682,7 +732,9 @@ object EventQueries {
       },
       Some("""SELECT event_type, count(DISTINCT user_id) AS exact_users,
              |       true AS hll_ok
-             |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
+             |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+      api = "approx_count_distinct",
+      desc = "Distinct users per type, exact + HLL sketch with pinned within-5% invariant oracle."),
 
     // ---- rolling z-score anomaly signal ----------------------------------
     "ev_rolling_zscore" -> QueryDef(
@@ -700,7 +752,9 @@ object EventQueries {
              |SELECT event_id, user_id, n AS n_prev,
              |       floor((CASE WHEN sd > 0 THEN (value - mean) / sd
              |                   ELSE 0.0 END) * 1e4 + 0.5) / 1e4 AS z
-             |FROM w WHERE n >= 10 ORDER BY event_id""".stripMargin)),
+             |FROM w WHERE n >= 10 ORDER BY event_id""".stripMargin),
+      api = "EventAnalytics.rollingZScore",
+      desc = "Rolling z-score anomaly signal over a trailing event window per key."),
 
     // ---- Z-order (Morton) layout statistics ------------------------------
     "ev_zorder_stats" -> QueryDef(
@@ -724,7 +778,10 @@ object EventQueries {
            |       count(DISTINCT u) AS users,
            |       (max(hr) - min(hr))::bigint AS hour_span
            |FROM zv GROUP BY 1 ORDER BY 1""".stripMargin
-      }),
+      },
+      api = "EventAnalytics.zOrderStats",
+      desc = "Z-order (Morton) interleave of (ts, user) with per-file-bucket min/max overlap stats — the layout-clustering evidence.",
+      auditAllow = Some("one-row dimension-bounds broadcast into the range normalization (EventAnalytics.zOrderStats)")),
 
     // ---- streaming funnel, batch form ------------------------------------
     // single-batch run of streamFunnel: greedy advancement over the
@@ -776,7 +833,9 @@ object EventQueries {
              |       (SELECT count(*) FROM s1) AS users
              |UNION ALL SELECT 2, 'view', (SELECT count(*) FROM s2)
              |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
-             |ORDER BY stage""".stripMargin)),
+             |ORDER BY stage""".stripMargin),
+      api = "StreamingOps.streamFunnel",
+      desc = "Streaming funnel: per-user O(1) stage-progress state, population-bounded."),
 
     // ---- streaming CDC compaction, batch form ----------------------------
     // single-batch run of streamCompactLatest: state starts empty, each
@@ -803,6 +862,8 @@ object EventQueries {
              |  FROM events)
              |SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us,
              |       floor((value) * 1e6 + 0.5) / 1e6 AS value
-             |FROM r WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin))
+             |FROM r WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin),
+      api = "StreamingOps.streamCompactLatest",
+      desc = "Streaming CDC compaction with keyed state — one row per key, updates collapse in-state.")
   )
 }

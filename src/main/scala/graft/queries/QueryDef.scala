@@ -6,10 +6,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * tables plus (when SQL-expressible) the equivalent DuckDB oracle SQL.
   * Column names/types must match the oracle exactly — the driver sorts
   * columns by name and hashes values.
+  *
+  * The record also carries everything else keyed by the query's name:
+  * its `docs/OPERATORS.md` row ([[graft.Catalog]]: `api` is the library
+  * API it exercises, `desc` what it computes) and, in `auditAllow`, why
+  * a CartesianProduct / BroadcastNestedLoopJoin in its plan is
+  * acceptable ([[graft.PlanAudit]] flags the operator otherwise).
   */
 final case class QueryDef(
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: Option[String],
+    api: String,
+    desc: String,
+    auditAllow: Option[String] = None)
 
 object QueryDef {
   /** Parquet table loader rooted at the per-SF dir. */

@@ -74,14 +74,16 @@ object RelationalQueries {
       |  SELECT c AS src, su AS dst FROM pairs
       |  UNION ALL SELECT su, c FROM pairs)""".stripMargin
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // ---- U3: reverse relations -------------------------------------------
     "u3_reverse_rel" -> QueryDef(
       (s, dir) => Relational.reverseRel(relFrame(s, dir), "inv_")
         .orderBy("head", "rel", "tail"),
       Some(s"""SELECT tail AS head, 'inv_'||rel AS rel, head AS tail
-              |FROM ($relSql) ORDER BY 1, 2, 3""".stripMargin)),
+              |FROM ($relSql) ORDER BY 1, 2, 3""".stripMargin),
+      api = "Relational.reverseRel",
+      desc = "Adds inverse relation triples (`_inv_` prefixed) — U3; one narrow projection + union, no shuffle."),
 
     // ---- A6: entity count -------------------------------------------------
     "a6_count_entities" -> QueryDef(
@@ -92,7 +94,9 @@ object RelationalQueries {
       Some(s"""SELECT count(DISTINCT e) AS n_entities FROM (
               |  SELECT head AS e FROM ($attrSql)
               |  UNION ALL SELECT head FROM ($relSql)
-              |  UNION ALL SELECT tail FROM ($relSql))""".stripMargin)),
+              |  UNION ALL SELECT tail FROM ($relSql))""".stripMargin),
+      api = "Relational.countEntities",
+      desc = "Distinct entity count over heads∪tails (A6) — exact, plus an approx_count_distinct HLL variant."),
 
     // ---- A4: relation importance -----------------------------------------
     "a4_rel_importance" -> QueryDef(
@@ -113,7 +117,10 @@ object RelationalQueries {
               |  CASE WHEN (rc/(n.n*n.n) + tc/rc) = 0 THEN 0
               |       ELSE 2*(rc/(n.n*n.n))*(tc/rc)/((rc/(n.n*n.n)) + (tc/rc)) END) * 1e6 + 0.5) / 1e6
               |  AS importance
-              |FROM c, n ORDER BY rel""".stripMargin)),
+              |FROM c, n ORDER BY rel""".stripMargin),
+      api = "Relational.relationImportance",
+      desc = "Relation importance: per-relation entity coverage ratio (A4/F6 arithmetic).",
+      auditAllow = Some("one-row entity-count total crossJoin(broadcast) (Relational.scala:98)")),
 
     // ---- A5: name (attribute property) importance ------------------------
     "a5_name_importance" -> QueryDef(
@@ -135,7 +142,10 @@ object RelationalQueries {
               |  CASE WHEN (hc/n.n + tc/rc) = 0 THEN 0
               |       ELSE 2*(hc/n.n)*(tc/rc)/((hc/n.n) + (tc/rc)) END) * 1e6 + 0.5) / 1e6
               |  AS importance
-              |FROM c, n ORDER BY rel""".stripMargin)),
+              |FROM c, n ORDER BY rel""".stripMargin),
+      api = "Relational.nameImportance",
+      desc = "Name-property importance: coverage × distinctness per attribute name (A5).",
+      auditAllow = Some("one-row entity-count total crossJoin(broadcast) (Relational.scala:120)")),
 
     // ---- P8/W1: top-n relations per entity by importance ------------------
     "p8_filter_importance" -> QueryDef(
@@ -161,7 +171,10 @@ object RelationalQueries {
               |keep AS (SELECT head, rel FROM ranked WHERE rn <= 2)
               |SELECT t.head, t.rel, t.tail FROM ($relSql) t
               |SEMI JOIN keep k ON t.head = k.head AND t.rel = k.rel
-              |ORDER BY 1, 2, 3""".stripMargin)),
+              |ORDER BY 1, 2, 3""".stripMargin),
+      api = "Relational.filterImportance",
+      desc = "Keeps each entity's top-n most important relations — broadcast importance join + per-entity window (P8/J6/W1).",
+      auditAllow = Some("consumes a4's importance pipeline (one-row total broadcast)")),
 
     // ---- W1 named API: top-n name properties per entity -------------------
     "w1_top_name_props" -> QueryDef(
@@ -186,7 +199,10 @@ object RelationalQueries {
               |keep AS (SELECT head, rel FROM ranked WHERE rn <= 1)
               |SELECT t.head, t.rel, t.tail FROM ($attrSql) t
               |SEMI JOIN keep k ON t.head = k.head AND t.rel = k.rel
-              |ORDER BY 1, 2, 3""".stripMargin)),
+              |ORDER BY 1, 2, 3""".stripMargin),
+      api = "Window.partitionBy + row_number",
+      desc = "Top-n name properties per entity by importance — the W1 window form with a deterministic tiebreak.",
+      auditAllow = Some("consumes a5's importance pipeline (one-row total broadcast)")),
 
     // ---- J5: neighbor attribute concat ------------------------------------
     "j5_neighbor_concat" -> QueryDef(
@@ -201,7 +217,9 @@ object RelationalQueries {
               |  SELECT i.head AS id, c.txt FROM inv i JOIN conc c ON i.tail = c.id
               |  UNION ALL SELECT id, txt FROM conc)
               |SELECT id AS head, string_agg(DISTINCT txt, ' ' ORDER BY txt) AS txt
-              |FROM allt GROUP BY id ORDER BY head""".stripMargin)),
+              |FROM allt GROUP BY id ORDER BY head""".stripMargin),
+      api = "Relational.neighborConcat",
+      desc = "Concatenates each entity's neighbors' attribute text through the relation graph (J5) — one join + one agg."),
 
     // ---- SimpleRelationalTokenBlocker end-to-end --------------------------
     // left graph = even orders (+ all parts), right = odd orders; hot
@@ -258,7 +276,9 @@ object RelationalQueries {
            |rb AS (SELECT key, array_to_string(list_sort(list(id)), ',') AS right_ids FROM rk GROUP BY key)
            |SELECT key AS block_key, left_ids, right_ids
            |FROM lb JOIN rb USING (key) ORDER BY block_key""".stripMargin
-      }),
+      },
+      api = "SimpleRelationalBlocker.assign",
+      desc = "Composite relational token blocker: attribute token blocks ∪ neighbor-text token blocks (§2.9 wiring, oracled end-to-end)."),
 
     // ---- A7: block statistics --------------------------------------------
     "a7_block_stats" -> QueryDef(
@@ -275,7 +295,9 @@ object RelationalQueries {
              |              count(DISTINCT s_suppkey) AS rs FROM supplier GROUP BY 1)
              |SELECT block_key, ls::int AS left_size, rs::int AS right_size,
              |       (ls + rs)::int AS assignments, (ls * rs)::bigint AS comparisons
-             |FROM lb JOIN rb USING (block_key) ORDER BY block_key""".stripMargin)),
+             |FROM lb JOIN rb USING (block_key) ORDER BY block_key""".stripMargin),
+      api = "Blocks.statistics",
+      desc = "Block statistics (A7): block count, min/max/mean sizes, comparison count from array sizes — no pair enumeration."),
 
     // ---- P10: block cap ---------------------------------------------------
     "p10_block_cap" -> QueryDef(
@@ -299,7 +321,9 @@ object RelationalQueries {
               |rb AS (SELECT key, count(*) AS rs FROM rt GROUP BY key)
               |SELECT key AS block_key, ls::int AS left_size, rs::int AS right_size
               |FROM lb JOIN rb USING (key)
-              |WHERE ls::bigint * rs <= 20000 ORDER BY block_key""".stripMargin)),
+              |WHERE ls::bigint * rs <= 20000 ORDER BY block_key""".stripMargin),
+      api = "Blocks.cap",
+      desc = "Drops blocks whose |L|·|R| exceeds a comparison budget (P10) — the pre-enumeration safety valve."),
 
     // ---- J3: combine block tables -----------------------------------------
     // token blocks ∪ qgram blocks over the same doc split: overlapping
@@ -345,7 +369,9 @@ object RelationalQueries {
               |  FROM tokb a FULL OUTER JOIN langb b ON a.key = b.key)
               |SELECT block_key, array_to_string(l, ',') AS left_ids,
               |       array_to_string(r, ',') AS right_ids
-              |FROM comb ORDER BY block_key""".stripMargin)),
+              |FROM comb ORDER BY block_key""".stripMargin),
+      api = "Blocks.outerCombine",
+      desc = "Outer combine of two blockings (J3): full-outer on key, id arrays unioned distinct."),
 
     // ---- W3/P10: full purge with CC-plateau threshold ---------------------
     "w3_purge" -> QueryDef(
@@ -380,7 +406,9 @@ object RelationalQueries {
               |thr AS (SELECT coalesce(
               |    (SELECT min(i_card) FROM dupd),
               |    (SELECT max(i_card) FROM cum)) AS t)
-              |SELECT block_key FROM st, thr WHERE card <= thr.t ORDER BY block_key""".stripMargin)),
+              |SELECT block_key FROM st, thr WHERE card <= thr.t ORDER BY block_key""".stripMargin),
+      api = "Blocks.purge",
+      desc = "Purge-threshold from the block-size cumsum knee (W3) then filters oversized blocks — two tiny aggs, no pair work."),
 
     // ---- P5: deterministic hash-sample + semi-join -------------------------
     "p5_sample_semijoin" -> QueryDef(
@@ -397,7 +425,9 @@ object RelationalQueries {
              |  SELECT c_custkey FROM customer
              |  WHERE ('0x'||substr(md5('s'||c_custkey), 1, 15))::bigint % 20 = 0)
              |SELECT c_custkey, c_name FROM customer
-             |SEMI JOIN sampled USING (c_custkey) ORDER BY c_custkey""".stripMargin)),
+             |SEMI JOIN sampled USING (c_custkey) ORDER BY c_custkey""".stripMargin),
+      api = "DataFrame.sample + left_semi",
+      desc = "Deterministic hash-sampling of entities with a semi-join restriction of their triples (P5)."),
 
     // ---- UniqueNameBlocker + P6 anti-filter --------------------------------
     // value = "name brand size" (1954/2000 unique at sf0.01); right side =
@@ -421,7 +451,9 @@ object RelationalQueries {
              |         min(cast(p_partkey + 10000000 AS varchar)) AS rid
              |  FROM part GROUP BY 1 HAVING count(DISTINCT p_partkey) = 1)
              |SELECT v AS block_key, lid AS left_ids, rid AS right_ids
-             |FROM uniq ORDER BY block_key""".stripMargin)),
+             |FROM uniq ORDER BY block_key""".stripMargin),
+      api = "UniqueNameBlocker.assign",
+      desc = "Singleton blocks from attribute values held by exactly one entity per side (J2/P7) — the high-precision first pass."),
 
     "p6_anti_filter" -> QueryDef(
       (s, dir) => {
@@ -441,7 +473,9 @@ object RelationalQueries {
              |  GROUP BY p_name||' '||p_brand||' '||p_size
              |  HAVING count(DISTINCT p_partkey) = 1)
              |SELECT p_partkey, p_name||' '||p_brand||' '||p_size AS v FROM part
-             |ANTI JOIN uniq ON p_partkey = cid ORDER BY p_partkey""".stripMargin)),
+             |ANTI JOIN uniq ON p_partkey = cid ORDER BY p_partkey""".stripMargin),
+      api = "HybridBlockers",
+      desc = "Anti-join filter removing entities already covered by unique-value blocks before the expensive pass (P6)."),
 
     // ---- fixed-iteration PageRank over the customer–supplier graph ------
     // undirected bipartite trade graph (customer c<k> — supplier s<k>
@@ -480,7 +514,10 @@ object RelationalQueries {
              |                   JOIN deg d ON a.src = d.src GROUP BY 1),
              |r3 AS (SELECT node, 0.15 / n.n + 0.85 * m AS r FROM m3, n)
              |SELECT node, floor((r * n.n) * 1e4 + 0.5) / 1e4 AS rank_x
-             |FROM r3, n ORDER BY node""".stripMargin)),
+             |FROM r3, n ORDER BY node""".stripMargin),
+      api = "PageRank.pageRank",
+      desc = "PageRank over the entity graph: contribution table shuffled once (hash-partitioned by src, persisted); only node-sized ranks move per iteration; lineage checkpointed.",
+      auditAllow = Some("one-row node-count broadcast into each power-iteration rescale (PageRank.pageRank)")),
 
     // ---- community detection: synchronous label propagation --------------
     // (Raghavan et al. 2007) over the same customer-supplier co-purchase
@@ -513,7 +550,9 @@ object RelationalQueries {
              |l3 AS (SELECT src AS node, label FROM (
              |  SELECT src, label, row_number() OVER (PARTITION BY src
              |      ORDER BY c DESC, label ASC) AS rn FROM c3) WHERE rn = 1)
-             |SELECT node, label AS community FROM l3 ORDER BY node""".stripMargin)),
+             |SELECT node, label AS community FROM l3 ORDER BY node""".stripMargin),
+      api = "PageRank.labelPropagation",
+      desc = "Label-propagation communities with deterministic min-label ties — same one-shuffle-per-round arcs reuse as PageRank."),
 
     // ---- skew diagnostics: measure before you salt ------------------------
     // the operational pre-check for every hot-key lever in the library,
@@ -533,7 +572,9 @@ object RelationalQueries {
               |  ${Num.stableRoundSql("quantile_cont(c, 0.9)", 6)} AS p90,
               |  ${Num.stableRoundSql("quantile_cont(c, 0.99)", 6)} AS p99,
               |  ${Num.stableRoundSql("quantile_cont(c, 0.99) / quantile_cont(c, 0.5)", 6)} AS skew_ratio
-              |FROM c""".stripMargin)),
+              |FROM c""".stripMargin),
+      api = "Diagnostics.keySkew",
+      desc = "One-row key-skew profile (n_keys, max share, count percentiles, p99/p50 ratio) — the measurement before choosing caps/salting; exact percentile here, percentile_approx at corpus scale."),
 
     // The percentile_approx form of diag_token_skew — the variant that
     // survives a key table too large for the exact single-reducer
@@ -577,7 +618,10 @@ object RelationalQueries {
               |  max(c)::bigint AS max_key_rows,
               |  ${Num.stableRoundSql("max(c)::double / sum(c)", 6)} AS top1_share,
               |  true AS p50_ok, true AS p90_ok, true AS p99_ok
-              |FROM c""".stripMargin)),
+              |FROM c""".stripMargin),
+      api = "Diagnostics.keySkewApprox",
+      desc = "keySkew with percentile_approx percentiles — bounded-memory sketch merge instead of the exact single-reducer sort; the GK rank contract is checked in-plan (invariant-graded oracle).",
+      auditAllow = Some("one-row approx profile crossed with one-row exact rank bounds")),
 
     "diag_heavy_hitters" -> QueryDef(
       (s, dir) => graft.relational.Diagnostics.heavyHitters(
@@ -594,6 +638,8 @@ object RelationalQueries {
               |      FROM c)
               |SELECT rank::int AS rank, key, key_rows,
               |       ${Num.stableRoundSql("cum / total", 6)} AS cum_share
-              |FROM r CROSS JOIN tot WHERE rank <= 10 ORDER BY rank""".stripMargin))
+              |FROM r CROSS JOIN tot WHERE rank <= 10 ORDER BY rank""".stripMargin),
+      api = "Diagnostics.heavyHitters",
+      desc = "Top-N heaviest keys with cumulative share via TakeOrderedAndProject (no global sort) — the concrete list to cap or salt.")
   )
 }

@@ -177,7 +177,7 @@ object SimilarityQueries {
        |FROM weighted GROUP BY id ORDER BY doc_id""".stripMargin
   }
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // ---- M1/J9: MinHash-LSH blocker ---------------------------------------
     "mh_minhash_lsh_blocker" -> QueryDef(
@@ -203,7 +203,9 @@ object SimilarityQueries {
            |  FROM (${side(1)}) GROUP BY key)
            |SELECT key AS block_key, left_ids, right_ids
            |FROM lb JOIN rb USING (key) ORDER BY block_key""".stripMargin
-      }),
+      },
+      api = "MinHashLSHBlocker.assign",
+      desc = "MinHash-LSH blocking: per-entity signatures → banded bucket keys → bucket equi-join; (b,r) from the datasketch threshold rule."),
 
     // ---- M1 (MLlib variant): approxSimilarityJoin — invariant-graded ------
     // Seeded MLlib hashes aren't SQL-reproducible, so the query emits a
@@ -272,7 +274,10 @@ object SimilarityQueries {
            |SELECT (SELECT count(*) FROM g) AS n_gold,
            |       (SELECT count(DISTINCT id) FROM lt) AS n_left,
            |       true AS precision_ok, true AS recall_ok""".stripMargin
-      }),
+      },
+      api = "MlLibMinHashBlocker.assign",
+      desc = "MLlib MinHashLSH approxSimilarityJoin wrapped as a blocker — invariant-graded oracle (library RNG is not SQL-replayable).",
+      auditAllow = Some("one-row invariant-summary scalars crossJoined for the single-row output")),
 
     // ---- M3: TF-IDF filtered token blocker --------------------------------
     "m3_tfidf_token_blocker" -> QueryDef(
@@ -294,7 +299,10 @@ object SimilarityQueries {
            |       FROM rk GROUP BY key)
            |SELECT key AS block_key, left_ids, right_ids
            |FROM lb JOIN rb USING (key) ORDER BY block_key""".stripMargin
-      }),
+      },
+      api = "TfIdfFilteredTokenBlocker.assign",
+      desc = "Token blocking restricted to each entity's top TF-IDF tokens (M3) — IDF from one doc-frequency agg, threshold filter before the join.",
+      auditAllow = Some("one-row document-count total crossJoin(broadcast) for smooth idf (SimilarityBlockers.filteredTokens)")),
 
     // ---- J10/M2: token-overlap counts -------------------------------------
     "j10_token_overlap" -> QueryDef(
@@ -321,7 +329,9 @@ object SimilarityQueries {
               |rt AS (SELECT DISTINCT * FROM (${docTokensSql(1)}))
               |SELECT lt.id AS left_id, rt.id AS right_id, count(*) AS overlap
               |FROM lt JOIN rt USING (key)
-              |GROUP BY 1, 2 HAVING count(*) >= 10 ORDER BY 1, 2""".stripMargin)),
+              |GROUP BY 1, 2 HAVING count(*) >= 10 ORDER BY 1, 2""".stripMargin),
+      api = "PartitioningTokenBlocker.assign",
+      desc = "Sparse token-overlap product (M2/J10): candidates from the token equi-join, overlap counted per pair; size-switched broadcast vs shuffle join with hot-token cap."),
 
     // ---- J8/W4: brute-force kNN (cosine top-3, even → odd) ----------------
     "ann_brute_topk" -> QueryDef(
@@ -352,7 +362,10 @@ object SimilarityQueries {
              |    PARTITION BY left_id ORDER BY cos DESC, right_id ASC) AS rank
              |  FROM scored)
              |SELECT left_id, rank::int AS rank, right_id, floor((cos) * 1e6 + 0.5) / 1e6 AS cos
-             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin)),
+             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+      api = "Similarity.topKCosine",
+      desc = "Brute-force cosine top-k over embeddings — the exact ANN baseline (codegen'd dot product, per-query window).",
+      auditAllow = Some("documented exact baseline: brute-force cosine over a broadcast query side")),
 
     // ---- M13: CSLS hubness-reduced kNN over brute candidates --------------
     // candidate stream = exact top-10 (so the candidate-graph scales are
@@ -404,7 +417,10 @@ object SimilarityQueries {
              |    PARTITION BY left_id ORDER BY csls DESC, right_id ASC) AS rank
              |  FROM cs)
              |SELECT left_id, rank::int AS rank, right_id, floor((csls) * 1e6 + 0.5) / 1e6 AS csls
-             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin)),
+             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+      api = "Similarity.cslsRerank",
+      desc = "CSLS hubness-corrected kNN (M13): mean neighbor similarity both directions re-scores the top-k.",
+      auditAllow = Some("neighborhood-statistics join over the bounded candidate list")),
 
     // ---- M13 non-CSLS hubness reduction (kiez parity) ---------------------
     // the other reduction methods kiez layers over any NN algorithm
@@ -443,7 +459,10 @@ object SimilarityQueries {
              |  FROM sc)
              |SELECT left_id, rank::int AS rank, right_id,
              |       floor((nicdm) * 1e6 + 0.5) / 1e6 AS nicdm
-             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin)),
+             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+      api = "Similarity.nicdmRerank",
+      desc = "NICDM hubness reduction (M13, kiez 'nicdm'): distances rescaled by sqrt of both endpoints' mean local distance scale over the candidate graph.",
+      auditAllow = Some("neighborhood-statistics join over the bounded candidate list")),
 
     "m13_ls_knn" -> QueryDef(
       (s, dir) => {
@@ -479,7 +498,10 @@ object SimilarityQueries {
              |  FROM sc)
              |SELECT left_id, rank::int AS rank, right_id,
              |       floor((ls) * 1e6 + 0.5) / 1e6 AS ls
-             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin)),
+             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+      api = "Similarity.localScalingRerank",
+      desc = "Local-scaling hubness reduction (M13, kiez 'ls'): exp(−d²/(σq·σx)) with σ = scaleK-th candidate distance each side.",
+      auditAllow = Some("neighborhood-statistics join over the bounded candidate list")),
 
     "m13_mp_knn" -> QueryDef(
       (s, dir) => {
@@ -501,7 +523,10 @@ object SimilarityQueries {
              |  FROM sc)
              |SELECT left_id, rank::int AS rank, right_id,
              |       floor((mp) * 1e6 + 0.5) / 1e6 AS mp
-             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin)),
+             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+      api = "Similarity.mutualProximityRerank",
+      desc = "Empiric mutual proximity (M13, kiez 'mp'): joint farther-probability over both candidate views — pure rank arithmetic, density-immune.",
+      auditAllow = Some("neighborhood-statistics join over the bounded candidate list")),
 
     // DisSimLocal (Hara et al. AAAI 2016 — kiez's "dsl", the vector-aware
     // member of its registry): ‖q−x‖² − ‖q−c(q)‖² − ‖x−c(x)‖² with local
@@ -554,7 +579,10 @@ object SimilarityQueries {
              |  FROM sc)
              |SELECT left_id, rank::int AS rank, right_id,
              |       floor((dsl) * 1e6 + 0.5) / 1e6 AS dsl
-             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin)),
+             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+      api = "Similarity.dslRerank",
+      desc = "DisSimLocal hubness reduction (M13, kiez 'dsl'): d² minus each endpoint's squared distance to its scaleK-candidate centroid — the vector-aware member, completing the kiez method set.",
+      auditAllow = Some("neighborhood-statistics join over the bounded candidate list")),
 
     // ---- IVF kNN: label buckets, nearest-centroid probe -------------------
     "ann_ivf_label" -> QueryDef(
@@ -597,7 +625,10 @@ object SimilarityQueries {
              |            JOIN norms nb ON nb.vec_id = right_id)
              |SELECT left_id, label::varchar AS bucket, rank::int AS rank, right_id,
              |       floor((cos) * 1e6 + 0.5) / 1e6 AS cos
-             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin)),
+             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+      api = "Similarity.ivfTopK",
+      desc = "IVF ANN: KMeans-free deterministic coarse centroids, candidates only from the query's nearest cells.",
+      auditAllow = Some("centroid table broadcast (k rows)")),
 
     // ---- IVF multi-probe: top-2 centroid buckets searched ------------------
     "ann_ivf_multiprobe" -> QueryDef(
@@ -639,7 +670,10 @@ object SimilarityQueries {
              |  FROM dots JOIN norms na ON na.vec_id = left_id
              |            JOIN norms nb ON nb.vec_id = right_id)
              |SELECT left_id, rank::int AS rank, right_id, floor((cos) * 1e6 + 0.5) / 1e6 AS cos
-             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin)),
+             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+      api = "Similarity.ivfTopK",
+      desc = "IVF with multiprobe: nprobe nearest cells per query widen recall at bounded candidate cost.",
+      auditAllow = Some("centroid table broadcast (k rows)")),
 
     // ---- PQ encode: 64 float dims → 8 codebook ids ------------------------
     "ann_pq_encode" -> QueryDef(
@@ -659,7 +693,10 @@ object SimilarityQueries {
               |        PARTITION BY vec_id, s ORDER BY dist ASC, c ASC) AS rn
               |    FROM g) WHERE rn = 1)
               |SELECT vec_id AS id, string_agg(c, ',' ORDER BY s) AS codes
-              |FROM best GROUP BY vec_id ORDER BY id""".stripMargin)),
+              |FROM best GROUP BY vec_id ORDER BY id""".stripMargin),
+      api = "Similarity.pqEncode",
+      desc = "Product-quantization encoding: per-subspace codebooks, embeddings → code bytes (the 100×-compression layout).",
+      auditAllow = Some("PQ codebook broadcast to every partition")),
 
     // ---- PQ/ADC top-k: exact queries against the compressed corpus --------
     "ann_pq_adc_topk" -> QueryDef(
@@ -701,7 +738,10 @@ object SimilarityQueries {
               |      ORDER BY floor((adc) * 1e6 + 0.5) / 1e6 DESC, right_id ASC) AS rank
               |  FROM scored)
               |SELECT left_id, rank::int AS rank, right_id, floor((adc) * 1e6 + 0.5) / 1e6 AS adc
-              |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin)),
+              |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+      api = "Similarity.pqTopK",
+      desc = "PQ asymmetric-distance top-k: query-to-codebook lookup tables broadcast, scan costs table lookups not float ops.",
+      auditAllow = Some("PQ codebook (k×m floats) broadcast to every partition")),
 
     // ---- IVF-PQ: probe nearest label bucket, ADC over its PQ codes --------
     "ann_ivf_pq_topk" -> QueryDef(
@@ -717,7 +757,10 @@ object SimilarityQueries {
             Num.stableRound(col("adc"), 6).as("adc"))
           .orderBy("left_id", "rank")
       },
-      Some(ivfPqTopkSql)),
+      Some(ivfPqTopkSql),
+      api = "Similarity.ivfPqTopK",
+      desc = "IVF+PQ: coarse cells prune the corpus, PQ ADC ranks inside cells — the billion-scale ANN layout.",
+      auditAllow = Some("PQ codebook + centroid table broadcast (both tiny by construction)")),
 
     // ---- persisted IVF-PQ index: build -> save -> load -> search ----------
     // the serving contract: corpus-side work (centroids + PQ codes) is
@@ -745,7 +788,10 @@ object SimilarityQueries {
             Num.stableRound(col("adc"), 6).as("adc"))
           .orderBy("left_id", "rank")
       },
-      Some(ivfPqTopkSql)),
+      Some(ivfPqTopkSql),
+      api = "IndexStore.save/load/search",
+      desc = "Persisted IVF-PQ index round-trip: centroids+codes built once, saved as parquet, reloaded and searched — bit-identical to the direct operator (shared oracle).",
+      auditAllow = Some("loaded centroid table broadcast (one row per IVF bucket, tiny by construction)")),
 
     // ---- incremental ingest: assignBuckets -> appendIvfPq -> search -------
     // the daily-arrivals serving contract: the index is built on the base
@@ -836,7 +882,10 @@ object SimilarityQueries {
               |      ORDER BY floor((adc) * 1e6 + 0.5) / 1e6 DESC, right_id ASC) AS rank
               |  FROM scored)
               |SELECT left_id, rank::int AS rank, right_id, floor((adc) * 1e6 + 0.5) / 1e6 AS adc
-              |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin)),
+              |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+      api = "IndexStore.assignBuckets/appendIvfPq",
+      desc = "Incremental index ingest: a bucketless delta routed to its nearest IVF cell, PQ-encoded against the FIXED base geometry and appended — O(delta) daily arrivals, oracle replays the full path.",
+      auditAllow = Some("centroid table broadcast (one row per IVF bucket) for delta assignment + probe")),
 
     // ---- streaming ANN serving (batch form of the stateful operator) ------
     // same semantics as ann_ivf_pq_topk through the streaming-safe plan
@@ -859,7 +908,9 @@ object SimilarityQueries {
             Num.stableRound(col("adc"), 6).as("adc"))
           .orderBy("left_id", "rank")
       },
-      Some(ivfPqTopkSql)),
+      Some(ivfPqTopkSql),
+      api = "AnnServing.serveIvfPq",
+      desc = "Streaming ANN serving against a static IVF-PQ index: row-local probe selection, stream-static code join, flatMapGroupsWithState top-k (no window) — stateless per micro-batch."),
 
     // ---- residual IVF-PQ: quantize v − centroid, score ⟨q,c⟩ + ADC --------
     // the production IVF-PQ layout (Jégou et al. §IV-A): the codebook's
@@ -926,7 +977,10 @@ object SimilarityQueries {
               |      ORDER BY floor((adc) * 1e6 + 0.5) / 1e6 DESC, right_id ASC) AS rank
               |  FROM scored)
               |SELECT left_id, rank::int AS rank, right_id, floor((adc) * 1e6 + 0.5) / 1e6 AS adc
-              |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin)),
+              |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+      api = "Similarity.ivfPqTopK",
+      desc = "IVF+PQ on residuals (vector − centroid) — finer quantization at identical storage.",
+      auditAllow = Some("PQ codebook + centroid table broadcast (both tiny by construction)")),
 
     // ---- sign-LSH bucketing (first 16 dims, 6 planes) ---------------------
     "ann_hyperplane_lsh" -> QueryDef(
@@ -935,7 +989,10 @@ object SimilarityQueries {
           Similarity.hyperplaneBucket(slice(col("embedding"), 1, 16), 6, 16).as("bucket"))
         .orderBy("vec_id"),
       Some(s"""SELECT vec_id, ${Similarity.hyperplaneBucketSql("embedding", 6, 16)} AS bucket
-              |FROM embeddings ORDER BY vec_id""".stripMargin)),
+              |FROM embeddings ORDER BY vec_id""".stripMargin),
+      api = "Similarity.hyperplaneBucket",
+      desc = "Sign-LSH bucketing: md5-deterministic hyperplanes hash embeddings to bucket keys (SQL-replayable).",
+      auditAllow = Some("hyperplane matrix broadcast (bits×dims floats)")),
 
     // ---- sign-LSH kNN: bucket equi-join candidates + exact re-rank --------
     // the EmbeddingKnnBlocker SignLsh path, oracle-checked end-to-end
@@ -975,7 +1032,10 @@ object SimilarityQueries {
               |  FROM dots JOIN norms na ON na.vec_id = left_id
               |            JOIN norms nb ON nb.vec_id = right_id)
               |SELECT left_id, rank::int AS rank, right_id, floor((cos) * 1e6 + 0.5) / 1e6 AS cos
-              |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin)),
+              |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+      api = "Similarity.lshTopK",
+      desc = "Sign-LSH kNN: bucket equi-join candidates + exact cosine re-rank — the EmbeddingKnnBlocker scale path.",
+      auditAllow = Some("hyperplane matrix broadcast (bits×dims floats)")),
 
     // ---- dedup: embedding-cosine near-duplicates --------------------------
     "dd_embedding_neardup" -> QueryDef(
@@ -994,7 +1054,10 @@ object SimilarityQueries {
              |SELECT id_a, id_b, floor((dot / (na.nrm * nb.nrm)) * 1e6 + 0.5) / 1e6 AS cos
              |FROM dots JOIN norms na ON na.vec_id = id_a
              |          JOIN norms nb ON nb.vec_id = id_b
-             |WHERE dot / (na.nrm * nb.nrm) >= 0.4 ORDER BY id_a, id_b""".stripMargin)),
+             |WHERE dot / (na.nrm * nb.nrm) >= 0.4 ORDER BY id_a, id_b""".stripMargin),
+      api = "Similarity.selfJoinNearDup",
+      desc = "Exact embedding cosine near-dup pairs — the documented O(n²) baseline; `dd_embedding_neardup_lsh` is the scale sibling.",
+      auditAllow = Some("documented exact O(n²) baseline (the _lsh variant is the scale path)")),
 
     // ---- embedding-space benchmark decontamination ------------------------
     // benchmark = label-0 odd-id vectors (broadcast-sized); every even-id
@@ -1032,7 +1095,10 @@ object SimilarityQueries {
              |           ORDER BY cv DESC, bench_id ASC) AS rn FROM cosv)
              |SELECT id, bench_id, floor(cv * 1e6 + 0.5) / 1e6 AS cos,
              |       cv >= 0.4 AS contaminated
-             |FROM rk WHERE rn = 1 ORDER BY id""".stripMargin)),
+             |FROM rk WHERE rn = 1 ORDER BY id""".stripMargin),
+      api = "Similarity.embeddingDecontam",
+      desc = "Embedding decontamination: train docs cosine-close to any eval doc are flagged via bucketed join.",
+      auditAllow = Some("benchmark-sized broadcast scanned per corpus row (the decontam contract; bucket both sides for non-broadcastable benchmarks)")),
 
     // ---- dedup scale path: sign-LSH-bucketed near-dup ---------------------
     "dd_embedding_neardup_lsh" -> QueryDef(
@@ -1058,7 +1124,10 @@ object SimilarityQueries {
               |SELECT id_a, id_b, floor((dot / (na.nrm * nb.nrm)) * 1e6 + 0.5) / 1e6 AS cos
               |FROM dots JOIN norms na ON na.vec_id = id_a
               |          JOIN norms nb ON nb.vec_id = id_b
-              |WHERE dot / (na.nrm * nb.nrm) >= 0.4 ORDER BY id_a, id_b""".stripMargin)),
+              |WHERE dot / (na.nrm * nb.nrm) >= 0.4 ORDER BY id_a, id_b""".stripMargin),
+      api = "Similarity.bucketedNearDup",
+      desc = "Embedding near-dup via sign-LSH buckets: pair work confined to bucket-mates, capped per bucket.",
+      auditAllow = Some("sign-LSH hyperplane matrix broadcast")),
 
     // ---- M11: cluster-label blocking --------------------------------------
     "m11_cluster_blocks" -> QueryDef(
@@ -1080,7 +1149,10 @@ object SimilarityQueries {
              |FROM embeddings GROUP BY label
              |HAVING len(list(DISTINCT vec_id) FILTER (vec_id % 2 = 0)) > 0
              |   AND len(list(DISTINCT vec_id) FILTER (vec_id % 2 = 1)) > 0
-             |ORDER BY block_key""".stripMargin)),
+             |ORDER BY block_key""".stripMargin),
+      api = "EmbeddingBlocker",
+      desc = "Cluster-ID blocking from embedding space (M11): deterministic coarse clustering, one block per cluster.",
+      auditAllow = Some("centroid table broadcast (k rows)")),
 
     // ---- M11 density variant: DBSCAN* cluster labels -----------------------
     // The HDBSCAN-semantics path (Density.dbscanStar — core distances,
@@ -1133,7 +1205,10 @@ object SimilarityQueries {
              |SELECT cast(e.id AS bigint) AS vec_id,
              |       coalesce(labels.cluster, 'noise') AS cluster
              |FROM e LEFT JOIN labels USING (id)
-             |ORDER BY vec_id""".stripMargin)),
+             |ORDER BY vec_id""".stripMargin),
+      api = "Density.dbscanStar",
+      desc = "DBSCAN* density clustering (HDBSCAN's fixed-eps slice): core distances, mutual-reachability edges, components of core points; noise genuinely unassigned. Oracle replays the full algorithm incl. a recursive-CTE transitive closure.",
+      auditAllow = Some("documented exact all-pairs baseline over a dimension-sized value set (Density.dbscanStar lshPlanes=0; lshPlanes>0 is the bucketed scale path)")),
 
     // ---- M11 hierarchy variant: HDBSCAN flat cut over an eps ladder --------
     // The excess-of-mass extraction (Density.hdbscanFlatCut) on the same
@@ -1168,7 +1243,10 @@ object SimilarityQueries {
            |       coalesce(assigned.cluster, 'noise') AS cluster
            |FROM e LEFT JOIN assigned USING (id)
            |ORDER BY vec_id""".stripMargin
-      }),
+      },
+      api = "Density.hdbscanFlatCut",
+      desc = "HDBSCAN flat cut over an eps ladder: per-level DBSCAN* components, condensed-tree stability, excess-of-mass selection — per-branch eps, the hierarchy extraction the fixed-eps slice lacks. Oracle replays the whole algorithm incl. the eom DP unrolled per birth level.",
+      auditAllow = Some("documented exact all-pairs baseline over a dimension-sized value set (Density.hdbscanFlatCut lshPlanes=0; lshPlanes>0 is the bucketed scale path)")),
 
     // ---- M11 auto ladder: the data-derived eps ladder itself --------------
     // Density.autoEpsLadder on the 200-point fixture: per-point minimum
@@ -1218,7 +1296,9 @@ object SimilarityQueries {
              |  SELECT rn FROM ranked WHERE dcount <= 4)
              |SELECT row_number() OVER (ORDER BY r DESC) AS level, r AS eps
              |FROM ranked WHERE rn IN (SELECT rn FROM picks)
-             |ORDER BY level""".stripMargin)),
+             |ORDER BY level""".stripMargin),
+      api = "Density.autoEpsLadder",
+      desc = "The data-derived eps ladder (--eps-ladder auto): per-point minimum mutual reachability, evenly-spaced distinct radii — the derivation oracled independently in SQL."),
 
     // ---- M11 EXACT hierarchy: continuous dendrogram, no ladder ------------
     // Density.hdbscanExact — distributed Borůvka MST + driver condensed
@@ -1258,7 +1338,10 @@ object SimilarityQueries {
            |SELECT e.id, coalesce(assigned.cluster, 'noise') AS cluster
            |FROM e LEFT JOIN assigned USING (id)
            |ORDER BY id""".stripMargin
-      }),
+      },
+      api = "Density.hdbscanExact",
+      desc = "EXACT HDBSCAN — the continuous mutual-reachability dendrogram with no eps ladder: distributed Borůvka MST + a value-set-sized driver condensed tree (continuous λ stability, eom). Oracle replays the complete-ladder flat cut — a different algorithm — on a known-radius fixture.",
+      auditAllow = Some("documented exact all-pairs baseline over a 27-point known-radius fixture (Density.hdbscanExact lshPlanes=0; lshPlanes>0 is the bucketed scale path)")),
 
     // ---- M11 auto ladder COMPOSED: derivation → flat cut end-to-end --------
     // The `--eps-ladder auto` path as one operator
@@ -1315,7 +1398,10 @@ object SimilarityQueries {
            |FROM e LEFT JOIN assigned USING (id)
            |WHERE (SELECT ok FROM ladder_ok)
            |ORDER BY id""".stripMargin
-      }),
+      },
+      api = "Density.hdbscanFlatCutAuto",
+      desc = "The COMPOSED --eps-ladder auto path: derive the ladder from the data's first-connection radii, then run the eom flat cut. Oracle re-derives the ladder in SQL on a closed-form-radius fixture, gates on the constants, and replays the full cut.",
+      auditAllow = Some("documented exact all-pairs baseline over the same 27-point known-radius fixture (Density.hdbscanFlatCutAuto lshPlanes=0; lshPlanes>0 is the bucketed scale path)")),
 
     // ---- M12: token-clustering blockers -----------------------------------
     // cluster TOKENS (not attribute values), pseudo-token replacement, then
@@ -1349,7 +1435,9 @@ object SimilarityQueries {
            |       FROM rk GROUP BY key)
            |SELECT key AS block_key, left_ids, right_ids
            |FROM lb JOIN rb USING (key) ORDER BY block_key""".stripMargin
-      }),
+      },
+      api = "TokenClusteringTokenBlocker.assign",
+      desc = "Attribute/token clustering blocker (M12): tokens clustered by co-occurrence, blocks keyed by cluster id."),
 
     "m12_token_cluster_minhash" -> QueryDef(
       (s, dir) => {
@@ -1379,7 +1467,9 @@ object SimilarityQueries {
            |       FROM (${side("rt")}) GROUP BY key)
            |SELECT key AS block_key, left_ids, right_ids
            |FROM lb JOIN rb USING (key) ORDER BY block_key""".stripMargin
-      }),
+      },
+      api = "TokenClusteringMinHashLSHBlocker.assign",
+      desc = "M12 variant with MinHash-LSH inside token clusters — cluster scoping bounds the banded join."),
 
     // ---- M12 composed: density assigner → noise keys → blocking -----------
     // The full attribute-clustering pipeline through the DENSITY
@@ -1482,7 +1572,10 @@ object SimilarityQueries {
            |       FROM rk GROUP BY key)
            |SELECT key AS block_key, left_ids, right_ids
            |FROM lb JOIN rb USING (key) ORDER BY block_key""".stripMargin
-      }),
+      },
+      api = "AttributeClusteringBlocker + DensityClusterAssigner",
+      desc = "The composed density blocking pipeline on a synthesized 200-token vocabulary: table-vector encode → HDBSCAN flat cut → size-gated noise keys → block join, full SQL replay.",
+      auditAllow = Some("documented exact all-pairs baseline over a 200-token synthetic vocabulary (Density.hdbscanFlatCut lshPlanes=0 inside DensityClusterAssigner; lshPlanes>0 is the bucketed scale path)")),
 
     // ---- §2.10: incremental token blocker, batch-parity oracle ------------
     // flatMapGroupsWithState on a BATCH dataset = one mega-batch: the
@@ -1514,7 +1607,9 @@ object SimilarityQueries {
            |SELECT lt.key AS block_key, lt.id AS left_id, rt.id AS right_id
            |FROM lt JOIN rt USING (key)
            |ORDER BY block_key, left_id, right_id""".stripMargin
-      }),
+      },
+      api = "StreamingOps.incrementalTokenBlocks",
+      desc = "Streaming incremental token blocking: per-token state holds capped id lists; new docs pair only against state."),
 
     // ---- §2.10: TTL token blocker — multi-wave horizon-rule replay --------
     // Multi-batch twin of st_incremental_token_pairs for the TTL
@@ -1638,7 +1733,9 @@ object SimilarityQueries {
            |SELECT key AS block_key, left_id, right_id, count(*) AS emits
            |FROM em GROUP BY 1, 2, 3
            |ORDER BY 1, 2, 3""".stripMargin
-      }),
+      },
+      api = "StreamingOps.incrementalTokenBlocksWithTtl",
+      desc = "Multi-wave TTL replay of the incremental token blocker: per-entry eviction, refresh, and the re-admit duplicate-pair divergence, hashed against a per-wave SQL state replay."),
 
     // ---- M4/M5: SIF-weighted word-embedding pooling -----------------------
     // token vectors are md5-derived 8-dim pseudo-embeddings; SIF weight
@@ -1663,7 +1760,10 @@ object SimilarityQueries {
         weighted.withColumn("_x", HashTokenEncoder.tokenHash(col("key")))
           .groupBy("doc_id").agg(dims.head, dims.tail: _*).orderBy("doc_id")
       },
-      Some(sifEmbeddingOracleSql)),
+      Some(sifEmbeddingOracleSql),
+      api = "AverageEmbeddingEncoder",
+      desc = "SIF-weighted average word embedding per entity (M4): a/(a+freq) weights from one frequency agg.",
+      auditAllow = Some("one-row token-count total crossJoin for SIF weighting (Encoders.scala:49)")),
 
     // ---- M4 production form: real (token, vector) TABLE lookup ------------
     // TableTokenEncoder end-to-end: the vector table is materialized as a
@@ -1710,7 +1810,9 @@ object SimilarityQueries {
            |  FROM toks JOIN counts USING (key) JOIN vocab USING (key), total)
            |SELECT id AS doc_id, $dimExprs
            |FROM weighted GROUP BY id ORDER BY doc_id""".stripMargin
-      }),
+      },
+      api = "TableTokenEncoder",
+      desc = "M4 production form: real (token, vector) table lookup-join with unknown-token skip + SIF over real corpus frequencies."),
 
     // ---- S7: embedding cache save/load, end-to-end ------------------------
     // The "encode once, block many times" flow proven under the oracle:
@@ -1742,7 +1844,9 @@ object SimilarityQueries {
         cached.select(col("id").cast("long").as("doc_id") +: dims: _*)
           .orderBy("doc_id")
       },
-      Some(sifEmbeddingOracleSql)),
+      Some(sifEmbeddingOracleSql),
+      api = "CachedEncoder / EmbeddingStore",
+      desc = "Embedding cache round-trip (S7): encode-miss saves, second encode must HIT (meta-matched parquet read, asserted); the hit's vectors share m4_sif_embedding's oracle verbatim."),
 
     // ---- M5: SIF with first-principal-component removal -------------------
     // (pretrained.py:517-531). Spark side: the real operator — RowMatrix
@@ -1788,7 +1892,10 @@ object SimilarityQueries {
            |  floor((d0 - (d0*px + d1*py)*px) * 1e6 + 0.5) / 1e6 AS d0,
            |  floor((d1 - (d0*px + d1*py)*py) * 1e6 + 0.5) / 1e6 AS d1
            |FROM emb, pcn ORDER BY doc_id""".stripMargin
-      }),
+      },
+      api = "SifEncoder",
+      desc = "SIF + first-principal-component removal (M5 step): PC via distributed Gram matrix + driver-side eigh on d×d.",
+      auditAllow = Some("one-row first-PC vector broadcast into the projection")),
 
     // ---- M5: PCA dim-reduce (the documented UMAP substitution) ------------
     // 2D SIF embeddings → 1D coordinate on the top singular vector, sign
@@ -1836,7 +1943,10 @@ object SimilarityQueries {
            |  FROM pcn)
            |SELECT doc_id, floor((d0*px + d1*py) * 1e6 + 0.5) / 1e6 AS c0
            |FROM emb, canon ORDER BY doc_id""".stripMargin
-      }),
+      },
+      api = "PcaReducer",
+      desc = "PCA dimensionality reduction of embeddings — Gram-matrix eigendecomposition, d×d never data-sized.",
+      auditAllow = Some("one-row PCA basis broadcast into the projection")),
 
     // ---- IVF recall report (honest ANN approximation gate) ---------------
     // same search task for both paths (even queries vs odd candidates);
@@ -1907,7 +2017,10 @@ object SimilarityQueries {
              |  GROUP BY 1)
              |SELECT count(*) AS n_queries,
              |       floor((avg(rec)) * 1e6 + 0.5) / 1e6 AS recall_at3
-             |FROM pq""".stripMargin)),
+             |FROM pq""".stripMargin),
+      api = "Similarity.ivfTopK vs topKCosine",
+      desc = "Recall@k of IVF against the exact baseline with a pinned floor — the honest-approximation gate.",
+      auditAllow = Some("contains the documented brute-force baseline (broadcast query side) it measures IVF recall against")),
 
     // ---- IVF recall-vs-probes curve on CLUSTERABLE embeddings -------------
     // ann_ivf_recall's honest 0.19 on the random embedding fixture proves
@@ -1993,7 +2106,10 @@ object SimilarityQueries {
              |  GROUP BY 1, 2)
              |SELECT p AS probes, count(*) AS n_queries,
              |       floor((avg(rec)) * 1e6 + 0.5) / 1e6 AS recall_at3
-             |FROM pq GROUP BY 1 ORDER BY probes""".stripMargin)),
+             |FROM pq GROUP BY 1 ORDER BY probes""".stripMargin),
+      api = "Similarity.ivfRecallCurve",
+      desc = "Recall-vs-nprobe curve from ONE clustering pass serving the whole probe sweep.",
+      auditAllow = Some("brute baseline (broadcast query side) + 8-row centroid table broadcast, shared across the probes sweep")),
 
     // ---- LSH (b, r) tuning S-curves --------------------------------------
     "mh_lsh_tuning" -> QueryDef(
@@ -2006,6 +2122,9 @@ object SimilarityQueries {
              |SELECT floor(s * 1e6 + 0.5) / 1e6 AS s, b, r,
              |       floor((1 - power(1 - power(s, r), b)) * 1e6 + 0.5) / 1e6
              |         AS p_collide
-             |FROM grid, cfg ORDER BY s, b""".stripMargin))
+             |FROM grid, cfg ORDER BY s, b""".stripMargin),
+      api = "MinHash.lshTuningCurve",
+      desc = "LSH (b,r) S-curve table: collision probability at threshold grid per banding — the tuning surface, pure arithmetic.",
+      auditAllow = Some("5-row (b, r) config table crossJoin(broadcast) over the 19-row similarity grid (MinHash.lshTuningCurve)"))
   )
 }

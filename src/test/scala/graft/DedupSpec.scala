@@ -229,6 +229,13 @@ class DedupSpec extends SparkSpec {
     assert(rounds <= 2, s"star should converge in ≤2 rounds, took $rounds")
   }
 
+  test("components on an empty pair set runs no round and labels nothing") {
+    val pairs = Seq.empty[(String, String)].toDF("id_a", "id_b")
+    val (labels, rounds) = graft.dedup.Dedup.componentsWithRounds(pairs)
+    assert(rounds == 0)
+    assert(labels.count() == 0L)
+  }
+
   test("components fails loudly instead of returning under-merged labels") {
     // 2 iterations cannot close a 10-hop chain; silent truncation would
     // report the far end as a separate component — the contract is throw
