@@ -50,11 +50,6 @@ object DensityCeilingRehearsal {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val b = args.drop(1).headOption.map(_.toInt).getOrElse(64)
-    // A/B seam: SPARK_GRAFT_STREAM_ROWS overrides the streamed-driver
-    // threshold (set it above n to stage the collect() form — the
-    // before/after for the round-1 minima transient)
-    sys.env.get("SPARK_GRAFT_STREAM_ROWS")
-      .foreach(v => Density.streamCollectRows = v.toLong)
     val planes = 24
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()

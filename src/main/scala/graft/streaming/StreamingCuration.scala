@@ -73,10 +73,8 @@ object StreamingCuration {
 
   /** Dup-canonical state: the canonical id plus its newest sighting
     * time (ms; `Long.MinValue` until a non-null event time is seen),
-    * so the horizon rule can be checked ON ACCESS — the timeout
-    * callback alone fires only for batches where the group has NO
-    * data, which would let a same-batch re-sight of expired content
-    * point at the stale canonical (public: janino).
+    * so the horizon rule ([[StreamingOps]]) can check it on access
+    * (public: janino).
     *
     * CHECKPOINT COMPATIBILITY: the state type was a bare canonical-id
     * `String` before the horizon-on-access fix; a TTL'd streaming
@@ -98,10 +96,11 @@ object StreamingCuration {
     * door): `tsCol` becomes the event time, the stream is watermarked
     * (`watermark` delay, default tight), and a dup_key with no
     * sighting for `stateTtl` past its newest arrival drops its
-    * canonical (EventTimeTimeout, the
-    * [[StreamingOps.streamExactDedupWithTtl]] pattern — every arrival
-    * of the content extends the horizon, surviving or not). State is
-    * then bounded by the distinct content seen within one TTL horizon.
+    * canonical under the horizon rule that the `*WithTtl` operators of
+    * [[StreamingOps]] share — every arrival of the content extends the
+    * horizon, surviving or not; a null `ts` still gets its verdict but
+    * never extends it. State is then bounded by the distinct content
+    * seen within one TTL horizon.
     * Documented divergence vs the unbounded form (the standard
     * bounded-horizon dedup contract): content re-seen after its
     * horizon RE-ADMITS — a fresh canonical, so one extra keep=true per
@@ -172,79 +171,48 @@ object StreamingCuration {
       case Some(_) => routed0.withWatermark("ts", watermark)
       case None => routed0
     }
-    val ttlMs: Long = stateTtl.map(StreamingOps.ttlMillis).getOrElse(0L)
+    val ttlMs = stateTtl.map(StreamingOps.ttlMillis)
     val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
+      if (ttlMs.isDefined) GroupStateTimeout.EventTimeTimeout()
       else GroupStateTimeout.NoTimeout()
     routed.groupByKey(_.dupKey)
       .flatMapGroupsWithState[CanonState, CurationVerdict](
         OutputMode.Append(), timeoutConf) {
-        (_, it, state) =>
-          if (state.hasTimedOut) {
-            state.remove() // horizon passed → re-seen content re-admits
-            Iterator.empty
-          } else {
-            val docs = it.toIndexedSeq.sortBy(_.id)
-            // horizon check ON ACCESS (the sibling TTL operators'
-            // eviction pass): a canonical whose horizon already passed
-            // is stale even though the timeout callback has not fired —
-            // timeouts fire only for batches where the group has NO
-            // data, so in continuous operation (a data batch arriving
-            // right after the watermark-advancing one, or with
-            // spark.sql.streaming.noDataMicroBatches.enabled=false) a
-            // same-batch re-sight would otherwise be marked duplicate
-            // of the expired canonical AND re-arm its state. STRICT >:
-            // EventTimeTimeout itself fires only when the watermark
-            // passes BEYOND the timestamp, and the sibling stores keep
-            // entries at exact horizon equality — same boundary here.
-            // MinValue = no real sighting time yet (all-null ts) →
-            // nothing to expire against, same as the unbounded form.
-            if (ttlMs > 0 && state.exists && state.get.lastSeenMs != Long.MinValue &&
-                state.getCurrentWatermarkMs() > state.get.lastSeenMs + ttlMs)
-              state.remove()
-            val canon: Option[String] =
-              if (state.exists) Some(state.get.id)
-              else docs.find(_.gateOk).map { d =>
-                state.update(CanonState(d.id, Long.MinValue)); d.id
-              }
-            // sliding TTL from this batch's newest sighting of the
-            // content — only when a canonical exists (gate-only groups
-            // hold no state, so there is nothing to bound). NULL event
-            // times (a dirty feed's nullable ts column passes the
-            // watermark's late filter) are skipped: such rows still get
-            // verdicts but never extend the horizon — they carry no
-            // time to extend it BY.
-            if (ttlMs > 0 && state.exists) {
-              val times = docs.iterator.flatMap(d => Option(d.ts)).map(_.getTime)
-              if (times.nonEmpty) {
-                val newest = times.max // single pass — `times` is an iterator
-                // monotone in EVENT time, not batch order: with a
-                // nonzero watermark delay a later batch can carry older
-                // (still in-watermark) sightings of the same content —
-                // those must not move the horizon backward and expire
-                // the canonical before its true newest sighting + ttl.
-                // MinValue (no sighting yet) loses the max as intended.
-                val horizon = math.max(state.get.lastSeenMs, newest)
-                state.update(CanonState(state.get.id, horizon))
-                state.setTimeoutTimestamp(horizon + ttlMs)
-              }
+        (_, it, state) => StreamingOps.unlessTimedOut(state) {
+          // the horizon rule (StreamingOps), applied only under stateTtl
+          ttlMs.foreach(StreamingOps.expireOnAccess(state, _)(_.lastSeenMs))
+          val docs = it.toIndexedSeq.sortBy(_.id)
+          val canon: Option[String] =
+            if (state.exists) Some(state.get.id)
+            else docs.find(_.gateOk).map { d =>
+              state.update(CanonState(d.id, Long.MinValue)); d.id
             }
-            docs.iterator.map { d =>
-              if (!d.gateOk)
-                CurationVerdict(d.id, d.lang, d.nTokens, d.qualityReason,
-                  None, d.nHits,
-                  Some(if (!d.langOk) "lang" else "quality"), keep = false)
-              else {
-                val dupOf = canon.filter(_ != d.id)
-                val drop =
-                  if (dupOf.isDefined) Some("duplicate")
-                  else if (d.nHits > 0) Some("contaminated")
-                  else None
-                CurationVerdict(d.id, d.lang, d.nTokens, None, dupOf, d.nHits,
-                  drop, drop.isEmpty)
-              }
+          // every sighting of the content extends the horizon of an
+          // existing canonical (gate-only groups hold no state, so
+          // there is nothing to bound); NULL event times carry no time
+          // to extend it BY
+          for (ttl <- ttlMs if state.exists) {
+            val newest = docs.iterator.flatMap(d => Option(d.ts))
+              .map(_.getTime).foldLeft(Long.MinValue)(math.max)
+            state.update(CanonState(state.get.id, StreamingOps.extendHorizon(
+              state, ttl, state.get.lastSeenMs, newest)))
+          }
+          docs.iterator.map { d =>
+            if (!d.gateOk)
+              CurationVerdict(d.id, d.lang, d.nTokens, d.qualityReason,
+                None, d.nHits,
+                Some(if (!d.langOk) "lang" else "quality"), keep = false)
+            else {
+              val dupOf = canon.filter(_ != d.id)
+              val drop =
+                if (dupOf.isDefined) Some("duplicate")
+                else if (d.nHits > 0) Some("contaminated")
+                else None
+              CurationVerdict(d.id, d.lang, d.nTokens, None, dupOf, d.nHits,
+                drop, drop.isEmpty)
             }
           }
+        }
       }
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.collection.mutable
 import graft.functions.{Num, Text}
 
 /** Structured Streaming operators (SURVEY.md §2.10 — new design, the
@@ -12,11 +13,19 @@ import graft.functions.{Num, Text}
   * identically on a batch frame and a `readStream` frame — the batch
   * path doubles as the oracle for the streaming path (tested with
   * MemoryStream in StreamingSpec).
+  *
+  * Four stateful operators come in pairs — an unbounded form and a
+  * `*WithTtl` form with its own state type: token blocking, exact
+  * dedup, MinHash near-dup and rate limiting. Both forms of a pair call
+  * one per-key admission step; the TTL form adds the horizon rule,
+  * which lives once, below [[ttlMillis]], and is also what
+  * [[StreamingCuration.verdicts]] runs under `stateTtl`.
   */
 object StreamingOps {
 
-  /** Parse a TTL interval string ("150 minutes") to millis — the one
-    * place the five TTL operators share, so validation cannot drift: a
+  /** Parse a TTL interval string ("150 minutes") to millis. Every TTL
+    * operator parses here and then applies the one horizon rule below,
+    * so neither validation nor expiry can drift between them: a
     * non-positive ttl would silently never expire anything, which is
     * the unbounded form wearing a bounded label. */
   private[streaming] def ttlMillis(ttl: String): Long = {
@@ -26,6 +35,73 @@ object StreamingOps {
     require(ms > 0, s"ttl '$ttl' must be a positive duration")
     ms
   }
+
+  // ---------- the TTL horizon rule ----------
+  //
+  // Every TTL'd store records the newest event time it has seen (per
+  // key, or per stored entry) and applies three steps:
+  //
+  //   1. a key whose event-time timeout fired is removed and emits
+  //      nothing (`unlessTimedOut`);
+  //   2. on access, a stored key (or entry) whose newest sighting is
+  //      past the horizon is dropped before the batch is admitted
+  //      (`pastHorizon`, `expireOnAccess`). Timeouts fire only for
+  //      keys with NO data in a batch, so without this a re-sight
+  //      arriving right after the watermark passed the horizon (in
+  //      continuous operation, or with noDataMicroBatches off) would be
+  //      judged against — and re-arm — expired state. The test is
+  //      STRICT: `watermark > lastSeen + ttl`. EventTimeTimeout itself
+  //      fires only once the watermark passes BEYOND the timestamp, so
+  //      at exact equality a key (or entry) is kept;
+  //   3. the horizon is monotone in EVENT time (`extendHorizon`):
+  //      max(stored newest, this batch's newest), and the timeout is
+  //      set to horizon + ttl. With a nonzero watermark delay a later
+  //      batch can carry older (still in-watermark) sightings; they
+  //      must not drag the horizon backward and expire a key before its
+  //      true newest sighting + ttl.
+  //
+  // `Long.MinValue` means "no sighting time yet": nothing expires
+  // against it and it never sets a timeout. The four `*WithTtl`
+  // operators drop null-`ts` records before their watermark (`timed`):
+  // a record with no time cannot be placed against the horizon, just
+  // as the watermark drops a record it cannot place. The curation
+  // store keeps them: they get verdicts but never extend a horizon.
+
+  /** Step 2's boundary: `lastSeenMs` is strictly more than `ttlMs`
+    * behind the watermark. */
+  private[streaming] def pastHorizon(watermarkMs: Long, lastSeenMs: Long, ttlMs: Long): Boolean =
+    lastSeenMs != Long.MinValue && watermarkMs > lastSeenMs + ttlMs
+
+  /** Step 1: a timed-out key is removed and emits nothing; any other
+    * invocation runs `step`. */
+  private[streaming] def unlessTimedOut[S, O](state: GroupState[S])(
+      step: => Iterator[O]): Iterator[O] =
+    if (state.hasTimedOut) { state.remove(); Iterator.empty }
+    else step
+
+  /** Step 2 for a store holding one newest sighting per key. */
+  private[streaming] def expireOnAccess[S](state: GroupState[S], ttlMs: Long)(
+      lastSeenMs: S => Long): Unit =
+    if (state.exists &&
+        pastHorizon(state.getCurrentWatermarkMs(), lastSeenMs(state.get), ttlMs))
+      state.remove()
+
+  /** Step 3: the horizon to store, max(`lastSeenMs`, `newestMs`), with
+    * the timeout set `ttlMs` past it. A batch with no sighting time
+    * (`newestMs` = `Long.MinValue`) leaves both as they were. */
+  private[streaming] def extendHorizon(state: GroupState[_], ttlMs: Long,
+      lastSeenMs: Long, newestMs: Long): Long =
+    if (newestMs == Long.MinValue) lastSeenMs
+    else {
+      val horizon = math.max(lastSeenMs, newestMs)
+      state.setTimeoutTimestamp(horizon + ttlMs)
+      horizon
+    }
+
+  /** A TTL operator's input: null-`ts` records dropped, then
+    * watermarked on `ts`. */
+  private def timed[T](records: Dataset[T], watermark: String): Dataset[T] =
+    records.filter(col("ts").isNotNull).withWatermark("ts", watermark)
 
   /** Tumbling-window aggregation per event type. On a streaming input a
     * watermark bounds state; on batch it's a plain window groupBy. */
@@ -231,13 +307,44 @@ object StreamingOps {
     * private member classes. */
   final case class TokenState(left: Seq[String], right: Seq[String])
 
+  /** The per-token admission step of both token blockers. Each side
+    * maps its live ids to their last-seen ms (`Long.MinValue` in the
+    * unbounded form) in admission order. Records `(side, id, ms)` come
+    * in the caller's order. A re-sighted id refreshes its age and emits
+    * nothing; a new id is admitted only while its side is below
+    * `maxIdsPerSide`, and emits its pairs against the other side at
+    * admission — so each cross pair emits exactly once, at the later
+    * endpoint's admission. The cap bounds ADMISSION, hence both the
+    * state row and the per-batch emission: muting emission alone once a
+    * side is full would still let one hot first batch emit its full
+    * cross product and grow the stored sets without bound. */
+  private def admitTokens(key: String, maxIdsPerSide: Int,
+      left: mutable.LinkedHashMap[String, Long], right: mutable.LinkedHashMap[String, Long],
+      recs: Iterator[(String, String, Long)]): Iterator[CandidatePair] = {
+    val out = Seq.newBuilder[CandidatePair]
+    recs.foreach { case (side, id, t) =>
+      val (mine, other, mineIsLeft) =
+        if (side == "left") (left, right, true) else (right, left, false)
+      mine.get(id) match {
+        case Some(old) => if (t > old) mine.update(id, t)
+        case None if mine.size < maxIdsPerSide =>
+          other.keysIterator.foreach { o =>
+            out += (if (mineIsLeft) CandidatePair(key, id, o) else CandidatePair(key, o, id))
+          }
+          mine += id -> t
+        case None => // side full: stop admitting (hot-token cap)
+      }
+    }
+    out.result().iterator
+  }
+
   /** Incremental token blocking: as entities stream in, each token group
     * keeps the id sets seen so far and emits ONLY the new candidate
     * pairs each batch — the streaming form of TokenBlocker (A1+J1),
     * with per-token state bounded by `maxIdsPerSide` (the streaming
     * equivalent of the hot-token cap: once a side is full it stops
-    * ADMITTING, which bounds both the state row and the per-batch
-    * emission — the same admission rule as the TTL variant). */
+    * ADMITTING). Within a batch records are admitted in (side, id)
+    * order. */
   def incrementalTokenBlocks(
       records: Dataset[TokenRecord],
       maxIdsPerSide: Int = 10000)(implicit spark: SparkSession): Dataset[CandidatePair] = {
@@ -246,33 +353,13 @@ object StreamingOps {
       .flatMapGroupsWithState[TokenState, CandidatePair](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, batch: Iterator[TokenRecord], state: GroupState[TokenState]) =>
-          // admission-capped like the TTL variant: each side ADMITS new
-          // ids only while below maxIdsPerSide (deterministic (side,id)
-          // order within a batch), emitting a new id's pairs against
-          // the other side at admission time — each cross pair emits
-          // exactly once, at the later endpoint's admission. This is
-          // what actually bounds the state row AND the per-batch
-          // emission (the earlier form only muted emission once the
-          // PRE-batch set exceeded the cap: a single hot first batch
-          // emitted its full cross product and the stored sets grew
-          // without bound — the B² blowup the cap exists to prevent).
           val st = state.getOption.getOrElse(TokenState(Seq.empty, Seq.empty))
-          val left = scala.collection.mutable.LinkedHashSet(st.left: _*)
-          val right = scala.collection.mutable.LinkedHashSet(st.right: _*)
-          val out = Seq.newBuilder[CandidatePair]
-          batch.toSeq.sortBy(r => (r.side, r.id)).foreach { r =>
-            val (mine, other, mineIsLeft) =
-              if (r.side == "left") (left, right, true) else (right, left, false)
-            if (!mine.contains(r.id) && mine.size < maxIdsPerSide) {
-              other.foreach { o =>
-                out += (if (mineIsLeft) CandidatePair(key, r.id, o)
-                        else CandidatePair(key, o, r.id))
-              }
-              mine += r.id
-            }
-          }
-          state.update(TokenState(left.toSeq, right.toSeq))
-          out.result().iterator
+          val left = mutable.LinkedHashMap.from(st.left.iterator.map(_ -> Long.MinValue))
+          val right = mutable.LinkedHashMap.from(st.right.iterator.map(_ -> Long.MinValue))
+          val out = admitTokens(key, maxIdsPerSide, left, right,
+            batch.toSeq.sortBy(r => (r.side, r.id)).iterator.map(r => (r.side, r.id, Long.MinValue)))
+          state.update(TokenState(left.keys.toSeq, right.keys.toSeq))
+          out
       }
   }
 
@@ -288,22 +375,22 @@ object StreamingOps {
   /** TTL variant of [[incrementalTokenBlocks]] — the unbounded form
     * keeps every (token, side, id) forever (bench_stream's
     * `state_plateau: false` row). Here each stored id carries its
-    * last-seen event time; entries older than `ttl` behind the current
-    * watermark are evicted on every invocation, and a token with no
-    * arrivals for `ttl` past its newest entry drops its state entirely
-    * (EventTimeTimeout — the [[streamExactDedupWithTtl]] pattern). The
-    * `maxIdsPerSide` cap applies to the LIVE (post-eviction) sets, so
-    * a hot token that cools down resumes emitting.
+    * last-seen event time and the horizon rule bounds the store: an
+    * entry past the horizon is evicted on access, and a token with no
+    * arrivals for `ttl` past its newest entry drops its state entirely.
+    * The `maxIdsPerSide` cap applies to the LIVE (post-eviction) sets,
+    * so a hot token that cools down resumes emitting. Within a batch
+    * records are admitted in (ts, side, id) order; null-`ts` records
+    * are dropped before the watermark.
     *
     * Documented divergences vs the unbounded form:
     *   - a candidate pair whose two sides arrive more than `ttl` apart
     *     is no longer guaranteed to emit (retention is at least `ttl`
     *     behind the watermark, not exact);
-    *   - a re-sighted id refreshes its entry's age and emits nothing
-    *     (same as the unbounded skip), but after eviction it RE-ADMITS
-    *     and re-emits pairs against the other side's surviving ids —
-    *     duplicate candidates across horizons; downstream consumers
-    *     already dedupe pairs (J1's distinct contract).
+    *   - after eviction a re-sighted id RE-ADMITS and re-emits pairs
+    *     against the other side's surviving ids — duplicate candidates
+    *     across horizons; downstream consumers already dedupe pairs
+    *     (J1's distinct contract).
     *
     * Streaming-only semantics — multi-batch specs; the unbounded
     * variant carries the batch oracle. */
@@ -315,66 +402,28 @@ object StreamingOps {
       implicit spark: SparkSession): Dataset[CandidatePair] = {
     import spark.implicits._
     val ttlMs = ttlMillis(ttl)
-    records.withWatermark("ts", watermark)
+    timed(records, watermark)
       .groupByKey(_.key)
       .flatMapGroupsWithState[TimedTokenState, CandidatePair](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (key: String, batch: Iterator[TimedTokenRecord],
-         state: GroupState[TimedTokenState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val st = state.getOption.getOrElse(
-              TimedTokenState(Seq.empty, Seq.empty, Seq.empty, Seq.empty))
-            val floor = state.getCurrentWatermarkMs() - ttlMs
-            def evict(ids: Seq[String], seen: Seq[Long])
-                : (scala.collection.mutable.LinkedHashMap[String, Long]) = {
-              val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-              var i = 0
-              while (i < ids.length) {
-                if (seen(i) >= floor) m += ids(i) -> seen(i)
-                i += 1
-              }
-              m
-            }
-            val left = evict(st.left, st.leftSeen)
-            val right = evict(st.right, st.rightSeen)
-            val recs = batch.toSeq.sortBy(r => (r.ts.getTime, r.side, r.id))
-            var maxTs = Long.MinValue
-            val out = Seq.newBuilder[CandidatePair]
-            recs.foreach { r =>
-              val t = r.ts.getTime
-              if (t > maxTs) maxTs = t
-              val (mine, other, mineIsLeft) =
-                if (r.side == "left") (left, right, true) else (right, left, false)
-              mine.get(r.id) match {
-                case Some(old) => // re-sighting: refresh age only
-                  if (t > old) mine.update(r.id, t)
-                case None if mine.size < maxIdsPerSide =>
-                  other.keysIterator.foreach { o =>
-                    out += (if (mineIsLeft) CandidatePair(key, r.id, o)
-                            else CandidatePair(key, o, r.id))
-                  }
-                  mine += r.id -> t
-                case None => // side full: stop admitting (hot-token cap)
-              }
-            }
-            state.update(TimedTokenState(
-              left.keys.toSeq, left.values.toSeq,
-              right.keys.toSeq, right.values.toSeq))
-            // whole-token timeout from the newest RETAINED sighting,
-            // not this batch's max: a later batch carrying only older
-            // (still-in-watermark) records must not drag the bucket's
-            // horizon backward and delete entries that are still
-            // within ttl of their true newest sighting (the
-            // StreamingCuration monotone-horizon rule; the per-entry
-            // floor above guards access, this guards the timeout)
-            val newest = (left.valuesIterator ++ right.valuesIterator)
-              .foldLeft(maxTs)(math.max)
-            state.setTimeoutTimestamp(newest + ttlMs)
-            out.result().iterator
-          }
+         state: GroupState[TimedTokenState]) => unlessTimedOut(state) {
+          val st = state.getOption.getOrElse(
+            TimedTokenState(Seq.empty, Seq.empty, Seq.empty, Seq.empty))
+          val wm = state.getCurrentWatermarkMs()
+          def live(ids: Seq[String], seen: Seq[Long]) = mutable.LinkedHashMap.from(
+            ids.iterator.zip(seen).filterNot { case (_, t) => pastHorizon(wm, t, ttlMs) })
+          val (left, right) = (live(st.left, st.leftSeen), live(st.right, st.rightSeen))
+          val recs = batch.toSeq.sortBy(r => (r.ts.getTime, r.side, r.id))
+          val out = admitTokens(key, maxIdsPerSide, left, right,
+            recs.iterator.map(r => (r.side, r.id, r.ts.getTime)))
+          state.update(TimedTokenState(
+            left.keys.toSeq, left.values.toSeq, right.keys.toSeq, right.values.toSeq))
+          extendHorizon(state, ttlMs,
+            (left.valuesIterator ++ right.valuesIterator).foldLeft(Long.MinValue)(math.max),
+            recs.last.ts.getTime)
+          out
+        }
       }
   }
 
@@ -391,12 +440,18 @@ object StreamingOps {
     * code cannot touch private member classes). */
   final case class DedupState(kept: String)
 
+  /** The per-key admission step of both exact-dedup operators: a key
+    * that already keeps an id emits nothing; otherwise `first` — the
+    * caller's batch winner — is kept and emitted. */
+  private def admitFirst(key: String, kept: Option[String], first: => String): Option[DedupKeep] =
+    if (kept.isDefined) None else Some(DedupKeep(key, first))
+
   /** First-occurrence exact dedup over a stream: per content key, emit
     * only the first record ever seen — (seq, id)-minimal within a
     * batch, arrival order across batches. The streaming analog of
     * [[graft.dedup.Dedup.exactDuplicates]]'s groupBy: state is one kept
     * id per key, bounded by the distinct-key count (at larger horizons
-    * add a state TTL and re-admit — exactness then holds within the
+    * use [[streamExactDedupWithTtl]] — exactness then holds within the
     * TTL window, the standard streaming-dedup contract). A single-batch
     * run over a static frame equals the batch rule `row_number() OVER
     * (PARTITION BY key ORDER BY seq, id) = 1` — the oracle. */
@@ -407,12 +462,9 @@ object StreamingOps {
       .flatMapGroupsWithState[DedupState, DedupKeep](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, batch: Iterator[DedupRecord], state: GroupState[DedupState]) =>
-          if (state.exists) Iterator.empty
-          else {
-            val first = batch.minBy(r => (r.seq, r.id))
-            state.update(DedupState(first.id))
-            Iterator.single(DedupKeep(key, first.id))
-          }
+          val out = admitFirst(key, state.getOption.map(_.kept), batch.minBy(r => (r.seq, r.id)).id)
+          out.foreach(k => state.update(DedupState(k.id)))
+          out.iterator
       }
   }
 
@@ -420,22 +472,23 @@ object StreamingOps {
     * variant (the watermark needs a time column). */
   final case class TimedDedupRecord(key: String, id: String, ts: java.sql.Timestamp)
 
-  /** Kept id + newest sighting time (ms) for the TTL'd dedup — the
-    * [[graft.streaming.StreamingCuration.CanonState]] pattern: the
-    * horizon must be checkable ON ACCESS and monotone in EVENT time
-    * (public: janino). CHECKPOINT COMPATIBILITY: this replaced the bare
-    * [[DedupState]] for the TTL variant — restart TTL'd queries from a
-    * fresh checkpoint after upgrading across this change. */
+  /** Kept id + newest sighting time (ms) for the TTL'd dedup, so the
+    * horizon rule can check it on access (public: janino). CHECKPOINT
+    * COMPATIBILITY: this replaced the bare [[DedupState]] for the TTL
+    * variant — restart TTL'd queries from a fresh checkpoint after
+    * upgrading across this change. */
   final case class TimedDedupState(kept: String, lastSeenMs: Long)
 
   /** TTL variant of [[streamExactDedup]] — the unbounded-horizon
     * version keeps one state row per distinct key forever; here each
-    * key's state expires once the watermark passes `ttl` beyond its
-    * last sighting (sliding TTL), after which the key is RE-ADMITTED
-    * and emits again. This is the standard streaming-dedup contract at
-    * corpus scale: exact within the TTL horizon, state bounded by the
-    * number of keys seen within it. Streaming-only semantics (timeouts
-    * never fire in a single batch) — covered by multi-batch specs, the
+    * key's state expires under the horizon rule once the watermark
+    * passes `ttl` beyond its last sighting (sliding TTL), after which
+    * the key is RE-ADMITTED and emits again. This is the standard
+    * streaming-dedup contract at corpus scale: exact within the TTL
+    * horizon, state bounded by the number of keys seen within it. The
+    * batch winner is (ts, id)-minimal; null-`ts` records are dropped
+    * before the watermark. Streaming-only semantics (timeouts never
+    * fire in a single batch) — covered by multi-batch specs, the
     * unbounded variant carries the batch oracle. */
   def streamExactDedupWithTtl(
       records: Dataset[TimedDedupRecord],
@@ -443,47 +496,21 @@ object StreamingOps {
       watermark: String = "1 hour")(implicit spark: SparkSession): Dataset[DedupKeep] = {
     import spark.implicits._
     val ttlMs = ttlMillis(ttl)
-    records.withWatermark("ts", watermark)
+    timed(records, watermark)
       .groupByKey(_.key)
       .flatMapGroupsWithState[TimedDedupState, DedupKeep](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: String, batch: Iterator[TimedDedupRecord], state: GroupState[TimedDedupState]) =>
-          if (state.hasTimedOut) {
-            state.remove() // horizon passed → future sightings re-admit
-            Iterator.empty
-          } else {
-            val recs = batch.toSeq
-            if (recs.isEmpty) Iterator.empty
-            else {
-              // horizon check ON ACCESS (the StreamingCuration rule):
-              // timeouts fire only on batches where the group has NO
-              // data, so in continuous operation a re-sight arriving
-              // right after the watermark passed the horizon would
-              // otherwise be suppressed by — and re-arm — expired
-              // state. STRICT >: equality keeps the key (the
-              // EventTimeTimeout boundary, same as the siblings).
-              if (state.exists &&
-                  state.getCurrentWatermarkMs() > state.get.lastSeenMs + ttlMs)
-                state.remove()
-              val out =
-                if (state.exists) Iterator.empty
-                else {
-                  val first = recs.minBy(r => (r.ts.getTime, r.id))
-                  state.update(TimedDedupState(first.id, Long.MinValue))
-                  Iterator.single(DedupKeep(key, first.id))
-                }
-              // sliding TTL, monotone in EVENT time: a later batch
-              // carrying only older (still-in-watermark) sightings
-              // must not drag the horizon backward and expire the key
-              // before its true newest sighting + ttl (the
-              // StreamingCuration monotone-horizon fix, applied here)
-              val horizon = math.max(state.get.lastSeenMs,
-                recs.map(_.ts.getTime).max)
-              state.update(TimedDedupState(state.get.kept, horizon))
-              state.setTimeoutTimestamp(horizon + ttlMs)
-              out
-            }
-          }
+        (key: String, batch: Iterator[TimedDedupRecord],
+         state: GroupState[TimedDedupState]) => unlessTimedOut(state) {
+          expireOnAccess(state, ttlMs)(_.lastSeenMs)
+          val recs = batch.toSeq.sortBy(r => (r.ts.getTime, r.id))
+          val st = state.getOption
+          val out = admitFirst(key, st.map(_.kept), recs.head.id)
+          state.update(TimedDedupState(out.fold(st.get.kept)(_.id),
+            extendHorizon(state, ttlMs, st.fold(Long.MinValue)(_.lastSeenMs),
+              recs.last.ts.getTime)))
+          out.iterator
+        }
       }
   }
 
@@ -505,36 +532,16 @@ object StreamingOps {
     * the janino-compiled encoder). */
   final case class BucketState(ids: Seq[String], sigs: Seq[Seq[Long]])
 
-  /** Streaming MinHash-LSH near-duplicate detection — the near-dup
-    * analog of [[streamExactDedup]]: as documents stream in, each is
-    * signed and banded ROW-LOCALLY (md5 hash family in lockstep with
-    * [[graft.functions.MinHash.signature]] — no shuffle before the
-    * bucket key), then each band bucket's state keeps the (id,
-    * signature) list seen so far and emits a pair for every new document
-    * whose signature-estimated Jaccard against a stored one reaches
-    * `minEst`. Verification-by-estimate keeps per-bucket state bounded
-    * (signatures only — never token sets); `maxIdsPerBucket` is the
-    * hot-bucket guard: full buckets stop admitting (and emitting), the
-    * streaming form of the blockers' hot-token cap.
-    *
-    * A pair sharing several bands emits once per shared bucket —
-    * downstream, dedupe by (idA, idB) (`dropDuplicates` on a bounded
-    * horizon, or [[streamExactDedup]] keyed on the pair). A single-batch
-    * run over a static corpus therefore equals the batch band-bucket
-    * self-join + estimate filter, distinct'd — the DuckDB-oracled
-    * `st_stream_neardup` query. At corpus scale, pair state across
-    * restarts rides in the checkpoint; re-admission policy (TTL) would
-    * compose exactly as in [[streamExactDedupWithTtl]]. */
   /** Per-partition row-local MinHash signer — one digest instance per
     * partition (NOT serializable; construct inside `mapPartitions`).
     * Hash family in lockstep with [[graft.functions.MinHash.signature]]:
     * ONE md5 per token (first-15-hex-chars-as-long semantics, computed
     * bytewise — the first 15 hex chars ARE the first 8 digest bytes
     * big-endian shifted right a nibble), reduced mod 2^32, then
-    * per-permutation affine mixing with MinHash.permA/permB. Shared by
-    * [[streamMinHashNearDup]] and [[streamRefineVerdicts]] so their
-    * signatures/bucket keys are bit-identical (and identical to the
-    * batch oracle's SQL mirror). */
+    * per-permutation affine mixing with MinHash.permA/permB. Every
+    * banded operator signs through [[bandDocs]], so their signatures
+    * and bucket keys are bit-identical (and identical to the batch
+    * oracle's SQL mirror). */
   private final class MinHashSigner(numPerm: Int, bands: Int) {
     import graft.functions.MinHash
     private val rows = numPerm / bands
@@ -577,62 +584,114 @@ object StreamingOps {
           .mkString(",").getBytes("UTF-8")))
   }
 
+  /** Sign and band each document row-locally (no shuffle before the
+    * bucket key): `row(doc, bucket, band, signature)` once per band, or
+    * `tokenless(doc)` when the document has no tokens. The banding of
+    * both near-dup operators and [[streamRefineVerdicts]]. */
+  private def bandDocs[D, B: org.apache.spark.sql.Encoder](
+      docs: Dataset[D], numPerm: Int, bands: Int)(tokens: D => Seq[String])(
+      row: (D, String, Int, Seq[Long]) => B,
+      tokenless: D => Option[B] = (_: D) => None): Dataset[B] = {
+    require(numPerm % bands == 0, "numPerm must be divisible by bands")
+    docs.mapPartitions { it =>
+      val signer = new MinHashSigner(numPerm, bands)
+      it.flatMap { d =>
+        val toks = tokens(d)
+        if (toks.isEmpty) tokenless(d).iterator
+        else {
+          val sig = signer.sign(toks)
+          val s = sig.toSeq
+          (0 until bands).iterator.map(j => row(d, signer.bucketKey(j, sig), j, s))
+        }
+      }
+    }
+  }
+
+  /** How many of the `numPerm` minhashes two signatures share. */
+  private def sigMatches(a: IndexedSeq[Long], b: IndexedSeq[Long], numPerm: Int): Int = {
+    var m = 0
+    var i = 0
+    while (i < numPerm) { if (a(i) == b(i)) m += 1; i += 1 }
+    m
+  }
+
+  /** The per-bucket admission step of both near-dup operators. The
+    * bucket's live entries are parallel (id, signature, last-seen ms)
+    * buffers in admission order (`Long.MinValue` times in the unbounded
+    * form); documents `(id, sig, ms)` come in the caller's order. A
+    * re-sighted id refreshes its age and emits nothing; a new id is
+    * admitted only while the bucket is below `maxIdsPerBucket` (the
+    * hot-bucket guard: a full bucket stops admitting and emitting), and
+    * emits a pair for every live signature whose estimated Jaccard
+    * reaches `minEst`. The step never sorts: which ids a full bucket
+    * admits follows the caller's order. */
+  private def admitBucket(numPerm: Int, minEst: Double, maxIdsPerBucket: Int,
+      ids: mutable.ArrayBuffer[String], sigs: mutable.ArrayBuffer[IndexedSeq[Long]],
+      seen: mutable.ArrayBuffer[Long],
+      docs: Iterator[(String, Seq[Long], Long)]): Iterator[NearDupPair] = {
+    val live = mutable.HashMap.empty[String, Int] ++= ids.iterator.zipWithIndex
+    val out = Seq.newBuilder[NearDupPair]
+    docs.foreach { case (id, sig, t) =>
+      live.get(id) match {
+        case Some(i) => if (t > seen(i)) seen(i) = t
+        case None if ids.size < maxIdsPerBucket =>
+          val dsig = sig.toIndexedSeq
+          var k = 0
+          while (k < ids.length) {
+            val est = sigMatches(sigs(k), dsig, numPerm).toDouble / numPerm
+            if (est >= minEst) {
+              val oid = ids(k)
+              out += (if (oid < id) NearDupPair(oid, id, est) else NearDupPair(id, oid, est))
+            }
+            k += 1
+          }
+          live += id -> ids.size
+          ids += id; sigs += dsig; seen += t
+        case None => // bucket full: stop admitting (hot-bucket cap)
+      }
+    }
+    out.result().iterator
+  }
+
+  /** Streaming MinHash-LSH near-duplicate detection — the near-dup
+    * analog of [[streamExactDedup]]: as documents stream in, each is
+    * signed and banded ROW-LOCALLY (md5 hash family in lockstep with
+    * [[graft.functions.MinHash.signature]] — no shuffle before the
+    * bucket key), then each band bucket's state keeps the (id,
+    * signature) list seen so far and emits a pair for every new document
+    * whose signature-estimated Jaccard against a stored one reaches
+    * `minEst`. Verification-by-estimate keeps per-bucket state bounded
+    * (signatures only — never token sets); `maxIdsPerBucket` is the
+    * hot-bucket guard, the streaming form of the blockers' hot-token
+    * cap. Within a batch a bucket admits documents in group-iterator
+    * order.
+    *
+    * A pair sharing several bands emits once per shared bucket —
+    * downstream, dedupe by (idA, idB) (`dropDuplicates` on a bounded
+    * horizon, or [[streamExactDedup]] keyed on the pair). A single-batch
+    * run over a static corpus therefore equals the batch band-bucket
+    * self-join + estimate filter, distinct'd — the DuckDB-oracled
+    * `st_stream_neardup` query. On an open-ended corpus use
+    * [[streamMinHashNearDupWithTtl]]. */
   def streamMinHashNearDup(
       docs: Dataset[DocRecord], numPerm: Int = 16, bands: Int = 4,
       minEst: Double = 0.375, maxIdsPerBucket: Int = 10000)(
       implicit spark: SparkSession): Dataset[NearDupPair] = {
     import spark.implicits._
-    require(numPerm % bands == 0, "numPerm must be divisible by bands")
-    val banded: Dataset[BandedDoc] = docs.mapPartitions { it =>
-      val signer = new MinHashSigner(numPerm, bands)
-      it.flatMap { d =>
-        if (d.tokens.isEmpty) Iterator.empty
-        else {
-          val sig = signer.sign(d.tokens)
-          (0 until bands).iterator.map { j =>
-            BandedDoc(signer.bucketKey(j, sig), d.id, sig.toSeq)
-          }
-        }
-      }
-    }
-    banded.groupByKey(_.bucket)
+    bandDocs(docs, numPerm, bands)(_.tokens)(
+        (d, bucket, _, sig) => BandedDoc(bucket, d.id, sig))
+      .groupByKey(_.bucket)
       .flatMapGroupsWithState[BucketState, NearDupPair](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (bucket: String, batch: Iterator[BandedDoc], state: GroupState[BucketState]) =>
           val st = state.getOption.getOrElse(BucketState(Seq.empty, Seq.empty))
-          // Set for membership + ArrayBuffer accumulation: the old
-          // `ids.contains` + `ids :+ d.id` per record was O(n) each, i.e.
-          // O(n²) per batch on exactly the hot bucket the admission cap
-          // exists to survive. Seq materializes only once for state.update.
-          val ids = scala.collection.mutable.ArrayBuffer.empty[String] ++= st.ids
-          val sigs = scala.collection.mutable.ArrayBuffer.empty[IndexedSeq[Long]] ++=
-            st.sigs.map(_.toIndexedSeq)
-          val seen = scala.collection.mutable.HashSet.empty[String] ++= st.ids
-          val out = Seq.newBuilder[NearDupPair]
-          batch.foreach { d =>
-            if (!seen.contains(d.id) && ids.size < maxIdsPerBucket) {
-              val dsig = d.sig.toIndexedSeq
-              var k = 0
-              while (k < ids.length) {
-                val osig = sigs(k)
-                var m = 0
-                var i = 0
-                while (i < numPerm) { if (osig(i) == dsig(i)) m += 1; i += 1 }
-                val est = m.toDouble / numPerm
-                if (est >= minEst) {
-                  val oid = ids(k)
-                  val (a, b) = if (oid < d.id) (oid, d.id) else (d.id, oid)
-                  out += NearDupPair(a, b, est)
-                }
-                k += 1
-              }
-              ids += d.id
-              sigs += dsig
-              seen += d.id
-            }
-          }
+          val ids = mutable.ArrayBuffer.from(st.ids)
+          val sigs = mutable.ArrayBuffer.from(st.sigs.map(_.toIndexedSeq))
+          val seen = mutable.ArrayBuffer.fill(ids.length)(Long.MinValue)
+          val out = admitBucket(numPerm, minEst, maxIdsPerBucket, ids, sigs, seen,
+            batch.map(d => (d.id, d.sig, Long.MinValue)))
           state.update(BucketState(ids.toSeq, sigs.toSeq))
-          out.result().iterator
+          out
       }
   }
 
@@ -652,16 +711,14 @@ object StreamingOps {
     * `state_plateau: false` row: state grows with distinct content, as
     * first-occurrence near-dup semantics demand on an open-ended
     * corpus). Here each stored signature carries its last-seen event
-    * time and two eviction levers bound the store:
+    * time and the horizon rule bounds the store: an entry past the
+    * horizon is evicted on access (also freeing `maxIdsPerBucket`
+    * capacity), and a bucket with no arrivals for `ttl` past its newest
+    * entry removes its state entirely. State is bounded by the
+    * signatures seen within one TTL horizon. Within a batch a bucket
+    * admits documents in (ts, id) order; null-`ts` documents are
+    * dropped before the watermark.
     *
-    *   - **per-entry age**: on every invocation, stored entries whose
-    *     last sighting is older than `ttl` behind the current watermark
-    *     are dropped (also freeing `maxIdsPerBucket` capacity);
-    *   - **whole-bucket timeout**: a bucket with no arrivals for `ttl`
-    *     past its newest entry removes its state entirely
-    *     (EventTimeTimeout, the [[streamExactDedupWithTtl]] pattern).
-    *
-    * State is bounded by the signatures seen within one TTL horizon.
     * Documented divergences vs the unbounded form (the standard
     * bounded-horizon near-dup contract):
     *
@@ -669,9 +726,7 @@ object StreamingOps {
     *     guaranteed to emit: eviction is watermark-driven, so retention
     *     is AT LEAST `ttl` behind the watermark but not exact — the
     *     bound is on state size, the miss is the semantic cost;
-    *   - a re-sighted id (same id again) refreshes its entry's age and
-    *     emits nothing, exactly like the unbounded form's re-sighting
-    *     skip — but after eviction the id RE-ADMITS as new, so a pair
+    *   - after eviction a re-sighted id RE-ADMITS as new, so a pair
     *     may re-emit once per horizon; downstream dedupe by (idA, idB)
     *     (already the multi-band contract) absorbs this.
     *
@@ -684,89 +739,30 @@ object StreamingOps {
       ttl: String = "1 hour", watermark: String = "1 hour")(
       implicit spark: SparkSession): Dataset[NearDupPair] = {
     import spark.implicits._
-    require(numPerm % bands == 0, "numPerm must be divisible by bands")
     val ttlMs = ttlMillis(ttl)
-    val banded: Dataset[TimedBandedDoc] = docs.mapPartitions { it =>
-      val signer = new MinHashSigner(numPerm, bands)
-      it.flatMap { d =>
-        if (d.tokens.isEmpty) Iterator.empty
-        else {
-          val sig = signer.sign(d.tokens)
-          (0 until bands).iterator.map { j =>
-            TimedBandedDoc(signer.bucketKey(j, sig), d.id, sig.toSeq, d.ts)
-          }
-        }
-      }
-    }
-    banded.withWatermark("ts", watermark)
+    val banded = bandDocs(docs, numPerm, bands)(_.tokens)(
+      (d, bucket, _, sig) => TimedBandedDoc(bucket, d.id, sig, d.ts))
+    timed(banded, watermark)
       .groupByKey(_.bucket)
       .flatMapGroupsWithState[TimedBucketState, NearDupPair](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (bucket: String, batch: Iterator[TimedBandedDoc],
-         state: GroupState[TimedBucketState]) =>
-          if (state.hasTimedOut) {
-            state.remove() // idle past the horizon → drop the whole bucket
-            Iterator.empty
-          } else {
-            val st = state.getOption.getOrElse(
-              TimedBucketState(Seq.empty, Seq.empty, Seq.empty))
-            // per-entry age eviction against the CURRENT watermark: the
-            // horizon floor below which no arrival can still pair (rows
-            // older than the watermark were dropped upstream)
-            val wm = state.getCurrentWatermarkMs()
-            val floor = wm - ttlMs
-            val ids = scala.collection.mutable.ArrayBuffer.empty[String]
-            val sigs = scala.collection.mutable.ArrayBuffer.empty[IndexedSeq[Long]]
-            val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
-            var k0 = 0
-            while (k0 < st.ids.length) {
-              if (st.seen(k0) >= floor) {
-                ids += st.ids(k0); sigs += st.sigs(k0).toIndexedSeq; seen += st.seen(k0)
-              }
-              k0 += 1
-            }
-            val live = scala.collection.mutable.HashMap.empty[String, Int] ++=
-              ids.iterator.zipWithIndex
-            val out = Seq.newBuilder[NearDupPair]
-            var maxTs = Long.MinValue
-            batch.toSeq.sortBy(d => (d.ts.getTime, d.id)).foreach { d =>
-              val t = d.ts.getTime
-              if (t > maxTs) maxTs = t
-              live.get(d.id) match {
-                case Some(i) => // re-sighting: refresh age, emit nothing
-                  if (t > seen(i)) seen(i) = t
-                case None if ids.size < maxIdsPerBucket =>
-                  val dsig = d.sig.toIndexedSeq
-                  var k = 0
-                  while (k < ids.length) {
-                    val osig = sigs(k)
-                    var m = 0
-                    var i = 0
-                    while (i < numPerm) { if (osig(i) == dsig(i)) m += 1; i += 1 }
-                    val est = m.toDouble / numPerm
-                    if (est >= minEst) {
-                      val oid = ids(k)
-                      val (a, b) = if (oid < d.id) (oid, d.id) else (d.id, oid)
-                      out += NearDupPair(a, b, est)
-                    }
-                    k += 1
-                  }
-                  live += d.id -> ids.size
-                  ids += d.id; sigs += dsig; seen += t
-                case None => // bucket full: stop admitting (hot-bucket cap)
-              }
-            }
-            state.update(TimedBucketState(ids.toSeq, sigs.map(_.toSeq).toSeq, seen.toSeq))
-            // sliding whole-bucket TTL from the newest RETAINED
-            // sighting (monotone in event time — an older in-watermark
-            // batch must not drag the horizon backward and delete
-            // signatures still within ttl of their newest sighting;
-            // the per-entry floor guards access, this guards the
-            // timeout). `seen` holds this batch's admissions and
-            // refreshes too, so it is never empty here.
-            state.setTimeoutTimestamp(seen.foldLeft(maxTs)(math.max) + ttlMs)
-            out.result().iterator
-          }
+         state: GroupState[TimedBucketState]) => unlessTimedOut(state) {
+          val st = state.getOption.getOrElse(
+            TimedBucketState(Seq.empty, Seq.empty, Seq.empty))
+          val wm = state.getCurrentWatermarkMs()
+          val keep = st.seen.indices.filterNot(k => pastHorizon(wm, st.seen(k), ttlMs))
+          val ids = mutable.ArrayBuffer.from(keep.map(st.ids))
+          val sigs = mutable.ArrayBuffer.from(keep.map(k => st.sigs(k).toIndexedSeq))
+          val seen = mutable.ArrayBuffer.from(keep.map(st.seen))
+          val recs = batch.toSeq.sortBy(d => (d.ts.getTime, d.id))
+          val out = admitBucket(numPerm, minEst, maxIdsPerBucket, ids, sigs, seen,
+            recs.iterator.map(d => (d.id, d.sig, d.ts.getTime)))
+          state.update(TimedBucketState(ids.toSeq, sigs.map(_.toSeq).toSeq, seen.toSeq))
+          extendHorizon(state, ttlMs, seen.foldLeft(Long.MinValue)(math.max),
+            recs.last.ts.getTime)
+          out
+        }
       }
   }
 
@@ -816,20 +812,9 @@ object StreamingOps {
       minEst: Double = 0.375, maxIdsPerBucket: Int = 10000)(
       implicit spark: SparkSession): Dataset[RefineVerdict] = {
     import spark.implicits._
-    require(numPerm % bands == 0, "numPerm must be divisible by bands")
-    val banded: Dataset[BandedSeqDoc] = docs.mapPartitions { it =>
-      val signer = new MinHashSigner(numPerm, bands)
-      it.flatMap { d =>
-        if (d.tokens.isEmpty)
-          Iterator.single(BandedSeqDoc("e:" + d.id, 0, d.id, d.seq, Seq.empty))
-        else {
-          val sig = signer.sign(d.tokens)
-          (0 until bands).iterator.map { j =>
-            BandedSeqDoc(signer.bucketKey(j, sig), j, d.id, d.seq, sig.toSeq)
-          }
-        }
-      }
-    }
+    val banded = bandDocs(docs, numPerm, bands)(_.tokens)(
+      (d, bucket, j, sig) => BandedSeqDoc(bucket, j, d.id, d.seq, sig),
+      d => Some(BandedSeqDoc("e:" + d.id, 0, d.id, d.seq, Seq.empty)))
     banded.groupByKey(_.bucket)
       .flatMapGroupsWithState[BucketState, RefineVerdict](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -851,10 +836,7 @@ object StreamingOps {
             while (k < ids.length && !matched) {
               val osig = sigs(k)
               if (osig.length == numPerm && dsig.length == numPerm) {
-                var m = 0
-                var i = 0
-                while (i < numPerm) { if (osig(i) == dsig(i)) m += 1; i += 1 }
-                if (m.toDouble / numPerm >= minEst) matched = true
+                if (sigMatches(osig, dsig, numPerm).toDouble / numPerm >= minEst) matched = true
               } else if (osig == dsig) matched = true // tokenless re-submit
               k += 1
             }
@@ -910,6 +892,26 @@ object StreamingOps {
     * from a fresh checkpoint after upgrading across this change. */
   final case class TimedRateState(winStart: Long, count: Int, lastSeenMs: Long)
 
+  /** The per-key step of both rate limiters: from window state `st`,
+    * admit `recs` (in the caller's (µs, id) order) up to `maxPerWindow`
+    * per tumbling `windowSeconds` window. A record for a window older
+    * than the key's latest is dropped. Returns the state after `recs`
+    * and the admitted records. */
+  private def admitRate(key: String, maxPerWindow: Int, windowSeconds: Long,
+      st: RateState, recs: Seq[RateRecord]): (RateState, Seq[RateAdmit]) = {
+    var cur = st
+    val out = recs.flatMap { r =>
+      val win = Math.floorDiv(tsMicros(r.ts), windowSeconds * 1000000L) * windowSeconds
+      if (win > cur.winStart) cur = RateState(win, 0)
+      if (win < cur.winStart || cur.count >= maxPerWindow) None
+      else {
+        cur = RateState(cur.winStart, cur.count + 1)
+        Some(RateAdmit(key, r.id, r.ts, win, cur.count))
+      }
+    }
+    (cur, out)
+  }
+
   /** Per-key event-time rate limiting: admit at most `maxPerWindow`
     * records per key per tumbling `windowSeconds` window, in
     * (event-time µs, id) order — the streaming throttle a training-data
@@ -935,20 +937,10 @@ object StreamingOps {
       .flatMapGroupsWithState[RateState, RateAdmit](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, batch: Iterator[RateRecord], state: GroupState[RateState]) =>
-          var st = state.getOption.getOrElse(RateState(Long.MinValue, 0))
-          // order by event-time µs then id (timestamps are µs-precision;
-          // getTime alone would tie where sub-millis differ)
-          val micros = (r: RateRecord) =>
-            r.ts.toInstant.getEpochSecond * 1000000L + r.ts.toInstant.getNano / 1000L
-          val out = batch.toSeq.sortBy(r => (micros(r), r.id)).flatMap { r =>
-            val win = Math.floorDiv(micros(r), windowSeconds * 1000000L) * windowSeconds
-            if (win > st.winStart) st = RateState(win, 0)
-            if (win < st.winStart || st.count >= maxPerWindow) None
-            else {
-              st = RateState(st.winStart, st.count + 1)
-              Some(RateAdmit(key, r.id, r.ts, win, st.count))
-            }
-          }
+          // event-time µs, not getTime: sub-millis differences must order
+          val (st, out) = admitRate(key, maxPerWindow, windowSeconds,
+            state.getOption.getOrElse(RateState(Long.MinValue, 0)),
+            batch.toSeq.sortBy(r => (tsMicros(r.ts), r.id)))
           state.update(st)
           out.iterator
       }
@@ -957,10 +949,9 @@ object StreamingOps {
   /** [[rateLimit]] with a bounded state store — the unbounded form
     * keeps one (winStart, count) row per key FOREVER (tiny rows, but
     * key-cardinality growth on an open-ended stream). Here a key with
-    * no arrivals for `ttl` past its newest event drops its state
-    * (EventTimeTimeout over the watermarked `ts`, the
-    * [[streamExactDedupWithTtl]] pattern), bounding state by the keys
-    * active within one TTL horizon.
+    * no arrivals for `ttl` past its newest event drops its state under
+    * the horizon rule, bounding state by the keys active within one TTL
+    * horizon. Null-`ts` records are dropped before the watermark.
     *
     * Unlike the near-dup/token TTL variants the TTL itself can be
     * EXACT: with `ttl >= windowSeconds + watermark delay`, an expired
@@ -992,42 +983,20 @@ object StreamingOps {
       implicit spark: SparkSession): Dataset[RateAdmit] = {
     import spark.implicits._
     val ttlMs = ttlMillis(ttl)
-    records.withWatermark("ts", watermark)
+    timed(records, watermark)
       .groupByKey(_.key)
       .flatMapGroupsWithState[TimedRateState, RateAdmit](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (key: String, batch: Iterator[RateRecord], state: GroupState[TimedRateState]) =>
-          if (state.hasTimedOut) {
-            state.remove() // idle past the horizon → fresh window on return
-            Iterator.empty
-          } else {
-            // horizon check ON ACCESS + monotone horizon (the
-            // StreamingCuration rules): without them a late
-            // in-watermark event drags the timeout backward, and the
-            // "exact for ttl >= window + delay" contract above breaks —
-            // early expiry re-opens a still-live window and over-admits
-            if (state.exists &&
-                state.getCurrentWatermarkMs() > state.get.lastSeenMs + ttlMs)
-              state.remove()
-            var st = state.getOption.getOrElse(
+          unlessTimedOut(state) {
+            expireOnAccess(state, ttlMs)(_.lastSeenMs)
+            val prior = state.getOption.getOrElse(
               TimedRateState(Long.MinValue, 0, Long.MinValue))
-            val micros = (r: RateRecord) =>
-              r.ts.toInstant.getEpochSecond * 1000000L + r.ts.toInstant.getNano / 1000L
-            var maxMs = Long.MinValue
-            val out = batch.toSeq.sortBy(r => (micros(r), r.id)).flatMap { r =>
-              val ms = r.ts.getTime
-              if (ms > maxMs) maxMs = ms
-              val win = Math.floorDiv(micros(r), windowSeconds * 1000000L) * windowSeconds
-              if (win > st.winStart) st = TimedRateState(win, 0, st.lastSeenMs)
-              if (win < st.winStart || st.count >= maxPerWindow) None
-              else {
-                st = TimedRateState(st.winStart, st.count + 1, st.lastSeenMs)
-                Some(RateAdmit(key, r.id, r.ts, win, st.count))
-              }
-            }
-            val horizon = math.max(st.lastSeenMs, maxMs)
-            state.update(TimedRateState(st.winStart, st.count, horizon))
-            state.setTimeoutTimestamp(horizon + ttlMs) // sliding TTL
+            val recs = batch.toSeq.sortBy(r => (tsMicros(r.ts), r.id))
+            val (st, out) = admitRate(key, maxPerWindow, windowSeconds,
+              RateState(prior.winStart, prior.count), recs)
+            state.update(TimedRateState(st.winStart, st.count,
+              extendHorizon(state, ttlMs, prior.lastSeenMs, recs.last.ts.getTime)))
             out.iterator
           }
       }
@@ -1335,17 +1304,6 @@ object StreamingOps {
       .as[TokenRecord]
   }
 
-  /** The `SPARK_GRAFT_REPLAY_PARTS` override of [[replayWaves]]' state
-    * partition count: a positive integer. Anything else fails loudly here
-    * instead of surfacing an obscure error (or an invalid partition count)
-    * from deep inside the stream start. */
-  def replayParts(v: String): Int = {
-    val n = v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_REPLAY_PARTS must be an integer, got '$v'"))
-    require(n >= 1, s"SPARK_GRAFT_REPLAY_PARTS must be at least 1, got $n")
-    n
-  }
-
   /** Drive `op` through N deterministic micro-batches (one per wave of
     * a MemoryStream) and return the memory sink's accumulated rows as a
     * BATCH DataFrame — the replay harness the TTL-eviction oracles use
@@ -1375,12 +1333,9 @@ object StreamingOps {
     // and the emitted rows are partition-count-independent: every
     // stateful operator here is keyed (groupByKey / window / dropDup)
     // and the per-row signature work is row-local (StreamingSpec parity
-    // + the unchanged oracle hashes pin this). Override seam:
-    // SPARK_GRAFT_REPLAY_PARTS (A/B evidence in OPTIMIZATION_r18.md).
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val derived = math.min(sessionParts,
+    // + the unchanged oracle hashes pin this).
+    val parts = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt,
       math.max(4, waves.map(_.size).sum / 1000))
-    val parts = sys.env.get("SPARK_GRAFT_REPLAY_PARTS").map(replayParts).getOrElse(derived)
     // clone the session so the partition setting cannot leak into the
     // caller's conf (same SparkContext, own SQLConf/catalog) — but carry
     // the caller's MODIFIED runtime confs onto the clone first:

@@ -1691,10 +1691,74 @@ class StreamingSpec extends SparkSpec {
     } finally sq.stop()
   }
 
-  test("SPARK_GRAFT_REPLAY_PARTS: a positive integer, anything else fails loudly") {
-    assert(StreamingOps.replayParts(" 3 ") == 3)
-    Seq("0", "-1", "x").foreach { v =>
-      intercept[IllegalArgumentException](StreamingOps.replayParts(v))
+  /** The rows a replay of `waves` through `op` emits, rendered without
+    * their timestamp fields (sorted, so multiplicities compare too). */
+  private def replayed[I: org.apache.spark.sql.Encoder](name: String, waves: Seq[Seq[I]])(
+      op: org.apache.spark.sql.Dataset[I] => org.apache.spark.sql.Dataset[_]): Seq[String] =
+    StreamingOps.replayWaves(waves, name)(op)(spark, implicitly).collect()
+      .map(_.toSeq.filterNot(_.isInstanceOf[Timestamp]).mkString(",")).toSeq.sorted
+
+  test("TTL operators drop null-ts records instead of failing the query") {
+    import graft.streaming.StreamingOps._
+    implicit val sess = spark
+    val (t0, t1) = (ts("2024-01-01 10:00:00"), ts("2024-01-01 10:30:00"))
+    val T = Seq("alpha", "beta", "gamma", "delta")
+    // wave 2 re-sights wave 1's key with a NULL event time next to a
+    // timed record: the null row has no time to place against the
+    // horizon, so it is dropped and the query goes on
+    assert(replayed("nts_dedup", Seq(
+        Seq(TimedDedupRecord("k", "a", t0)),
+        Seq(TimedDedupRecord("k", "b", null), TimedDedupRecord("j", "c", t1))))(
+        streamExactDedupWithTtl(_)) == Seq("j,c", "k,a"))
+    assert(replayed("nts_rate", Seq(
+        Seq(RateRecord("k", "a", t0)),
+        Seq(RateRecord("k", "b", null), RateRecord("j", "c", t1))))(
+        rateLimitWithTtl(_, maxPerWindow = 1, watermark = "1 hour"))
+        .map(_.split(",").take(2).mkString(",")) == Seq("j,c", "k,a"))
+    assert(replayed("nts_token", Seq(
+        Seq(TimedTokenRecord("t", "left", "l1", t0)),
+        Seq(TimedTokenRecord("t", "right", "r1", null),
+          TimedTokenRecord("t", "right", "r2", t1))))(
+        incrementalTokenBlocksWithTtl(_)) == Seq("t,l1,r2"))
+    assert(replayed("nts_neardup", Seq(
+        Seq(TimedDocRecord("A", T, t0)),
+        Seq(TimedDocRecord("B", T, null), TimedDocRecord("C", T, t1))))(
+        streamMinHashNearDupWithTtl(_)).distinct == Seq("A,C,1.0"))
+  }
+
+  test("a TTL horizon longer than the feed: token, near-dup and dedup TTL forms equal their unbounded forms") {
+    import graft.streaming.StreamingOps._
+    implicit val sess = spark
+    // three event-time-ordered waves over 3 h against a 24-hour ttl, every
+    // cap far above the feed, seq rising with ts: nothing can expire or
+    // saturate, so both forms must emit the same rows. Record i (its
+    // time always at(i)) re-sends record i − 20 every tenth step, which
+    // drives the unbounded skip / TTL refresh path.
+    val base = ts("2024-01-01 10:00:00").getTime
+    def at(i: Int) = new Timestamp(base + i * 60000L)
+    def src(i: Int) = if (i % 10 == 9 && i >= 20) i - 20 else i
+    def side(i: Int) = if (src(i) % 3 == 0) "left" else "right"
+    def toks(i: Int) = (0 until 8).map(j => s"w${src(i) % 20 / 2 * 3 + j}") :+ s"u${src(i) % 5}"
+    val waves = (0 until 3).map(w => (w * 60 until w * 60 + 60).filter(_ % 7 != 3))
+    def same[A: org.apache.spark.sql.Encoder, B: org.apache.spark.sql.Encoder](
+        what: String, unbounded: Int => A, timed: Int => B)(
+        u: org.apache.spark.sql.Dataset[A] => org.apache.spark.sql.Dataset[_],
+        t: org.apache.spark.sql.Dataset[B] => org.apache.spark.sql.Dataset[_]): Unit = {
+      val a = replayed(s"eq_${what}_u", waves.map(_.map(unbounded)))(u)
+      val b = replayed(s"eq_${what}_t", waves.map(_.map(timed)))(t)
+      assert(a.nonEmpty && a == b, s"$what: unbounded ${a.size} rows vs TTL ${b.size} rows")
     }
+    same("token",
+        i => TokenRecord(s"k${src(i) % 5}", side(i), s"d${src(i)}"),
+        i => TimedTokenRecord(s"k${src(i) % 5}", side(i), s"d${src(i)}", at(i)))(
+      incrementalTokenBlocks(_), incrementalTokenBlocksWithTtl(_, ttl = "24 hours"))
+    same("neardup",
+        i => DocRecord(s"d${src(i)}", toks(i)),
+        i => TimedDocRecord(s"d${src(i)}", toks(i), at(i)))(
+      streamMinHashNearDup(_), streamMinHashNearDupWithTtl(_, ttl = "24 hours"))
+    same("dedup",
+        i => DedupRecord(s"c${src(i) % 13}", s"d${src(i)}", i.toLong),
+        i => TimedDedupRecord(s"c${src(i) % 13}", s"d${src(i)}", at(i)))(
+      streamExactDedup(_), streamExactDedupWithTtl(_, ttl = "24 hours"))
   }
 }
