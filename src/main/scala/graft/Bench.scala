@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line (driver contract).
   *
@@ -14,13 +12,6 @@ object Bench {
 
   /** The driver keeps only the last this-many chars of stdout. */
   private[graft] val TailWindow = 2000
-
-  // Locale.ROOT formatting everywhere a double lands in JSON: `f"%.3f"`
-  // uses the JVM default locale, and comma decimals break bench.json.
-  private def d3(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-  private def d2(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 
   /** The last lines Bench prints, in order. The driver parses JSON lines
     * out of its [[TailWindow]]; the full line is longer, so its head is
@@ -50,12 +41,12 @@ object Bench {
     val kept = scala.collection.mutable.ArrayBuffer.empty[String]
     var used = 0
     bySlow.foreach { case (k, v, _, _) =>
-      val ent = "\"" + k + "\":" + d2(v)
+      val ent = "\"" + k + "\":" + Harness.fixed(v, 2)
       if (used + ent.length + 1 <= budget) { kept += ent; used += ent.length + 1 }
     }
     val omitted = results.size - kept.size
     val compact =
-      s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":${kept.mkString("{", ",", "}")},"queries_omitted":$omitted,"n_queries":${results.size},"failed":$failed,"sf":"$sfDir","full":"$out"}"""
+      s"""{"metric":"total","value":${Harness.fixed(total, 3)},"unit":"sec","queries":${kept.mkString("{", ",", "}")},"queries_omitted":$omitted,"n_queries":${results.size},"failed":$failed,"sf":${Harness.jsonString(sfDir)},"full":${Harness.jsonString(out)}}"""
     // both lines and their newlines inside the window
     val (head, tail) = ("""{"metric":"maxima","top":{""", "}}")
     val mBudget = TailWindow - compact.length - 2 - head.length - tail.length
@@ -75,27 +66,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Per-task maxima recorded NEXT TO each query's seconds: wall time is
-    // load-sensitive (a busy box stretches it 1.5-4x, see NOTES_r8 §16)
-    // but the worst task's input/shuffle bytes are not — so a regressed
-    // seconds row with unchanged maxima is mechanically a load window,
-    // and a grown-maxima row is a real plan change. Adjudicate with
-    // these, not with re-runs.
-    val listener = new TaskMaxListener
-    spark.sparkContext.addSparkListener(listener)
-    def flush(): Unit =
-      org.apache.spark.sql.graft.ListenerBridge.flushListenerBus(spark.sparkContext)
+    val spark = Harness.session("graft-bench", "spark.ui.enabled" -> "false")
     val only: Option[Set[String]] = args.headOption.map(_.split(",").toSet)
     // untimed warm-up: session/codegen/parquet-footer cold-start otherwise
     // lands on whichever query sorts first (~2-7 s of noise on its number)
@@ -106,35 +77,34 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       if (only.exists(!_.contains(name))) None
       else {
-        flush(); listener.reset()
-        val t0 = System.nanoTime()
-        val ok =
+        // Per-task maxima recorded NEXT TO each query's seconds: wall
+        // time is load-sensitive (a busy box stretches it 1.5-4x, see
+        // NOTES_r8 §16) but the worst task's input/shuffle bytes are not
+        // — adjudicate with these, not with re-runs.
+        val s = Harness.span(name) {
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             false
           }
-        val dt = (System.nanoTime() - t0) / 1e9
-        flush()
-        val metrics = listener.snapshotJson
-        val mline = listener.summaryLine
+        }
         // queries persist intermediates and rely on ContextCleaner GC to
         // unpersist; across 65 queries in ONE JVM the storage pool fills
         // and later queries pay eviction + GC. Clear between queries so
         // each is measured independently (the cleanup is outside the
         // query's own timer on purpose — a real pipeline runs one job).
         spark.catalog.clearCache()
-        System.err.println(f"[bench] $name%-28s $dt%8.2f s  $mline" +
-          (if (ok) "" else "  FAILED"))
-        Some((name, dt, ok, metrics))
+        System.err.println(f"[bench] $name%-28s ${s.seconds}%8.2f s  ${s.summaryLine}" +
+          (if (s.result) "" else "  FAILED"))
+        Some((name, s.seconds, s.result, s.snapshotJson))
       }
     }
-    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + d3(v) }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + Harness.fixed(v, 3) }.mkString("{", ",", "}")
     val ms = results.map { case (k, _, _, m) => "\"" + k + "\":" + m }.mkString("{", ",", "}")
     val failed = results.collect { case (k, _, false, _) => "\"" + k + "\"" }.mkString("[", ",", "]")
     val total = results.map(_._2).sum
     val json =
-      s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,"metrics":$ms,"failed":$failed,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${Harness.fixed(total, 3)},"unit":"sec","queries":$qs,"metrics":$ms,"failed":$failed,"sf":${Harness.jsonString(sfDir)}}"""
     // Print to stdout AND write to a file: under sbt, println goes through
     // the [info] logger, which the driver's JSON-line scraper can't parse.
     println(json)
@@ -148,8 +118,7 @@ object Bench {
     val out =
       if (only.isDefined) "bench_partial.json"
       else sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_run.json")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(out), (json + "\n").getBytes("UTF-8"))
+    Harness.writeArtifact(out, json)
     tailLines(results, total, failed, sfDir, out).foreach(println)
     spark.stop()
   }

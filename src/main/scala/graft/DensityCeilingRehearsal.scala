@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -51,16 +50,7 @@ object DensityCeilingRehearsal {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val b = args.drop(1).headOption.map(_.toInt).getOrElse(64)
     val planes = 24
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "24g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-density-ceiling", "spark.ui.enabled" -> "false")
 
     // peak sampler (the in-stage transient the retained deltas miss).
     // The heap READING and the max-apply sit in one critical section
@@ -187,18 +177,16 @@ object DensityCeilingRehearsal {
       s"""{"metric":"density_ceiling","values":$n,"clusters":$clusters,""" +
         s""""pairs":$nPairs,"core_rows":$nCore,"mst_rows":$nMst,""" +
         s""""clustered":$clustered,""" +
-        s""""wall_edges_s":${f"$wallEdges%.1f"},"wall_mst_s":${f"$wallMst%.1f"},""" +
-        s""""wall_collect_s":${f"$wallCollect%.1f"},"wall_tree_s":${f"$wallTree%.1f"},""" +
-        s""""heap_inputs_retained_mb":${f"$inputsMb%.0f"},""" +
-        s""""heap_labels_retained_mb":${f"$outputMb%.0f"},""" +
-        s""""heap_tree_transient_mb":${f"$treePeakMb%.0f"},""" +
-        s""""heap_mst_stage_peak_mb":${f"$mstPeakMb%.0f"},""" +
-        s""""per_row_bytes":${f"$perRowBytes%.0f"},"extrapolated_5m_gb":${f"$at5mGb%.1f"}}"""
+        s""""wall_edges_s":${Harness.fixed(wallEdges, 1)},"wall_mst_s":${Harness.fixed(wallMst, 1)},""" +
+        s""""wall_collect_s":${Harness.fixed(wallCollect, 1)},"wall_tree_s":${Harness.fixed(wallTree, 1)},""" +
+        s""""heap_inputs_retained_mb":${Harness.fixed(inputsMb, 0)},""" +
+        s""""heap_labels_retained_mb":${Harness.fixed(outputMb, 0)},""" +
+        s""""heap_tree_transient_mb":${Harness.fixed(treePeakMb, 0)},""" +
+        s""""heap_mst_stage_peak_mb":${Harness.fixed(mstPeakMb, 0)},""" +
+        s""""per_row_bytes":${Harness.fixed(perRowBytes, 0)},"extrapolated_5m_gb":${Harness.fixed(at5mGb, 1)}}"""
     println(json)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_DENSITY_CEILING_OUT", "density_ceiling.json")),
-      (json + "\n").getBytes("UTF-8"))
+    Harness.writeArtifact(
+      sys.env.getOrElse("SPARK_GRAFT_DENSITY_CEILING_OUT", "density_ceiling.json"), json)
     spark.stop()
   }
 }

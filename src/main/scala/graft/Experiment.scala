@@ -494,7 +494,7 @@ object Experiment {
           case Some(Seq(name)) =>
             val s = Evaluation.score(Seq(persisted), Seq(assign(name)), g)
             (s.eval(0, leftLen, rightLen),
-              s""","compare_blocker":"$name","dice_tp":${fmtD(s.dice(0, 1))}""")
+              s""","compare_blocker":${Harness.jsonString(name)},"dice_tp":${fmtD(s.dice(0, 1))}""")
           case Some(names) if names.size > 1 =>
             // primary blocking first; disambiguate a compare name that
             // collides with it (or with an earlier duplicate)
@@ -530,11 +530,7 @@ object Experiment {
     * reference's multi-run tracker file, trackers.py:1-240, so
     * experiment sweeps are comparable offline). */
   private def emit(c: Config, json: String): String = {
-    c.metricsPath.foreach { p =>
-      val f = new java.io.File(p)
-      Option(f.getParentFile).foreach(_.mkdirs())
-      java.nio.file.Files.writeString(f.toPath, json + "\n")
-    }
+    c.metricsPath.foreach(Harness.writeArtifact(_, json))
     c.appendMetrics.foreach { p =>
       val f = new java.io.File(p)
       Option(f.getParentFile).foreach(_.mkdirs())
@@ -559,7 +555,7 @@ object Experiment {
     }.mkString("{", ",", "}")
 
   private def renderJsonScalar(x: Any): String = x match {
-    case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    case s: String => Harness.jsonString(s)
     case d: Double => fmtD(d)
     case xs: Seq[_] => xs.map(renderJsonScalar).mkString("[", ",", "]")
     case other => other.toString // Int/Long/Boolean
@@ -579,7 +575,8 @@ object Experiment {
     val (evalPart, tEval) = timed(evalJson(c, blocks, dataset, leftLen, rightLen))
     val total = tLoad + tRead + tEval
     emit(c,
-      s"""{"blocker":"eval-only","data":"${c.data}","blocks":"$blocksDir",""" +
+      s"""{"blocker":"eval-only","data":${Harness.jsonString(c.data)},""" +
+        s""""blocks":${Harness.jsonString(blocksDir)},""" +
         s""""left_len":$leftLen,"right_len":$rightLen,$evalPart,""" +
         s""""total_time_in_s":${fmtD(total)},""" +
         s""""phase_times":{"load":${fmtD(tLoad)},"read":${fmtD(tRead)},""" +
@@ -706,7 +703,8 @@ object Experiment {
     }
     val total = tLoad + tAssign + tWrite + tEval
     val json =
-      s"""{"blocker":"${c.blocker}","data":"${c.data}","out":"${c.out}",""" +
+      s"""{"blocker":${Harness.jsonString(c.blocker)},"data":${Harness.jsonString(c.data)},""" +
+        s""""out":${Harness.jsonString(c.out)},""" +
         s""""left_len":$leftLen,"right_len":$rightLen,$evalPart,""" +
         s""""time_in_s":${fmtD(tAssign + tWrite)},"total_time_in_s":${fmtD(total)},""" +
         s""""phase_times":{$encodePart"load":${fmtD(tLoad)},"assign":${fmtD(tAssign)},""" +
@@ -716,7 +714,7 @@ object Experiment {
 
   private def fmtD(d: Double): String =
     if (d.isNaN || d.isInfinite) "null"
-    else String.format(java.util.Locale.ROOT, "%.6f", Double.box(d))
+    else Harness.fixed(d, 6)
 
   private val Usage: String =
     s"""usage: graft.Experiment --data <dir> --blocker <name> --out <dir>
@@ -743,16 +741,7 @@ object Experiment {
       catch { case e: IllegalArgumentException =>
         System.err.println(e.getMessage); System.err.println(Usage); sys.exit(2)
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName(s"graft-experiment-${c.blocker}")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(s"graft-experiment-${c.blocker}")
     try println(run(spark, c))
     finally spark.stop()
   }

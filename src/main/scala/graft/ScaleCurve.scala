@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 import graft.core.EntityFrame
 import graft.dedup.Dedup
@@ -72,44 +74,21 @@ object ScaleCurve {
             lit(" " + boiler)).otherwise(lit(""))).as("text"))
   }
 
-  final case class Cell(
-      wallS: Double, maxIn: Long, maxShufRead: Long, maxShufWrite: Long,
-      maxShufRecords: Long, spill: Long, result: Long)
-
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val factors = args.drop(1).headOption.getOrElse("1,10,100")
       .split(",").map(_.trim.toInt).toSeq
     val cap = args.drop(2).headOption.map(_.toInt).getOrElse(256)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "1024")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "24g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val listener = new TaskMaxListener
-    spark.sparkContext.addSparkListener(listener)
+    val spark = Harness.session("graft-scale-curve",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "1024",
+      "spark.ui.enabled" -> "false")
 
-    def measure(name: String)(f: => Long): Cell = {
-      org.apache.spark.sql.graft.ListenerBridge.flushListenerBus(spark.sparkContext)
-      listener.reset()
+    def measure(name: String)(f: => Long): Harness.Span[Long] = {
       val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      val t0 = System.nanoTime()
-      val result = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.ListenerBridge.flushListenerBus(spark.sparkContext)
-      val c = Cell(dt, listener.maxInputBytes, listener.maxShuffleReadBytes,
-        listener.maxShuffleWriteBytes, listener.maxShuffleReadRecords,
-        listener.spillBytes, result)
-      System.err.println(f"[curve] $name%-22s ${c.wallS}%8.1f s  " +
-        listener.summaryLine + s"  result=$result")
+      val c = Harness.span(name)(f)
+      System.err.println(f"[curve] $name%-22s ${c.seconds}%8.1f s  " +
+        c.summaryLine + s"  result=${c.result}")
       // Release only what THIS op cached (operators persist internally,
       // e.g. PartitioningTokenBlocker's rt): a blanket clearCache() here
       // would also evict the docs/sh frames persisted for the whole
@@ -546,8 +525,7 @@ object ScaleCurve {
       (copies, nDocs, nShingles, hot.getLong(0), hot.getLong(1), cells.toMap)
     }
 
-    def d1(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
+    def d1(v: Double): String = Harness.fixed(v, 1)
     def mb(b: Long): String = d1(b / 1e6)
     def ratio(a: Long, b: Long): String =
       if (a <= 0) "-" else d1(b.toDouble / a) + "x"
@@ -564,8 +542,8 @@ object ScaleCurve {
       println("|---|---|---|---|---|---|---|---|")
       results.foreach { case (c, _, _, _, _, cells) =>
         val x = cells(op)
-        println(s"| x$c | ${d1(x.wallS)} | ${mb(x.maxIn)} | ${mb(x.maxShufRead)} | " +
-          s"${mb(x.maxShufWrite)} | ${x.maxShufRecords} | ${mb(x.spill)} | ${x.result} |")
+        println(s"| x$c | ${d1(x.seconds)} | ${mb(x.maxInputBytes)} | ${mb(x.maxShuffleReadBytes)} | " +
+          s"${mb(x.maxShuffleWriteBytes)} | ${x.maxShuffleReadRecords} | ${mb(x.spillBytes)} | ${x.result} |")
       }
       // growth ratios across consecutive factors (data grows by the
       // factor quotient per step; the plan survives if these stay far
@@ -574,80 +552,63 @@ object ScaleCurve {
         case Seq((c1, _, _, _, _, a), (c2, _, _, _, _, b)) =>
           val (x, y) = (a(op), b(op))
           println(s"growth x$c1→x$c2 (data ${c2 / c1}x): " +
-            s"shuf-read ${ratio(x.maxShufRead, y.maxShufRead)}, " +
-            s"shuf-records ${ratio(x.maxShufRecords, y.maxShufRecords)}, " +
-            s"input ${ratio(x.maxIn, y.maxIn)}, " +
-            s"wall ${ratio((x.wallS * 1000).toLong, (y.wallS * 1000).toLong)}")
+            s"shuf-read ${ratio(x.maxShuffleReadBytes, y.maxShuffleReadBytes)}, " +
+            s"shuf-records ${ratio(x.maxShuffleReadRecords, y.maxShuffleReadRecords)}, " +
+            s"input ${ratio(x.maxInputBytes, y.maxInputBytes)}, " +
+            s"wall ${ratio((x.seconds * 1000).toLong, (y.seconds * 1000).toLong)}")
         case _ => ()
       }
     }
-    def cellJson(op: String, x: Cell): String =
-      s""""$op":{"wall_s":${d1(x.wallS)},"max_task_input_mb":${x.maxIn / 1000000},""" +
-        s""""max_task_shuffle_mb":${x.maxShufRead / 1000000},""" +
-        s""""max_task_shuffle_records":${x.maxShufRecords},""" +
-        s""""spill_mb":${x.spill / 1000000},"result":${x.result}}"""
-    def factorJson(c: Int, nd: Long, ns: Long, hb: Long, mx: Long,
-        cells: Map[String, Cell]): String =
-      s""""x$c":{"docs":$nd,"shingle_rows":$ns,"hot_buckets":$hb,""" +
-        s""""max_bucket":$mx,${opNames.map(op => cellJson(op, cells(op))).mkString(",")}}"""
-    val json = results.map { case (c, nd, ns, hb, mx, cells) =>
-      factorJson(c, nd, ns, hb, mx, cells)
-    }.mkString(s"""{"dir":"$dir","cap":$cap,""", ",", "}")
-    println(json)
+    def cellJson(x: Harness.Span[Long]): JObject = JObject(
+      "wall_s" -> JDecimal(BigDecimal(d1(x.seconds))),
+      "max_task_input_mb" -> JLong(x.maxInputBytes / 1000000),
+      "max_task_shuffle_mb" -> JLong(x.maxShuffleReadBytes / 1000000),
+      "max_task_shuffle_records" -> JLong(x.maxShuffleReadRecords),
+      "spill_mb" -> JLong(x.spillBytes / 1000000),
+      "result" -> JLong(x.result))
+    val factorJson = results.map { case (c, nd, ns, hb, mx, cells) =>
+      (s"x$c", JObject(List[JField](
+        "docs" -> JLong(nd), "shingle_rows" -> JLong(ns),
+        "hot_buckets" -> JLong(hb), "max_bucket" -> JLong(mx)) ++
+        opNames.map(op => op -> cellJson(cells(op)))))
+    }
+    val json = JObject(List[JField]("dir" -> JString(dir), "cap" -> JLong(cap)) ++ factorJson)
+    println(compact(render(json)))
     // committed-artifact write (SPARK_GRAFT_CURVE_OUT, default
     // scale_curve.json): per-op MERGE into the existing file, so a
     // filtered run refreshes only its own rows and the rest of the
-    // board's evidence stays intact. Flat textual merge; every op-cell
-    // lookup is BOUNDED to its factor object's extent (an op present
-    // only under a later factor must not be clobbered), a factor absent
-    // from the old file is appended whole, and the old file is never
-    // discarded wholesale.
-    val outPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_CURVE_OUT", "scale_curve.json"))
+    // board's evidence stays intact.
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_CURVE_OUT", "scale_curve.json")
     val merged =
-      if (java.nio.file.Files.exists(outPath)) {
-        var cur = java.nio.file.Files.readString(outPath).trim
-        results.foreach { case (c, nd, ns, hb, mx, cells) =>
-          val xKey = "\"x" + c + "\":{"
-          val xStart = cur.indexOf(xKey)
-          if (xStart < 0) {
-            // new factor: append the whole object before the final '}'
-            cur = cur.stripSuffix("}") + "," +
-              factorJson(c, nd, ns, hb, mx, cells) + "}"
-          } else {
-            opNames.foreach { op =>
-              val frag = cellJson(op, cells(op))
-              val opKey = "\"" + op + "\":{"
-              // extent of THIS factor object, recomputed per mutation:
-              // next top-level "xN": key or end-of-file (op fragments
-              // are flat, so the next '"x' marker is a safe bound)
-              val nextX = cur.indexOf("\"x", xStart + xKey.length)
-              val bound = if (nextX < 0) cur.length else nextX
-              val opStart = cur.indexOf(opKey, xStart)
-              if (opStart >= 0 && opStart < bound) {
-                val opEnd = cur.indexOf("}", opStart) + 1
-                cur = cur.substring(0, opStart) + frag + cur.substring(opEnd)
-              } else {
-                cur = cur.substring(0, xStart + xKey.length) + frag + "," +
-                  cur.substring(xStart + xKey.length)
-              }
-            }
-          }
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(outPath))) json
+      else {
+        val old = java.nio.file.Files.readString(java.nio.file.Paths.get(outPath))
+        try mergeCurve(parse(old), factorJson)
+        catch { case e: Exception =>
+          throw new IllegalStateException(
+            s"cannot merge into $outPath (existing file left untouched): ${e.getMessage}", e)
         }
-        cur
-      } else json
-    // the textual merge assumes flat one-level cells written by this
-    // code; a hand-edited/pretty-printed/nested file could silently
-    // corrupt the committed evidence — so refuse to write anything
-    // that is not well-formed JSON, leaving the old file intact.
-    try org.json4s.jackson.JsonMethods.parse(merged)
-    catch { case e: Exception =>
-      throw new IllegalStateException(
-        s"scale-curve merge produced invalid JSON for $outPath — " +
-          s"existing file left untouched (hand-edited or nested input?): " +
-          e.getMessage, e)
-    }
-    java.nio.file.Files.writeString(outPath, merged + "\n")
+      }
+    Harness.writeArtifact(outPath, compact(render(merged)))
     spark.stop()
+  }
+
+  /** Merge one run's factor objects into an existing curve artifact: each
+    * op cell replaces the cell of that name under the same factor (other
+    * cells, the factor's corpus counts and the top-level fields stay as
+    * they are), and a factor the file lacks is appended whole. */
+  private[graft] def mergeCurve(old: JValue, factors: Seq[(String, JObject)]): JValue = {
+    def upsert(fields: List[JField], f: JField): List[JField] =
+      if (fields.exists(_._1 == f._1)) fields.map(g => if (g._1 == f._1) f else g)
+      else fields :+ f
+    val JObject(top) = old: @unchecked
+    JObject(factors.foldLeft(top) { case (cur, (x, fresh)) =>
+      cur.collectFirst { case (`x`, JObject(cells)) => cells } match {
+        case Some(cells) =>
+          val ops = fresh.obj.filter(_._2.isInstanceOf[JObject])
+          upsert(cur, x -> JObject(ops.foldLeft(cells)(upsert)))
+        case None => upsert(cur, x -> fresh)
+      }
+    })
   }
 }

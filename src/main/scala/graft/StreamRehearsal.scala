@@ -140,7 +140,7 @@ object StreamRehearsal {
         val firstHalf = math.max(1L, mid - states.head)
         (states.last - mid).toDouble / firstHalf
       }
-    val gr = String.format(java.util.Locale.ROOT, "%.2f", Double.box(growthRatio))
+    val gr = Harness.fixed(growthRatio, 2)
     s""""$name":{"in":${rows.map(_.input).sum},"out":${rows.map(_.outRows).sum},""" +
       s""""batches":${rows.size},"final_state":${states.lastOption.getOrElse(-1L)},""" +
       s""""max_state":${if (states.isEmpty) -1L else states.max},""" +
@@ -153,17 +153,9 @@ object StreamRehearsal {
     val copies = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val cap = args.drop(2).headOption.map(_.toInt).getOrElse(256)
     val nBatches = args.drop(3).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "false") // streaming: fixed plan
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "24g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    implicit val spark: SparkSession = Harness.session("graft-stream-rehearsal",
+      "spark.sql.adaptive.enabled" -> "false", // streaming: fixed plan
+      "spark.ui.enabled" -> "false")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -364,12 +356,12 @@ object StreamRehearsal {
     aQ.stop()
     val j5 = report("stream_ann_serve", aRows)
 
-    println(s"""{"dir":"$dir","copies":$copies,"cap":$cap,$j1,$j2,$j1t,$j2t,$j3,$j4,$j4t,$j5}""")
+    println(s"""{"dir":${Harness.jsonString(dir)},"copies":$copies,"cap":$cap,$j1,$j2,$j1t,$j2t,$j3,$j4,$j4t,$j5}""")
     // sibling bench artifact: one line of adjudicable per-operator
     // summary rows (same maxima-first discipline as bench.json — see
     // [[summaryJson]]), re-runnable via
     //   runMain graft.StreamRehearsal [sfDir] [copies] [cap] [batches]
-    val summary = s"""{"metric":"stream","dir":"$dir","copies":$copies,""" +
+    val summary = s"""{"metric":"stream","dir":${Harness.jsonString(dir)},"copies":$copies,""" +
       s""""cap":$cap,${summaryJson("stream_neardup", ndRows)},""" +
       s"""${summaryJson("incremental_token_pairs", tkRows)},""" +
       s"""${summaryJson("stream_neardup_ttl", ndtRows)},""" +
@@ -379,10 +371,8 @@ object StreamRehearsal {
       s"""${summaryJson("stream_curation_ttl", ctRows)},""" +
       s"""${summaryJson("stream_ann_serve", aRows)}}"""
     println(summary)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_BENCH_OUT", "bench_stream.json")),
-      (summary + "\n").getBytes("UTF-8"))
+    Harness.writeArtifact(
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_BENCH_OUT", "bench_stream.json"), summary)
     spark.stop()
   }
 }

@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Text
+import graft.sources.Rdf
 
 /** The full input bundle of a blocking task (reference
   * src/klinker/data/ea_dataset.py:18-110): left/right attribute frames,
@@ -92,14 +93,14 @@ object BlockingDataset {
       EntityFrame(df, tableName, "head", isTriple = true)
     }
     def optTsv(name: String, cols: Seq[String]): Option[DataFrame] =
-      if (new java.io.File(s"$dir/$name").exists()) Some(tsv(name, cols)) else None
+      if (Rdf.pathExists(spark, s"$dir/$name")) Some(tsv(name, cols)) else None
     // gold: ent_links TSV when present; else an eche-style cluster dump
     // (ent_clusters: one line per cluster, tab-separated prefixed ids)
     // expanded to all inter-dataset pairs — ea_dataset.py:93-103's
     // PrefixedClusterHelper.all_pairs_no_intra path (the
     // MovieGraphBenchmark multi-source gold shape).
     val gold = optTsv("ent_links", Seq(leftName, rightName)).orElse {
-      if (new java.io.File(s"$dir/ent_clusters").exists())
+      if (Rdf.pathExists(spark, s"$dir/ent_clusters"))
         Some(goldFromClusterFile(spark, s"$dir/ent_clusters", leftName, rightName))
       else None
     }
@@ -161,7 +162,7 @@ object BlockingDataset {
       spark: SparkSession, root: String, graphPair: String = "imdb-tmdb",
       clean: Boolean = true): BlockingDataset = {
     val dir = Seq(s"$root/$graphPair", s"$root/data/$graphPair", root)
-      .find(d => new java.io.File(s"$d/attr_triples_1").exists())
+      .find(d => Rdf.pathExists(spark, s"$d/attr_triples_1"))
       .getOrElse(throw new IllegalArgumentException(
         s"no MovieGraphBenchmark pair '$graphPair' under $root"))
     val names = graphPair.split("-", 2)
@@ -203,7 +204,7 @@ object BlockingDataset {
       EntityFrame(df, tableName, "head", isTriple = true)
     }
     def opt(name: String)(f: String => DataFrame): Option[DataFrame] =
-      if (new java.io.File(s"$dir/$name.parquet").exists()) Some(f(name)) else None
+      if (Rdf.pathExists(spark, s"$dir/$name.parquet")) Some(f(name)) else None
     BlockingDataset(
       attr("attr_triples_left", leftName), attr("attr_triples_right", rightName),
       opt("rel_triples_left")(read), opt("rel_triples_right")(read),

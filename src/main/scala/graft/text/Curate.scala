@@ -114,20 +114,19 @@ object Curate {
         allowedLangs = c.langs, contamN = c.contamN, minWords = c.minWords)
       v.write.mode("overwrite").parquet(s"${c.out}/verdicts")
     }
+    val verdicts = spark.read.parquet(s"${c.out}/verdicts")
     val grouped = c.groupCol.filter(corpus.columns.contains) match {
       case Some(g) =>
-        val vg = spark.read.parquet(s"${c.out}/verdicts")
-          .join(corpus.select(col(c.idCol).cast("string").as("id"),
-            col(g)), Seq("id"))
+        val vg = verdicts.join(corpus.select(col(c.idCol).cast("string").as("id"),
+          col(g)), Seq("id"))
         Curation.funnel(vg, Seq(g)).orderBy(g)
-      case None =>
-        Curation.funnel(spark.read.parquet(s"${c.out}/verdicts"))
+      case None => Curation.funnel(verdicts)
     }
     grouped.write.mode("overwrite").parquet(s"${c.out}/funnel")
     if (c.manifest)
-      spark.read.parquet(s"${c.out}/verdicts").filter(col("keep"))
+      verdicts.filter(col("keep"))
         .select("id").write.mode("overwrite").parquet(s"${c.out}/manifest")
-    (spark.read.parquet(s"${c.out}/verdicts"), grouped)
+    (verdicts, grouped)
   }
 
   def main(args: Array[String]): Unit = {
@@ -136,16 +135,7 @@ object Curate {
       catch { case e: IllegalArgumentException =>
         System.err.println(e.getMessage); System.err.println(Usage); sys.exit(2)
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-curate")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session("graft-curate")
     try {
       val (_, funnel) = run(spark, c)
       funnel.show(100, truncate = false)

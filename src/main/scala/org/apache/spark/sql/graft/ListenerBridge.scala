@@ -4,10 +4,10 @@ import org.apache.spark.SparkContext
 
 /** Public bridge over `private[spark] SparkContext.listenerBus`.
   *
-  * The bench harness reads per-task maxima off a SparkListener after
-  * each query; listener events are delivered asynchronously on the
-  * listener bus, so reading the maxima right after the job returns can
-  * miss the last tasks' events. `LiveListenerBus.waitUntilEmpty` is the
+  * `graft.Harness.span` reads per-task maxima off a SparkListener after
+  * each measured unit; listener events are delivered asynchronously on
+  * the listener bus, so reading the maxima right after the job returns
+  * can miss the last tasks' events. `LiveListenerBus.waitUntilEmpty` is the
   * canonical flush (Spark's own test harnesses use it) but it is
   * package-private — re-export it from inside the package tree, same
   * placement trick as [[ColumnBridge]].
@@ -15,7 +15,7 @@ import org.apache.spark.SparkContext
 object ListenerBridge {
   /** Block until every queued listener event has been delivered (or the
     * timeout elapses — swallowed: stale maxima are a measurement nit,
-    * not a correctness failure worth killing a 127-query bench run). */
+    * not a correctness failure worth killing a 175-query bench run). */
   def flushListenerBus(sc: SparkContext, timeoutMillis: Long = 10000L): Unit =
     try sc.listenerBus.waitUntilEmpty(timeoutMillis)
     catch { case _: java.util.concurrent.TimeoutException => () }

@@ -45,13 +45,16 @@ class ExperimentSpec extends SparkSpec {
         "rel_triples_2", "ent_links"))
       java.nio.file.Files.copy(java.nio.file.Paths.get(s"$src/$f"),
         java.nio.file.Paths.get(s"$pairDir/$f"))
-    val ds = BlockingDataset.loadMovieGraph(spark, root, "imdb-tmdb")
-    assert(ds.left.tableName == "imdb" && ds.right.tableName == "tmdb")
-    assert(ds.left.df.count() == 6 && ds.gold.get.count() == 3)
-    // --format auto finds the sole pair dir without --graph-pair
-    val auto = Experiment.loadDataset(spark, Experiment.parseArgs(Array(
-      "--data", root, "--blocker", "token", "--out", "/tmp/x")))
-    assert(auto.left.tableName == "imdb")
+    // a file:// URI resolves through Hadoop exactly like the bare path
+    for (r <- Seq(root, s"file://$root")) {
+      val ds = BlockingDataset.loadMovieGraph(spark, r, "imdb-tmdb")
+      assert(ds.left.tableName == "imdb" && ds.right.tableName == "tmdb")
+      assert(ds.left.df.count() == 6 && ds.gold.get.count() == 3)
+      // --format auto finds the sole pair dir without --graph-pair
+      val auto = Experiment.loadDataset(spark, Experiment.parseArgs(Array(
+        "--data", r, "--blocker", "token", "--out", "/tmp/x")))
+      assert(auto.left.tableName == "imdb" && auto.gold.isDefined, r)
+    }
   }
 
   test("loadSylloge reads the normalized parquet cache (OAEI shape)") {
@@ -68,16 +71,18 @@ class ExperimentSpec extends SparkSpec {
       .write.parquet(s"$dir/rel_triples_left.parquet")
     Seq(("a1", "b1")).toDF("left", "right")
       .write.parquet(s"$dir/ent_links.parquet")
-    val ds = BlockingDataset.loadSylloge(spark, dir)
-    assert(ds.left.isTriple && ds.left.df.columns.toSeq == Seq("head", "rel", "tail"))
-    assert(ds.left.df.filter(col("head") === "a2").head.getString(2) == "\"5\"",
-      "datatype suffix must be stripped")
-    assert(ds.rightRel.isEmpty && ds.leftRel.get.count() == 1)
-    assert(ds.gold.get.columns.toSeq == Seq("left", "right"))
-    // --format auto detects the parquet cache shape
-    val auto = Experiment.loadDataset(spark, Experiment.parseArgs(Array(
-      "--data", dir, "--blocker", "token", "--out", "/tmp/x")))
-    assert(auto.left.isTriple && auto.gold.get.count() == 1)
+    for (d <- Seq(dir, s"file://$dir")) {
+      val ds = BlockingDataset.loadSylloge(spark, d)
+      assert(ds.left.isTriple && ds.left.df.columns.toSeq == Seq("head", "rel", "tail"))
+      assert(ds.left.df.filter(col("head") === "a2").head.getString(2) == "\"5\"",
+        "datatype suffix must be stripped")
+      assert(ds.rightRel.isEmpty && ds.leftRel.get.count() == 1, d)
+      assert(ds.gold.get.columns.toSeq == Seq("left", "right"))
+      // --format auto detects the parquet cache shape
+      val auto = Experiment.loadDataset(spark, Experiment.parseArgs(Array(
+        "--data", d, "--blocker", "token", "--out", "/tmp/x")))
+      assert(auto.left.isTriple && auto.gold.get.count() == 1)
+    }
   }
 
   test("cluster-file gold expands to inter-dataset pairs only") {
@@ -89,10 +94,13 @@ class ExperimentSpec extends SparkSpec {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/ent_clusters"),
       "imdb:a1\timdb:a2\ttmdb:b1\nimdb:a3\ttmdb:b3\nimdb:a4\timdb:a5\n")
-    val ds = BlockingDataset.loadOpenEA(spark, dir, leftName = "imdb", rightName = "tmdb")
-    val pairs = ds.gold.get.collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(pairs == Set(("imdb:a1", "tmdb:b1"), ("imdb:a2", "tmdb:b1"),
-      ("imdb:a3", "tmdb:b3")))
+    for (d <- Seq(dir, s"file://$dir")) {
+      val ds = BlockingDataset.loadOpenEA(spark, d, leftName = "imdb", rightName = "tmdb")
+      assert(ds.gold.isDefined, d)
+      val pairs = ds.gold.get.collect().map(r => (r.getString(0), r.getString(1))).toSet
+      assert(pairs == Set(("imdb:a1", "tmdb:b1"), ("imdb:a2", "tmdb:b1"),
+        ("imdb:a3", "tmdb:b3")))
+    }
     // prefixes that match NO cluster member must fail loudly instead of
     // expanding to an empty gold (every metric would silently report 0)
     val e = intercept[IllegalArgumentException] {
@@ -103,16 +111,20 @@ class ExperimentSpec extends SparkSpec {
   }
 
   test("loadOpenEA reads the sylloge folder layout with datatype cleaning") {
-    val ds = BlockingDataset.loadOpenEA(spark, openEaFixture())
-    assert(ds.left.isTriple && ds.right.isTriple && ds.left.idCol == "head")
-    assert(ds.left.df.count() == 6 && ds.right.df.count() == 6)
-    assert(ds.leftRel.get.count() == 2 && ds.rightRel.get.count() == 2)
-    assert(ds.gold.get.count() == 3)
-    // S2 datatype strip applied to attribute tails (ea_dataset.py:88-91)
-    val bday = ds.left.df.filter(col("rel") === "bday").head.getString(2)
-    assert(bday == "\"11-12-1973\"", s"datatype suffix must be stripped, got $bday")
-    // rel triples are NOT cleaned (reference cleans attr frames only)
-    assert(ds.leftRel.get.columns.toSeq == Seq("head", "rel", "tail"))
+    val dir = openEaFixture()
+    for (d <- Seq(dir, s"file://$dir")) {
+      val ds = BlockingDataset.loadOpenEA(spark, d)
+      assert(ds.left.isTriple && ds.right.isTriple && ds.left.idCol == "head")
+      assert(ds.left.df.count() == 6 && ds.right.df.count() == 6)
+      assert(ds.leftRel.isDefined && ds.rightRel.isDefined && ds.gold.isDefined, d)
+      assert(ds.leftRel.get.count() == 2 && ds.rightRel.get.count() == 2)
+      assert(ds.gold.get.count() == 3)
+      // S2 datatype strip applied to attribute tails (ea_dataset.py:88-91)
+      val bday = ds.left.df.filter(col("rel") === "bday").head.getString(2)
+      assert(bday == "\"11-12-1973\"", s"datatype suffix must be stripped, got $bday")
+      // rel triples are NOT cleaned (reference cleans attr frames only)
+      assert(ds.leftRel.get.columns.toSeq == Seq("head", "rel", "tail"))
+    }
   }
 
   test("Experiment CLI end-to-end: token blocker on an OpenEA fixture") {
@@ -392,6 +404,15 @@ class ExperimentSpec extends SparkSpec {
     assert(lines(0).contains(""""blocker":"token""""))
     assert(lines(1).contains(""""blocker":"unique-name""""))
     assert(lines(0) != lines(1))
+  }
+
+  test("metrics JSON escapes quotes, backslashes and tabs in its strings") {
+    val out = java.nio.file.Files.createTempDirectory("exp_esc").toString + "/a\"b\\c\td"
+    val json = Experiment.run(spark, Experiment.parseArgs(Array(
+      "--data", openEaFixture(), "--blocker", "token", "--out", out, "--no-write")))
+    val parsed = org.json4s.jackson.JsonMethods.parse(json)
+    assert((parsed \ "out") == org.json4s.JString(out))
+    assert((parsed \ "config" \ "out") == org.json4s.JString(out))
   }
 
   test("--word-vectors drives the TableTokenEncoder path end-to-end") {
