@@ -478,7 +478,7 @@ object Experiment {
 
   /** The eval fragment of the metrics JSON, shared verbatim by the full
     * pipeline and `--eval-only` so the two paths cannot drift. */
-  private def evalJson(c: Config, persisted: Blocks,
+  private def evalJson(c: Config, encoder: FrameEncoder, persisted: Blocks,
       dataset: BlockingDataset, leftLen: Long, rightLen: Long): String =
     dataset.gold match {
       case Some(g) =>
@@ -487,8 +487,10 @@ object Experiment {
         // (eval.py:329-331); several comma-separated names → the N-way
         // report (eval.py:457-521 multiple_block_comparison as the
         // per-blocker report form): this run's blocking plus each named
-        // blocker, metrics + dice-vs-best + joined-h3r improvement.
-        def assign(name: String) = blockerFor(c.copy(blocker = name)).assign(
+        // blocker, metrics + dice-vs-best + joined-h3r improvement. The
+        // compare blockers encode through the pass's own encoder, so its
+        // cache counters cover them.
+        def assign(name: String) = blockerFor(c.copy(blocker = name), encoder).assign(
           dataset.left, dataset.right, dataset.leftRel, dataset.rightRel)
         val (r, dice) = c.compare.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq) match {
           case Some(Seq(name)) =>
@@ -572,14 +574,15 @@ object Experiment {
     }
     val (dataset, leftLen, rightLen) = ds
     val (blocks, tRead) = timed(Blocks.read(spark, blocksDir))
-    val (evalPart, tEval) = timed(evalJson(c, blocks, dataset, leftLen, rightLen))
+    val encoder = encoderFor(c)
+    val (evalPart, tEval) = timed(evalJson(c, encoder, blocks, dataset, leftLen, rightLen))
     val total = tLoad + tRead + tEval
     emit(c,
       s"""{"blocker":"eval-only","data":${Harness.jsonString(c.data)},""" +
         s""""blocks":${Harness.jsonString(blocksDir)},""" +
         s""""left_len":$leftLen,"right_len":$rightLen,$evalPart,""" +
         s""""total_time_in_s":${fmtD(total)},""" +
-        s""""phase_times":{"load":${fmtD(tLoad)},"read":${fmtD(tRead)},""" +
+        s""""phase_times":{${encodeJson(encoder)}"load":${fmtD(tLoad)},"read":${fmtD(tRead)},""" +
         s""""eval":${fmtD(tEval)}},"config":${configJson(c)}}""")
   }
 
@@ -691,25 +694,27 @@ object Experiment {
       }
     }
 
-    val (evalPart, tEval) = timed(evalJson(c, persisted, dataset, leftLen, rightLen))
+    val (evalPart, tEval) = timed(evalJson(c, encoder, persisted, dataset, leftLen, rightLen))
     if (!c.writeBlocks) persisted.df.unpersist()
 
-    // S7 cache observability: encode wall time (≈0 on a cache hit — the
-    // hit is a lazy parquet read) and how many sides were re-encoded.
-    val encodePart = encoder match {
-      case ce: CachedEncoder =>
-        s""""encode":${fmtD(ce.secondsSpent)},"encode_misses":${ce.misses.get()},"""
-      case _ => ""
-    }
     val total = tLoad + tAssign + tWrite + tEval
     val json =
       s"""{"blocker":${Harness.jsonString(c.blocker)},"data":${Harness.jsonString(c.data)},""" +
         s""""out":${Harness.jsonString(c.out)},""" +
         s""""left_len":$leftLen,"right_len":$rightLen,$evalPart,""" +
         s""""time_in_s":${fmtD(tAssign + tWrite)},"total_time_in_s":${fmtD(total)},""" +
-        s""""phase_times":{$encodePart"load":${fmtD(tLoad)},"assign":${fmtD(tAssign)},""" +
+        s""""phase_times":{${encodeJson(encoder)}"load":${fmtD(tLoad)},"assign":${fmtD(tAssign)},""" +
         s""""write":${fmtD(tWrite)},"eval":${fmtD(tEval)}},"config":${configJson(c)}}"""
     emit(c, json)
+  }
+
+  /** S7 cache observability: encode wall time (≈0 on a cache hit — the
+    * hit is a lazy parquet read) and how many sides were re-encoded,
+    * over the primary blocker and every `--compare` blocker of the pass. */
+  private def encodeJson(encoder: FrameEncoder): String = encoder match {
+    case ce: CachedEncoder =>
+      s""""encode":${fmtD(ce.secondsSpent)},"encode_misses":${ce.misses.get()},"""
+    case _ => ""
   }
 
   private def fmtD(d: Double): String =

@@ -583,7 +583,7 @@ object ScaleCurve {
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(outPath))) json
       else {
         val old = java.nio.file.Files.readString(java.nio.file.Paths.get(outPath))
-        try mergeCurve(parse(old), factorJson)
+        try mergeCurve(parse(old), dir, cap, factorJson)
         catch { case e: Exception =>
           throw new IllegalStateException(
             s"cannot merge into $outPath (existing file left untouched): ${e.getMessage}", e)
@@ -593,15 +593,29 @@ object ScaleCurve {
     spark.stop()
   }
 
-  /** Merge one run's factor objects into an existing curve artifact: each
-    * op cell replaces the cell of that name under the same factor (other
-    * cells, the factor's corpus counts and the top-level fields stay as
-    * they are), and a factor the file lacks is appended whole. */
-  private[graft] def mergeCurve(old: JValue, factors: Seq[(String, JObject)]): JValue = {
+  /** Merge one run's factor objects, measured on `dir` at `cap`, into an
+    * existing curve artifact: each op cell replaces the cell of that name
+    * under the same factor (other cells, the factor's corpus counts and
+    * the top-level fields stay as they are), and a factor the file lacks
+    * is appended whole. A file labelled with another `dir` or `cap` is
+    * refused (`IllegalArgumentException` naming both values): its cells
+    * would carry no mark that they came from a different corpus. */
+  private[graft] def mergeCurve(old: JValue, dir: String, cap: Long,
+      factors: Seq[(String, JObject)]): JValue = {
     def upsert(fields: List[JField], f: JField): List[JField] =
       if (fields.exists(_._1 == f._1)) fields.map(g => if (g._1 == f._1) f else g)
       else fields :+ f
     val JObject(top) = old: @unchecked
+    val (oldDir, oldCap) = (old \ "dir", old \ "cap")
+    val sameCap = oldCap match {
+      case JInt(v) => v == cap
+      case JLong(v) => v == cap
+      case _ => false
+    }
+    require(oldDir == JString(dir) && sameCap,
+      s"the curve file was measured on dir ${compact(render(oldDir))} cap " +
+        s"${compact(render(oldCap))}; this run measured dir ${Harness.jsonString(dir)} " +
+        s"cap $cap — merge into a separate SPARK_GRAFT_CURVE_OUT file")
     JObject(factors.foldLeft(top) { case (cur, (x, fresh)) =>
       cur.collectFirst { case (`x`, JObject(cells)) => cells } match {
         case Some(cells) =>

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.TextOps
 
 /** Codegen-friendly text primitives — pure `functions._` chains, no UDFs,
   * so they stay inside WholeStageCodegen on the hot paths.
@@ -20,16 +21,12 @@ object Text {
     "he", "in", "is", "it", "its", "of", "on", "or", "that", "the", "to",
     "was", "were", "will", "with")
 
-  val TokenSplitRegex = "[^a-z0-9]+"
-
-  /** Lowercase → split on non-alphanumerics → drop short tokens and
-    * stopwords. Returns array<string>. */
-  def tokenize(c: Column, minLength: Int = 3, stopwords: Seq[String] = Stopwords): Column = {
-    val stop = typedLit(stopwords)
-    filter(
-      split(lower(c), TokenSplitRegex),
-      t => length(t) >= minLength && !array_contains(stop, t))
-  }
+  /** Lowercase → split on non-alphanumerics (`[^a-z0-9]+`) → drop short
+    * tokens and stopwords. Returns array<string>. Spark's `lower`, then
+    * the codegen'd [[org.apache.spark.sql.graft.TokenFilter]] kernel
+    * (split and filter in one compiled pass). */
+  def tokenize(c: Column, minLength: Int = 3, stopwords: Seq[String] = Stopwords): Column =
+    TextOps.tokenFilter(lower(c), minLength, stopwords)
 
   /** NLTK-parity tokenizer (SURVEY F1's caveat, for users porting
     * klinker configs byte-for-byte): Treebank token boundaries via the
@@ -41,22 +38,25 @@ object Text {
     * is what the reference's own golden blocks pin
     * (tests/test_blockers.py:115-129 keys `John`/`USA`/`02-02-1983`);
     * `lowercase = true` gives the lowered variant of the reference's
-    * current `str(x.lower())` code path. */
+    * current `str(x.lower())` code path. The gate is the array form of
+    * the [[org.apache.spark.sql.graft.TokenFilter]] kernel. */
   def nltkTokenize(c: Column, minLength: Int = 3,
                    stopwords: Seq[String] = Stopwords,
                    lowercase: Boolean = false,
                    extraAbbrevs: Seq[String] = Nil): Column = {
-    val stop = typedLit(stopwords)
     val base = if (lowercase) lower(c) else c
-    filter(
-      org.apache.spark.sql.graft.TextOps.treebankTokenize(base, extraAbbrevs),
-      t => length(t) >= minLength && !array_contains(stop, t))
+    TextOps.tokenFilter(TextOps.treebankTokenize(base, extraAbbrevs), minLength, stopwords)
   }
 
   /** Let-binding for Column expressions: evaluate `c` ONCE per row and
     * hand it to `f` as a lambda variable. Higher-order functions are
-    * interpreted (not codegen'd) and re-evaluate every captured
-    * subexpression on EACH lambda invocation — so an expression argument
+    * interpreted (not codegen'd), which is why the per-token scans of
+    * text tagging are compiled kernels instead
+    * ([[org.apache.spark.sql.graft.TokenFilter]] for [[tokenize]],
+    * `LexiconArgmax` for `TextAnalysis.langId`, `WsTokenStats` for the
+    * whitespace-token quality signals); the lambdas that remain (word
+    * shingles, vector norms, window arrays) also re-evaluate every
+    * captured subexpression on EACH lambda invocation — so an expression argument
     * referenced inside a per-element lambda (e.g. tokenize inside
     * wordShingles) would otherwise be recomputed once per element:
     * measured ~15× on the shingle family at sf0.1. Wrapping the value in
@@ -76,7 +76,7 @@ object Text {
     * the kernel slices precomputed char offsets, O(n·q), identical
     * output (character semantics, order, duplicates). */
   def qgrams(c: Column, q: Int = 3): Column =
-    org.apache.spark.sql.graft.TextOps.charGrams(c, q)
+    TextOps.charGrams(c, q)
 
   /** Word n-gram shingles over the token array (same descending-sequence
     * guard as [[qgrams]]). */

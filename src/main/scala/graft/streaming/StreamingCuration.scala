@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 import graft.dedup.Dedup
-import graft.functions.Text
-import graft.text.TextAnalysis
+import graft.text.Curation
 
 /** Curation AT INGEST: the batch verdict funnel
   * ([[graft.text.Curation]]) re-expressed streaming-safe, so a corpus
@@ -18,8 +17,14 @@ import graft.text.TextAnalysis
   * Streaming-safe construction (no window functions, ONE stateful op):
   *
   *   1. langid + quality tagging is the batch path's own row-local
-  *      projection ([[TextAnalysis.qualityFilter]] with passthrough) —
-  *      identical expressions, so signals agree bit-for-bit;
+  *      projection ([[Curation.tag]]) — one function, so signals agree
+  *      bit-for-bit. Its scans are codegen'd kernels: `langId` is one
+  *      [[org.apache.spark.sql.graft.LexiconArgmax]] pass, the quality
+  *      signals one [[org.apache.spark.sql.graft.WsTokenStats]] pass,
+  *      and the dup_key tokens one
+  *      [[org.apache.spark.sql.graft.TokenFilter]] pass (sorted with
+  *      `sort_array`), so the tagging of an arriving document runs no
+  *      interpreted higher-order function (a spec asserts it);
   *   2. contamination is row-local: the benchmark gram set (eval-suite-
   *      sized, the same broadcast contract as [[Dedup.decontaminate]])
   *      is snapshot at plan time into the codegen'd
@@ -138,22 +143,16 @@ object StreamingCuration {
     val nHits: Column =
       if (grams.isEmpty) lit(0L) // empty eval suite: nothing to hit
       else org.apache.spark.sql.graft.TextOps.windowHitCount(
-        trim(lower(coalesce(col("_text"), lit("")))), contamN, grams.toSeq)
+        trim(lower(coalesce(col("_doc"), lit("")))), contamN, grams.toSeq)
 
     val eventTs =
       if (stateTtl.isDefined) col(tsCol).cast("timestamp")
       else lit(null).cast("timestamp")
-    val base = stream.select(col(idCol).cast("string").as("id"),
-      col(textCol).as("_text"),
-      TextAnalysis.langId(col(textCol)).as("lang"),
-      eventTs.as("_eventTs"))
-    val enriched = TextAnalysis.qualityFilter(base, "id", "_text",
-        minWords, maxWords, minMeanLen, maxMeanLen, minStopwords,
-        maxDupFrac, passthrough = Seq("lang", "_text", "_eventTs"))
-      .withColumnRenamed("reason", "quality_reason")
+    val enriched = Curation.tag(stream, idCol, textCol, minWords, maxWords,
+        minMeanLen, maxMeanLen, minStopwords, maxDupFrac,
+        "_doc" -> col(textCol), "_eventTs" -> eventTs)
       .withColumn("n_hits", nHits)
-      .withColumn("dup_key", md5(concat_ws(" ",
-        array_sort(array_distinct(Text.tokenize(col("_text")))))))
+      .withColumn("dup_key", Curation.dupKey(col("_doc")))
     val langOk = col("lang").isin(allowedLangs: _*)
 
     // every document rides the one stateful op as a tagged ~100-byte

@@ -23,15 +23,21 @@ import graft.functions.{Num, Text}
   */
 object StreamingOps {
 
-  /** Parse a TTL interval string ("150 minutes") to millis. Every TTL
-    * operator parses here and then applies the one horizon rule below,
-    * so neither validation nor expiry can drift between them: a
-    * non-positive ttl would silently never expire anything, which is
-    * the unbounded form wearing a bounded label. */
-  private[streaming] def ttlMillis(ttl: String): Long = {
-    val ms = org.apache.spark.sql.catalyst.util.IntervalUtils
+  /** Parse a TTL interval string ("150 minutes", "1 day 2 hours") to
+    * millis, a day counting 24 hours. Every TTL operator parses here and
+    * then applies the one horizon rule below, so neither validation nor
+    * expiry can drift between them: a non-positive ttl would silently
+    * never expire anything, which is the unbounded form wearing a
+    * bounded label, and a month or year has no fixed length, so an
+    * interval with one is rejected too. */
+  private[graft] def ttlMillis(ttl: String): Long = {
+    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
       .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(ttl))
-      .extractAsDuration().toMillis
+    require(iv.months == 0,
+      s"ttl '$ttl' has a month or year part, which has no fixed duration; " +
+        "write it in days or hours")
+    val ms = Math.floorDiv(
+      Math.addExact(Math.multiplyExact(iv.days.toLong, 86400000000L), iv.microseconds), 1000L)
     require(ms > 0, s"ttl '$ttl' must be a positive duration")
     ms
   }

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
@@ -53,19 +53,13 @@ object Curation {
                minWords: Int = 20, maxWords: Int = 100000,
                minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
                minStopwords: Int = 1, maxDupFrac: Double = 0.6): DataFrame = {
-    val base = corpus.select(col(idCol).cast("string").as("id"),
-      col(textCol).as("_text"),
-      TextAnalysis.langId(col(textCol)).as("lang"))
     // persist: the tagged frame (langId lexicon scores + every quality
-    // rule — regexp-heavy row-local work) feeds BOTH the gate-survivor
-    // semi-join inside the dup stage and the final verdict select;
-    // uncached it evaluated twice per action. Released via the seal on
-    // the (one-slim-row-per-doc) output below.
-    val tagged = TextAnalysis.qualityFilter(base, "id", "_text",
-        minWords, maxWords, minMeanLen, maxMeanLen, minStopwords,
-        maxDupFrac, passthrough = Seq("lang"))
-      .withColumnRenamed("reason", "quality_reason")
-      .persist()
+    // rule) feeds BOTH the gate-survivor semi-join inside the dup stage
+    // and the final verdict select; uncached it evaluated twice per
+    // action. Released via the seal on the (one-slim-row-per-doc)
+    // output below.
+    val tagged = tag(corpus, idCol, textCol, minWords, maxWords,
+      minMeanLen, maxMeanLen, minStopwords, maxDupFrac).persist()
     val langOk = col("lang").isin(allowedLangs: _*)
 
     // exact-dup canonical among gate survivors: row-local canonical key
@@ -74,9 +68,7 @@ object Curation {
     val gateIds = tagged.filter(col("keep") && langOk).select("id")
     val dup = corpus
       .select(col(idCol).cast("string").as("id"),
-        md5(concat_ws(" ",
-          array_sort(array_distinct(Text.tokenize(col(textCol))))))
-          .as("dup_key"))
+        dupKey(col(textCol)).as("dup_key"))
       .join(gateIds, Seq("id"), "left_semi")
       .withColumn("_canon", min(col("id")).over(Window.partitionBy("dup_key")))
       .select(col("id"),
@@ -101,6 +93,33 @@ object Curation {
     // and release the tagged cache (CacheScope contract)
     graft.core.CacheScope.seal(out, tagged)
   }
+
+  /** The row-local tagging projection of both curation paths (this
+    * [[verdicts]] and [[graft.streaming.StreamingCuration.verdicts]]):
+    * (id, n_tokens, dup_frac_e6, quality_reason, lang, `carry`…, keep)
+    * with `id` cast to string, `lang` = [[TextAnalysis.langId]] and the
+    * [[TextAnalysis.qualityFilter]] gate. Both scans are codegen'd
+    * kernels (`LexiconArgmax`, `WsTokenStats`), so the projection holds
+    * no interpreted higher-order function. `carry` adds named columns of
+    * `docs` to the output. */
+  private[graft] def tag(docs: DataFrame, idCol: String, textCol: String,
+      minWords: Int, maxWords: Int, minMeanLen: Double, maxMeanLen: Double,
+      minStopwords: Int, maxDupFrac: Double,
+      carry: (String, Column)*): DataFrame = {
+    val base = docs.select(Seq(col(idCol).cast("string").as("id"),
+      col(textCol).as("_text"), TextAnalysis.langId(col(textCol)).as("lang")) ++
+      carry.map { case (n, c) => c.as(n) }: _*)
+    TextAnalysis.qualityFilter(base, "id", "_text", minWords, maxWords,
+        minMeanLen, maxMeanLen, minStopwords, maxDupFrac,
+        passthrough = "lang" +: carry.map(_._1))
+      .withColumnRenamed("reason", "quality_reason")
+  }
+
+  /** The exact-duplicate key of a document: md5 of its sorted distinct
+    * [[Text.tokenize]] tokens ([[Dedup.exactDuplicates]]'s canonical
+    * key, computed row-locally). */
+  private[graft] def dupKey(text: Column): Column =
+    md5(concat_ws(" ", sort_array(array_distinct(Text.tokenize(text)))))
 
   /** Funnel report over a [[verdicts]] frame: per `groupCols` (or one
     * global row when empty) — document count, per-stage drop counts,

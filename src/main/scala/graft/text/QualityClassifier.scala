@@ -34,21 +34,18 @@ object QualityClassifier {
 
   /** Row-local feature expressions over a text column: whitespace token
     * count (log1p), mean word length, stopword ratio, duplicate-token
-    * fraction, English lexicon-hit ratio. Null text → '' (rule shared
-    * with qualityFilter; oracles mirror the coalesce). */
+    * fraction, English lexicon-hit ratio — one pass of the
+    * whitespace-token kernel ([[TextAnalysis.wsStats]]). Null text → ''
+    * (rule shared with qualityFilter; oracles mirror the coalesce). */
   def featureCols(textCol: Column): Seq[Column] = {
-    val toks = split(trim(lower(coalesce(textCol, lit("")))), "\\s+")
-    val m = size(toks).cast("double")
+    val st = TextAnalysis.wsStats(trim(lower(coalesce(textCol, lit("")))))
+    val m = st("n_tokens").cast("double")
     Seq(
       log1p(m).as("log_n_tokens"),
-      (aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") / m)
-        .as("mean_word_len"),
-      (size(filter(toks, t => array_contains(typedLit(Text.Stopwords), t)))
-        .cast("double") / m).as("stop_ratio"),
-      ((m - size(array_distinct(toks))) / m).as("dup_frac"),
-      (size(filter(toks,
-        t => array_contains(typedLit(TextAnalysis.Lexicons.toMap.apply("en")), t)))
-        .cast("double") / m).as("lex_en_ratio"))
+      (st("n_chars").cast("double") / m).as("mean_word_len"),
+      (st("n_stop").cast("double") / m).as("stop_ratio"),
+      ((m - st("n_distinct")) / m).as("dup_frac"),
+      (st("n_lex").cast("double") / m).as("lex_en_ratio"))
   }
 
   /** (idCol, label?, features...) frame. */
@@ -85,8 +82,8 @@ object QualityClassifier {
     * SQL so the oracle can reproduce the labeled set exactly. */
   def degrade(textCol: Column, keep: Int = 8): Column =
     concat_ws(" ", slice(
-      filter(split(trim(lower(coalesce(textCol, lit("")))), "\\s+"),
-        t => !array_contains(typedLit(Text.Stopwords), t)),
+      org.apache.spark.sql.graft.TextOps.tokenFilter(
+        split(trim(lower(coalesce(textCol, lit("")))), "\\s+"), 0, Text.Stopwords),
       1, keep))
 
   /** Train on reference-vs-degraded and score every corpus document:

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.TextOps
 import graft.functions.{Num, Text}
 
 /** Text-corpus analysis operators for training-data pipelines: language
@@ -19,29 +20,16 @@ object TextAnalysis {
     "es" -> Seq("los", "las", "con", "para", "por", "una", "del"),
     "fr" -> Seq("les", "des", "est", "avec", "dans", "une", "sur"))
 
-  /** Language-ID: count lexicon hits over the token array; winner is the
-    * highest score, ties broken by language code ascending; all-zero →
-    * "und" (ISO 639 undetermined). */
-  def langId(text: Column): Column = {
-    val toks = split(lower(text), Text.TokenSplitRegex)
-    val scored = Lexicons.map { case (lang, words) =>
-      (lang, size(filter(toks, t => array_contains(typedLit(words), t))))
-    }
-    // argmax with lang-asc tie-break: fold over languages in order,
-    // strictly-greater replaces
-    val best = scored.foldLeft((lit("und"), lit(0))) {
-      case ((bl, bs), (lang, s)) =>
-        (when(s > bs, lit(lang)).otherwise(bl), when(s > bs, s).otherwise(bs))
-    }
-    best._1
-  }
+  /** Language-ID: count lexicon hits over the `[^a-z0-9]+` tokens of the
+    * lowercased text; winner is the highest score, ties broken by
+    * language code ascending; all-zero (or null text) → "und" (ISO 639
+    * undetermined). One pass of the codegen'd
+    * [[org.apache.spark.sql.graft.LexiconArgmax]] kernel. */
+  def langId(text: Column): Column = TextOps.lexiconArgmax(lower(text), Lexicons)
 
   /** Per-language lexicon score (for inspection/thresholding). */
-  def langScore(text: Column, lang: String): Column = {
-    val words = Lexicons.toMap.apply(lang)
-    size(filter(split(lower(text), Text.TokenSplitRegex),
-      t => array_contains(typedLit(words), t)))
-  }
+  def langScore(text: Column, lang: String): Column =
+    TextOps.lexiconArgmax(lower(text), Lexicons, scoreOf = Some(lang))
 
   /** Whitespace token count. */
   def wsTokenCount(text: Column): Column =
@@ -52,16 +40,23 @@ object TextAnalysis {
   def bpeIshTokenCount(text: Column): Column =
     regexp_count(lower(text), lit("[a-z0-9]+|[^a-z0-9\\s]"))
 
+  /** The whitespace-token signals of a lowercased, trimmed text in one
+    * pass of the codegen'd [[org.apache.spark.sql.graft.WsTokenStats]]
+    * kernel: a struct of `n_tokens`, `n_chars`, `n_stop` (stopword
+    * hits), `n_distinct` and `n_lex` (English-lexicon hits) over
+    * `split(text, '\\s+')`. Null text gives a null struct. */
+  private[text] def wsStats(prepared: Column): Column =
+    TextOps.wsTokenStats(prepared, Text.Stopwords, Lexicons.toMap.apply("en"))
+
   /** Document-quality heuristics (length, stopword ratio, mean word
     * length) combined into one [0,1] score:
     * 0.4·min(n_tok/100, 1) + 0.3·(1 − stopword_ratio) + 0.3·min(mean_len/8, 1).
     */
   def qualityScore(text: Column): Column = {
-    val toks = split(trim(lower(text)), "\\s+")
-    val nTok = size(toks)
-    val stopRatio = size(filter(toks,
-      t => array_contains(typedLit(Text.Stopwords), t))).cast("double") / nTok
-    val meanLen = aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") / nTok
+    val st = wsStats(trim(lower(text)))
+    val nTok = st("n_tokens")
+    val stopRatio = st("n_stop").cast("double") / nTok
+    val meanLen = st("n_chars").cast("double") / nTok
     // floor-scaled to micro-units rather than round(…, 6): both engines
     // compute the identical double, but their ROUND implementations can
     // disagree at a .5 boundary of the 6th decimal; floor cannot
@@ -99,18 +94,16 @@ object TextAnalysis {
     // engine config. '' tokenizes to [''] → m = 1 < minWords → dropped as
     // 'n_tokens', deterministically, on both engines (oracles mirror the
     // coalesce).
-    val toks = split(trim(lower(coalesce(col(textCol), lit("")))), "\\s+")
+    val st = wsStats(trim(lower(coalesce(col(textCol), lit("")))))
     val extra = passthrough.map(col)
     docs
-      .select(col(idCol) +: toks.as("_toks") +: extra: _*)
+      .select(col(idCol) +: st.as("_st") +: extra: _*)
       .select(Seq(col(idCol),
-        size(col("_toks")).as("_m"),
-        (aggregate(col("_toks"), lit(0L), (acc, t) => acc + length(t))
-          .cast("double") / size(col("_toks"))).as("_mean"),
-        size(filter(col("_toks"),
-          t => array_contains(typedLit(Text.Stopwords), t))).as("_stop"),
-        ((size(col("_toks")) - size(array_distinct(col("_toks")))).cast("double")
-          / size(col("_toks"))).as("_dup")) ++ extra: _*)
+        col("_st.n_tokens").as("_m"),
+        (col("_st.n_chars").cast("double") / col("_st.n_tokens")).as("_mean"),
+        col("_st.n_stop").as("_stop"),
+        ((col("_st.n_tokens") - col("_st.n_distinct")).cast("double")
+          / col("_st.n_tokens")).as("_dup")) ++ extra: _*)
       .select(Seq(col(idCol),
         col("_m").cast("long").as("n_tokens"),
         floor(col("_dup") * 1e6).cast("long").as("dup_frac_e6"),
@@ -163,14 +156,12 @@ object TextAnalysis {
     */
   def repetitionSignals(docs: DataFrame, idCol: String = "doc_id",
                         textCol: String = "text"): DataFrame = {
-    val toks = split(trim(lower(col(textCol))), "\\s+")
+    val text = trim(lower(col(textCol)))
     val base = docs
-      .select(col(idCol).as("id"), toks.as("toks"))
-      .select(col("id"), col("toks"),
-        aggregate(col("toks"), lit(0L), (acc, t) => acc + length(t))
-          .as("total_chars"),
-        size(col("toks")).as("m"),
-        size(array_distinct(col("toks"))).as("m_distinct"))
+      .select(col(idCol).as("id"), split(text, "\\s+").as("toks"),
+        wsStats(text).as("st"))
+      .select(col("id"), col("toks"), col("st.n_chars").as("total_chars"),
+        col("st.n_tokens").as("m"), col("st.n_distinct").as("m_distinct"))
 
     def gramRows(n: Int): DataFrame = base
       .select(col("id"), col("total_chars"), col("m"), col("m_distinct"),

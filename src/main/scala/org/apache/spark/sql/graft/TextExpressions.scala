@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode normalization as a codegen'd expression (java.text.Normalizer
@@ -133,7 +136,6 @@ object RdfUnescape {
   }
 }
 
-/** Column-level entry point. */
 /** `window_hit_count(text, n, grams)` — the number of DISTINCT n-token
   * windows of `text` that occur in the `grams` set, in one compiled
   * pass. Semantically identical to
@@ -505,6 +507,322 @@ object CharGrams {
   }
 }
 
+/** The byte scan the text-tagging kernels ([[TokenFilter]],
+  * [[LexiconArgmax]], [[WsTokenStats]]) share: Spark's regex `split`
+  * with an ASCII delimiter class, without the regex. Every byte of a
+  * multi-byte UTF-8 character is ≥ 0x80, so a 256-entry byte table
+  * decides an ASCII class exactly (a non-ASCII character is one
+  * delimiter run under `[^a-z0-9]+` and never whitespace under `\s+`),
+  * and tokens are byte ranges of the input. */
+object TextScan {
+  /** `[^a-z0-9]` — [[graft.functions.Text.tokenize]]'s delimiter. */
+  val NonAlnum: Array[Boolean] =
+    Array.tabulate(256)(b => !((b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')))
+  /** Java's `\s`: space, \t, \n, \u000B, \f, \r. */
+  val Space: Array[Boolean] = Array.tabulate(256)(b => b == ' ' || (b >= 9 && b <= 13))
+
+  /** Token bounds `[from0, until0, from1, until1, …]` of `bytes` split on
+    * maximal delimiter runs with `String.split(regex, -1)` semantics,
+    * which Spark's `split` runs: a leading or trailing delimiter run
+    * yields an empty token, and the empty string is one empty token. */
+  def bounds(bytes: Array[Byte], delim: Array[Boolean]): Array[Int] = {
+    var out = new Array[Int](32)
+    var n = 0
+    var start = 0
+    var i = 0
+    var done = false
+    while (!done) {
+      if (i < bytes.length && !delim(bytes(i) & 0xff)) i += 1
+      else {
+        if (n == out.length) out = java.util.Arrays.copyOf(out, n * 2)
+        out(n) = start; out(n + 1) = i; n += 2
+        if (i == bytes.length) done = true
+        else {
+          while (i < bytes.length && delim(bytes(i) & 0xff)) i += 1
+          start = i
+        }
+      }
+    }
+    java.util.Arrays.copyOf(out, n)
+  }
+
+  def wordSet(words: Seq[String]): java.util.HashSet[UTF8String] = {
+    val s = new java.util.HashSet[UTF8String](math.max(16, words.length * 2))
+    words.foreach(w => s.add(UTF8String.fromString(w)))
+    s
+  }
+}
+
+/** `token_filter(text, minLength, stopwords)` — the token list of
+  * [[graft.functions.Text.tokenize]] in one compiled pass: split on
+  * `[^a-z0-9]+` ([[TextScan.bounds]]), keep the tokens at least
+  * `minLength` long that are not in `stopwords`. Identical to
+  * `filter(split(text, '[^a-z0-9]+'), t -> length(t) >= minLength AND
+  * NOT array_contains(stopwords, t))`, whose lambda evaluates
+  * interpreted, one Catalyst tree walk per token. Every token is an
+  * ASCII byte range, so its length is its byte count.
+  *
+  * Over an `array<string>` child it is that filter alone (length in
+  * code points, null elements dropped, the child's type kept): the
+  * post-filter of [[graft.functions.Text.nltkTokenize]]. The caller
+  * lowercases upstream, with Spark's own `lower`. */
+case class TokenFilter(child: Expression, minLength: Int, stopwords: Seq[String])
+    extends UnaryExpression {
+
+  override def dataType: DataType = child.dataType match {
+    case a: ArrayType => a
+    case _ => ArrayType(StringType, containsNull = false)
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType | ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"token_filter needs a string or array<string>, got $other")
+  }
+
+  @transient private lazy val stopSet = TextScan.wordSet(stopwords)
+
+  override def nullSafeEval(input: Any): Any = input match {
+    case s: UTF8String => TokenFilter.split(s, minLength, stopSet)
+    case a: ArrayData => TokenFilter.filter(a, minLength, stopSet)
+  }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s => {
+      val set = ctx.addReferenceObj("stopwords", stopSet, "java.util.HashSet")
+      val fn = if (child.dataType.isInstanceOf[ArrayType]) "filter" else "split"
+      s"${ev.value} = org.apache.spark.sql.graft.TokenFilter.$fn($s, $minLength, $set);"
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): TokenFilter =
+    copy(child = newChild)
+}
+
+object TokenFilter {
+  /** JVM-static, shared by generated and interpreted eval. */
+  def split(s: UTF8String, minLength: Int,
+      stop: java.util.HashSet[UTF8String]): ArrayData = {
+    val bytes = s.getBytes
+    val b = TextScan.bounds(bytes, TextScan.NonAlnum)
+    val out = new Array[Any](b.length / 2)
+    var n = 0
+    var k = 0
+    while (k < b.length) {
+      val len = b(k + 1) - b(k)
+      if (len >= minLength) {
+        val t = UTF8String.fromBytes(bytes, b(k), len)
+        if (!stop.contains(t)) { out(n) = t; n += 1 }
+      }
+      k += 2
+    }
+    new GenericArrayData(if (n == out.length) out else out.take(n))
+  }
+
+  def filter(a: ArrayData, minLength: Int,
+      stop: java.util.HashSet[UTF8String]): ArrayData = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    var i = 0
+    while (i < a.numElements()) {
+      if (!a.isNullAt(i)) {
+        val t = a.getUTF8String(i)
+        if (t.numChars() >= minLength && !stop.contains(t)) out += t
+      }
+      i += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
+}
+
+/** `lexicon_argmax(text, lexicons)` — [[graft.text.TextAnalysis.langId]]
+  * in one compiled pass: split on `[^a-z0-9]+` ([[TextScan.bounds]]),
+  * count every token found in each lexicon, and return the code of the
+  * lexicon with the most hits; ties go to the code that sorts first and
+  * no hit at all (or a null text) gives `und`. With `scoreOf =
+  * Some(code)` it returns that lexicon's hit count instead (null for a
+  * null text): [[graft.text.TextAnalysis.langScore]]. Replaces one
+  * interpreted `size(filter(tokens, t -> array_contains(words, t)))`
+  * per language plus a fold of `when`s; each token costs one probe of a
+  * word → lexicon-bitmask map, a codegen reference object like
+  * [[WindowHitCount]]'s set. The caller lowercases upstream. */
+case class LexiconArgmax(child: Expression, lexicons: Seq[(String, Seq[String])],
+    scoreOf: Option[String] = None) extends UnaryExpression {
+
+  require(lexicons.nonEmpty && lexicons.size <= 31, "1 to 31 lexicons")
+  require(scoreOf.forall(l => lexicons.exists(_._1 == l)), s"no lexicon $scoreOf")
+
+  private val sorted = lexicons.sortBy(_._1)
+
+  override def dataType: DataType =
+    if (scoreOf.isEmpty) StringType else org.apache.spark.sql.types.IntegerType
+
+  override def nullable: Boolean = scoreOf.isDefined && child.nullable
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"lexicon_argmax needs a string, got $other")
+  }
+
+  /** word → bitmask of the (code-sorted) lexicons that list it. */
+  @transient private lazy val langOf: java.util.HashMap[UTF8String, Integer] = {
+    val m = new java.util.HashMap[UTF8String, Integer]()
+    sorted.zipWithIndex.foreach { case ((_, words), l) =>
+      words.foreach { w =>
+        val k = UTF8String.fromString(w)
+        m.put(k, Integer.valueOf(m.getOrDefault(k, 0) | (1 << l)))
+      }
+    }
+    m
+  }
+  @transient private lazy val codes: Array[UTF8String] =
+    sorted.map(l => UTF8String.fromString(l._1)).toArray
+  private val scoreIdx = sorted.indexWhere(l => scoreOf.contains(l._1))
+
+  override def eval(input: InternalRow): Any = {
+    val s = child.eval(input).asInstanceOf[UTF8String]
+    if (scoreOf.isEmpty) LexiconArgmax.argmax(s, langOf, codes)
+    else if (s == null) null
+    else LexiconArgmax.hits(s, langOf, codes.length)(scoreIdx)
+  }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val map = ctx.addReferenceObj("langOf", langOf, "java.util.HashMap")
+    if (scoreOf.isDefined)
+      nullSafeCodeGen(ctx, ev, s =>
+        s"${ev.value} = org.apache.spark.sql.graft.LexiconArgmax.hits(" +
+          s"$s, $map, ${codes.length})[$scoreIdx];")
+    else {
+      val c = child.genCode(ctx)
+      val cs = ctx.addReferenceObj("codes", codes,
+        "org.apache.spark.unsafe.types.UTF8String[]")
+      ev.copy(code = code"""
+        |${c.code}
+        |org.apache.spark.unsafe.types.UTF8String ${ev.value} =
+        |  org.apache.spark.sql.graft.LexiconArgmax.argmax(
+        |  ${c.isNull} ? null : ${c.value}, $map, $cs);""".stripMargin,
+        isNull = FalseLiteral)
+    }
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): LexiconArgmax =
+    copy(child = newChild)
+}
+
+object LexiconArgmax {
+  private val Und = UTF8String.fromString("und")
+
+  /** JVM-static: per-lexicon hit counts, every token occurrence counted. */
+  def hits(s: UTF8String, langOf: java.util.HashMap[UTF8String, Integer],
+      nLangs: Int): Array[Int] = {
+    val bytes = s.getBytes
+    val b = TextScan.bounds(bytes, TextScan.NonAlnum)
+    val out = new Array[Int](nLangs)
+    var k = 0
+    while (k < b.length) {
+      val mask = langOf.get(UTF8String.fromBytes(bytes, b(k), b(k + 1) - b(k)))
+      if (mask != null) {
+        var m = mask.intValue
+        var l = 0
+        while (m != 0) { if ((m & 1) != 0) out(l) += 1; m >>>= 1; l += 1 }
+      }
+      k += 2
+    }
+    out
+  }
+
+  /** JVM-static: the strict argmax over code-sorted lexicons (a later
+    * lexicon must score MORE to win), `und` when nothing scores. */
+  def argmax(s: UTF8String, langOf: java.util.HashMap[UTF8String, Integer],
+      codes: Array[UTF8String]): UTF8String = {
+    if (s == null) return Und
+    val h = hits(s, langOf, codes.length)
+    var best = Und
+    var top = 0
+    var l = 0
+    while (l < h.length) { if (h(l) > top) { best = codes(l); top = h(l) }; l += 1 }
+    best
+  }
+}
+
+/** `ws_token_stats(text, stopwords, lexicon)` — one compiled pass over
+  * the whitespace tokens of `text` (`split(text, '\\s+')`,
+  * [[TextScan.bounds]]) returning the struct
+  * ([[WsTokenStats.Schema]]): `n_tokens` = `size(tokens)`, `n_chars`
+  * = Σ `length(t)` in code points, `n_stop` and `n_lex` = the tokens
+  * found in `stopwords` / `lexicon` (every occurrence), `n_distinct` =
+  * `size(array_distinct(tokens))`. The types are those of the `size` /
+  * `aggregate(…, 0L, …)` forms it replaces, whose lambdas evaluated
+  * interpreted. Serves [[graft.text.TextAnalysis.qualityFilter]],
+  * `qualityScore`, `repetitionSignals` and
+  * [[graft.text.QualityClassifier.featureCols]]. The caller
+  * lowercases and trims upstream. */
+case class WsTokenStats(child: Expression, stopwords: Seq[String], lexicon: Seq[String])
+    extends UnaryExpression {
+
+  override def dataType: DataType = WsTokenStats.Schema
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"ws_token_stats needs a string, got $other")
+  }
+
+  @transient private lazy val stopSet = TextScan.wordSet(stopwords)
+  @transient private lazy val lexSet = TextScan.wordSet(lexicon)
+
+  override def nullSafeEval(input: Any): Any =
+    WsTokenStats.stats(input.asInstanceOf[UTF8String], stopSet, lexSet)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s => {
+      val stop = ctx.addReferenceObj("stopwords", stopSet, "java.util.HashSet")
+      val lex = ctx.addReferenceObj("lexicon", lexSet, "java.util.HashSet")
+      s"${ev.value} = org.apache.spark.sql.graft.WsTokenStats.stats($s, $stop, $lex);"
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): WsTokenStats =
+    copy(child = newChild)
+}
+
+object WsTokenStats {
+  import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+
+  val Schema: StructType = StructType(Seq(
+    StructField("n_tokens", IntegerType, nullable = false),
+    StructField("n_chars", LongType, nullable = false),
+    StructField("n_stop", IntegerType, nullable = false),
+    StructField("n_distinct", IntegerType, nullable = false),
+    StructField("n_lex", IntegerType, nullable = false)))
+
+  /** JVM-static, shared by generated and interpreted eval. */
+  def stats(s: UTF8String, stop: java.util.HashSet[UTF8String],
+      lex: java.util.HashSet[UTF8String]): InternalRow = {
+    val bytes = s.getBytes
+    val b = TextScan.bounds(bytes, TextScan.Space)
+    val distinct = new java.util.HashSet[UTF8String](b.length)
+    var chars = 0L
+    var nStop = 0
+    var nLex = 0
+    var k = 0
+    while (k < b.length) {
+      val t = UTF8String.fromBytes(bytes, b(k), b(k + 1) - b(k))
+      chars += t.numChars()
+      if (stop.contains(t)) nStop += 1
+      if (lex.contains(t)) nLex += 1
+      distinct.add(t)
+      k += 2
+    }
+    new GenericInternalRow(Array[Any](b.length / 2, chars, nStop, distinct.size, nLex))
+  }
+}
+
+/** Column-level entry points of the text kernels in this file. The
+  * text-tagging scans of curation and blocking run here as compiled
+  * static calls instead of interpreted higher-order lambdas:
+  * [[TokenFilter]] (`Text.tokenize`, `Text.nltkTokenize`'s post-filter),
+  * [[LexiconArgmax]] (`TextAnalysis.langId`/`langScore`),
+  * [[WsTokenStats]] (the whitespace-token quality signals) and
+  * [[WindowHitCount]] (the contamination probe). */
 object TextOps {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.classic.ExpressionUtils
@@ -524,4 +842,14 @@ object TextOps {
 
   def charGrams(c: Column, q: Int): Column =
     ExpressionUtils.column(CharGrams(ExpressionUtils.expression(c), q))
+
+  def tokenFilter(c: Column, minLength: Int, stopwords: Seq[String]): Column =
+    ExpressionUtils.column(TokenFilter(ExpressionUtils.expression(c), minLength, stopwords))
+
+  def lexiconArgmax(c: Column, lexicons: Seq[(String, Seq[String])],
+      scoreOf: Option[String] = None): Column =
+    ExpressionUtils.column(LexiconArgmax(ExpressionUtils.expression(c), lexicons, scoreOf))
+
+  def wsTokenStats(c: Column, stopwords: Seq[String], lexicon: Seq[String]): Column =
+    ExpressionUtils.column(WsTokenStats(ExpressionUtils.expression(c), stopwords, lexicon))
 }

@@ -61,15 +61,17 @@ class BlockingSqlSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!blocksPlan.contains("BatchEvalPython") && !blocksPlan.contains("ScalaUDF"),
       blocksPlan)
-    // graft_tokenize must expand to the native built-in chain (the same
-    // expression tree the Column API emits — codegen-eligible), not a
-    // function wrapper; under AQE the pre-execution plan shows no
-    // WholeStageCodegen spans, so assert on the expression tree itself
+    // graft_tokenize must expand to the native expression tree the Column
+    // API emits (Spark's lower under the codegen'd TokenFilter kernel),
+    // not a function wrapper or an interpreted lambda; under AQE the
+    // pre-execution plan shows no WholeStageCodegen spans, so assert on
+    // the expression tree itself
     val streamPlan = spark.sql(BlockingSql.tokenStreamSql("sql_a", "id", attrsA))
       .queryExecution.executedPlan.toString
-    assert(streamPlan.contains("split(lower(") && streamPlan.contains("explode("),
+    assert(streamPlan.contains("tokenfilter(lower(") && streamPlan.contains("explode("),
       streamPlan)
-    assert(!streamPlan.contains("ScalaUDF"), streamPlan)
+    assert(!streamPlan.contains("ScalaUDF") && !streamPlan.contains("lambdafunction"),
+      streamPlan)
   }
 
   test("density blocking views match the density blocker (fixed eps + auto ladder)") {

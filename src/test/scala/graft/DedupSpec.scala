@@ -94,7 +94,7 @@ class DedupSpec extends SparkSpec {
     val sh = (1 to 4).flatMap(i => Seq((s"d$i", "boiler"), (s"d$i", s"own$i")))
       .toDF("id", "key")
     val ex = intercept[Exception] {
-      Dedup.ngramJaccardPairs(sh, 0.1, uncappedSetLimit = 3).collect()
+      expectingTaskFailure(Dedup.ngramJaccardPairs(sh, 0.1, uncappedSetLimit = 3).collect())
     }
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)

@@ -383,6 +383,21 @@ class ExperimentSpec extends SparkSpec {
       "changed --dims must invalidate the cache")
   }
 
+  test("--compare with an embedding blocker reports that blocker's encodes") {
+    val data = openEaFixture()
+    val out = java.nio.file.Files.createTempDirectory("exp_cmp_emb").toString
+    val emb = java.nio.file.Files.createTempDirectory("emb_cmp_cache").toString
+    val compare = Seq("--compare", "embedding-knn", "--embeddings", emb, "--k", "2",
+      "--force-encode")
+    val full = Experiment.run(spark, Experiment.parseArgs(Array(
+      "--data", data, "--blocker", "token", "--out", out) ++ compare))
+    assert(jsonField(full, "encode_misses") == "2", full)
+    val evalOnly = Experiment.run(spark, Experiment.parseArgs(Array(
+      "--data", data, "--eval-only", s"$out/blocks") ++ compare))
+    assert(jsonField(evalOnly, "encode_misses") == "2", evalOnly)
+    assert(jsonField(evalOnly, "dice_tp") == jsonField(full, "dice_tp"))
+  }
+
   test("--append-metrics appends one parseable JSON line per run (multi-run tracker)") {
     val data = openEaFixture()
     val out = java.nio.file.Files.createTempDirectory("exp_tr").toString

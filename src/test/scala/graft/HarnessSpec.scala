@@ -38,11 +38,21 @@ class HarnessSpec extends SparkSpec {
     val fresh = Seq(
       "x1" -> JObject("docs" -> JLong(5), "b" -> cell, "c" -> cell),
       "x100" -> JObject("docs" -> JLong(1000), "b" -> cell))
-    val merged = ScaleCurve.mergeCurve(old, fresh)
+    val merged = ScaleCurve.mergeCurve(old, "/sf0.01", 256L, fresh)
     assert(parse(compact(render(merged))) == parse("""{"dir":"/sf0.01","cap":256,
       "x1":{"docs":10,"a":{"wall_s":1.0,"result":1},"b":{"wall_s":9.5,"result":9},
         "c":{"wall_s":9.5,"result":9}},
       "x10":{"docs":100,"a":{"wall_s":3.0,"result":3}},
       "x100":{"docs":1000,"b":{"wall_s":9.5,"result":9}}}"""))
+  }
+
+  test("scale-curve merge refuses a file measured at another dir or cap") {
+    val old = parse("""{"dir":"/sf0.01","cap":256,"x1":{"docs":10,"a":{"result":1}}}""")
+    val fresh = Seq("x1" -> JObject("docs" -> JLong(1), "a" -> JObject("result" -> JLong(2))))
+    for ((dir, cap) <- Seq(("/sf0.001", 256L), ("/sf0.01", 64L))) {
+      val e = intercept[IllegalArgumentException](ScaleCurve.mergeCurve(old, dir, cap, fresh))
+      for (v <- Seq("/sf0.01", "256", dir, cap.toString))
+        assert(e.getMessage.contains(v), s"'$v' missing from: ${e.getMessage}")
+    }
   }
 }

@@ -54,7 +54,7 @@ class RdfSpec extends SparkSpec {
     val rows = Rdf.loadNTriples(spark, p).collect()
     assert(rows.length === 1 && rows.head.getString(2) === "http://ok")
     val ex = intercept[Exception] {
-      Rdf.loadNTriples(spark, p, strict = true).collect()
+      expectingTaskFailure(Rdf.loadNTriples(spark, p, strict = true).collect())
     }
     assert(ex.getMessage.contains("malformed") ||
       Option(ex.getCause).exists(_.getMessage.contains("malformed")))
@@ -91,7 +91,7 @@ class RdfSpec extends SparkSpec {
     val d = tmpDir()
     val p = write(d, "bad.nt", "not a triple at all\n")
     val ex = intercept[Exception] {
-      Rdf.loadNTriples(spark, p, strict = true).collect()
+      expectingTaskFailure(Rdf.loadNTriples(spark, p, strict = true).collect())
     }
     assert(ex.getMessage.contains("malformed") ||
       Option(ex.getCause).exists(_.getMessage.contains("malformed")))

@@ -40,7 +40,11 @@ class RegistryEmptyInputSpec extends SparkSpec {
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
       val outcome =
-        try { fn(spark, emptyDir).collect(); None }
+        try {
+          if (expectFailure.contains(name)) expectingTaskFailure(fn(spark, emptyDir).collect())
+          else fn(spark, emptyDir).collect()
+          None
+        }
         catch { case e: Throwable => Some(e) }
       (outcome, expectFailure.get(name)) match {
         case (None, None) => // returned rows (possibly zero) — good

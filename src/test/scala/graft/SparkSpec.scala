@@ -50,6 +50,21 @@ trait SparkSpec extends AnyFunSuite {
       .toDF("id", "FirstName", "GivenName", "Birthdate", "BirthCountry"),
     "B", "id")
 
+  /** Runs `f`, which is expected to fail a Spark task, with the loggers
+    * that print the failed task's stack trace (executor, task set
+    * manager, MLlib instrumentation) switched off, and restores their
+    * levels afterwards. Every other failure keeps its log. */
+  def expectingTaskFailure[A](f: => A): A = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.config.Configurator
+    val names = Seq("org.apache.spark.executor.Executor",
+      "org.apache.spark.scheduler.TaskSetManager", "org.apache.spark.ml.util.Instrumentation")
+    val saved = names.map(n => n -> LogManager.getLogger(n).getLevel)
+    names.foreach(Configurator.setLevel(_, Level.OFF))
+    try f
+    finally saved.foreach { case (n, l) => Configurator.setLevel(n, l) }
+  }
+
   /** Build a Blocks table from a golden map key → (left ids, right ids). */
   def blocksOf(m: Map[String, (Seq[String], Seq[String])]): Blocks =
     Blocks(m.toSeq.map { case (k, (l, r)) => (k, l, r) }

@@ -96,6 +96,17 @@ class StreamingSpec extends SparkSpec {
     } finally sq.stop()
   }
 
+  test("ttl intervals: a day is 24 hours, months are rejected loudly") {
+    assert(StreamingOps.ttlMillis("2 hours") == 2L * 3600 * 1000)
+    assert(StreamingOps.ttlMillis("1 day") == 24L * 3600 * 1000)
+    assert(StreamingOps.ttlMillis("1 day 2 hours") == 26L * 3600 * 1000)
+    for (bad <- Seq("1 month", "1 year", "1 month 1 day")) {
+      val e = intercept[IllegalArgumentException](StreamingOps.ttlMillis(bad))
+      assert(e.getMessage.contains(bad) && e.getMessage.contains("month"), e.getMessage)
+    }
+    intercept[IllegalArgumentException](StreamingOps.ttlMillis("0 seconds"))
+  }
+
   test("streamExactDedupWithTtl: an older in-watermark re-sight never moves the horizon backward") {
     import graft.streaming.StreamingOps.{DedupKeep, TimedDedupRecord}
     // the StreamingCuration monotone-horizon rule, back-ported: with a
