@@ -208,10 +208,10 @@ object ScaleCurve {
         Dedup.crossDocCut(docs, "id", "text", 8, maxDocFreq = cap)
           .filter(col("n_kept") < col("n_tokens")).count()),
       // full curation funnel: the benchmark side stays FIXED (src0 of the
-      // base dir) while the corpus grows — the eval-suite-sized broadcast
-      // contract at 100 TB. Counting the DROPPED docs forces every
-      // stage's signal (a bare count() would let Catalyst eliminate the
-      // row-preserving left joins).
+      // base dir) while the corpus grows — the eval-suite-sized gram
+      // snapshot at 100 TB. Counting the DROPPED docs forces every
+      // stage's signal (a bare count() would let Catalyst prune the
+      // unused columns of the front, and with them the window).
       "curation_verdicts" -> (() =>
         graft.text.Curation.verdicts(
             docs,

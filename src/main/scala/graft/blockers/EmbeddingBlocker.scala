@@ -40,7 +40,6 @@ final case class EmbeddingKnnBlocker(
     encoder: FrameEncoder,
     k: Int = 5,
     sinkhornIterations: Int = 0,
-    broadcastRight: Boolean = true,
     strategy: AnnStrategy = AnnStrategy.Brute,
     // kiez contract (blockbuilder.py:107-167): search `hubnessCandidates`
     // neighbors, hubness-reduce over that candidate graph, keep k
@@ -73,7 +72,7 @@ final case class EmbeddingKnnBlocker(
     val cachedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val cand = strategy match {
       case AnnStrategy.Brute =>
-        Similarity.topKCosine(le, re, kSearch, broadcastRight)
+        Similarity.topKCosine(le, re, kSearch)
       case AnnStrategy.Ivf(numBuckets, seed, probes) =>
         // persist: KMeans re-evaluates its input every iteration, and the
         // feature frame is the whole encode pipeline

@@ -136,26 +136,23 @@ private[encoders] object TokenWeighting {
   * the vector table → one map-side-combinable groupBy(id) with `dims`
   * partial sums (element_at into the joined array — no vector explode,
   * no dims× row inflation). The vector table shuffles on its token key
-  * like any dimension join; set `broadcastVectors` when the vocabulary
-  * fits an executor (a 400k×300 gloVe table is ~1 GB — borderline; AQE
-  * decides when the hint is off). */
+  * like any dimension join (a 400k×300 gloVe table is ~1 GB — AQE
+  * decides whether to broadcast it). */
 final case class TableTokenEncoder(
     vectors: DataFrame,
     dims: Int,
     sif: Boolean = false,
     sifA: Double = 1e-3,
     minFreq: Int = 0,
-    removePc: Boolean = false,
-    broadcastVectors: Boolean = false) extends FrameEncoder {
+    removePc: Boolean = false) extends FrameEncoder {
 
   override def encode(frame: EntityFrame, rel: Option[DataFrame]): DataFrame = {
     val toks = TokenWeighting.tokenStream(frame)
     val (weighted, cached) = TokenWeighting.weighted(toks, sif, sifA, minFreq)
     // first two columns positionally = (token, vector), any names
     val Array(tokCol, vecCol) = vectors.columns.take(2)
-    val vt0 = vectors.select(col(tokCol).cast("string").as("key"),
+    val vt = vectors.select(col(tokCol).cast("string").as("key"),
       col(vecCol).as("_tv"))
-    val vt = if (broadcastVectors) broadcast(vt0) else vt0
     val dimCols = (0 until dims).map(d =>
       (sum(col("w") * element_at(col("_tv"), d + 1)) / sum(col("w"))).as(s"d$d"))
     val pooled = weighted.join(vt, Seq("key"))
@@ -198,10 +195,9 @@ object TableTokenEncoder {
   def fromParquet(
       spark: SparkSession, path: String, dims: Int,
       sif: Boolean = false, sifA: Double = 1e-3, minFreq: Int = 0,
-      removePc: Boolean = false,
-      broadcastVectors: Boolean = false): TableTokenEncoder =
+      removePc: Boolean = false): TableTokenEncoder =
     TableTokenEncoder(spark.read.parquet(path), dims, sif, sifA, minFreq,
-      removePc, broadcastVectors)
+      removePc)
 }
 
 /** The deterministic token-vector formula, shared with every oracle that

@@ -116,7 +116,7 @@ object Evaluation {
     val goldRows = g.select(col("left_id"), col("right_id"),
       when(col("left_id").isNull || col("right_id").isNull, lit(NullGoldBit))
         .otherwise(lit(GoldBit)).as("_m"))
-    val streams = evaluated.map(_.pairs) ++ compared.map(tpStream(_, g, broadcastGold = true))
+    val streams = evaluated.map(_.pairs) ++ compared.map(tpStream(_, g))
     val rows = streams.zipWithIndex.foldLeft(goldRows) { case (acc, (p, i)) =>
       acc.unionByName(p.select(col("left_id").cast("string").as("left_id"),
         col("right_id").cast("string").as("right_id"), lit(1L << i).as("_m")))
@@ -175,19 +175,16 @@ object Evaluation {
     * without a persist; identical duplicate rows collide harmlessly since
     * their pair sets are identical and the result is distinct'd.)
     *
-    * Broadcast contract: by default gold is BROADCAST into the join — gold
-    * is benchmark-sized (labeled match pairs, the reference's contract
+    * Broadcast contract: gold is BROADCAST into the join — gold is
+    * benchmark-sized (labeled match pairs, the reference's contract
     * throughout eval.py), so the explode side stays shuffle-free however
-    * large the blocks are. If gold ever outgrows the broadcast budget,
-    * pass `broadcastGold = false` for a plain shuffle join: the same pairs
-    * (spec-asserted), one more exchange on the explode side. */
-  def truePositivePairs(blocks: Blocks, gold: DataFrame,
-                        broadcastGold: Boolean = true): DataFrame =
-    tpStream(blocks, goldPairs(gold), broadcastGold).distinct()
+    * large the blocks are. */
+  def truePositivePairs(blocks: Blocks, gold: DataFrame): DataFrame =
+    tpStream(blocks, goldPairs(gold)).distinct()
 
   /** [[truePositivePairs]] before its distinct, over normalized gold. */
-  private def tpStream(blocks: Blocks, goldPairs: DataFrame, broadcastGold: Boolean): DataFrame = {
-    val g = if (broadcastGold) broadcast(goldPairs) else goldPairs
+  private def tpStream(blocks: Blocks, goldPairs: DataFrame): DataFrame = {
+    val g = broadcast(goldPairs)
     val rows = blocks.df.select(
       xxhash64(col(Blocks.KeyCol), col(Blocks.LeftCol), col(Blocks.RightCol)).as("_row"),
       col(Blocks.LeftCol), col(Blocks.RightCol))

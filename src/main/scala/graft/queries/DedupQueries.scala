@@ -1413,6 +1413,8 @@ object DedupQueries {
     // rules, dd_exact canonical key, dd_decontaminate 4-gram overlap)
     // composed into ONE per-document verdict row with first-failure
     // drop_stage attribution — the observable form of pipe_refine_corpus.
+    // One row-local front (all four signals, codegen'd) and one dup_key
+    // window for the min-id canonical: one exchange, no join.
     // Parameters chosen so every stage engages on the synthetic corpus
     // (lang 115 / quality 168 / duplicate 1 / contaminated 17 / keep 174
     // at sf0.01). Benchmark = src0 (the dd_decontaminate framing).
@@ -1428,12 +1430,12 @@ object DedupQueries {
       },
       Some(s"$curationVerdictsSql\nSELECT * FROM v ORDER BY id"),
       api = "Curation.verdicts",
-      desc = "\"Tag, don't drop\" curation verdicts: langid gate → quality rules → exact-dup canonical → decontamination, one row per input doc with first-failure drop_stage attribution."),
+      desc = "\"Tag, don't drop\" curation verdicts: langid gate → quality rules → exact-dup canonical → decontamination, one row per input doc with first-failure drop_stage attribution; one row-local front, one dup-key window, no join."),
 
-    // same verdicts through the STREAMING-safe plan (row-local tagging,
-    // codegen'd exact-set window-probe contamination, fMGWS dedup
-    // canonical); batch invocation == Curation.verdicts by construction,
-    // so it shares the oracle. MemoryStream parity lives in StreamingSpec.
+    // same verdicts through the streaming form: cur_verdicts' front and
+    // drop-stage rule, with an fMGWS first-seen canonical in place of the
+    // window; batch invocation == Curation.verdicts by construction, so
+    // it shares the oracle. MemoryStream parity lives in StreamingSpec.
     "st_curation_verdicts" -> QueryDef(
       (s, dir) => {
         implicit val sp: SparkSession = s
@@ -1448,7 +1450,7 @@ object DedupQueries {
       },
       Some(s"$curationVerdictsSql\nSELECT * FROM v ORDER BY id"),
       api = "StreamingCuration.verdicts",
-      desc = "Curation at ingest: the verdict funnel streaming-safe — row-local tagging, codegen'd exact-set window-probe decontamination (WindowHitCount), one fMGWS for the first-seen dup canonical."),
+      desc = "Curation at ingest: the cur_verdicts plan with one fMGWS (first-seen dup canonical) in place of its window — same row-local front (WindowHitCount decontamination) and drop-stage rule."),
 
     // ---- §2.10 curation TTL: multi-wave canonical-horizon replay ----------
     // The divergent MULTI-batch semantics of the TTL'd dup-canonical

@@ -24,12 +24,10 @@ import graft.functions.Vectors
 object Similarity {
 
   /** Exact top-k by cosine: for every left row the k best right rows.
-    * Deterministic tie-break on right id. `broadcastRight` should be true
-    * whenever the right side fits in executor memory (the planner then
-    * turns the cross join into BroadcastNestedLoopJoin — no shuffle). */
-  def topKCosine(
-      left: DataFrame, right: DataFrame, k: Int,
-      broadcastRight: Boolean = true): DataFrame = {
+    * Deterministic tie-break on right id. The right side is broadcast
+    * (the planner turns the cross join into BroadcastNestedLoopJoin — no
+    * shuffle), so it must fit in executor memory. */
+  def topKCosine(left: DataFrame, right: DataFrame, k: Int): DataFrame = {
     // norms once per ROW (not per pair); pair score is an unrolled
     // multiply-add chain — no per-pair array allocation
     // small single-file inputs arrive as ONE partition; without an
@@ -37,9 +35,8 @@ object Similarity {
     val par = left.sparkSession.sparkContext.defaultParallelism
     val l = left.select(col("id").as("left_id"), col("vec").as("_lv"),
       Vectors.l2Norm(col("vec")).as("_ln")).repartition(par)
-    val r0 = right.select(col("id").as("right_id"), col("vec").as("_rv"),
-      Vectors.l2Norm(col("vec")).as("_rn"))
-    val r = if (broadcastRight) broadcast(r0) else r0
+    val r = broadcast(right.select(col("id").as("right_id"), col("vec").as("_rv"),
+      Vectors.l2Norm(col("vec")).as("_rn")))
     val scored = l.crossJoin(r)
       .select(col("left_id"), col("right_id"),
         (Vectors.dot(col("_lv"), col("_rv")) / (col("_ln") * col("_rn"))).as("cos"))

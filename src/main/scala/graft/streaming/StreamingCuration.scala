@@ -1,57 +1,36 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
-import graft.dedup.Dedup
 import graft.text.Curation
 
 /** Curation AT INGEST: the batch verdict funnel
-  * ([[graft.text.Curation]]) re-expressed streaming-safe, so a corpus
-  * is tagged as it ARRIVES instead of in a nightly re-scan — the
-  * incremental half of the "tag, don't drop" contract, same discipline
-  * as [[AnnServing]] (index once / query many → curate once / ingest
-  * forever).
+  * ([[graft.text.Curation]]) run over a stream, so a corpus is tagged
+  * as it ARRIVES instead of in a nightly re-scan — the incremental half
+  * of the "tag, don't drop" contract, same discipline as [[AnnServing]]
+  * (index once / query many → curate once / ingest forever).
   *
-  * Streaming-safe construction (no window functions, ONE stateful op):
-  *
-  *   1. langid + quality tagging is the batch path's own row-local
-  *      projection ([[Curation.tag]]) — one function, so signals agree
-  *      bit-for-bit. Its scans are codegen'd kernels: `langId` is one
-  *      [[org.apache.spark.sql.graft.LexiconArgmax]] pass, the quality
-  *      signals one [[org.apache.spark.sql.graft.WsTokenStats]] pass,
-  *      and the dup_key tokens one
-  *      [[org.apache.spark.sql.graft.TokenFilter]] pass (sorted with
-  *      `sort_array`), so the tagging of an arriving document runs no
-  *      interpreted higher-order function (a spec asserts it);
-  *   2. contamination is row-local: the benchmark gram set (eval-suite-
-  *      sized, the same broadcast contract as [[Dedup.decontaminate]])
-  *      is snapshot at plan time into the codegen'd
-  *      [[org.apache.spark.sql.graft.WindowHitCount]] kernel — the
-  *      exact set as a plan reference object, the window-slide-probe
-  *      loop one compiled static call per row — so `n_hits` equals the
-  *      batch semi-join count exactly at O(windows) per row with no
-  *      interpreted higher-order functions in the path;
-  *   3. the exact-duplicate canonical is the one stateful op:
-  *      `flatMapGroupsWithState` keyed on the row-local dup_key (md5 of
-  *      the sorted distinct token set — [[Dedup.exactDuplicates]]'s
-  *      key), state = the first-seen surviving id. EVERY document rides
-  *      this op — gate failures pass through without touching the state
-  *      (batch semantics: a dropped document never shadows a surviving
-  *      copy) — so the heavy row-local tagging evaluates exactly ONCE
-  *      per document. The shuffled record is the tagged summary (~100
-  *      bytes: ids, flags, counts — never the text), which beats the
-  *      alternative (route failures around the state via a union) at
-  *      any scale: a union's two branches each re-evaluate the source
-  *      and its tagging expressions, per micro-batch, forever.
+  * It is the batch plan with one operator swapped: the row-local
+  * [[Curation.front]] (tagging, contamination, dup key — codegen'd, so
+  * an arriving document runs no interpreted higher-order function) →
+  * the exact-duplicate canonical → the [[Curation.dropStage]] rule. The
+  * canonical is the one stateful op, streaming-safe where the batch
+  * window is not: `flatMapGroupsWithState` keyed on `dup_key`, state =
+  * the first-seen surviving id. EVERY document rides this op — gate
+  * failures pass through without touching the state (a dropped document
+  * never shadows a surviving copy) — so the front evaluates exactly ONCE
+  * per document and the only shuffle carries the ~100-byte tagged
+  * record, never the text.
   *
   * Canonical choice: FIRST-SEEN across micro-batches (ingest order —
-  * the only meaningful order a stream has), lexicographic min id within
-  * a batch. A batch invocation therefore reproduces
-  * [[graft.text.Curation.verdicts]] row-for-row (one "batch" = whole
-  * corpus → min id = the batch canonical; spec-asserted, and the
-  * `st_curation_verdicts` driver query shares `cur_verdicts`' oracle).
+  * the only meaningful order a stream has), min id within a batch. A
+  * batch invocation therefore reproduces [[graft.text.Curation.verdicts]]
+  * row-for-row (one "batch" = whole corpus → min id = the batch
+  * canonical; spec-asserted, and the `st_curation_verdicts` driver query
+  * shares `cur_verdicts`' oracle). A null id gets its verdict but is
+  * never the canonical and has no `dup_of`, as in the batch form.
   *
   * State size: one (dup_key → id) entry per DISTINCT surviving content
   * — bounded by corpus novelty, the same growth class as the exact
@@ -63,12 +42,19 @@ import graft.text.Curation
   */
 object StreamingCuration {
 
-  /** A tagged document entering the dedup state op (text already
+  /** A [[Curation.front]] row entering the dedup state op (text already
     * dropped — this is the ~100-byte shuffle record). `ts` carries the
     * event time in TTL mode and is NULL in the unbounded form. */
-  final case class TaggedDoc(id: String, lang: String, nTokens: Long,
-      qualityReason: Option[String], nHits: Long, dupKey: String,
-      langOk: Boolean, gateOk: Boolean, ts: java.sql.Timestamp)
+  final case class TaggedDoc(id: String, lang: String, n_tokens: Long,
+      quality_reason: Option[String], n_hits: Long, dup_key: String,
+      lang_ok: Boolean, gate_ok: Boolean, ts: java.sql.Timestamp)
+
+  /** A [[TaggedDoc]] leaving the state op with its `dup_of` (the
+    * canonical, when that is another id); [[Curation.dropStage]] maps it
+    * to a [[CurationVerdict]]. */
+  final case class PlacedDoc(id: String, lang: String, n_tokens: Long,
+      quality_reason: Option[String], n_hits: Long, lang_ok: Boolean,
+      dup_of: Option[String])
 
   /** One per-document verdict row — the schema of
     * [[graft.text.Curation.verdicts]]. */
@@ -126,65 +112,37 @@ object StreamingCuration {
                watermark: String = "0 seconds")(
       implicit spark: SparkSession): Dataset[CurationVerdict] = {
     import spark.implicits._
-
-    // plan-time snapshot of the benchmark gram set (eval-suite-sized by
-    // the decontaminate contract), probed by the codegen'd
-    // [[org.apache.spark.sql.graft.WindowHitCount]] kernel: the exact
-    // set rides the plan as a reference object and the whole
-    // window-slide-probe loop is ONE compiled static call per row.
-    // (Replaced the bloom-prefilter + array-literal-confirm form, whose
-    // higher-order transform/filter evaluated interpreted — one Catalyst
-    // tree walk per window — and cost ~6.5 s of st_curation_verdicts'
-    // 9 s at sf0.1; an exact HashSet probe is O(1) itself, so the bloom
-    // bought nothing once the loop compiled. Same n_hits by
-    // construction: |distinct n-token windows ∩ benchmark grams|.)
-    val grams = Dedup.benchmarkGrams(benchmark, idCol, textCol, contamN)
-      .collect().map(_.getString(0))
-    val nHits: Column =
-      if (grams.isEmpty) lit(0L) // empty eval suite: nothing to hit
-      else org.apache.spark.sql.graft.TextOps.windowHitCount(
-        trim(lower(coalesce(col("_doc"), lit("")))), contamN, grams.toSeq)
-
     val eventTs =
       if (stateTtl.isDefined) col(tsCol).cast("timestamp")
       else lit(null).cast("timestamp")
-    val enriched = Curation.tag(stream, idCol, textCol, minWords, maxWords,
-        minMeanLen, maxMeanLen, minStopwords, maxDupFrac,
-        "_doc" -> col(textCol), "_eventTs" -> eventTs)
-      .withColumn("n_hits", nHits)
-      .withColumn("dup_key", Curation.dupKey(col("_doc")))
-    val langOk = col("lang").isin(allowedLangs: _*)
-
-    // every document rides the one stateful op as a tagged ~100-byte
-    // record; only gate survivors touch the canonical state. First-seen
-    // canonical across batches, min surviving id within a batch — so a
-    // single-batch (= batch-mode) run reproduces the batch group-min.
-    val routed0 = enriched
-      .select(col("id"), col("lang"), col("n_tokens").as("nTokens"),
-        col("quality_reason").as("qualityReason"),
-        col("n_hits").as("nHits"), col("dup_key").as("dupKey"),
-        langOk.as("langOk"), (col("keep") && langOk).as("gateOk"),
-        col("_eventTs").as("ts"))
+    val tagged = Curation.front(stream, benchmark, idCol, textCol,
+        allowedLangs, contamN, minWords, maxWords, minMeanLen, maxMeanLen,
+        minStopwords, maxDupFrac, Some(eventTs))
       .as[TaggedDoc]
     val routed = stateTtl match {
-      case Some(_) => routed0.withWatermark("ts", watermark)
-      case None => routed0
+      case Some(_) => tagged.withWatermark("ts", watermark)
+      case None => tagged
     }
     val ttlMs = stateTtl.map(StreamingOps.ttlMillis)
     val timeoutConf =
       if (ttlMs.isDefined) GroupStateTimeout.EventTimeTimeout()
       else GroupStateTimeout.NoTimeout()
-    routed.groupByKey(_.dupKey)
-      .flatMapGroupsWithState[CanonState, CurationVerdict](
+    // every document rides the one stateful op; only gate survivors with
+    // an id touch the canonical state. First-seen canonical across
+    // batches, min surviving id within a batch — so a single-batch
+    // (= batch-mode) run reproduces the batch group-min.
+    val placed = routed.groupByKey(_.dup_key)
+      .flatMapGroupsWithState[CanonState, PlacedDoc](
         OutputMode.Append(), timeoutConf) {
         (_, it, state) => StreamingOps.unlessTimedOut(state) {
           // the horizon rule (StreamingOps), applied only under stateTtl
           ttlMs.foreach(StreamingOps.expireOnAccess(state, _)(_.lastSeenMs))
-          val docs = it.toIndexedSeq.sortBy(_.id)
+          val docs = it.toIndexedSeq
+          def placeable(d: TaggedDoc) = d.gate_ok && d.id != null
           val canon: Option[String] =
             if (state.exists) Some(state.get.id)
-            else docs.find(_.gateOk).map { d =>
-              state.update(CanonState(d.id, Long.MinValue)); d.id
+            else docs.iterator.filter(placeable).map(_.id).minOption.map { id =>
+              state.update(CanonState(id, Long.MinValue)); id
             }
           // every sighting of the content extends the horizon of an
           // existing canonical (gate-only groups hold no state, so
@@ -196,22 +154,11 @@ object StreamingCuration {
             state.update(CanonState(state.get.id, StreamingOps.extendHorizon(
               state, ttl, state.get.lastSeenMs, newest)))
           }
-          docs.iterator.map { d =>
-            if (!d.gateOk)
-              CurationVerdict(d.id, d.lang, d.nTokens, d.qualityReason,
-                None, d.nHits,
-                Some(if (!d.langOk) "lang" else "quality"), keep = false)
-            else {
-              val dupOf = canon.filter(_ != d.id)
-              val drop =
-                if (dupOf.isDefined) Some("duplicate")
-                else if (d.nHits > 0) Some("contaminated")
-                else None
-              CurationVerdict(d.id, d.lang, d.nTokens, None, dupOf, d.nHits,
-                drop, drop.isEmpty)
-            }
-          }
+          docs.iterator.map(d => PlacedDoc(d.id, d.lang, d.n_tokens,
+            d.quality_reason, d.n_hits, d.lang_ok,
+            if (placeable(d)) canon.filter(_ != d.id) else None))
         }
       }
+    Curation.dropStage(placed.toDF()).as[CurationVerdict]
   }
 }

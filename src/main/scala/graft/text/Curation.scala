@@ -15,15 +15,15 @@ import graft.functions.Text
   * `drop_stage` attribution, so a corpus owner can read the funnel
   * (what did each gate cost me, per source?) before committing to it.
   *
-  * 100 TB shape: lang + quality tagging is a single codegen'd
-  * projection over the corpus scan (the signals share one pass via
-  * [[TextAnalysis.qualityFilter]]'s passthrough). The dedup key —
-  * md5 of the sorted distinct token set, the [[Dedup.exactDuplicates]]
-  * canonical key computed ROW-LOCALLY (no explode/groupBy) — shuffles
-  * once on `dup_key` for the per-group min-id window; benchmark grams
-  * are eval-suite-sized and broadcast ([[Dedup.decontaminate]]); the
-  * final assembly joins three doc-count-sized narrow frames on id.
-  * No stage touches document text after the initial scans.
+  * One plan serves this batch form and the streaming form
+  * ([[graft.streaming.StreamingCuration.verdicts]]): the row-local
+  * [[front]] (one corpus scan; every signal, the dup key and the
+  * contamination count are codegen'd kernels) → the exact-duplicate
+  * canonical → the [[dropStage]] rule. Only the canonical pick differs:
+  * here it is one `dup_key`-partitioned window (the group's min
+  * gate-passing id), there a stateful op (first seen). So the plan
+  * shuffles once, a ~100-byte tagged record per document (never the
+  * text), and holds no join.
   */
 object Curation {
 
@@ -38,12 +38,12 @@ object Curation {
     *     of an earlier-id document AMONG GATE SURVIVORS — a document
     *     dropped by lang/quality never shadows a surviving copy, and
     *     the canonical keeper is the group's min id (`dup_of` points
-    *     to it);
+    *     to it; a null id is never the canonical and has no `dup_of`);
     *  4. `contaminated` — shares ≥1 exact `contamN`-token window with
     *     the benchmark set (tagged for ALL documents, not just gate
     *     survivors — observability is the point).
     *
-    * Output (one row per corpus document):
+    * Output (one row per corpus row):
     * (id, lang, n_tokens, quality_reason, dup_of, n_hits, drop_stage,
     * keep) with `keep = drop_stage IS NULL`. */
   def verdicts(corpus: DataFrame, benchmark: DataFrame,
@@ -53,73 +53,83 @@ object Curation {
                minWords: Int = 20, maxWords: Int = 100000,
                minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
                minStopwords: Int = 1, maxDupFrac: Double = 0.6): DataFrame = {
-    // persist: the tagged frame (langId lexicon scores + every quality
-    // rule) feeds BOTH the gate-survivor semi-join inside the dup stage
-    // and the final verdict select; uncached it evaluated twice per
-    // action. Released via the seal on the (one-slim-row-per-doc)
-    // output below.
-    val tagged = tag(corpus, idCol, textCol, minWords, maxWords,
-      minMeanLen, maxMeanLen, minStopwords, maxDupFrac).persist()
+    val tagged = front(corpus, benchmark, idCol, textCol, allowedLangs,
+      contamN, minWords, maxWords, minMeanLen, maxMeanLen, minStopwords,
+      maxDupFrac)
+    // gate failures hold no canonical, so each gets its own partition:
+    // sharing dup_key ones would put every failure with an empty token
+    // set (key md5('')) in one task
+    val gateOk = col("gate_ok")
+    val canon = min(col("id")).over(
+      Window.partitionBy(gateOk, when(gateOk, col("dup_key")).otherwise(col("id"))))
+    dropStage(tagged.withColumn("dup_of",
+      when(gateOk && col("id") =!= canon, canon)))
+  }
+
+  /** The row-local front of both curation forms (this [[verdicts]] and
+    * [[graft.streaming.StreamingCuration.verdicts]]), one scan of `docs`:
+    * (id, lang, n_tokens, quality_reason, n_hits, dup_key, lang_ok,
+    * gate_ok), plus `ts` = `eventTs` when given. `id` is `idCol` cast
+    * to string, `lang` [[TextAnalysis.langId]], `quality_reason` the
+    * [[TextAnalysis.qualityFilter]] rule, `n_hits` the count of distinct
+    * `contamN`-token windows shared with `benchmark`, `dup_key` the
+    * exact-duplicate key (md5 of the sorted distinct [[Text.tokenize]]
+    * tokens — [[Dedup.exactDuplicates]]' canonical key, row-locally)
+    * and `gate_ok` = lang allowed and quality passed.
+    *
+    * Contamination snapshots the benchmark gram set (eval-suite-sized,
+    * the [[Dedup.decontaminate]] broadcast contract) once per call into
+    * the codegen'd [[org.apache.spark.sql.graft.WindowHitCount]] kernel:
+    * the exact set rides the plan as a reference object and the
+    * window-slide-probe loop is one compiled static call per row. With
+    * `LexiconArgmax` (lang), `WsTokenStats` (quality) and `TokenFilter`
+    * (dup key), the front holds no interpreted higher-order function. */
+  private[graft] def front(docs: DataFrame, benchmark: DataFrame,
+      idCol: String, textCol: String, allowedLangs: Seq[String],
+      contamN: Int, minWords: Int, maxWords: Int, minMeanLen: Double,
+      maxMeanLen: Double, minStopwords: Int, maxDupFrac: Double,
+      eventTs: Option[Column] = None): DataFrame = {
+    val grams = Dedup.benchmarkGrams(benchmark, idCol, textCol, contamN)
+      .collect().map(_.getString(0))
+    val text = col(textCol)
+    val nHits =
+      if (grams.isEmpty) lit(0L) // empty eval suite: nothing to hit
+      else org.apache.spark.sql.graft.TextOps.windowHitCount(
+        trim(lower(coalesce(text, lit("")))), contamN, grams.toSeq)
+    val carry = Seq("lang", "n_hits", "dup_key") ++ eventTs.map(_ => "ts")
+    val base = docs.select(Seq(col(idCol).cast("string").as("id"),
+      text.as("_text"), TextAnalysis.langId(text).as("lang"),
+      nHits.as("n_hits"),
+      md5(concat_ws(" ", sort_array(array_distinct(Text.tokenize(text)))))
+        .as("dup_key")) ++ eventTs.map(_.as("ts")): _*)
     val langOk = col("lang").isin(allowedLangs: _*)
+    TextAnalysis.qualityFilter(base, "id", "_text", minWords, maxWords,
+        minMeanLen, maxMeanLen, minStopwords, maxDupFrac, passthrough = carry)
+      .select(Seq(col("id"), col("lang"), col("n_tokens"),
+        col("reason").as("quality_reason"), col("n_hits"), col("dup_key"),
+        langOk.as("lang_ok"), (col("keep") && langOk).as("gate_ok")) ++
+        eventTs.map(_ => col("ts")): _*)
+  }
 
-    // exact-dup canonical among gate survivors: row-local canonical key
-    // (same key as Dedup.exactDuplicates, without the explode/groupBy),
-    // then one dup_key-partitioned window for the group min id
-    val gateIds = tagged.filter(col("keep") && langOk).select("id")
-    val dup = corpus
-      .select(col(idCol).cast("string").as("id"),
-        dupKey(col(textCol)).as("dup_key"))
-      .join(gateIds, Seq("id"), "left_semi")
-      .withColumn("_canon", min(col("id")).over(Window.partitionBy("dup_key")))
-      .select(col("id"),
-        when(col("id") =!= col("_canon"), col("_canon")).as("dup_of"))
+  /** The drop stages in attribution order, each with its failure test
+    * over a [[front]] frame that carries `dup_of`. */
+  private val stages: Seq[(String, Column)] = Seq(
+    "lang" -> !col("lang_ok"),
+    "quality" -> col("quality_reason").isNotNull,
+    "duplicate" -> col("dup_of").isNotNull,
+    "contaminated" -> (col("n_hits") > 0))
 
-    val contam = Dedup.decontaminate(corpus, benchmark, idCol, textCol, contamN)
-      .select(col("id"), col("n_hits"))
-
-    val out = tagged.select("id", "lang", "n_tokens", "quality_reason")
-      .join(dup, Seq("id"), "left")
-      .join(contam, Seq("id"), "left")
-      .select(col("id"), col("lang"), col("n_tokens"), col("quality_reason"),
-        col("dup_of"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        when(!langOk, "lang")
-          .when(col("quality_reason").isNotNull, "quality")
-          .when(col("dup_of").isNotNull, "duplicate")
-          .when(coalesce(col("n_hits"), lit(0L)) > 0, "contaminated")
+  /** The drop-stage rule of both curation forms: `drop_stage` = the first
+    * failing [[stages]] entry, `keep` = none failed. Maps a [[front]]
+    * frame that carries `dup_of` to the verdict schema. */
+  private[graft] def dropStage(placed: DataFrame): DataFrame = {
+    val ((first, test), rest) = (stages.head, stages.tail)
+    placed.select(col("id"), col("lang"), col("n_tokens"),
+        col("quality_reason"), col("dup_of"), col("n_hits"),
+        rest.foldLeft(when(test, first)) { case (w, (s, t)) => w.when(t, s) }
           .as("drop_stage"))
       .withColumn("keep", col("drop_stage").isNull)
-    // verdict table is output-sized (one slim row per doc): materialize
-    // and release the tagged cache (CacheScope contract)
-    graft.core.CacheScope.seal(out, tagged)
   }
-
-  /** The row-local tagging projection of both curation paths (this
-    * [[verdicts]] and [[graft.streaming.StreamingCuration.verdicts]]):
-    * (id, n_tokens, dup_frac_e6, quality_reason, lang, `carry`…, keep)
-    * with `id` cast to string, `lang` = [[TextAnalysis.langId]] and the
-    * [[TextAnalysis.qualityFilter]] gate. Both scans are codegen'd
-    * kernels (`LexiconArgmax`, `WsTokenStats`), so the projection holds
-    * no interpreted higher-order function. `carry` adds named columns of
-    * `docs` to the output. */
-  private[graft] def tag(docs: DataFrame, idCol: String, textCol: String,
-      minWords: Int, maxWords: Int, minMeanLen: Double, maxMeanLen: Double,
-      minStopwords: Int, maxDupFrac: Double,
-      carry: (String, Column)*): DataFrame = {
-    val base = docs.select(Seq(col(idCol).cast("string").as("id"),
-      col(textCol).as("_text"), TextAnalysis.langId(col(textCol)).as("lang")) ++
-      carry.map { case (n, c) => c.as(n) }: _*)
-    TextAnalysis.qualityFilter(base, "id", "_text", minWords, maxWords,
-        minMeanLen, maxMeanLen, minStopwords, maxDupFrac,
-        passthrough = "lang" +: carry.map(_._1))
-      .withColumnRenamed("reason", "quality_reason")
-  }
-
-  /** The exact-duplicate key of a document: md5 of its sorted distinct
-    * [[Text.tokenize]] tokens ([[Dedup.exactDuplicates]]'s canonical
-    * key, computed row-locally). */
-  private[graft] def dupKey(text: Column): Column =
-    md5(concat_ws(" ", sort_array(array_distinct(Text.tokenize(text)))))
 
   /** Funnel report over a [[verdicts]] frame: per `groupCols` (or one
     * global row when empty) — document count, per-stage drop counts,
@@ -127,14 +137,10 @@ object Curation {
     * groupBy; at 100 TB this is the dashboard query over the verdict
     * table, not a re-scan of the corpus. */
   def funnel(verdicts: DataFrame, groupCols: Seq[String] = Nil): DataFrame = {
-    val aggs = Seq(
-      count(lit(1)).as("n_docs"),
-      count(when(col("drop_stage") === "lang", 1)).as("n_lang"),
-      count(when(col("drop_stage") === "quality", 1)).as("n_quality"),
-      count(when(col("drop_stage") === "duplicate", 1)).as("n_duplicate"),
-      count(when(col("drop_stage") === "contaminated", 1)).as("n_contaminated"),
-      count(when(col("keep"), 1)).as("n_kept"),
-      coalesce(sum(when(col("keep"), col("n_tokens"))), lit(0L)).as("kept_tokens"))
+    val aggs = count(lit(1)).as("n_docs") +:
+      stages.map { case (s, _) => count(when(col("drop_stage") === s, 1)).as(s"n_$s") } :+
+      count(when(col("keep"), 1)).as("n_kept") :+
+      coalesce(sum(when(col("keep"), col("n_tokens"))), lit(0L)).as("kept_tokens")
     if (groupCols.isEmpty) verdicts.agg(aggs.head, aggs.tail: _*)
     else verdicts.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }

@@ -1630,9 +1630,9 @@ class StreamingSpec extends SparkSpec {
     (5L, "see alpha beta gamma here the end"))    // shares a 3-gram with bench
   private val curationBench = Seq((100L, "alpha beta gamma delta"))
 
-  private def curationBatch(docs: Seq[(Long, String)]) =
+  private def curationBatch(docs: org.apache.spark.sql.DataFrame) =
     graft.text.Curation.verdicts(
-      docs.toDF("doc_id", "text"), curationBench.toDF("doc_id", "text"),
+      docs, curationBench.toDF("doc_id", "text"),
       allowedLangs = Seq("en"), contamN = 3,
       minWords = 4, minMeanLen = 1.0, maxMeanLen = 20.0, minStopwords = 1)
 
@@ -1645,7 +1645,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming curation: batch invocation equals Curation.verdicts") {
-    val expected = curationBatch(curationDocs).collect()
+    val expected = curationBatch(curationDocs.toDF("doc_id", "text")).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         Option(r.getString(3)), Option(r.getString(4)), r.getLong(5),
         Option(r.getString(6)), r.getBoolean(7))).toSet
@@ -1661,14 +1661,58 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming curation batch plan: one dup-key exchange, no joins") {
-    // the 100 TB shape claim, asserted: tagging + contamination are
-    // row-local (plan-literal bloom + exact confirm, no benchmark join),
-    // so the ONLY exchange is the dup-state groupByKey
-    val plan = curationStream(curationDocs.toDF("doc_id", "text"))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), s"verdicts must be join-free:\n$plan")
-    val ex = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
-    assert(ex == 1, s"exactly the dup-state exchange expected, got $ex:\n$plan")
+    // the 100 TB shape claim, asserted for both forms: tagging and
+    // contamination are row-local (the benchmark grams ride the plan, no
+    // benchmark join), so the ONLY exchange is the dup-key one — the
+    // state op's groupByKey, or the batch form's canonical window
+    val docs = curationDocs.toDF("doc_id", "text")
+    Seq("streaming" -> curationStream(docs).toDF(), "batch" -> curationBatch(docs))
+      .foreach { case (form, df) =>
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.contains("Join"), s"$form verdicts must be join-free:\n$plan")
+        val ex = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
+        assert(ex == 1, s"$form: exactly the dup-key exchange expected, got $ex:\n$plan")
+        assert(!plan.contains("ExistingRDD"), s"$form verdicts must not be checkpointed:\n$plan")
+      }
+  }
+
+  /** Both curation forms over `docs`, each as its verdicts rendered and
+    * sorted (so multiplicities compare too). */
+  private def bothCurationForms(docs: org.apache.spark.sql.DataFrame): (Seq[String], Seq[String]) = {
+    def render(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    (render(curationBatch(docs)), render(curationStream(docs).toDF()))
+  }
+
+  test("curation: a repeated id gives one verdict row per input row in both forms") {
+    val (batch, stream) = bothCurationForms(Seq(
+      (1L, "the quick brown fox jumps"),
+      (1L, "the quick brown fox jumps jumps"),
+      (5L, "see alpha beta gamma here the end")).toDF("doc_id", "text"))
+    assert(batch.size == 3, batch.mkString("\n"))
+    assert(stream == batch, s"stream:\n${stream.mkString("\n")}\nbatch:\n${batch.mkString("\n")}")
+    // the canonical's own id repeats: neither copy is its own duplicate
+    assert(batch.count(_.startsWith("1|en|")) == 2 && batch.forall(!_.contains("duplicate")))
+  }
+
+  test("curation: a null id gets a verdict, is never the canonical and has no dup_of") {
+    val docs = Seq[(Option[Long], String)](
+      (None, "the quick brown fox jumps"),
+      (Some(4L), "the quick brown fox jumps jumps"),
+      (Some(1L), "the quick brown fox jumps"),
+      (None, "see alpha beta gamma here the end"),
+      (None, "see alpha beta gamma here the end")).toDF("doc_id", "text")
+    val (batch, stream) = bothCurationForms(docs)
+    assert(stream == batch, s"stream:\n${stream.mkString("\n")}\nbatch:\n${batch.mkString("\n")}")
+    val v = curationBatch(docs).collect()
+      .map(r => (Option(r.getString(0)), Option(r.getString(4)), Option(r.getString(6))))
+    assert(v.length == 5)
+    // d1 is the canonical of its group, d4 points at it, the null id is kept
+    assert(v.filter(_._1.isEmpty).forall(_._2.isEmpty), v.mkString(", "))
+    assert(v.contains((Some("4"), Some("1"), Some("duplicate"))), v.mkString(", "))
+    assert(v.contains((Some("1"), None, None)), v.mkString(", "))
+    assert(v.count(_ == (None, None, None)) == 1, v.mkString(", "))
+    assert(v.count(_ == (None, None, Some("contaminated"))) == 2, v.mkString(", "))
   }
 
   test("streaming curation: MemoryStream parity + first-seen canonical") {

@@ -183,8 +183,7 @@ class TextKernelSpec extends SparkSpec {
     val bench = Seq((9L, "nothing in common here at all")).toDF("doc_id", "text")
     // the detector sees the retired form
     assert(hofs(corpus.select(Reference.langId(col("text")))).nonEmpty)
-    assert(hofs(Curation.tag(corpus, "doc_id", "text", 20, 100000, 3.0, 10.0, 1, 0.6))
-      .isEmpty)
+    assert(hofs(Curation.verdicts(corpus, bench, contamN = 3)).isEmpty)
     assert(hofs(StreamingCuration.verdicts(corpus, bench, contamN = 3)(spark).toDF()).isEmpty)
   }
 }
