@@ -695,7 +695,7 @@ object Experiment {
     }
 
     val (evalPart, tEval) = timed(evalJson(c, encoder, persisted, dataset, leftLen, rightLen))
-    if (!c.writeBlocks) persisted.df.unpersist()
+    if (!c.writeBlocks) graft.core.CacheScope.release(persisted.df)
 
     val total = tLoad + tAssign + tWrite + tEval
     val json =

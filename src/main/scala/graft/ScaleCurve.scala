@@ -353,7 +353,7 @@ object ScaleCurve {
         val nl = full.filter(col("doc_id") % 2 === 0).count()
         val nr = full.filter(col("doc_id") % 2 === 1).count()
         val res = graft.eval.Evaluation.joinedEvaluate(tok, lang, gold, nl, nr)
-        full.unpersist()
+        graft.core.CacheScope.release(full)
         res.truePositive
       }),
 
@@ -390,7 +390,7 @@ object ScaleCurve {
         val rep = graft.eval.Evaluation.comparisonReport(spark,
           Seq("tok" -> tok, "lang" -> lang, "src" -> src), gold, nl, nr)
         val n = rep.agg(sum(col("tp"))).head().getLong(0)
-        Seq(tok.df, lang.df, src.df, full).foreach(_.unpersist())
+        graft.core.CacheScope.release(tok.df, lang.df, src.df, full)
         n
       }),
       // m9_lightea_embedding's shape on the ×N-salted star schema: the
@@ -518,7 +518,7 @@ object ScaleCurve {
       val cells = ops(docs, sh, copies)
         .filter { case (n, _) => opNames.contains(n) }
         .map { case (n, f) => n -> measure(s"x$copies $n")(f()) }
-      docs.unpersist(); sh.unpersist()
+      graft.core.CacheScope.release(docs, sh)
       // factor boundary: sweep any CacheManager entries whose backing
       // RDDs measure() already dropped (docs/sh rebuild next factor)
       spark.catalog.clearCache()

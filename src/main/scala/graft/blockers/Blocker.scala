@@ -34,6 +34,22 @@ object Blocker {
     Blocks(l.join(r, Seq(Blocks.KeyCol), "inner"))
   }
 
+  /** The cross-side hot-key cap: drop every `key` whose block would
+    * hold more than `maxComparisons` candidate pairs (left rows × right
+    * rows) from BOTH sides, before any per-key array or pair join
+    * materializes it. One count aggregate per side feeds a left-anti
+    * join; a cap ≤ 0 returns the inputs unchanged (no extra plan). */
+  def dropHotKeys(l: DataFrame, r: DataFrame, key: String,
+                  maxComparisons: Long): (DataFrame, DataFrame) =
+    if (maxComparisons <= 0) (l, r)
+    else {
+      val hot = l.groupBy(key).agg(count(lit(1)).as("nl"))
+        .join(r.groupBy(key).agg(count(lit(1)).as("nr")), Seq(key))
+        .filter(col("nl") * col("nr") > maxComparisons)
+        .select(key)
+      (l.join(hot, Seq(key), "left_anti"), r.join(hot, Seq(key), "left_anti"))
+    }
+
   /** P6 `filter_with_unique` (composite.py:35-51): drop entities whose id
     * appears in `ids` (one `_cid` column) — a left-anti join, never the
     * reference's merge-indicator emulation. */

@@ -5,7 +5,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Blocks, EntityFrame}
+import graft.core.{Blocks, CacheScope, EntityFrame}
 import graft.encoders.FrameEncoder
 import graft.similarity.Similarity
 
@@ -103,18 +103,19 @@ final case class EmbeddingKnnBlocker(
         val cand = base.select(col("left_id"), col("right_id"),
           ((col("cos") + 1.0) / 2.0).as("s")) // shift to ≥ 0 for scaling
           .persist()
-        cachedFrames += cand
         val scores = Sinkhorn.rescale(cand, sinkhornIterations)
+        // the rerank checkpoint (if any), the candidate cache and the
+        // rescale checkpoint all feed only the sealed NN table below
+        cachedFrames ++= Seq(base, cand, scores)
         val w = Window.partitionBy("left_id").orderBy(col("s").desc, col("right_id").asc)
         scores.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
       } else base
     // NN table is output-sized (one row per left entity): materialize it
-    // and release whatever this call cached (CacheScope contract)
+    // and release whatever this call cached (CacheScope contract); with
+    // nothing cached it stays the lazy plan
     val nn = ranked.groupBy("left_id")
       .agg(array_sort(collect_set(col("right_id"))).as("right_ids"))
-    Blocks.fromNN(
-      if (cachedFrames.isEmpty) nn
-      else graft.core.CacheScope.seal(nn, cachedFrames.toSeq: _*),
+    Blocks.fromNN(CacheScope.seal(nn, cachedFrames.toSeq: _*),
       "left_id", "right_ids")
   }
 }
@@ -140,9 +141,9 @@ object Sinkhorn {
         .select(col("left_id"), col("right_id"), (col("s") / col("_cs")).as("s"))
       s = if (i < iterations) { val p = next.persist(); rounds += p; p } else next
     }
-    // candidate-sized output: materialize, then drop the round caches
-    // (CacheScope contract — they used to outlive the call)
-    if (rounds.isEmpty) s else graft.core.CacheScope.seal(s, rounds.toSeq: _*)
+    // candidate-sized output: materialize, then drop the round caches;
+    // one iteration caches nothing and stays lazy
+    CacheScope.seal(s, rounds.toSeq: _*)
   }
 }
 
@@ -168,7 +169,7 @@ final case class KMeansClusterBlocker(
       .setFeaturesCol("features").setPredictionCol("label")
     // label table is one slim row per entity: materialize it and release
     // the feature cache (CacheScope contract)
-    val labeled = graft.core.CacheScope.seal(
+    val labeled = CacheScope.seal(
       model.fit(feat).transform(feat).select("id", "_side", "label"), feat)
     val l = labeled.filter(col("_side") === "l")
       .select(col("label").cast("string").as("key"), col("id"))

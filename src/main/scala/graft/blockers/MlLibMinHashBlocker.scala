@@ -91,13 +91,8 @@ final case class MlLibMinHashBlocker(
     // without the persist every reference re-runs the MLlib transform
     val lb = buckets(model, lf).withColumnRenamed("id", "lid").persist()
     val rb = buckets(model, rf).withColumnRenamed("id", "rid").persist()
-    val hot = lb.groupBy("bkey").agg(count(lit(1)).as("nl"))
-      .join(rb.groupBy("bkey").agg(count(lit(1)).as("nr")), Seq("bkey"))
-      .filter(col("nl") * col("nr") > maxBlockComparisons)
-      .select("bkey")
-    val cand = lb.join(hot, Seq("bkey"), "left_anti")
-      .join(rb.join(hot, Seq("bkey"), "left_anti"), Seq("bkey"))
-      .select("lid", "rid").distinct()
+    val (cl, cr) = Blocker.dropHotKeys(lb, rb, "bkey", maxBlockComparisons)
+    val cand = cl.join(cr, Seq("bkey")).select("lid", "rid").distinct()
     // verified pair list is output-sized: materialize it and release the
     // bucket caches (CacheScope contract)
     graft.core.CacheScope.seal(

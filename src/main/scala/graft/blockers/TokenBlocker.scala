@@ -42,16 +42,8 @@ final case class TokenBlocker(
   override def assign(
       left: EntityFrame, right: EntityFrame,
       leftRel: Option[DataFrame], rightRel: Option[DataFrame]): Blocks = {
-    var lt = tokens(left)
-    var rt = tokens(right)
-    if (maxBlockComparisons > 0) {
-      val hot = lt.groupBy("key").agg(count("*").as("nl"))
-        .join(rt.groupBy("key").agg(count("*").as("nr")), Seq("key"))
-        .filter(col("nl") * col("nr") > maxBlockComparisons)
-        .select("key")
-      lt = lt.join(hot, Seq("key"), "left_anti")
-      rt = rt.join(hot, Seq("key"), "left_anti")
-    }
+    val (lt, rt) = Blocker.dropHotKeys(
+      tokens(left), tokens(right), "key", maxBlockComparisons)
     Blocker.blockJoin(lt, rt)
   }
 }
@@ -93,16 +85,7 @@ final case class PartitioningTokenBlocker(
         val lt = lt0.repartition(par, col("id"))
         lt.join(broadcast(rt), Seq("key"))
       } else {
-        val lt = lt0
-        val (l, r) =
-          if (maxBlockComparisons > 0) {
-            val hot = lt.groupBy("key").agg(count(lit(1)).as("nl"))
-              .join(rt.groupBy("key").agg(count(lit(1)).as("nr")), Seq("key"))
-              .filter(col("nl") * col("nr") > maxBlockComparisons)
-              .select("key")
-            (lt.join(hot, Seq("key"), "left_anti"),
-             rt.join(hot, Seq("key"), "left_anti"))
-          } else (lt, rt)
+        val (l, r) = Blocker.dropHotKeys(lt0, rt, "key", maxBlockComparisons)
         l.join(r, Seq("key"))
       }
     // overlap-filtered pair table is output-sized: materialize it and

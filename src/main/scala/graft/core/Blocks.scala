@@ -153,10 +153,7 @@ final case class Blocks(df: DataFrame) {
         else if (!maxRow.isNullAt(0)) maxRow.getLong(0)
         else 0L
       Blocks(df.filter(size(col(LeftCol)).cast("long") * size(col(RightCol)) <= threshold))
-    } finally {
-      cum.unpersist()
-      local.unpersist()
-    }
+    } finally CacheScope.release(cum, local)
   }
 
   /** Drop blocks with more than `maxComparisons` candidate pairs —

@@ -1,66 +1,64 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
-/** Operator-scoped cache lifetime, made uniform (round-12 ADVICE class,
-  * closed repo-wide in round 13): an operator that `persist()`s an
-  * intermediate must not return a LAZY plan over it — the cache then
-  * outlives the call and accumulates in a long-lived session until
-  * ContextCleaner notices. The contract here is the
-  * `minHashNearDupPairs` pattern: eagerly materialize the OPERATOR'S
-  * OUTPUT (which is output-sized by design — blocks, labels, top-k,
-  * pairs) via `localCheckpoint`, then release every persisted
-  * intermediate immediately. Checkpoint blocks die with the returned
-  * frame; cached frames don't. Same total work: the pipeline runs
-  * exactly once either way, and the checkpoint also truncates lineage —
-  * downstream plans stop re-analyzing the whole upstream pipeline.
+/** Operator-scoped cache lifetime — the one place in `src/main` where a
+  * cache's life ends. An operator that `persist()`s or
+  * `localCheckpoint()`s an intermediate must not return a LAZY plan over
+  * it: the cache then outlives the call and accumulates in a long-lived
+  * session (Experiment `--compare` grids, the Curate loop, Bench) until
+  * ContextCleaner notices. The rule: eagerly materialize the OPERATOR'S
+  * OUTPUT (output-sized by design — blocks, labels, top-k, pairs) via
+  * `localCheckpoint` ([[seal]]), then free every intermediate at once
+  * ([[release]]). Same total work: the pipeline runs exactly once either
+  * way, and the checkpoint also truncates lineage, so downstream plans
+  * stop re-analyzing the whole upstream pipeline. Loops, guard paths and
+  * `finally` blocks free their frames through [[release]] too.
   *
-  * Operators whose persist IS deliberate cross-call state (a caller-
-  * owned cache) must say so at the persist site instead of using this.
+  * Operators whose persist IS deliberate cross-call state (a
+  * caller-owned cache) must say so at the persist site instead of using
+  * this.
   *
-  * Cluster-deployment constraints of the `localCheckpoint` mechanism —
-  * the two contracts a caller buys into:
+  * The two contracts a caller of a sealed operator buys into:
   *
-  *   - **eager**: sealing triggers the operator's job AT CALL TIME, so
-  *     previously-lazy operators (blocker assign, encode) stop
-  *     composing lazily with downstream pruning/pushdown. By design —
-  *     the output is output-sized and about to be consumed — but a
-  *     caller that would have discarded most of the result should not
-  *     seal.
+  *   - **eager**: sealing runs the operator's job AT CALL TIME, so a
+  *     sealed operator stops composing lazily with downstream
+  *     pruning/pushdown. A caller that would have discarded most of the
+  *     result should not seal.
   *   - **unreplicated, lineage-truncated**: localCheckpoint blocks live
-  *     only on the executors that computed them and the plan can no
+  *     only on the executors that computed them, and the plan can no
   *     longer recompute lost partitions. Under executor loss or
-  *     dynamic-allocation decommissioning, downstream stages FAIL
-  *     rather than recompute. On local[n] (this harness) and static
-  *     clusters that is a non-event; a deployment with
-  *     `spark.dynamicAllocation.enabled` or preemptible executors
-  *     should either disable executor decommissioning for these jobs,
-  *     set `spark.checkpoint.compress` + a reliable
-  *     `sparkContext.setCheckpointDir` and switch [[reliable]] on, or
-  *     accept recompute-from-scratch on failure (the job, not the
-  *     session, is the blast radius).
+  *     dynamic-allocation decommissioning, downstream stages FAIL rather
+  *     than recompute. On local[n] and static clusters that is a
+  *     non-event; a deployment with `spark.dynamicAllocation.enabled` or
+  *     preemptible executors should disable executor decommissioning for
+  *     these jobs or accept a failed job (the job, not the session, is
+  *     the blast radius).
   */
 object CacheScope {
 
-  /** When true, [[seal]] uses reliable `checkpoint()` against the
-    * session's checkpoint dir (must be set) instead of
-    * `localCheckpoint()` — survives executor loss at the cost of a
-    * write to the checkpoint filesystem. Off by default: local mode and
-    * static clusters don't need it. */
-  @volatile var reliable: Boolean = false
-
-  /** Materialize `out` eagerly, then release `cached` — plain persists
-    * via `unpersist()`, and localCheckpointed intermediates via their
-    * plan RDD (`Dataset.unpersist` never reaches checkpoint blocks;
-    * see [[org.apache.spark.sql.graft.ListenerBridge.releaseCheckpointBlocks]]).
-    * Every sealed input goes through both paths; whichever does not
-    * apply is a no-op. */
-  def seal(out: DataFrame, cached: DataFrame*): DataFrame = {
-    val m = if (reliable) out.checkpoint() else out.localCheckpoint()
-    cached.foreach { c =>
-      c.unpersist()
-      org.apache.spark.sql.graft.ListenerBridge.releaseCheckpointBlocks(c)
+  /** Materialize `out` eagerly, then [[release]] `cached`. With nothing
+    * to release there is nothing to scope, so `out` comes back as the
+    * same lazy plan, untouched. */
+  def seal(out: DataFrame, cached: DataFrame*): DataFrame =
+    if (cached.isEmpty) out
+    else {
+      val m = out.localCheckpoint()
+      release(cached: _*)
+      m
     }
-    m
+
+  /** Free each frame now. A persisted frame is unpersisted; a
+    * localCheckpointed one has its blocks freed through its plan RDD
+    * (`Dataset.unpersist` never reaches checkpoint blocks; see
+    * [[org.apache.spark.sql.graft.ListenerBridge.releaseCheckpointBlocks]]).
+    * A persist over someone else's checkpoint (`input.persist()` of a
+    * caller's frame) drops only the persist, so the caller's frame stays
+    * readable. Lazy, never-cached frames are a no-op, so guard paths can
+    * pass everything they might have cached. */
+  def release(frames: DataFrame*): Unit = frames.foreach { f =>
+    if (f.storageLevel != StorageLevel.NONE) f.unpersist()
+    else org.apache.spark.sql.graft.ListenerBridge.releaseCheckpointBlocks(f)
   }
 }

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.CacheScope
 import graft.functions.{MinHash, SimHash, Text}
 
 /** Document deduplication for large-scale corpus pipelines — the
@@ -237,19 +238,13 @@ object Dedup {
     // pipeline (bucket self-join + signature prefilter) runs once, not
     // per reference.
     val cand = candidates.persist()
-    // Eagerly materialize the (output-sized) verified pairs via
-    // localCheckpoint, then release every persisted intermediate NOW —
-    // otherwise corpus-sized cached frames accumulate in a shared session
-    // until ContextCleaner notices (checkpoint blocks, by contrast, die
-    // with the returned frame). Same total work: the verify join runs
-    // exactly once either way.
-    val verified = verifyJaccard(toks, cand)
-      .filter(col("jaccard") >= threshold)
-      .localCheckpoint()
-    cand.unpersist()
-    sig.unpersist()
-    toks.unpersist()
-    verified
+    // Eagerly materialize the (output-sized) verified pairs, then release
+    // every persisted intermediate NOW — otherwise corpus-sized cached
+    // frames accumulate in a shared session until ContextCleaner notices.
+    // Same total work: the verify join runs exactly once either way.
+    CacheScope.seal(
+      verifyJaccard(toks, cand).filter(col("jaccard") >= threshold),
+      cand, sig, toks)
   }
 
   /** Duplicate-cluster size histogram — the dedup-effectiveness report:
@@ -259,7 +254,9 @@ object Dedup {
     * cluster). Aggregations only — the corpus is counted, never joined.
     */
   def clusterHistogram(corpusIds: DataFrame, pairs: DataFrame): DataFrame = {
-    val labels = components(pairs).persist()
+    // components' output is already a materialized checkpoint: it feeds
+    // both aggregates below without a second cache
+    val labels = components(pairs)
     val clusterSizes = labels.groupBy("component")
       .agg(count(lit(1)).as("sz"))
       .groupBy(col("sz").as("cluster_size"))
@@ -268,12 +265,11 @@ object Dedup {
       .crossJoin(broadcast(labels.agg(count(lit(1)).as("n_dup"))))
       .select(lit(1L).as("cluster_size"),
         (col("n_docs") - col("n_dup")).as("n_clusters"))
-    val out = clusterSizes.unionByName(singles)
-      .groupBy("cluster_size")
-      .agg(sum(col("n_clusters")).as("n_clusters"))
-      .localCheckpoint()
-    labels.unpersist()
-    out
+    CacheScope.seal(
+      clusterSizes.unionByName(singles)
+        .groupBy("cluster_size")
+        .agg(sum(col("n_clusters")).as("n_clusters")),
+      labels)
   }
 
   /** Directed containment pairs — the asymmetric sibling of
@@ -328,11 +324,7 @@ object Dedup {
       .select(col("d.id_from").as("id_from"), col("d.id_to").as("id_to"),
         col("d.containment").as("containment"))
       .filter(col("containment") >= threshold)
-      .localCheckpoint()
-    cand.unpersist()
-    sig.unpersist()
-    toks.unpersist()
-    directed
+    CacheScope.seal(directed, cand, sig, toks)
   }
 
   /** Incremental near-dup: MinHash-LSH pairs of a NEW document batch
@@ -357,56 +349,16 @@ object Dedup {
       corpusToks: DataFrame, newToks: DataFrame, numPerm: Int, bands: Int,
       threshold: Double, estPrefilter: Double = 0.0,
       maxBucketSize: Int = 0): DataFrame = {
-    require(numPerm % bands == 0, "numPerm must be divisible by bands")
     // Raw-token form: the corpus token pipeline is the caller's (possibly
     // expensive) expression, referenced by both the signature build and
-    // the verify scan — persist the superseded-corrected union ONCE so
-    // tokenization runs once (the sig-form has no such cache because its
-    // corpus signature is already a stored table). Batch id list
-    // broadcast as in [[minHashNearDupAgainstSig]].
-    val newT = newToks.select(col("id"), col("key")).persist()
-    val newIds = newT.select("id").distinct()
-    val all = corpusToks.join(broadcast(newIds), Seq("id"), "left_anti")
-      .select(col("id"), col("key"))
-      .unionByName(newT)
-      .persist()
-    // persist unconditionally: both bucket self-join sides re-derive the
-    // signature otherwise (see [[minHashNearDupPairs]]); one row per doc
-    val sig = MinHash.signature(all, numPerm).persist()
-    val cand = incrementalCandidates(
-      sig, newIds, bands, numPerm, estPrefilter, maxBucketSize).persist()
-    // Materialize then release — see [[minHashNearDupPairs]].
-    val verified = verifyJaccard(all, cand)
-      .filter(col("jaccard") >= threshold)
-      .localCheckpoint()
-    cand.unpersist()
-    sig.unpersist()
-    all.unpersist()
-    newT.unpersist()
-    verified
-  }
-
-  /** Shared candidate block of the two incremental forms: cap hot band
-    * buckets over the union signature, tag the delta side via a
-    * broadcast of the batch id list, and keep only (corpus → new) plus
-    * canonical (new, new) collisions. */
-  private def incrementalCandidates(
-      sig: DataFrame, newIds: DataFrame, bands: Int, numPerm: Int,
-      estPrefilter: Double, maxBucketSize: Int): DataFrame = {
-    val buckets = capHotKeys(
-        MinHash.bandBuckets(sig, bands, numPerm / bands), maxBucketSize)
-      .join(broadcast(newIds.withColumn("_new", lit(true))), Seq("id"), "left")
-      .withColumn("_new", coalesce(col("_new"), lit(false)))
-    estimatePrefilter(
-      buckets
-        .select(col("key"), col("id").as("id_a"), col("_new").as("_new_a"))
-        .join(buckets.filter(col("_new"))
-          .select(col("key"), col("id").as("id_b")), Seq("key"))
-        // corpus→new always; new→new canonically once
-        .filter((!col("_new_a") && col("id_a") =!= col("id_b")) ||
-                (col("_new_a") && col("id_a") < col("id_b")))
-        .select("id_a", "id_b").distinct(),
-      sig, numPerm, estPrefilter)
+    // the verify scan — persist it ONCE so tokenization runs once (the
+    // sig-form has no such cache because its corpus signature is already
+    // a stored table). The sig-form's output is sealed (eager), so the
+    // cache can go as soon as it returns.
+    val corpus = corpusToks.select(col("id"), col("key")).persist()
+    try minHashNearDupAgainstSig(MinHash.signature(corpus, numPerm), corpus,
+      newToks, numPerm, bands, threshold, estPrefilter, maxBucketSize)
+    finally CacheScope.release(corpus)
   }
 
   /** The production refresh form of [[minHashNearDupAgainst]]: the
@@ -440,9 +392,23 @@ object Dedup {
       .persist()
     // cap measured over the UNION (corpus + new rows in the bucket): a
     // boilerplate bucket is hot because of its total population, not of
-    // either side alone
-    val cand = incrementalCandidates(
-      sig, newIds, bands, numPerm, estPrefilter, maxBucketSize).persist()
+    // either side alone. The delta side is tagged via the broadcast batch
+    // id list, and only (corpus → new) plus canonical (new, new)
+    // collisions become candidates.
+    val buckets = capHotKeys(
+        MinHash.bandBuckets(sig, bands, numPerm / bands), maxBucketSize)
+      .join(broadcast(newIds.withColumn("_new", lit(true))), Seq("id"), "left")
+      .withColumn("_new", coalesce(col("_new"), lit(false)))
+    val cand = estimatePrefilter(
+      buckets
+        .select(col("key"), col("id").as("id_a"), col("_new").as("_new_a"))
+        .join(buckets.filter(col("_new"))
+          .select(col("key"), col("id").as("id_b")), Seq("key"))
+        // corpus→new always; new→new canonically once
+        .filter((!col("_new_a") && col("id_a") =!= col("id_b")) ||
+                (col("_new_a") && col("id_a") < col("id_b")))
+        .select("id_a", "id_b").distinct(),
+      sig, numPerm, estPrefilter).persist()
     // verify over the superseded-corrected token union; verifyJaccard
     // semi-joins it down to candidate ids before any aggregation, so the
     // corpus token scan shuffles candidate rows only
@@ -450,13 +416,9 @@ object Dedup {
       .select(col("id"), col("key"))
       .unionByName(newT)
     // Materialize then release — see [[minHashNearDupPairs]].
-    val verified = verifyJaccard(toks, cand)
-      .filter(col("jaccard") >= threshold)
-      .localCheckpoint()
-    cand.unpersist()
-    sig.unpersist()
-    newT.unpersist()
-    verified
+    CacheScope.seal(
+      verifyJaccard(toks, cand).filter(col("jaccard") >= threshold),
+      cand, sig, newT)
   }
 
   /** N-gram (shingle) Jaccard near-dups: candidates share ≥ 1 shingle.
@@ -654,10 +616,7 @@ object Dedup {
           when(col("n_candidates") === 0, lit(0.0))
             .otherwise((col("n_candidates") - col("n_caught")).cast("double")
               / col("n_candidates")), scale).as("false_candidate_rate"))
-      .localCheckpoint()
-    buckets.unpersist()
-    toks.unpersist()
-    out
+    CacheScope.seal(out, buckets, toks)
   }
 
   /** SimHash near-dups: 60-bit fingerprints, candidates collide on one of
@@ -758,7 +717,8 @@ object Dedup {
     * detection is a filter over the about-to-be-cached result — no extra
     * join, and the probe action doubles as the round's materialization.
     * Nothing is ever collected to the driver; superseded label frames
-    * unpersist eagerly so storage stays flat however many rounds run.
+    * are released eagerly, so storage stays flat however many rounds
+    * run, and the call returns holding only its output checkpoint.
     *
     * Long-diameter graphs: every `checkpointInterval`-th round the label
     * frame is local-checkpointed instead of persisted, truncating the
@@ -809,6 +769,7 @@ object Dedup {
     val edges = directed
       .unionByName(directed.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().localCheckpoint()
+    CacheScope.release(directed) // edges is materialized; directed is done
     // Round 1 is FOLDED into the init aggregate: from the all-self start,
     // label_1(v) = min(v, min neighbor of v) — and the groupBy(src)
     // shuffle that used to build the distinct-id init computes exactly
@@ -820,7 +781,7 @@ object Dedup {
       .select(col("id"), least(col("id"), col("_nbr")).as("component"),
         (col("_nbr") < col("id")).as("_chg"))
       .persist()
-    var cached = init                                   // persisted handle to unpersist
+    var cached = init                                   // this round's cache, to release
     var labels = init.select("id", "component")         // full (id, component) view
     var frontier = init.filter(col("_chg")).select("id", "component")
     // round-1 convergence probe: one full scan of init (NOT an isEmpty
@@ -857,7 +818,7 @@ object Dedup {
         (col("component") < col("_old")).as("_chg"))
       // eager localCheckpoint both materializes and cuts lineage; safe to
       // drop the previous round below because this round's data is real
-      // (not a recomputable view) by the time we unpersist.
+      // (not a recomputable view) by the time we release it.
       val next =
         if (checkpointInterval > 0 && (i + 1) % checkpointInterval == 0)
           computed.localCheckpoint()
@@ -870,24 +831,22 @@ object Dedup {
       // scans every partition, so the convergence probe doubles as a FULL
       // materialization of the round's cache.
       done = frontier.count() == 0L
-      cached.unpersist()
+      CacheScope.release(cached)
       cached = next
       labels = next.select("id", "component")
       i += 1
     }
     if (!done) {
-      cached.unpersist()
+      CacheScope.release(cached, edges)
       throw new IllegalStateException(
         s"components did not converge in $maxIterations rounds — labels " +
           "would be under-merged; raise maxIterations (each jumping round " +
           "roughly doubles the chain distance covered)")
     }
     // Hand back a self-contained frame: checkpoint the (node-count-sized)
-    // final labels, then drop the last round's cache entry so nothing of
-    // the iteration survives in the CacheManager of a shared session.
-    val out = labels.localCheckpoint()
-    cached.unpersist()
-    (out, i)
+    // final labels, then free the last round and the edge checkpoint so
+    // nothing of the iteration survives in a shared session.
+    (CacheScope.seal(labels, cached, edges), i)
   }
 
   /** Deterministic shard assignment — the export tail of the pipeline:

@@ -2,7 +2,7 @@ package graft.encoders
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.EntityFrame
+import graft.core.{CacheScope, EntityFrame}
 import graft.functions.Text
 
 /** Frame encoders: EntityFrame (+ optional relation triples) → one dense
@@ -46,7 +46,7 @@ final case class HashTokenEncoder(
       .groupBy("id").agg(dimCols.head, dimCols.tail: _*)
       .select(col("id"), array((0 until dims).map(d => col(s"d$d")): _*).as("vec"))
     val out = if (removePc) PcRemoval.removeFirstPc(pooled, dims) else pooled
-    TokenWeighting.finish(out, cached)
+    CacheScope.seal(out, cached.toSeq: _*)
   }
 }
 
@@ -68,7 +68,9 @@ private[encoders] object TokenWeighting {
     * computed before any vocabulary lookup, so unknown tokens still
     * count toward totals exactly like the reference (its value_counts
     * run over the tokenizer output, not the vocab). Returns the
-    * persisted token stream (if any) for [[finish]] to release. */
+    * persisted token stream (if any): the encoder seals its
+    * one-row-per-entity output with it ([[graft.core.CacheScope]]), so a
+    * long-lived session keeps no cached token stream per encode. */
   def weighted(toks: DataFrame, sif: Boolean, sifA: Double, minFreq: Int)
       : (DataFrame, Option[DataFrame]) =
     if (!sif) (toks.withColumn("w", lit(1.0)), None)
@@ -88,17 +90,6 @@ private[encoders] object TokenWeighting {
             lit(sifA) / (lit(sifA) + col("freq") / col("total")))
           .otherwise(lit(1.0)))
       (w, Some(cached))
-    }
-
-  /** When SIF persisted the token stream, eagerly materialize the
-    * (one-row-per-entity) embedding via localCheckpoint and release the
-    * cache NOW — the [[graft.similarity.Similarity]] finishRerank
-    * pattern; a lazy plan over a persisted frame leaked one cached token
-    * stream per encode in a long-lived session. */
-  def finish(out: DataFrame, cached: Option[DataFrame]): DataFrame =
-    cached match {
-      case Some(c) => val m = out.localCheckpoint(); c.unpersist(); m
-      case None => out
     }
 }
 
@@ -159,7 +150,7 @@ final case class TableTokenEncoder(
       .groupBy("id").agg(dimCols.head, dimCols.tail: _*)
       .select(col("id"), array((0 until dims).map(d => col(s"d$d")): _*).as("vec"))
     val out = if (removePc) PcRemoval.removeFirstPc(pooled, dims) else pooled
-    TokenWeighting.finish(out, cached)
+    CacheScope.seal(out, cached.toSeq: _*)
   }
 
   /** [[CachedEncoder]] keys the cache on this string: the default
@@ -492,7 +483,7 @@ final case class LightEAEncoder(
     val catVec = concat(channels.indices.map(i => coalesce(col(s"_c$i"), zero)): _*)
     // one embedding row per entity — output-sized; release every round's
     // cached frame now (CacheScope contract)
-    graft.core.CacheScope.seal(
+    CacheScope.seal(
       joined.select(col("id"), l2(catVec).as("vec")), cachedFrames.toSeq: _*)
   }
 }

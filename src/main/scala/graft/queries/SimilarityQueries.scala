@@ -505,7 +505,8 @@ object SimilarityQueries {
 
     "m13_mp_knn" -> QueryDef(
       (s, dir) => {
-        Similarity.mutualProximityRerank(m13Candidates(s, dir), k = 3)
+        Similarity.mutualProximityRerank(m13Candidates(s, dir), k = 3,
+            rankScale = 6)
           .select(col("left_id"), col("rank"), col("right_id"),
             Num.stableRound(col("mp"), 6).as("mp"))
           .orderBy("left_id", "rank")
@@ -513,13 +514,14 @@ object SimilarityQueries {
       Some(s"""WITH $knnCandCtesSql,
              |sc AS (
              |  SELECT left_id, right_id, cos,
-             |         ((rank() OVER (PARTITION BY left_id ORDER BY cos ASC)) - 1)::double
-             |           / (count(*) OVER (PARTITION BY left_id))
-             |         * ((rank() OVER (PARTITION BY right_id ORDER BY cos ASC)) - 1)::double
-             |           / (count(*) OVER (PARTITION BY right_id)) AS mp
+             |         (((rank() OVER (PARTITION BY left_id ORDER BY cos ASC)) - 1)::double
+             |           / (count(*) OVER (PARTITION BY left_id)))
+             |         * (((rank() OVER (PARTITION BY right_id ORDER BY cos ASC)) - 1)::double
+             |           / (count(*) OVER (PARTITION BY right_id))) AS mp
              |  FROM cand),
              |ranked AS (SELECT left_id, right_id, mp, row_number() OVER (
-             |    PARTITION BY left_id ORDER BY mp DESC, cos DESC, right_id ASC) AS rank
+             |    PARTITION BY left_id
+             |    ORDER BY floor((mp) * 1e6 + 0.5) / 1e6 DESC, cos DESC, right_id ASC) AS rank
              |  FROM sc)
              |SELECT left_id, rank::int AS rank, right_id,
              |       floor((mp) * 1e6 + 0.5) / 1e6 AS mp

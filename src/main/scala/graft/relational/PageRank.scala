@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.CacheScope
 
 /** Fixed-iteration PageRank over an arc list — the standard importance
   * measure for entity graphs (Page et al. 1999), complementing the
@@ -18,8 +19,8 @@ import org.apache.spark.sql.functions._
   *
   * 100 TB shape: the degree-annotated arc table is persisted in its
   * hash(src) layout across the (fixed, small) iteration count and
-  * released after a final localCheckpoint truncates the result's
-  * lineage — the [[graft.dedup.Dedup]] components pattern. All joins are
+  * released through [[graft.core.CacheScope]] once the result is
+  * sealed — the [[graft.dedup.Dedup]] components pattern. All joins are
   * keyed by node id; the only broadcast is the one-row node count.
   * Ranks are node-sized.
   */
@@ -67,9 +68,7 @@ object PageRank {
         .select(col("node"),
           (lit(1.0 - damping) / col("n") + lit(damping) * col("m")).as("r"))
     }
-    val out = r.localCheckpoint()
-    contrib.unpersist()
-    out
+    CacheScope.seal(r, contrib)
   }
 
   /** Synchronous label-propagation community detection (Raghavan, Albert
@@ -97,7 +96,8 @@ object PageRank {
     * table moves per round) + a (src, label) count + a per-src min_by
     * argmax (both with map-side partial aggregation; no per-round sort);
     * labels are localCheckpoint'd per round so the plan stays
-    * flat. Everything is keyed by node id; communities are never
+    * flat, and every round's checkpoint is freed once the output is
+    * sealed. Everything is keyed by node id; communities are never
     * collected.
     *
     * Output: (node, community). */
@@ -106,6 +106,7 @@ object PageRank {
       .repartition(col("dst")).persist()
     var labels = a.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (_ <- 1 to iterations) {
       val votes = a.join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
         .select(col("src"), col("label"))
@@ -126,10 +127,9 @@ object PageRank {
           struct((-col("c")).as("_nc"), col("label").as("_lb"))).as("label"))
         .select(col("src").as("node"), col("label"))
         .localCheckpoint(eager = false)
+      rounds += labels
     }
-    val out = labels.select(col("node"), col("label").as("community"))
-      .localCheckpoint()
-    a.unpersist()
-    out
+    CacheScope.seal(labels.select(col("node"), col("label").as("community")),
+      (a +: rounds.toSeq): _*)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
 import graft.functions.{Num, Vectors}
 
 /** Density-based clustering over plain `(id, vec)` embedding frames —
@@ -83,7 +84,7 @@ object Density {
       val p = if (skipPersist) df
         else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try { p.count(); p.toLocalIterator().asScala.foreach(f) }
-      finally { if (!skipPersist) p.unpersist(false) }
+      finally { if (!skipPersist) CacheScope.release(p) }
     } else df.collect().foreach(f)
   }
 
@@ -93,32 +94,9 @@ object Density {
   def dbscanStar(emb: DataFrame, eps: Double, minPts: Int = 3,
                  lshPlanes: Int = 0, planeDims: Int = 16): DataFrame = {
     require(minPts >= 1, "minPts must be >= 1")
-    val Array(idC, vecC) = emb.columns.take(2)
-    // persist: the point table feeds the pair join twice and the final
-    // assembly; released below once the labels are materialized
-    val e = emb.select(col(idC).cast("string").as("id"), col(vecC).as("vec"))
-      .persist()
-    val pairs =
-      if (lshPlanes <= 0) {
-        val a = e.select(col("id").as("ia"), col("vec").as("va"))
-        val b = e.select(col("id").as("ib"), col("vec").as("vb"))
-        a.crossJoin(b).filter(col("ia") < col("ib"))
-      } else {
-        val withB = e.select(col("id"), col("vec"),
-          Similarity.hyperplaneBucket(
-            slice(col("vec"), 1, planeDims), lshPlanes, planeDims).as("_b"))
-        withB.select(col("_b"), col("id").as("ia"), col("vec").as("va"))
-          .join(withB.select(col("_b"), col("id").as("ib"), col("vec").as("vb")),
-            Seq("_b"))
-          .filter(col("ia") < col("ib"))
-          .drop("_b")
-      }
-    val dists = pairs.select(col("ia"), col("ib"),
-      Num.stableRound(sqrt(Vectors.sqDist(col("va"), col("vb"))), 6).as("d"))
-    // both directions once, so the per-point window and both edge
-    // endpoints read ONE shuffled table
-    val sym = dists.unionByName(
-      dists.select(col("ib").as("ia"), col("ia").as("ib"), col("d"))).persist()
+    // the point table feeds the pair join twice and the final assembly;
+    // both caches are released once the labels are materialized
+    val (e, sym) = symDistances(emb, lshPlanes, planeDims)
     val w = Window.partitionBy("ia").orderBy(col("d").asc, col("ib").asc)
     val core = sym.withColumn("_r", row_number().over(w))
       .filter(col("_r") === minPts && col("d") <= eps)
@@ -134,10 +112,8 @@ object Density {
     val labeled = core.select("id")
       .join(comp.withColumnRenamed("component", "cluster"), Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
-    val out = e.select("id").join(labeled, Seq("id"), "left")
-      .localCheckpoint() // output-sized; lets the caches release NOW
-    e.unpersist(); sym.unpersist()
-    out
+    // output-sized; lets the caches and the component labels go NOW
+    CacheScope.seal(e.select("id").join(labeled, Seq("id"), "left"), e, sym, comp)
   }
 
   /** HDBSCAN's flat "excess of mass" cut over a FIXED eps ladder — the
@@ -248,9 +224,8 @@ object Density {
       lshPlanes: Int = 0, planeDims: Int = 16): Seq[Double] = {
     require(levels >= 2, "auto ladder needs at least 2 levels")
     val (e, sym) = symDistances(emb, lshPlanes, planeDims)
-    val vals = autoEpsLadderOn(sym, uncappedCore(sym, minPts), levels)
-    e.unpersist(); sym.unpersist()
-    vals
+    try autoEpsLadderOn(sym, uncappedCore(sym, minPts), levels)
+    finally CacheScope.release(e, sym)
   }
 
   /** The UNCAPPED minPts-th-neighbor core distances of a symmetric
@@ -312,7 +287,7 @@ object Density {
     val core0 = uncappedCore(sym, minPts).persist()
     val ladder = autoEpsLadderOn(sym, core0, levels)
     if (ladder.isEmpty) {
-      e.unpersist(); sym.unpersist(); core0.unpersist()
+      CacheScope.release(e, sym, core0)
       val Array(idC, _) = emb.columns.take(2)
       emb.select(col(idC).cast("string").as("id"),
         lit(null).cast("string").as("cluster"))
@@ -392,9 +367,10 @@ object Density {
       .select(col("id_a"), col("id_b"), explode(levelsFor("reach")).as("_l"))
       .select(concat(col("_l"), lit("|"), col("id_a")).as("id_a"),
         concat(col("_l"), lit("|"), col("id_b")).as("id_b"))
-    val comp = graft.dedup.Dedup.components(taggedEdges)
-      // split the "<level>|" prefix back out; ids may themselves contain
-      // '|', so parse at the FIRST separator only
+    val tagged = graft.dedup.Dedup.components(taggedEdges)
+    // split the "<level>|" prefix back out; ids may themselves contain
+    // '|', so parse at the FIRST separator only
+    val comp = tagged
       .select(substring_index(col("id"), "|", 1).cast("int").as("level"),
         expr("substring(id, instr(id, '|') + 1)").as("id"),
         expr("substring(component, instr(component, '|') + 1)").as("label"))
@@ -506,12 +482,11 @@ object Density {
     val out = e.select("id")
       .join(dep.join(broadcast(coverDf), Seq("dlevel", "dlabel"))
         .select("id", "cluster"), Seq("id"), "left")
-    // edges/m are localCheckpoints: their blocks persist under the RDD
-    // cache too, and a long session running many ladder clusterings
-    // would accumulate executor storage until ContextCleaner GC —
-    // release them with the plain persists once the output is sealed.
-    graft.core.CacheScope.seal(out,
-      Seq(e, sym, core, edges, m) ++ sharedCore: _*)
+    // edges, m and the component labels are localCheckpoints: a long
+    // session running many ladder clusterings would accumulate their
+    // executor storage until ContextCleaner GC — release them with the
+    // plain persists once the output is sealed.
+    CacheScope.seal(out, Seq(e, sym, core, edges, m, tagged) ++ sharedCore: _*)
   }
 
   /** Minimum spanning forest of a weighted graph by distributed
@@ -562,7 +537,7 @@ object Density {
     // full endpoint vocabulary, so bound that too — a graph of mostly
     // self-loop-only nodes must not slip past the alive-count guard
     if (nNodes > maxDriverRows) {
-      dict.unpersist()
+      CacheScope.release(dict)
       throw new IllegalArgumentException(
         s"boruvkaMst holds one driver array slot per distinct endpoint: " +
           s"$nNodes exceeds maxDriverRows=$maxDriverRows — use the ladder " +
@@ -573,18 +548,19 @@ object Density {
       .join(dict.select(col("id").as("id_a"), col("idx").as("ia")), Seq("id_a"))
       .join(dict.select(col("id").as("id_b"), col("idx").as("ib")), Seq("id_b"))
       .select(col("ia"), col("ib"), col("_w"))
-    val (ma, mb, mw) =
-      try boruvkaMstIdx(intEdges, nNodes, maxDriverRows, "boruvkaMst")
-      catch { case t: Throwable => dict.unpersist(); throw t }
     // decode idx → id with a TRANSIENT driver array (the dict collected
     // once, by construction positionally idx-ordered after the sort) so
     // the returned frame stays driver-local like the pre-idx form — no
     // lingering lineage on the persisted dict, nothing retained beyond
     // the (n−1)-row result itself
     val ids = new Array[String](nNodes.toInt)
-    driverEach(dict, nNodes, skipPersist = true)(
-      r => ids(r.getInt(1)) = r.getString(0))
-    dict.unpersist()
+    val (ma, mb, mw) =
+      try {
+        val forest = boruvkaMstIdx(intEdges, nNodes, maxDriverRows, "boruvkaMst")
+        driverEach(dict, nNodes, skipPersist = true)(
+          r => ids(r.getInt(1)) = r.getString(0))
+        forest
+      } finally CacheScope.release(dict)
     val out = ma.indices.map(i => (ids(ma(i)), ids(mb(i)), mw(i)))
     if (out.isEmpty) Seq.empty[(String, String, Double)].toDF("a", "b", "w")
     else out.toDF("a", "b", "w")
@@ -647,7 +623,6 @@ object Density {
       guardWho: String): (Array[Int], Array[Int], Array[Double]) = {
     val spark = intEdges.sparkSession
     import spark.implicits._
-    val release = org.apache.spark.sql.graft.ListenerBridge.releaseCheckpointBlocks _
     val canon = intEdges.filter(col("ia") =!= col("ib")).select(
       least(col("ia"), col("ib")).as("na"),
       greatest(col("ia"), col("ib")).as("nb"),
@@ -660,7 +635,7 @@ object Density {
       .localCheckpoint()
     var alive = cur.select(col("ca")).distinct().count() // live components
     if (alive > maxDriverRows) {
-      release(cur) // the guard path must not strand the checkpoint blocks
+      CacheScope.release(cur) // the guard path must not strand the checkpoint blocks
       throw new IllegalArgumentException(
         s"$guardWho holds one driver row per node in its first round: " +
           s"$alive exceeds maxDriverRows=$maxDriverRows — use the ladder " +
@@ -745,14 +720,14 @@ object Density {
             .select(col("ca"), col("cb"), col("m.na").as("na"),
               col("m.nb").as("nb"), col("m._w").as("_w"))
             .localCheckpoint()
-          release(cur)
+          CacheScope.release(cur)
           cur = newCur
         }
       }
       rounds += 1
     }
+    CacheScope.release(cur)
     require(done, s"$guardWho did not converge in 64 rounds")
-    release(cur)
     (outA.result(), outB.result(), outW.result())
   }
 
@@ -805,7 +780,7 @@ object Density {
     val (e, sym, core, edges) = coreReachEdges(emb, minPts, lshPlanes, planeDims)
     val nCore = core.count()
     if (nCore > maxDriverRows) {
-      e.unpersist(); sym.unpersist(); core.unpersist() // no stranded caches on the guard path
+      CacheScope.release(e, sym, core) // no stranded caches on the guard path
       throw new IllegalArgumentException(
         s"hdbscanExact holds one driver row per core point: $nCore exceeds " +
           s"maxDriverRows=$maxDriverRows — use hdbscanFlatCut/auto (the " +
@@ -824,9 +799,7 @@ object Density {
       .select(col("ia"), col("ib"), col("reach").as("_w"))
     val (ma, mb, mw) =
       try boruvkaMstIdx(intEdges, nCore, maxDriverRows, "hdbscanExact")
-      catch { case t: Throwable =>
-        dict.unpersist(); e.unpersist(); sym.unpersist(); core.unpersist()
-        throw t }
+      catch { case t: Throwable => CacheScope.release(dict, e, sym, core); throw t }
     val coreDist = fillCoreDist(core, dict, nCore)
     val (lp, ll, lb) = exactDendrogramIdx(coreDist, ma, mb, mw, minClusterSize)
     val spark = emb.sparkSession
@@ -836,7 +809,7 @@ object Density {
       .select(col("id"),
         concat(col("lvl").cast("string"), lit(":"), col("_lid")).as("cluster"))
     val out = e.select("id").join(labDf, Seq("id"), "left")
-    graft.core.CacheScope.seal(out, e, sym, core, dict)
+    CacheScope.seal(out, e, sym, core, dict)
   }
 
   /** The complete eps ladder of `emb`'s mutual-reachability hierarchy —
@@ -851,20 +824,21 @@ object Density {
     val (e, sym, core, edges) = coreReachEdges(emb, minPts, lshPlanes, planeDims)
     val nCore = core.count()
     if (nCore > maxDriverRows) {
-      e.unpersist(); sym.unpersist(); core.unpersist() // no stranded caches on the guard path
+      CacheScope.release(e, sym, core) // no stranded caches on the guard path
       throw new IllegalArgumentException(
         s"completeLadder collects one distinct radius per core point plus " +
           s"the MST: $nCore exceeds maxDriverRows=$maxDriverRows — use " +
           "autoEpsLadder (levels-sized) at this scale")
     }
-    val mst = boruvkaMst(edges, maxDriverRows = maxDriverRows)
-    val radii = (mst.select(col("w").as("r"))
-      .unionByName(core.select(col("_c").as("r"))))
-      .filter(col("r") > 0).distinct().orderBy(col("r").desc)
-      .collect().map(_.getDouble(0)).toSeq
-    e.unpersist(); sym.unpersist(); core.unpersist()
-    org.apache.spark.sql.graft.ListenerBridge.releaseCheckpointBlocks(mst)
-    radii
+    try {
+      // the forest is a driver-local frame (see boruvkaMst): nothing of
+      // it to release
+      val mst = boruvkaMst(edges, maxDriverRows = maxDriverRows)
+      (mst.select(col("w").as("r"))
+        .unionByName(core.select(col("_c").as("r"))))
+        .filter(col("r") > 0).distinct().orderBy(col("r").desc)
+        .collect().map(_.getDouble(0)).toSeq
+    } finally CacheScope.release(e, sym, core)
   }
 
   /** Shared UNCAPPED core-distance + mutual-reachability construction

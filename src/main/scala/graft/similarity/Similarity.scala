@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.CacheScope
 import graft.functions.Num
 import graft.functions.Vectors
 
@@ -233,7 +234,9 @@ object Similarity {
     * joins, all keyed on candidate ids — cost is O(candidates), the
     * stream is persisted because four subplans consume it (bounded:
     * candidate-stream-sized) and released as soon as the top-k is
-    * materialized (see [[finishRerank]] — every rerank here is eager).
+    * materialized (every rerank here is eager: [[graft.core.CacheScope]]
+    * seals the ≤ k rows per left id, so a long-lived session does not
+    * keep one cached candidate stream per call).
     * Output keeps raw `cos` alongside `csls`
     * and re-ranks per left id by csls (tie-break right id). */
   def cslsRerank(candidates: DataFrame, k: Int, scaleK: Int): DataFrame = {
@@ -250,23 +253,8 @@ object Similarity {
       .select(col("left_id"), col("right_id"), col("cos"),
         (lit(2.0) * col("cos") - col("_rq") - col("_rt")).as("csls"))
     val w = Window.partitionBy("left_id").orderBy(col("csls").desc, col("right_id").asc)
-    finishRerank(scored.withColumn("rank", row_number().over(w))
+    CacheScope.seal(scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k), cand)
-  }
-
-  /** Shared tail of every rerank: eagerly materialize the (output-sized:
-    * ≤ k rows per left id) reranked top-k via localCheckpoint, then
-    * release the candidate cache NOW — returning a lazy plan over a
-    * persisted frame leaked one cached candidate stream per rerank call
-    * in a long-lived session (e.g. via
-    * [[graft.blockers.EmbeddingKnnBlocker]]). Same pattern as
-    * [[graft.dedup.Dedup.minHashNearDupPairs]]: checkpoint blocks die
-    * with the returned frame; cached frames lived until ContextCleaner
-    * noticed. */
-  private def finishRerank(reranked: DataFrame, cand: DataFrame): DataFrame = {
-    val out = reranked.localCheckpoint()
-    cand.unpersist()
-    out
   }
 
   /** NICDM hubness reduction (non-iterative contextual dissimilarity
@@ -305,7 +293,7 @@ object Similarity {
       else col("nicdm")
     val w = Window.partitionBy("left_id")
       .orderBy(rankKey.asc, col("right_id").asc)
-    finishRerank(scored.withColumn("rank", row_number().over(w))
+    CacheScope.seal(scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k), cand)
   }
 
@@ -351,7 +339,7 @@ object Similarity {
       if (rankScale >= 0) Num.stableRound(col("ls"), rankScale) else col("ls")
     val w = Window.partitionBy("left_id")
       .orderBy(rankKey.desc, col("right_id").asc)
-    finishRerank(scored.withColumn("rank", row_number().over(w))
+    CacheScope.seal(scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k), cand)
   }
 
@@ -368,8 +356,16 @@ object Similarity {
     * MP immune to heterogeneous density. Computed with one `rank()` per
     * side: ascending-cos rank − 1 = #strictly-farther (ties collapse,
     * exactly the empirical P(D > d)). Higher MP = closer; re-ranks per
-    * left id by descending `mp`, ties on raw cos then right id. */
-  def mutualProximityRerank(candidates: DataFrame, k: Int): DataFrame = {
+    * left id by descending `mp`, ties on raw cos then right id.
+    *
+    * MP is a product of two small rationals, so EXACT ties between pairs
+    * are common (3/10·1 = 1/2·6/10); the floating-point product only
+    * breaks them by ulp noise, which depends on operation order. With
+    * `rankScale >= 0` the order key is `mp` rounded to that many decimals
+    * (the [[nicdmRerank]] knob), so an exact tie falls through to cos as
+    * documented instead of to the last ulp. */
+  def mutualProximityRerank(candidates: DataFrame, k: Int,
+                            rankScale: Int = -1): DataFrame = {
     val cand = candidates.select("left_id", "right_id", "cos").persist()
     val scored = cand
       .withColumn("_fq",
@@ -382,9 +378,11 @@ object Similarity {
           count(lit(1)).over(Window.partitionBy("right_id")))
       .select(col("left_id"), col("right_id"), col("cos"),
         (col("_fq") * col("_ft")).as("mp"))
+    val rankKey =
+      if (rankScale >= 0) Num.stableRound(col("mp"), rankScale) else col("mp")
     val w = Window.partitionBy("left_id")
-      .orderBy(col("mp").desc, col("cos").desc, col("right_id").asc)
-    finishRerank(scored.withColumn("rank", row_number().over(w))
+      .orderBy(rankKey.desc, col("cos").desc, col("right_id").asc)
+    CacheScope.seal(scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k), cand)
   }
 
@@ -446,7 +444,7 @@ object Similarity {
       if (rankScale >= 0) Num.stableRound(col("dsl"), rankScale) else col("dsl")
     val w = Window.partitionBy("left_id")
       .orderBy(rankKey.asc, col("right_id").asc)
-    finishRerank(scored.withColumn("rank", row_number().over(w))
+    CacheScope.seal(scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k), cand)
   }
 
@@ -679,7 +677,7 @@ object Similarity {
     val win = Window.partitionBy("left_id").orderBy(rankKey.desc, col("right_id").asc)
     // top-k is output-sized: materialize it and release the member cache
     // (CacheScope contract — the persist must not outlive the call)
-    graft.core.CacheScope.seal(
+    CacheScope.seal(
       scored.withColumn("rank", row_number().over(win)).filter(col("rank") <= k),
       members)
   }

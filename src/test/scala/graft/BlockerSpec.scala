@@ -139,6 +139,23 @@ class BlockerSpec extends SparkSpec {
     assert(cm.forall { case (k, (_, rs)) => rs.subsetOf(um(k)._2) })
   }
 
+  test("Blocker.dropHotKeys drops a hot key from both sides; cap <= 0 is a no-op") {
+    import spark.implicits._
+    // key h: 3 left x 2 right = 6 pairs; key c: 1 x 1
+    val l = Seq(("a1", "h"), ("a2", "h"), ("a3", "h"), ("a1", "c")).toDF("id", "key")
+    val r = Seq(("b1", "h"), ("b2", "h"), ("b1", "c")).toDF("id", "key")
+    for (cap <- Seq(0L, -1L)) {
+      val (l0, r0) = Blocker.dropHotKeys(l, r, "key", cap)
+      assert((l0 eq l) && (r0 eq r), s"cap $cap must hand back the inputs")
+    }
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select("key").distinct().as[String].collect().toSet
+    val (l5, r5) = Blocker.dropHotKeys(l, r, "key", 5L)
+    assert(keys(l5) == Set("c") && keys(r5) == Set("c"))
+    val (l6, r6) = Blocker.dropHotKeys(l, r, "key", 6L) // nl * nr = 6 is within
+    assert(keys(l6) == Set("h", "c") && keys(r6) == Set("h", "c"))
+  }
+
   test("BlockingDataset.fromParquet round-trips a bundle") {
     import graft.core.BlockingDataset
     import spark.implicits._

@@ -355,6 +355,24 @@ class SimilaritySpec extends SparkSpec {
       && mp(("l2", "r2"))._1 == 2)
   }
 
+  test("mutualProximityRerank rankScale breaks an exact MP tie on cos, not on the last ulp") {
+    // q's five candidates by ascending cos: f0 f1 x1 x2 f3. x1's reverse
+    // view holds 2 lefts (q the closer), x2's holds 3 (q in the middle):
+    // MP(q,x1) = 2/5·1/2 and MP(q,x2) = 3/5·1/3 are both exactly 1/5, but
+    // the double products differ in the last ulp (0.2 vs 0.19999…98)
+    val cand = Seq(
+      ("q", "f0", 0.1), ("q", "f1", 0.2), ("q", "x1", 0.3), ("q", "x2", 0.4),
+      ("q", "f3", 0.5), ("z1", "x1", 0.05), ("z2", "x2", 0.05), ("z3", "x2", 0.9))
+      .toDF("left_id", "right_id", "cos")
+    def top(rankScale: Int) = graft.similarity.Similarity
+      .mutualProximityRerank(cand, 2, rankScale)
+      .filter(col("left_id") === "q").orderBy("rank")
+      .select("right_id").as[String].collect().toSeq
+    // raw order: the ulp decides; rounded: the tie falls to cos (x2 first)
+    assert(top(-1) == Seq("x1", "x2"))
+    assert(top(6) == Seq("x2", "x1"))
+  }
+
   test("dslRerank matches hand-computed DisSimLocal scores") {
     // collinear fixture: cos values only steer the centroid windows, the
     // scores below are pure Euclidean arithmetic on the vectors
