@@ -86,6 +86,11 @@ object StreamRehearsal {
     }
   }
 
+  /** Starts `ds` into a noop sink through [[graft.streaming.Queries.start]]. */
+  private def startNoop(ds: Dataset[_])(implicit spark: SparkSession): StreamingQuery =
+    graft.streaming.Queries.start(spark)(
+      ds.writeStream.format("noop").outputMode("append").start())
+
   private def report(name: String, rows: Seq[BatchRow]): String = {
     println(s"\n### $name (output rows: ${rows.map(_.outRows).sum})\n")
     println("| batch | input rows | state rows total | output rows | trigger ms |")
@@ -183,10 +188,8 @@ object StreamRehearsal {
 
     // ---- streamMinHashNearDup -------------------------------------------
     val memN = MemoryStream[StreamingOps.DocRecord]
-    val ndQ = StreamingOps.streamMinHashNearDup(
-        memN.toDS(), 16, 4, 0.375, maxIdsPerBucket = cap)
-      .writeStream.format("noop")
-      .outputMode("append").start()
+    val ndQ = startNoop(StreamingOps.streamMinHashNearDup(
+        memN.toDS(), 16, 4, 0.375, maxIdsPerBucket = cap))
     val ndRows = drive(memN, ndQ, docBatches)
     ndQ.stop()
     val j1 = report("stream_neardup", ndRows)
@@ -203,10 +206,8 @@ object StreamRehearsal {
       case (b, r) if b == w => r
     })
     val memT = MemoryStream[StreamingOps.TokenRecord]
-    val tkQ = StreamingOps.incrementalTokenBlocks(
-        memT.toDS(), maxIdsPerSide = cap)
-      .writeStream.format("noop")
-      .outputMode("append").start()
+    val tkQ = startNoop(StreamingOps.incrementalTokenBlocks(
+        memT.toDS(), maxIdsPerSide = cap))
     val tkRows = drive(memT, tkQ, tokBatches)
     tkQ.stop()
     val j2 = report("incremental_token_pairs", tkRows)
@@ -222,10 +223,9 @@ object StreamRehearsal {
     val waveBase = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
     def waveTs(w: Int) = new java.sql.Timestamp(waveBase + w.toLong * 3600000L)
     val memNT = MemoryStream[StreamingOps.TimedDocRecord]
-    val ndtQ = StreamingOps.streamMinHashNearDupWithTtl(
+    val ndtQ = startNoop(StreamingOps.streamMinHashNearDupWithTtl(
         memNT.toDS(), 16, 4, 0.375, maxIdsPerBucket = cap,
-        ttl = "150 minutes", watermark = "0 seconds")
-      .writeStream.format("noop").outputMode("append").start()
+        ttl = "150 minutes", watermark = "0 seconds"))
     val docBatchesT = docBatches.zipWithIndex.map { case (b, w) =>
       b.map(d => StreamingOps.TimedDocRecord(d.id, d.tokens, waveTs(w)))
     }
@@ -234,10 +234,9 @@ object StreamRehearsal {
     val j1t = report("stream_neardup_ttl", ndtRows)
 
     val memTT = MemoryStream[StreamingOps.TimedTokenRecord]
-    val tktQ = StreamingOps.incrementalTokenBlocksWithTtl(
+    val tktQ = startNoop(StreamingOps.incrementalTokenBlocksWithTtl(
         memTT.toDS(), maxIdsPerSide = cap,
-        ttl = "150 minutes", watermark = "0 seconds")
-      .writeStream.format("noop").outputMode("append").start()
+        ttl = "150 minutes", watermark = "0 seconds"))
     val tokBatchesT = tokBatches.zipWithIndex.map { case (b, w) =>
       b.map(r => StreamingOps.TimedTokenRecord(r.key, r.side, r.id, waveTs(w)))
     }
@@ -267,9 +266,7 @@ object StreamRehearsal {
     val evBatches = evRecords.grouped(
       math.max(1, (evRecords.size + nBatches - 1) / nBatches)).toSeq
     val memF = MemoryStream[StreamingOps.FunnelEvent]
-    val fQ = StreamingOps.streamFunnel(memF.toDS(), stages.size, 7 * 86400L)
-      .writeStream.format("noop")
-      .outputMode("append").start()
+    val fQ = startNoop(StreamingOps.streamFunnel(memF.toDS(), stages.size, 7 * 86400L))
     val fRows = drive(memF, fQ, evBatches)
     fQ.stop()
     val j3 = report("stream_funnel", fRows)
@@ -295,10 +292,9 @@ object StreamRehearsal {
       case (b, r) if b == w => r
     })
     val memC = MemoryStream[(String, String)]
-    val cQ = graft.streaming.StreamingCuration.verdicts(
+    val cQ = startNoop(graft.streaming.StreamingCuration.verdicts(
         memC.toDF().toDF("doc_id", "text"), curBench,
-        allowedLangs = Seq("en", "de", "fr"), contamN = 4)
-      .writeStream.format("noop").outputMode("append").start()
+        allowedLangs = Seq("en", "de", "fr"), contamN = 4))
     val cRows = drive(memC, cQ, curBatches)
     cQ.stop()
     val j4 = report("stream_curation", cRows)
@@ -312,11 +308,10 @@ object StreamRehearsal {
     // at ~3 waves' distinct content while output stays per-wave flat —
     // the composed-pipeline analog of the *_ttl operator rows above.
     val memCT = MemoryStream[(String, String, java.sql.Timestamp)]
-    val ctQ = graft.streaming.StreamingCuration.verdicts(
+    val ctQ = startNoop(graft.streaming.StreamingCuration.verdicts(
         memCT.toDF().toDF("doc_id", "text", "ts"), curBench,
         allowedLangs = Seq("en", "de", "fr"), contamN = 4,
-        stateTtl = Some("150 minutes"), tsCol = "ts")
-      .writeStream.format("noop").outputMode("append").start()
+        stateTtl = Some("150 minutes"), tsCol = "ts"))
     val curBatchesT = (0 until nBatches).map { w =>
       curRecords.collect { case (b, (id, text)) if b == w =>
         (id, s"$text wavesalt$w", waveTs(w))
@@ -349,9 +344,8 @@ object StreamRehearsal {
       annBase.map { case (id, v) => AnnQuery(id * nBatches + w, v) }
     }
     val memA = MemoryStream[AnnQuery]
-    val aQ = graft.streaming.AnnServing.serveIvfPq(
-        memA.toDF(), annIndex, 3, rankScale = 6)
-      .writeStream.format("noop").outputMode("append").start()
+    val aQ = startNoop(graft.streaming.AnnServing.serveIvfPq(
+        memA.toDF(), annIndex, 3, rankScale = 6))
     val aRows = drive(memA, aQ, annBatches)
     aQ.stop()
     val j5 = report("stream_ann_serve", aRows)

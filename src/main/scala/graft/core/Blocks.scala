@@ -100,60 +100,62 @@ final case class Blocks(df: DataFrame) {
       .withColumn("pid", spark_partition_id())
     val wIn = Window.partitionBy(col("pid")).orderBy(col("card"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    // persist: `local` feeds two actions (offset collect + threshold scan),
-    // and pid assignments must be IDENTICAL in both — AQE may re-plan the
-    // range exchange between recomputations otherwise
     val local = parts
       .withColumn("l_card", sum(col("card")).over(wIn))
       .withColumn("l_asg", sum(col("assignments")).over(wIn))
-      .persist()
-    // phase 2: prefix offsets per partition. The per-partition aggregate is
-    // ≤ #shuffle-partitions rows — bounded by config, not data — so the
-    // prefix sum runs on the driver (the same trick RDD.zipWithIndex uses)
-    // and the offsets go back as a broadcast join. No unpartitioned window
-    // anywhere in the plan.
-    val perPart = local.groupBy(col("pid"))
-      .agg(max(col("l_card")).as("p_card"), max(col("l_asg")).as("p_asg"))
-      .collect().sortBy(_.getInt(0))
-    val offRows = {
-      var c = 0L; var a = 0L
-      perPart.map { r =>
-        val row = (r.getInt(0), c, a)
-        c += r.getLong(1); a += r.getLong(2)
-        row
-      }.toSeq
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offsets = offRows.toDF("pid", "off_card", "off_asg")
-    val cum = local.join(broadcast(offsets), Seq("pid"))
-      .withColumn("i_card", col("l_card") + col("off_card"))
-      // deliberately functions.round (BigDecimal HALF_UP), NOT
-      // Num.stableRound: the 2-decimal cc plateau rule mirrors pandas
-      // round-half-up semantics (reference blocks.py duplicated(keep=
-      // "first")), property-tested against a HALF_UP driver reference —
-      // the oracle SQL rounds the same way on both sides of w3_purge
-      .withColumn("cc", round(
-        (col("l_asg") + col("off_asg")).cast("double") / (col("l_card") + col("off_card")),
-        roundCc))
-      .persist()
     try {
-      cum.count() // materialize before dropping the upstream cache
-      // duplicated(keep="first"): flagged iff an earlier (smaller-card) row
-      // carries the same rounded cc; threshold = smallest flagged i_card
-      val flagged = cum
-        .withColumn("first_card", min(col("card")).over(Window.partitionBy(col("cc"))))
-        .filter(col("card") > col("first_card"))
-      val thrRow = flagged.agg(min(col("i_card"))).head()
-      val maxRow = cum.agg(max(col("i_card"))).head()
-      val threshold: Long =
-        if (!thrRow.isNullAt(0)) thrRow.getLong(0)
-        // no flagged row → keep everything; empty input → max is NULL,
-        // any threshold works (nothing to filter)
-        else if (!maxRow.isNullAt(0)) maxRow.getLong(0)
-        else 0L
-      Blocks(df.filter(size(col(LeftCol)).cast("long") * size(col(RightCol)) <= threshold))
-    } finally CacheScope.release(cum, local)
+      // persist: `local` feeds two actions (offset collect + threshold scan),
+      // and pid assignments must be IDENTICAL in both — AQE may re-plan the
+      // range exchange between recomputations otherwise
+      local.persist()
+      // phase 2: prefix offsets per partition. The per-partition aggregate is
+      // ≤ #shuffle-partitions rows — bounded by config, not data — so the
+      // prefix sum runs on the driver (the same trick RDD.zipWithIndex uses)
+      // and the offsets go back as a broadcast join. No unpartitioned window
+      // anywhere in the plan.
+      val perPart = local.groupBy(col("pid"))
+        .agg(max(col("l_card")).as("p_card"), max(col("l_asg")).as("p_asg"))
+        .collect().sortBy(_.getInt(0))
+      val offRows = {
+        var c = 0L; var a = 0L
+        perPart.map { r =>
+          val row = (r.getInt(0), c, a)
+          c += r.getLong(1); a += r.getLong(2)
+          row
+        }.toSeq
+      }
+      val spark = df.sparkSession
+      import spark.implicits._
+      val offsets = offRows.toDF("pid", "off_card", "off_asg")
+      val cum = local.join(broadcast(offsets), Seq("pid"))
+        .withColumn("i_card", col("l_card") + col("off_card"))
+        // deliberately functions.round (BigDecimal HALF_UP), NOT
+        // Num.stableRound: the 2-decimal cc plateau rule mirrors pandas
+        // round-half-up semantics (reference blocks.py duplicated(keep=
+        // "first")), property-tested against a HALF_UP driver reference —
+        // the oracle SQL rounds the same way on both sides of w3_purge
+        .withColumn("cc", round(
+          (col("l_asg") + col("off_asg")).cast("double") / (col("l_card") + col("off_card")),
+          roundCc))
+        .persist()
+      try {
+        cum.count() // materialize before dropping the upstream cache
+        // duplicated(keep="first"): flagged iff an earlier (smaller-card) row
+        // carries the same rounded cc; threshold = smallest flagged i_card
+        val flagged = cum
+          .withColumn("first_card", min(col("card")).over(Window.partitionBy(col("cc"))))
+          .filter(col("card") > col("first_card"))
+        val thrRow = flagged.agg(min(col("i_card"))).head()
+        val maxRow = cum.agg(max(col("i_card"))).head()
+        val threshold: Long =
+          if (!thrRow.isNullAt(0)) thrRow.getLong(0)
+          // no flagged row → keep everything; empty input → max is NULL,
+          // any threshold works (nothing to filter)
+          else if (!maxRow.isNullAt(0)) maxRow.getLong(0)
+          else 0L
+        Blocks(df.filter(size(col(LeftCol)).cast("long") * size(col(RightCol)) <= threshold))
+      } finally CacheScope.release(cum)
+    } finally CacheScope.release(local)
   }
 
   /** Drop blocks with more than `maxComparisons` candidate pairs —

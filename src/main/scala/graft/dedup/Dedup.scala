@@ -975,9 +975,9 @@ object Dedup {
         .otherwise(array().cast("array<string>"))
     }
 
-  /** The distinct benchmark gram set [[decontaminate]] broadcasts —
-    * exposed so streaming curation can snapshot the SAME set at plan
-    * time (eval-suite-sized by contract). */
+  /** The distinct benchmark gram set [[decontaminate]] broadcasts
+    * (eval-suite-sized by contract). Curation's front cuts the same set
+    * on the driver (`WindowHitCount.grams`), spec-asserted equal. */
   def benchmarkGrams(benchmark: DataFrame, idCol: String, textCol: String,
                      n: Int): DataFrame =
     tokenWindows(orderedTokens(benchmark, idCol, textCol), n)
@@ -1112,9 +1112,7 @@ object Dedup {
                     idCol: String, textCol: String, n: Int): DataFrame = {
     val corpusWins =
       tokenWindows(orderedTokens(corpus, idCol, textCol), n)
-    val benchGrams = broadcast(
-      tokenWindows(orderedTokens(benchmark, idCol, textCol), n)
-        .select("gram").distinct())
+    val benchGrams = broadcast(benchmarkGrams(benchmark, idCol, textCol, n))
     val hits = corpusWins.join(benchGrams, Seq("gram"), "left_semi")
       .groupBy("id").agg(countDistinct(col("gram")).as("n_hits"))
     orderedTokens(corpus, idCol, textCol).select(col("id"))

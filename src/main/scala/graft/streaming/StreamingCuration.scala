@@ -39,6 +39,13 @@ import graft.text.Curation
   * expire once the watermark passes the TTL beyond their last
   * sighting, bounding state by one horizon's distinct content, with
   * the re-admit divergence stated on [[verdicts]].
+  *
+  * Resumed runs: the Curate front door starts this query through
+  * [[Queries.start]], so a run resumed in the same driver (one per
+  * arriving wave) reuses the code earlier runs compiled instead of
+  * recompiling it under a new executor class loader. Guard: a session
+  * holding session-scoped artifacts keeps artifact isolation, and its
+  * runs recompile.
   */
 object StreamingCuration {
 

@@ -1359,6 +1359,10 @@ object StreamingOps {
         ss.conf.set(k, v)
     }
     ss.conf.set("spark.sql.shuffle.partitions", parts)
+    // the replay's tasks share the executor's default class loader and so
+    // its compiled code ([[Queries]]); `ss` is new, holds no artifacts, and
+    // no caller sees it, so nothing is restored
+    ss.conf.set(Queries.Isolation, false)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
     val mem = MemoryStream[I]
     val sq = op(mem.toDS()).writeStream.format("memory")

@@ -93,33 +93,38 @@ object Curate {
       // empty benchmark frame = no grams = contamination never fires,
       // without a second code path
       .getOrElse(corpus.limit(0))
-    if (c.stream) {
+    val writtenSchema = if (c.stream) {
       require(c.stateTtl.isEmpty || corpus.columns.contains(c.tsCol),
         s"--state-ttl needs event-time column '${c.tsCol}' in the corpus " +
           s"(name it with --ts); found: ${corpus.columns.mkString(", ")}")
       val src = spark.readStream.schema(corpus.schema).parquet(c.corpus)
-      val q = graft.streaming.StreamingCuration.verdicts(
+      // verdicts runs its benchmark-gram collect on this session; only the
+      // start goes through Queries.start
+      val v = graft.streaming.StreamingCuration.verdicts(
           src, bench, c.idCol, c.textCol,
           allowedLangs = c.langs, contamN = c.contamN, minWords = c.minWords,
           stateTtl = c.stateTtl, tsCol = c.tsCol, watermark = c.watermark)(spark)
-        .writeStream.format("parquet")
+      graft.streaming.Queries.start(spark)(v.writeStream.format("parquet")
         .option("path", s"${c.out}/verdicts")
         .option("checkpointLocation", s"${c.out}/_checkpoint")
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .start()).awaitTermination()
+      v.schema
     } else {
       val v = Curation.verdicts(corpus, bench, c.idCol, c.textCol,
         allowedLangs = c.langs, contamN = c.contamN, minWords = c.minWords)
       v.write.mode("overwrite").parquet(s"${c.out}/verdicts")
+      v.schema
     }
-    val verdicts = spark.read.parquet(s"${c.out}/verdicts")
+    // the written frame's schema: no schema-inference job on the read-back
+    val verdicts = spark.read.schema(writtenSchema).parquet(s"${c.out}/verdicts")
     val grouped = c.groupCol.filter(corpus.columns.contains) match {
       case Some(g) =>
         val vg = verdicts.join(corpus.select(col(c.idCol).cast("string").as("id"),
           col(g)), Seq("id"))
-        Curation.funnel(vg, Seq(g)).orderBy(g)
+        // a few group rows: one sorted partition, no range-sampling job
+        Curation.funnel(vg, Seq(g)).coalesce(1).sortWithinPartitions(g)
       case None => Curation.funnel(verdicts)
     }
     grouped.write.mode("overwrite").parquet(s"${c.out}/funnel")

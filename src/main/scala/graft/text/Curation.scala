@@ -80,22 +80,25 @@ object Curation {
     * Contamination snapshots the benchmark gram set (eval-suite-sized,
     * the [[Dedup.decontaminate]] broadcast contract) once per call into
     * the codegen'd [[org.apache.spark.sql.graft.WindowHitCount]] kernel:
-    * the exact set rides the plan as a reference object and the
-    * window-slide-probe loop is one compiled static call per row. With
-    * `LexiconArgmax` (lang), `WsTokenStats` (quality) and `TokenFilter`
-    * (dup key), the front holds no interpreted higher-order function. */
+    * one narrow job collects the benchmark's lowered, trimmed texts and
+    * the driver cuts their windows with the kernel's own walk, so the
+    * set equals [[Dedup.benchmarkGrams]]. The exact set rides the plan
+    * as a reference object and the window-slide-probe loop is one
+    * compiled static call per row. With `LexiconArgmax` (lang),
+    * `WsTokenStats` (quality) and `TokenFilter` (dup key), the front
+    * holds no interpreted higher-order function. */
   private[graft] def front(docs: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, allowedLangs: Seq[String],
       contamN: Int, minWords: Int, maxWords: Int, minMeanLen: Double,
       maxMeanLen: Double, minStopwords: Int, maxDupFrac: Double,
       eventTs: Option[Column] = None): DataFrame = {
-    val grams = Dedup.benchmarkGrams(benchmark, idCol, textCol, contamN)
-      .collect().map(_.getString(0))
     val text = col(textCol)
+    val lowered = trim(lower(coalesce(text, lit(""))))
+    val grams = org.apache.spark.sql.graft.WindowHitCount.grams(
+      benchmark.select(lowered).collect().iterator.map(_.getString(0)), contamN)
     val nHits =
       if (grams.isEmpty) lit(0L) // empty eval suite: nothing to hit
-      else org.apache.spark.sql.graft.TextOps.windowHitCount(
-        trim(lower(coalesce(text, lit("")))), contamN, grams.toSeq)
+      else org.apache.spark.sql.graft.TextOps.windowHitCount(lowered, contamN, grams)
     val carry = Seq("lang", "n_hits", "dup_key") ++ eventTs.map(_ => "ts")
     val base = docs.select(Seq(col(idCol).cast("string").as("id"),
       text.as("_text"), TextAnalysis.langId(text).as("lang"),

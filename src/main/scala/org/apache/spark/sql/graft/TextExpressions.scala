@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Unicode normalization as a codegen'd expression (java.text.Normalizer
   * is JDK-built-in, so no UDF and no external dependency): canonical
@@ -190,17 +191,42 @@ case class WindowHitCount(child: Expression, n: Int, grams: Seq[String])
 }
 
 object WindowHitCount {
-  /** JVM-static shared by generated and interpreted eval. Exact
-    * replay of `windowsArray ∩ grams`: split on `\s+` (leading empty
-    * token kept, like Spark's limit=-1 split on trimmed input), windows
-    * of `n` joined by one space, DISTINCT matches counted. */
+  /** JVM-static shared by generated and interpreted eval: the DISTINCT
+    * windows of `s` ([[windows]]) found in `grams`. */
   def count(s: String, n: Int, grams: java.util.HashSet[String]): Long = {
-    val toks = s.split("\\s+", -1)
-    if (toks.length < n || grams.isEmpty) return 0L
-    val sb = new java.lang.StringBuilder(64)
+    if (grams.isEmpty) return 0L
     var hits: java.util.HashSet[String] = null
-    var p = 0
-    while (p <= toks.length - n) {
+    windows(s, n) { w =>
+      if (grams.contains(w)) {
+        if (hits == null) hits = new java.util.HashSet[String](8)
+        hits.add(w)
+      }
+    }
+    if (hits == null) 0L else hits.size.toLong
+  }
+
+  /** The gram set of lowered, trimmed benchmark `texts`: every distinct
+    * window of every text — [[graft.dedup.Dedup.benchmarkGrams]] cut on
+    * the driver, with the same walk [[count]] probes with. */
+  def grams(texts: Iterator[String], n: Int): Seq[String] = {
+    val out = new java.util.HashSet[String]()
+    texts.foreach(windows(_, n)(w => out.add(w)))
+    out.asScala.toSeq
+  }
+
+  /** Calls `f` on every window of `n` consecutive tokens of `s`, joined
+    * by one space, repeats included: `windowsArray`'s tokens (split on
+    * `\s+` like Spark's `split`, empty tokens dropped like
+    * `Dedup.orderedTokens`). A `\s+` split has empty tokens only at its
+    * ends: text that starts or ends with a separator, or empty text. */
+  private def windows(s: String, n: Int)(f: String => Unit): Unit = {
+    val toks = s.split("\\s+", -1)
+    val lo = if (toks(0).isEmpty) 1 else 0
+    val hi = if (toks.length > lo && toks(toks.length - 1).isEmpty) toks.length - 1
+      else toks.length
+    val sb = new java.lang.StringBuilder(64)
+    var p = lo
+    while (p <= hi - n) {
       sb.setLength(0)
       var i = 0
       while (i < n) {
@@ -208,14 +234,9 @@ object WindowHitCount {
         sb.append(toks(p + i))
         i += 1
       }
-      val w = sb.toString
-      if (grams.contains(w)) {
-        if (hits == null) hits = new java.util.HashSet[String](8)
-        hits.add(w)
-      }
+      f(sb.toString)
       p += 1
     }
-    if (hits == null) 0L else hits.size.toLong
   }
 }
 
