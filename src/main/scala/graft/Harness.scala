@@ -21,7 +21,8 @@ object Harness {
     * `SPARK_GRAFT_MASTER`, else `local[$SPARK_GRAFT_CPUS]` (default 32)
     * with as many shuffle partitions, UTC session time,
     * nanosecond parquet timestamps read as longs (see
-    * `QueryDef.normalizeEventTs`) and log level WARN. `conf` pairs are
+    * `QueryDef.normalizeEventTs`) and log level WARN (ERROR for the
+    * released-checkpoint notices). `conf` pairs are
     * applied last, so a main can override any of these. */
   def session(app: String, conf: (String, String)*): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -33,6 +34,11 @@ object Harness {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     val spark = conf.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // operators free their local checkpoints on purpose (CacheScope), and
+    // Spark warns once per freed checkpoint RDD; the test scope's
+    // log4j2.properties silences the same logger
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     spark
   }
 

@@ -6,7 +6,7 @@ import graft.core.{Blocks, EntityFrame}
 import graft.blockers._
 import graft.eval.Evaluation
 import graft.functions.{Num, Text}
-import QueryDef.{table, duckTokens, stopwordsSqlList}
+import QueryDef.{blockRows, docSides, docTokenSidesSql, duckTokens, nationSides, stopwordsSqlList, table}
 
 /** Scans, projections, core aggregations, and the flagship blocking
   * queries — each with its DuckDB oracle (SURVEY.md §2.1/§2.2/§2.4).
@@ -24,6 +24,26 @@ object CoreQueries {
 
   def docFrame(s: org.apache.spark.sql.SparkSession, dir: String): EntityFrame =
     EntityFrame(table(s, dir, "documents").select(col("doc_id"), col("text")), "documents", "doc_id")
+
+  /** The blocking-metrics replay over `cand(l, r)` and `gold(l, r)`:
+    * pair count, true positives, recall, precision, F1, reduction ratio
+    * and h3r against the customer × supplier space. */
+  private val evalMetricsSql: String =
+    """m AS (SELECT
+      |  (SELECT count(*) FROM cand) AS pairs,
+      |  (SELECT count(*) FROM cand JOIN gold USING (l, r)) AS tp,
+      |  (SELECT count(*) FROM gold) AS gc,
+      |  (SELECT count(*) FROM customer) * (SELECT count(*) FROM supplier) AS total),
+      |x AS (SELECT tp, pairs,
+      |  tp / gc AS rec, tp / pairs AS prec,
+      |  1 - pairs / total AS rr FROM m)
+      |SELECT tp, pairs,
+      |  floor((rec) * 1e6 + 0.5) / 1e6 AS recall,
+      |  floor((prec) * 1e6 + 0.5) / 1e6 AS precision,
+      |  floor((CASE WHEN rec + prec = 0 THEN 0 ELSE 2*rec*prec/(rec+prec) END) * 1e6 + 0.5) / 1e6 AS f_measure,
+      |  floor((rr) * 1e6 + 0.5) / 1e6 AS reduction_ratio,
+      |  floor((CASE WHEN rr + rec = 0 THEN 0 ELSE 2*rr*rec/(rr+rec) END) * 1e6 + 0.5) / 1e6 AS h3r
+      |FROM x""".stripMargin
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -170,21 +190,7 @@ object CoreQueries {
            |gold AS (SELECT 'http://src/e'||cast(s_suppkey AS varchar) AS l,
            |                'http://tgt/e'||cast(s_suppkey AS varchar) AS r
            |         FROM supplier),
-           |m AS (SELECT
-           |  (SELECT count(*) FROM cand) AS pairs,
-           |  (SELECT count(*) FROM cand JOIN gold USING (l, r)) AS tp,
-           |  (SELECT count(*) FROM gold) AS gc,
-           |  (SELECT count(*) FROM customer) * (SELECT count(*) FROM supplier) AS total),
-           |x AS (SELECT tp, pairs,
-           |  tp / gc AS rec, tp / pairs AS prec,
-           |  1 - pairs / total AS rr FROM m)
-           |SELECT tp, pairs,
-           |  floor((rec) * 1e6 + 0.5) / 1e6 AS recall,
-           |  floor((prec) * 1e6 + 0.5) / 1e6 AS precision,
-           |  floor((CASE WHEN rec + prec = 0 THEN 0 ELSE 2*rec*prec/(rec+prec) END) * 1e6 + 0.5) / 1e6 AS f_measure,
-           |  floor((rr) * 1e6 + 0.5) / 1e6 AS reduction_ratio,
-           |  floor((CASE WHEN rr + rec = 0 THEN 0 ELSE 2*rr*rec/(rr+rec) END) * 1e6 + 0.5) / 1e6 AS h3r
-           |FROM x""".stripMargin
+           |$evalMetricsSql""".stripMargin
       },
       api = "Rdf.loadOaei / TokenBlocker / Evaluation",
       desc = "Raw OAEI bundle end-to-end: source/target N-Triples + Alignment reference.xml built from customer/supplier, loaded through the format sniff, token-blocked, and J7/A8-evaluated; oracle recomputes blocking+metrics straight from the tables."),
@@ -296,10 +302,7 @@ object CoreQueries {
     // ---- J1/A1: standard blocking customer×supplier on nationkey --------
     "j1_standard_blocker" -> QueryDef(
       (s, dir) => {
-        val l = table(s, dir, "customer")
-          .select(col("c_custkey").as("id"), col("c_nationkey").cast("string").as("key"))
-        val r = table(s, dir, "supplier")
-          .select(col("s_suppkey").as("id"), col("s_nationkey").cast("string").as("key"))
+        val (l, r) = nationSides(s, dir)
         val b = Blocker.blockJoin(l, r)
         b.df.select(
           col(Blocks.KeyCol),
@@ -340,10 +343,7 @@ object CoreQueries {
     // storage contract: a bit-identical detour, never a transformation.
     "s4_blocks_roundtrip" -> QueryDef(
       (s, dir) => {
-        val l = table(s, dir, "customer")
-          .select(col("c_custkey").as("id"), col("c_nationkey").cast("string").as("key"))
-        val r = table(s, dir, "supplier")
-          .select(col("s_suppkey").as("id"), col("s_nationkey").cast("string").as("key"))
+        val (l, r) = nationSides(s, dir)
         val base = Blocker.blockJoin(l, r)
         val out = java.nio.file.Files
           .createTempDirectory("graft_blocks_rt_").toString
@@ -388,22 +388,10 @@ object CoreQueries {
     // ---- flagship: token blocking, documents split even/odd --------------
     "tb_token_blocker" -> QueryDef(
       (s, dir) => {
-        val docs = table(s, dir, "documents")
-        val lf = EntityFrame(docs.filter(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), col("text")), "docs_even", "doc_id")
-        val rf = EntityFrame(docs.filter(col("doc_id") % 2 === 1)
-          .select(col("doc_id"), col("text")), "docs_odd", "doc_id")
-        val b = TokenBlocker().assign(lf, rf)
-        b.df.select(
-          col(Blocks.KeyCol),
-          array_join(col(Blocks.LeftCol), ",").as("left_ids"),
-          array_join(col(Blocks.RightCol), ",").as("right_ids"))
-          .orderBy(col(Blocks.KeyCol))
+        val (lf, rf) = docSides(table(s, dir, "documents"))
+        blockRows(TokenBlocker().assign(lf, rf))
       },
-      Some(s"""WITH lt AS (SELECT DISTINCT * FROM (
-              |${duckTokens("cast(doc_id AS varchar)", "text", "(SELECT * FROM documents WHERE doc_id % 2 = 0)")})),
-              |rt AS (SELECT DISTINCT * FROM (
-              |${duckTokens("cast(doc_id AS varchar)", "text", "(SELECT * FROM documents WHERE doc_id % 2 = 1)")})),
+      Some(s"""$docTokenSidesSql
               |lb AS (SELECT key, array_to_string(list_sort(list(id)), ',') AS left_ids FROM lt GROUP BY key),
               |rb AS (SELECT key, array_to_string(list_sort(list(id)), ',') AS right_ids FROM rt GROUP BY key)
               |SELECT key AS block_key, left_ids, right_ids
@@ -414,10 +402,7 @@ object CoreQueries {
     // ---- J7/A8: full evaluation metrics ----------------------------------
     "a8_eval_metrics" -> QueryDef(
       (s, dir) => {
-        val l = table(s, dir, "customer")
-          .select(col("c_custkey").as("id"), col("c_nationkey").cast("string").as("key"))
-        val r = table(s, dir, "supplier")
-          .select(col("s_suppkey").as("id"), col("s_nationkey").cast("string").as("key"))
+        val (l, r) = nationSides(s, dir)
         val blocks = Blocker.blockJoin(l, r)
         val gold = table(s, dir, "customer")
           .select(col("c_custkey").as("gl"), (col("c_custkey") % 100).as("gr"))
@@ -425,25 +410,11 @@ object CoreQueries {
         val nr = table(s, dir, "supplier").count()
         Evaluation.evaluateDF(s, blocks, gold, nl, nr)
       },
-      Some("""WITH cand AS (
+      Some(s"""WITH cand AS (
              |  SELECT DISTINCT c.c_custkey AS l, s.s_suppkey AS r
              |  FROM customer c JOIN supplier s ON c.c_nationkey = s.s_nationkey),
              |gold AS (SELECT c_custkey AS l, c_custkey % 100 AS r FROM customer),
-             |m AS (SELECT
-             |  (SELECT count(*) FROM cand) AS pairs,
-             |  (SELECT count(*) FROM cand JOIN gold USING (l, r)) AS tp,
-             |  (SELECT count(*) FROM gold) AS gc,
-             |  (SELECT count(*) FROM customer) * (SELECT count(*) FROM supplier) AS total),
-             |x AS (SELECT tp, pairs,
-             |  tp / gc AS rec, tp / pairs AS prec,
-             |  1 - pairs / total AS rr FROM m)
-             |SELECT tp, pairs,
-             |  floor((rec) * 1e6 + 0.5) / 1e6 AS recall,
-             |  floor((prec) * 1e6 + 0.5) / 1e6 AS precision,
-             |  floor((CASE WHEN rec + prec = 0 THEN 0 ELSE 2*rec*prec/(rec+prec) END) * 1e6 + 0.5) / 1e6 AS f_measure,
-             |  floor((rr) * 1e6 + 0.5) / 1e6 AS reduction_ratio,
-             |  floor((CASE WHEN rr + rec = 0 THEN 0 ELSE 2*rr*rec/(rr+rec) END) * 1e6 + 0.5) / 1e6 AS h3r
-             |FROM x""".stripMargin),
+             |$evalMetricsSql""".stripMargin),
       api = "Evaluation.evaluateDF",
       desc = "Blocking quality metrics (recall/precision/F1/reduction-ratio/h3r) from one candidate-pairs pass: pairs and gold meet in one bit_or group-by, no gold join.")
   )

@@ -50,13 +50,190 @@ object DedupQueries {
         explode(Text.wordShingles(
           Text.tokenize(col("text"), minLength = 1, stopwords = Nil), 3)).as("key"))
 
-  private val docShinglesSql: String =
-    """SELECT DISTINCT id, l[i]||' '||l[i+1]||' '||l[i+2] AS key FROM (
-      |  SELECT id, l, unnest(range(1, len(l) - 1)) AS i FROM (
-      |    SELECT cast(doc_id AS varchar) AS id,
-      |           list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-      |                       t -> length(t) >= 1) AS l
-      |    FROM documents))""".stripMargin
+  /** DuckDB (id, key) distinct 3-token shingles of `from` (a table,
+    * optionally with a WHERE). */
+  private[queries] def shinglesSql(from: String): String =
+    s"""SELECT DISTINCT id, l[i]||' '||l[i+1]||' '||l[i+2] AS key FROM (
+       |  SELECT id, l, unnest(range(1, len(l) - 1)) AS i FROM (
+       |    SELECT cast(doc_id AS varchar) AS id,
+       |           list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
+       |                       t -> length(t) >= 1) AS l
+       |    FROM $from))""".stripMargin
+
+  private val docShinglesSql: String = shinglesSql("documents")
+
+  /** The n-gram Jaccard pair graph of [[docShingles]] at 0.1, id columns
+    * only — the input of the component-based dedup queries. */
+  private def ngramPairs(s: SparkSession, dir: String): DataFrame =
+    Dedup.ngramJaccardPairs(docShingles(s, dir), 0.1).select(col("id_a"), col("id_b"))
+
+  /** The stopword list as a DuckDB list literal. */
+  private val stopListSql: String =
+    Text.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")
+
+  // ---- DuckDB replay fragments -------------------------------------------
+  // Each chain below is written once and interpolated into every oracle
+  // that replays it; parameters carry only what differs between callers.
+
+  /** CTEs `sig` (16-perm MinHash of `src`), `buckets` (4 bands × 4
+    * rows) and `cand(id_a, id_b)`: bucket-mates whose ids satisfy
+    * `pairCond` (text after the key equality). */
+  private def bandCandCtes(src: String, pairCond: String): String =
+    s"""sig AS (${MinHash.signatureSql(src, 16)}),
+       |buckets AS (${MinHash.bandBucketsSql("SELECT * FROM sig", 4, 4)}),
+       |cand AS (
+       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
+       |  FROM buckets a JOIN buckets b ON a.key = b.key$pairCond)""".stripMargin
+
+  /** The incremental pair rule: id_b from the new batch (id % 4 = 0),
+    * id_a from the corpus or, canonically once, from the batch. */
+  private val deltaPairCond: String =
+    """
+      |  WHERE cast(b.id AS bigint) % 4 = 0
+      |    AND ((cast(a.id AS bigint) % 4 <> 0 AND a.id <> b.id)
+      |      OR (cast(a.id AS bigint) % 4 = 0 AND a.id < b.id))""".stripMargin
+
+  /** The signature-agreement estimate's numerator over `sa`/`sb`. */
+  private val estTermsSql: String = (0 until 16)
+    .map(i => s"CASE WHEN sa.h$i = sb.h$i THEN 1 ELSE 0 END")
+    .mkString(" + ")
+
+  /** CTEs `sizes(id, sz)` of token table `t` and `inter(id_a, id_b, i)`:
+    * each candidate pair's shared-token count. */
+  private def sizesInterCtes(t: String): String =
+    s"""sizes AS (SELECT id, count(DISTINCT key) AS sz FROM $t GROUP BY id),
+       |inter AS (
+       |  SELECT c.id_a, c.id_b, count(*) AS i
+       |  FROM cand c JOIN $t ta ON ta.id = c.id_a
+       |              JOIN $t tb ON tb.id = c.id_b AND tb.key = ta.key
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** MinHash-LSH shingle near-dup pairs at Jaccard ≥ 0.2: band
+    * candidates whose ids satisfy `pairCond`, verified exactly. */
+  private def minHashNearDupSql(pairCond: String): String =
+    s"""WITH ${bandCandCtes(docShinglesSql, pairCond)},
+       |toks AS ($docShinglesSql),
+       |${sizesInterCtes("toks")}
+       |SELECT id_a, id_b,
+       |       floor((i / (sa.sz + sb.sz - i)) * 1e6 + 0.5) / 1e6 AS jaccard
+       |FROM inter JOIN sizes sa ON sa.id = id_a
+       |           JOIN sizes sb ON sb.id = id_b
+       |WHERE i / (sa.sz + sb.sz - i) >= 0.2
+       |ORDER BY id_a, id_b""".stripMargin
+
+  /** Shingle table `sh` → all sharing pairs `cand` → `sizes`/`inter`. */
+  private val ngramInterCtes: String =
+    s"""cand AS (
+       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
+       |  FROM sh a JOIN sh b ON a.key = b.key AND a.id < b.id),
+       |${sizesInterCtes("sh")}""".stripMargin
+
+  /** CTEs `sym` and recursive `reach(id, lbl)` over `pairs(id_a, id_b)`:
+    * every id with each label it reaches. */
+  private val reachCtes: String =
+    """sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
+      |        UNION SELECT id_b, id_a FROM pairs),
+      |reach(id, lbl) AS (
+      |  SELECT DISTINCT src AS id, src AS lbl FROM sym
+      |  UNION
+      |  SELECT s.dst, r.lbl FROM reach r JOIN sym s ON s.src = r.id)""".stripMargin
+
+  private val compCte: String =
+    "comp AS (SELECT id, min(lbl) AS component FROM reach GROUP BY id)"
+
+  /** The n-gram pair graph at Jaccard ≥ 0.1 through `reach`, over the
+    * shingle table `sh`. */
+  private val ngramReachCtes: String =
+    s"""$ngramInterCtes,
+       |pairs AS (
+       |  SELECT id_a, id_b FROM inter
+       |  JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b
+       |  WHERE i / (sa.sz + sb.sz - i) >= 0.1),
+       |$reachCtes""".stripMargin
+
+  /** [[ngramReachCtes]] over every document, with the component labels
+    * `comp(id, component)`. */
+  private val ngramCompCtes: String =
+    s"""WITH RECURSIVE sh AS ($docShinglesSql),
+       |$ngramReachCtes,
+       |$compCte""".stripMargin
+
+  /** The refinement pipelines' quality gate `q(id)` and its shingles
+    * `sh`. */
+  private val refineGateCtes: String =
+    s"""qt AS (
+       |  SELECT doc_id,
+       |         list_filter(regexp_split_to_array(trim(lower(coalesce(text, ''))), '\\s+'), x -> x != '') AS toks
+       |  FROM documents),
+       |qs AS (
+       |  SELECT doc_id, len(toks) AS m,
+       |         list_sum(list_transform(toks, t -> length(t)))::double / len(toks) AS mean_len,
+       |         len(list_filter(toks, t -> list_contains($stopListSql, t))) AS stop_cnt,
+       |         (len(toks) - len(list_distinct(toks)))::double / len(toks) AS dup_frac
+       |  FROM qt),
+       |q AS (
+       |  SELECT cast(doc_id AS varchar) AS id FROM qs
+       |  WHERE m >= 20 AND m <= 100000 AND mean_len >= 3.0 AND mean_len <= 10.0
+       |    AND stop_cnt >= 1 AND dup_frac <= 0.6),
+       |sh0 AS ($docShinglesSql),
+       |sh AS (SELECT sh0.id, sh0.key FROM sh0 JOIN q ON sh0.id = q.id)""".stripMargin
+
+  /** Per-document whitespace token counts `d(grp, id, n_tokens, pri)`
+    * with the md5 priority the budget/packing order uses. */
+  private val budgetDocsCte: String =
+    """WITH d AS (
+      |  SELECT source AS grp, cast(doc_id AS varchar) AS id,
+      |         len(regexp_split_to_array(trim(coalesce(text, '')), '\s+'))::bigint AS n_tokens,
+      |         ('0x'||substr(md5(cast(doc_id AS varchar)), 1, 15))::bigint AS pri
+      |  FROM documents)""".stripMargin
+
+  /** Unigram-LM inputs: reference (src0) token counts `rc(tok, c)`,
+    * their totals `tot(n, v)` and every document's tokens `dt(id, key)`. */
+  private val lmInputCtes: String =
+    s"""WITH rc AS (SELECT key AS tok, count(*) AS c FROM (${duckTokens("cast(doc_id AS varchar)", "text",
+         "(SELECT * FROM documents WHERE source = 'src0')")}) GROUP BY 1),
+       |tot AS (SELECT sum(c)::double AS n, count(*)::double AS v FROM rc),
+       |dt AS (${duckTokens("cast(doc_id AS varchar)", "text", "documents")})""".stripMargin
+
+  /** Mean add-one-smoothed negative log-likelihood of `dt` under `rc`,
+    * rounded 1e-6. */
+  private val lmNllSql: String =
+    Num.stableRoundSql("avg(-ln((coalesce(rc.c, 0) + 1.0) / (tot.n + tot.v + 1.0)))", 6)
+
+  /** Whitespace tokens `toks(id, t)` and their 8-token windows
+    * `wins(id, p, gram)` — the span dedup family's input. */
+  private val spanWinsCtes: String =
+    """WITH toks AS (
+      |  SELECT cast(doc_id AS varchar) AS id,
+      |         list_filter(regexp_split_to_array(trim(lower(coalesce(text, ''))), '\s+'), x -> x != '') AS t
+      |  FROM documents),
+      |wins AS (
+      |  SELECT id,
+      |         unnest(range(0, greatest(len(t) - 7, 0))) AS p,
+      |         unnest(list_transform(range(0, greatest(len(t) - 7, 0)),
+      |                               q -> array_to_string(t[q+1:q+8], ' '))) AS gram
+      |  FROM toks)""".stripMargin
+
+  /** Windows shared by at least two documents. */
+  private val sharedGramsCte: String =
+    """shared AS (SELECT gram FROM (
+      |    SELECT gram, count(DISTINCT id) AS d FROM wins GROUP BY 1) WHERE d >= 2)""".stripMargin
+
+  /** The span-cut output: each document's tokens outside the covered
+    * positions `cov(id, pos)`, rejoined. */
+  private val keptTextSql: String =
+    """pos AS (SELECT id, unnest(range(0, len(t))) AS pos, unnest(t) AS tok
+      |        FROM toks),
+      |kept AS (SELECT p.id, count(*) AS n_kept,
+      |                string_agg(p.tok, ' ' ORDER BY p.pos) AS kept_text
+      |         FROM pos p LEFT JOIN cov c ON c.id = p.id AND c.pos = p.pos
+      |         WHERE c.pos IS NULL
+      |         GROUP BY p.id)
+      |SELECT toks.id, len(toks.t)::bigint AS n_tokens,
+      |       coalesce(k.n_kept, 0)::bigint AS n_kept,
+      |       coalesce(k.kept_text, '') AS kept_text
+      |FROM toks LEFT JOIN kept k ON k.id = toks.id
+      |ORDER BY toks.id""".stripMargin
 
   /** DuckDB replay of [[Curation.verdicts]] on the documents table
     * (corpus = source<>'src0', benchmark = src0, allowed langs
@@ -67,7 +244,6 @@ object DedupQueries {
     * tx_quality_filter rules, dd_exact's canonical key row-locally,
     * dd_decontaminate's window grams). */
   private val curationVerdictsSql: String = {
-    val stop = Text.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")
     val scoreExprs = TextAnalysis.Lexicons.map { case (lang, words) =>
       val list = words.map(w => s"'$w'").mkString("[", ",", "]")
       s"len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> list_contains($list, t))) AS s_$lang"
@@ -85,7 +261,7 @@ object DedupQueries {
        |sig AS (
        |  SELECT id, len(wtoks) AS m,
        |         list_sum(list_transform(wtoks, t -> length(t)))::double / len(wtoks) AS mean_len,
-       |         len(list_filter(wtoks, t -> list_contains($stop, t))) AS stop_cnt,
+       |         len(list_filter(wtoks, t -> list_contains($stopListSql, t))) AS stop_cnt,
        |         (len(wtoks) - len(list_distinct(wtoks)))::double / len(wtoks) AS dup_frac,
        |         $scoreExprs
        |  FROM ql),
@@ -102,7 +278,7 @@ object DedupQueries {
        |keys AS (
        |  SELECT g.id, md5(array_to_string(list_sort(list_distinct(
        |           list_filter(regexp_split_to_array(lower(d.text), '[^a-z0-9]+'),
-       |                       t -> length(t) >= 3 AND NOT list_contains($stop, t)))), ' ')) AS dup_key
+       |                       t -> length(t) >= 3 AND NOT list_contains($stopListSql, t)))), ' ')) AS dup_key
        |  FROM documents d JOIN gate g ON cast(d.doc_id AS varchar) = g.id),
        |dup AS (
        |  SELECT id, CASE WHEN id <> min(id) OVER (PARTITION BY dup_key)
@@ -186,7 +362,16 @@ object DedupQueries {
     * joinable per-doc-distinct (doc_id, h) table `fp` — shared by the
     * uncapped and hot-hash-capped winnow pair queries so the fingerprint
     * definition cannot drift between them. */
-  private lazy val winnowFpSql: String =
+  private val winnowFpSql: String =
+    s"""$winnowSelCtes,
+       |fp AS (
+       |  SELECT DISTINCT doc_id, sel // 1048576 AS h
+       |  FROM sel WHERE pos >= 3)""".stripMargin
+
+  /** The winnowing selection `sel(doc_id, pos, sel)`: normalized text,
+    * char-8-gram hashes, and the window-4 minimum with the rightmost-tie
+    * rule encoded arithmetically. */
+  private lazy val winnowSelCtes: String =
     s"""WITH norm AS (
        |  SELECT doc_id,
        |         substr(regexp_replace(lower(coalesce(text, '')), '[^a-z0-9]', '', 'g'),
@@ -203,10 +388,7 @@ object DedupQueries {
        |  SELECT doc_id, pos,
        |         min(key) OVER (PARTITION BY doc_id ORDER BY pos
        |             ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sel
-       |  FROM keyed),
-       |fp AS (
-       |  SELECT DISTINCT doc_id, sel // 1048576 AS h
-       |  FROM sel WHERE pos >= 3)""".stripMargin
+       |  FROM keyed)""".stripMargin
 
   /** DuckDB replay of [[TextAnalysis.bpeEncode]]: the same chained merge
     * rounds (word carried through), then doc tokens joined to the final
@@ -322,18 +504,9 @@ object DedupQueries {
           .distinct().orderBy("id_a", "id_b")
       },
       Some {
-        val sig = MinHash.signatureSql(docShinglesSql, 16)
-        val buckets = MinHash.bandBucketsSql("SELECT * FROM sig", 4, 4)
-        val estTerms = (0 until 16)
-          .map(i => s"CASE WHEN sa.h$i = sb.h$i THEN 1 ELSE 0 END")
-          .mkString(" + ")
-        s"""WITH sig AS ($sig),
-           |buckets AS ($buckets),
-           |cand AS (
-           |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-           |  FROM buckets a JOIN buckets b ON a.key = b.key AND a.id < b.id),
+        s"""WITH ${bandCandCtes(docShinglesSql, " AND a.id < b.id")},
            |est AS (
-           |  SELECT c.id_a, c.id_b, ($estTerms)::double / 16 AS est
+           |  SELECT c.id_a, c.id_b, ($estTermsSql)::double / 16 AS est
            |  FROM cand c JOIN sig sa ON sa.id = c.id_a
            |              JOIN sig sb ON sb.id = c.id_b)
            |SELECT id_a, id_b, est FROM est WHERE est >= 0.375
@@ -402,18 +575,8 @@ object DedupQueries {
           sink)
       },
       Some {
-        val sh =
-          """SELECT DISTINCT id, l[i]||' '||l[i+1]||' '||l[i+2] AS key FROM (
-            |  SELECT id, l, unnest(range(1, len(l) - 1)) AS i FROM (
-            |    SELECT cast(doc_id AS varchar) AS id,
-            |           list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-            |                       t -> length(t) >= 1) AS l
-            |    FROM documents WHERE doc_id < 1000))""".stripMargin
-        val sig = MinHash.signatureSql(sh, 16)
+        val sig = MinHash.signatureSql(shinglesSql("documents WHERE doc_id < 1000"), 16)
         val buckets = MinHash.bandBucketsSql("SELECT * FROM sig", 4, 4)
-        val estTerms = (0 until 16)
-          .map(i => s"CASE WHEN sa.h$i = sb.h$i THEN 1 ELSE 0 END")
-          .mkString(" + ")
         val (t1, t2, t3) = (1700000000000L, 1700007200000L, 1700012600000L)
         // per-wave state replay: floor_w = max prior event time − ttl
         // (watermark delay 0), survivors by seen ≥ floor, refresh via
@@ -460,7 +623,7 @@ object DedupQueries {
            |  WHERE a.is_new + b.is_new >= 1),
            |cand AS (SELECT DISTINCT id_a, id_b FROM em),
            |estp AS (
-           |  SELECT c.id_a, c.id_b, ($estTerms)::double / 16 AS est
+           |  SELECT c.id_a, c.id_b, ($estTermsSql)::double / 16 AS est
            |  FROM cand c JOIN sig sa ON sa.id = c.id_a
            |              JOIN sig sb ON sb.id = c.id_b)
            |SELECT e.id_a, e.id_b, p.est, count(*) AS emits
@@ -491,28 +654,7 @@ object DedupQueries {
           numPerm = 16, bands = 4, threshold = 0.2, estPrefilter = 0.375)
         .select(col("id_a"), col("id_b"), Num.stableRound(col("jaccard"), 6).as("jaccard"))
         .orderBy("id_a", "id_b"),
-      Some {
-        val sig = MinHash.signatureSql(docShinglesSql, 16)
-        val buckets = MinHash.bandBucketsSql("SELECT * FROM sig", 4, 4)
-        s"""WITH sig AS ($sig),
-           |buckets AS ($buckets),
-           |cand AS (
-           |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-           |  FROM buckets a JOIN buckets b ON a.key = b.key AND a.id < b.id),
-           |toks AS ($docShinglesSql),
-           |sizes AS (SELECT id, count(DISTINCT key) AS sz FROM toks GROUP BY id),
-           |inter AS (
-           |  SELECT c.id_a, c.id_b, count(*) AS i
-           |  FROM cand c JOIN toks ta ON ta.id = c.id_a
-           |              JOIN toks tb ON tb.id = c.id_b AND tb.key = ta.key
-           |  GROUP BY 1, 2)
-           |SELECT id_a, id_b,
-           |       floor((i / (sa.sz + sb.sz - i)) * 1e6 + 0.5) / 1e6 AS jaccard
-           |FROM inter JOIN sizes sa ON sa.id = id_a
-           |           JOIN sizes sb ON sb.id = id_b
-           |WHERE i / (sa.sz + sb.sz - i) >= 0.2
-           |ORDER BY id_a, id_b""".stripMargin
-      },
+      Some(minHashNearDupSql(" AND a.id < b.id")),
       api = "Dedup.minHashNearDupPairs",
       desc = "MinHash-LSH near-dup pairs: shingles → signatures → banded buckets → bucket join + exact Jaccard verify; hot-bucket cap bounds skew."),
 
@@ -523,31 +665,18 @@ object DedupQueries {
         .select(col("id_from"), col("id_to"),
           Num.stableRound(col("containment"), 6).as("containment"))
         .orderBy("id_from", "id_to"),
-      Some {
-        val sig = MinHash.signatureSql(docShinglesSql, 16)
-        val buckets = MinHash.bandBucketsSql("SELECT * FROM sig", 4, 4)
-        s"""WITH sig AS ($sig),
-           |buckets AS ($buckets),
-           |cand AS (
-           |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-           |  FROM buckets a JOIN buckets b ON a.key = b.key AND a.id < b.id),
-           |toks AS ($docShinglesSql),
-           |sizes AS (SELECT id, count(DISTINCT key) AS sz FROM toks GROUP BY id),
-           |inter AS (
-           |  SELECT c.id_a, c.id_b, count(*) AS i
-           |  FROM cand c JOIN toks ta ON ta.id = c.id_a
-           |              JOIN toks tb ON tb.id = c.id_b AND tb.key = ta.key
-           |  GROUP BY 1, 2),
-           |dirs AS (
-           |  SELECT id_a AS id_from, id_b AS id_to, i / sa.sz AS c
-           |  FROM inter JOIN sizes sa ON sa.id = id_a
-           |  UNION ALL
-           |  SELECT id_b, id_a, i / sb.sz
-           |  FROM inter JOIN sizes sb ON sb.id = id_b)
-           |SELECT id_from, id_to,
-           |       floor(c * 1e6 + 0.5) / 1e6 AS containment
-           |FROM dirs WHERE c >= 0.5 ORDER BY id_from, id_to""".stripMargin
-      },
+      Some(s"""WITH ${bandCandCtes(docShinglesSql, " AND a.id < b.id")},
+              |toks AS ($docShinglesSql),
+              |${sizesInterCtes("toks")},
+              |dirs AS (
+              |  SELECT id_a AS id_from, id_b AS id_to, i / sa.sz AS c
+              |  FROM inter JOIN sizes sa ON sa.id = id_a
+              |  UNION ALL
+              |  SELECT id_b, id_a, i / sb.sz
+              |  FROM inter JOIN sizes sb ON sb.id = id_b)
+              |SELECT id_from, id_to,
+              |       floor(c * 1e6 + 0.5) / 1e6 AS containment
+              |FROM dirs WHERE c >= 0.5 ORDER BY id_from, id_to""".stripMargin),
       api = "Dedup.minHashContainmentPairs",
       desc = "Containment (subset) detection via MinHash: asymmetric overlap estimate flags docs swallowed by bigger docs."),
 
@@ -562,16 +691,10 @@ object DedupQueries {
       (s, dir) => Dedup.lshRecall(docShinglesRaw(s, dir),
         numPerm = 16, bands = 4, threshold = 0.2, sampleMod = 2),
       Some {
-        val sig = MinHash.signatureSql("SELECT * FROM samp", 16)
-        val buckets = MinHash.bandBucketsSql("SELECT * FROM sig", 4, 4)
         s"""WITH samp AS (
            |  SELECT * FROM ($docShinglesSql)
            |  WHERE ('0x'||substr(md5(id), 1, 15))::bigint % 2 = 0),
-           |sig AS ($sig),
-           |buckets AS ($buckets),
-           |cand AS (
-           |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-           |  FROM buckets a JOIN buckets b ON a.key = b.key AND a.id < b.id),
+           |${bandCandCtes("SELECT * FROM samp", " AND a.id < b.id")},
            |sizes AS (SELECT id, count(DISTINCT key) AS sz FROM samp GROUP BY id),
            |inter AS (
            |  SELECT ta.id AS id_a, tb.id AS id_b, count(*) AS i
@@ -608,8 +731,6 @@ object DedupQueries {
       api = "Dedup.lshRecall",
       desc = "Empirical LSH recall gate: exact-Jaccard truth on a deterministic doc sample vs the production banding, plus the MMDS S-curve expectation."),
 
-    // ---- incremental near-dup: new batch (doc_id % 4 = 0) vs corpus -------
-    // corpus×corpus candidates never form; id_b is always from the new
     // ---- incremental near-dup, stored-signature (production) form --------
     // the corpus enters as its precomputed signature table + a raw token
     // scan used only to verify candidates — the refresh loop's real
@@ -626,34 +747,12 @@ object DedupQueries {
           .select(col("id_a"), col("id_b"), Num.stableRound(col("jaccard"), 6).as("jaccard"))
           .orderBy("id_a", "id_b")
       },
-      Some {
-        val sig = MinHash.signatureSql(docShinglesSql, 16)
-        val buckets = MinHash.bandBucketsSql("SELECT * FROM sig", 4, 4)
-        s"""WITH sig AS ($sig),
-           |buckets AS ($buckets),
-           |cand AS (
-           |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-           |  FROM buckets a JOIN buckets b ON a.key = b.key
-           |  WHERE cast(b.id AS bigint) % 4 = 0
-           |    AND ((cast(a.id AS bigint) % 4 <> 0 AND a.id <> b.id)
-           |      OR (cast(a.id AS bigint) % 4 = 0 AND a.id < b.id))),
-           |toks AS ($docShinglesSql),
-           |sizes AS (SELECT id, count(DISTINCT key) AS sz FROM toks GROUP BY id),
-           |inter AS (
-           |  SELECT c.id_a, c.id_b, count(*) AS i
-           |  FROM cand c JOIN toks ta ON ta.id = c.id_a
-           |              JOIN toks tb ON tb.id = c.id_b AND tb.key = ta.key
-           |  GROUP BY 1, 2)
-           |SELECT id_a, id_b,
-           |       floor((i / (sa.sz + sb.sz - i)) * 1e6 + 0.5) / 1e6 AS jaccard
-           |FROM inter JOIN sizes sa ON sa.id = id_a
-           |           JOIN sizes sb ON sb.id = id_b
-           |WHERE i / (sa.sz + sb.sz - i) >= 0.2
-           |ORDER BY id_a, id_b""".stripMargin
-      },
+      Some(minHashNearDupSql(deltaPairCond)),
       api = "Dedup.minHashNearDupAgainstSig",
       desc = "Production incremental near-dup: delta joins the corpus' STORED signature table — nothing corpus-sized recomputed or cached."),
 
+    // ---- incremental near-dup: new batch (doc_id % 4 = 0) vs corpus -------
+    // corpus×corpus candidates never form; id_b is always from the new
     // batch, id_a from either side (new-new pairs canonical once).
     "dd_incremental_neardup" -> QueryDef(
       (s, dir) => {
@@ -665,31 +764,7 @@ object DedupQueries {
           .select(col("id_a"), col("id_b"), Num.stableRound(col("jaccard"), 6).as("jaccard"))
           .orderBy("id_a", "id_b")
       },
-      Some {
-        val sig = MinHash.signatureSql(docShinglesSql, 16)
-        val buckets = MinHash.bandBucketsSql("SELECT * FROM sig", 4, 4)
-        s"""WITH sig AS ($sig),
-           |buckets AS ($buckets),
-           |cand AS (
-           |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-           |  FROM buckets a JOIN buckets b ON a.key = b.key
-           |  WHERE cast(b.id AS bigint) % 4 = 0
-           |    AND ((cast(a.id AS bigint) % 4 <> 0 AND a.id <> b.id)
-           |      OR (cast(a.id AS bigint) % 4 = 0 AND a.id < b.id))),
-           |toks AS ($docShinglesSql),
-           |sizes AS (SELECT id, count(DISTINCT key) AS sz FROM toks GROUP BY id),
-           |inter AS (
-           |  SELECT c.id_a, c.id_b, count(*) AS i
-           |  FROM cand c JOIN toks ta ON ta.id = c.id_a
-           |              JOIN toks tb ON tb.id = c.id_b AND tb.key = ta.key
-           |  GROUP BY 1, 2)
-           |SELECT id_a, id_b,
-           |       floor((i / (sa.sz + sb.sz - i)) * 1e6 + 0.5) / 1e6 AS jaccard
-           |FROM inter JOIN sizes sa ON sa.id = id_a
-           |           JOIN sizes sb ON sb.id = id_b
-           |WHERE i / (sa.sz + sb.sz - i) >= 0.2
-           |ORDER BY id_a, id_b""".stripMargin
-      },
+      Some(minHashNearDupSql(deltaPairCond)),
       api = "Dedup.minHashNearDupAgainst",
       desc = "Incremental near-dup of a delta against a corpus (both as raw text) — the bootstrap form of `dd_incremental_sig`."),
 
@@ -699,15 +774,7 @@ object DedupQueries {
         .select(col("id_a"), col("id_b"), Num.stableRound(col("jaccard"), 6).as("jaccard"))
         .orderBy("id_a", "id_b"),
       Some(s"""WITH sh AS ($docShinglesSql),
-              |cand AS (
-              |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-              |  FROM sh a JOIN sh b ON a.key = b.key AND a.id < b.id),
-              |sizes AS (SELECT id, count(DISTINCT key) AS sz FROM sh GROUP BY id),
-              |inter AS (
-              |  SELECT c.id_a, c.id_b, count(*) AS i
-              |  FROM cand c JOIN sh ta ON ta.id = c.id_a
-              |              JOIN sh tb ON tb.id = c.id_b AND tb.key = ta.key
-              |  GROUP BY 1, 2)
+              |$ngramInterCtes
               |SELECT id_a, id_b, floor((i / (sa.sz + sb.sz - i)) * 1e6 + 0.5) / 1e6 AS jaccard
               |FROM inter JOIN sizes sa ON sa.id = id_a
               |           JOIN sizes sb ON sb.id = id_b
@@ -720,30 +787,9 @@ object DedupQueries {
     // connected components via min-label propagation; oracle = recursive
     // CTE computing min reachable id over the same threshold graph.
     "dd_dup_components" -> QueryDef(
-      (s, dir) => Dedup.components(
-          Dedup.ngramJaccardPairs(docShingles(s, dir), 0.1)
-            .select(col("id_a"), col("id_b")))
-        .orderBy("id"),
+      (s, dir) => Dedup.components(ngramPairs(s, dir)).orderBy("id"),
       Some(s"""WITH RECURSIVE sh AS ($docShinglesSql),
-              |cand AS (
-              |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-              |  FROM sh a JOIN sh b ON a.key = b.key AND a.id < b.id),
-              |sizes AS (SELECT id, count(DISTINCT key) AS sz FROM sh GROUP BY id),
-              |inter AS (
-              |  SELECT c.id_a, c.id_b, count(*) AS i
-              |  FROM cand c JOIN sh ta ON ta.id = c.id_a
-              |              JOIN sh tb ON tb.id = c.id_b AND tb.key = ta.key
-              |  GROUP BY 1, 2),
-              |pairs AS (
-              |  SELECT id_a, id_b FROM inter
-              |  JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b
-              |  WHERE i / (sa.sz + sb.sz - i) >= 0.1),
-              |sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
-              |        UNION SELECT id_b, id_a FROM pairs),
-              |reach(id, lbl) AS (
-              |  SELECT DISTINCT src AS id, src AS lbl FROM sym
-              |  UNION
-              |  SELECT s.dst, r.lbl FROM reach r JOIN sym s ON s.src = r.id)
+              |$ngramReachCtes
               |SELECT id, min(lbl) AS component
               |FROM reach GROUP BY id ORDER BY id""".stripMargin),
       api = "Dedup.components",
@@ -755,31 +801,9 @@ object DedupQueries {
     // after a dedup pass. Aggregations only; the corpus is never joined.
     "dd_cluster_histogram" -> QueryDef(
       (s, dir) => Dedup.clusterHistogram(
-          table(s, dir, "documents").select(col("doc_id")),
-          Dedup.ngramJaccardPairs(docShingles(s, dir), 0.1)
-            .select(col("id_a"), col("id_b")))
+          table(s, dir, "documents").select(col("doc_id")), ngramPairs(s, dir))
         .orderBy("cluster_size"),
-      Some(s"""WITH RECURSIVE sh AS ($docShinglesSql),
-              |cand AS (
-              |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-              |  FROM sh a JOIN sh b ON a.key = b.key AND a.id < b.id),
-              |sizes AS (SELECT id, count(DISTINCT key) AS sz FROM sh GROUP BY id),
-              |inter AS (
-              |  SELECT c.id_a, c.id_b, count(*) AS i
-              |  FROM cand c JOIN sh ta ON ta.id = c.id_a
-              |              JOIN sh tb ON tb.id = c.id_b AND tb.key = ta.key
-              |  GROUP BY 1, 2),
-              |pairs AS (
-              |  SELECT id_a, id_b FROM inter
-              |  JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b
-              |  WHERE i / (sa.sz + sb.sz - i) >= 0.1),
-              |sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
-              |        UNION SELECT id_b, id_a FROM pairs),
-              |reach(id, lbl) AS (
-              |  SELECT DISTINCT src AS id, src AS lbl FROM sym
-              |  UNION
-              |  SELECT s.dst, r.lbl FROM reach r JOIN sym s ON s.src = r.id),
-              |comp AS (SELECT id, min(lbl) AS component FROM reach GROUP BY id),
+      Some(s"""$ngramCompCtes,
               |cs AS (SELECT component, count(*) AS sz FROM comp GROUP BY 1),
               |hist AS (
               |  SELECT sz AS cluster_size, count(*) AS n_clusters
@@ -798,31 +822,9 @@ object DedupQueries {
     // output-sized) component labels.
     "dd_keep_list" -> QueryDef(
       (s, dir) => Dedup.keepList(
-          table(s, dir, "documents").select(col("doc_id")),
-          Dedup.ngramJaccardPairs(docShingles(s, dir), 0.1)
-            .select(col("id_a"), col("id_b")))
+          table(s, dir, "documents").select(col("doc_id")), ngramPairs(s, dir))
         .orderBy("id"),
-      Some(s"""WITH RECURSIVE sh AS ($docShinglesSql),
-              |cand AS (
-              |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-              |  FROM sh a JOIN sh b ON a.key = b.key AND a.id < b.id),
-              |sizes AS (SELECT id, count(DISTINCT key) AS sz FROM sh GROUP BY id),
-              |inter AS (
-              |  SELECT c.id_a, c.id_b, count(*) AS i
-              |  FROM cand c JOIN sh ta ON ta.id = c.id_a
-              |              JOIN sh tb ON tb.id = c.id_b AND tb.key = ta.key
-              |  GROUP BY 1, 2),
-              |pairs AS (
-              |  SELECT id_a, id_b FROM inter
-              |  JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b
-              |  WHERE i / (sa.sz + sb.sz - i) >= 0.1),
-              |sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
-              |        UNION SELECT id_b, id_a FROM pairs),
-              |reach(id, lbl) AS (
-              |  SELECT DISTINCT src AS id, src AS lbl FROM sym
-              |  UNION
-              |  SELECT s.dst, r.lbl FROM reach r JOIN sym s ON s.src = r.id),
-              |comp AS (SELECT id, min(lbl) AS component FROM reach GROUP BY id)
+      Some(s"""$ngramCompCtes
               |SELECT cast(d.doc_id AS varchar) AS id,
               |       (c.component IS NULL OR c.component = cast(d.doc_id AS varchar)) AS keep,
               |       CASE WHEN c.component = cast(d.doc_id AS varchar) THEN NULL
@@ -839,31 +841,9 @@ object DedupQueries {
     "dd_keep_best" -> QueryDef(
       (s, dir) => Dedup.keepBest(
           table(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-          "doc_id", "n_chars",
-          Dedup.ngramJaccardPairs(docShingles(s, dir), 0.1)
-            .select(col("id_a"), col("id_b")))
+          "doc_id", "n_chars", ngramPairs(s, dir))
         .orderBy("id"),
-      Some(s"""WITH RECURSIVE sh AS ($docShinglesSql),
-              |cand AS (
-              |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-              |  FROM sh a JOIN sh b ON a.key = b.key AND a.id < b.id),
-              |sizes AS (SELECT id, count(DISTINCT key) AS sz FROM sh GROUP BY id),
-              |inter AS (
-              |  SELECT c.id_a, c.id_b, count(*) AS i
-              |  FROM cand c JOIN sh ta ON ta.id = c.id_a
-              |              JOIN sh tb ON tb.id = c.id_b AND tb.key = ta.key
-              |  GROUP BY 1, 2),
-              |pairs AS (
-              |  SELECT id_a, id_b FROM inter
-              |  JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b
-              |  WHERE i / (sa.sz + sb.sz - i) >= 0.1),
-              |sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
-              |        UNION SELECT id_b, id_a FROM pairs),
-              |reach(id, lbl) AS (
-              |  SELECT DISTINCT src AS id, src AS lbl FROM sym
-              |  UNION
-              |  SELECT s.dst, r.lbl FROM reach r JOIN sym s ON s.src = r.id),
-              |comp AS (SELECT id, min(lbl) AS component FROM reach GROUP BY id),
+      Some(s"""$ngramCompCtes,
               |scored AS (
               |  SELECT c.id, c.component, d.n_chars::double AS score
               |  FROM comp c JOIN documents d ON c.id = cast(d.doc_id AS varchar)),
@@ -922,44 +902,10 @@ object DedupQueries {
           kept)
       },
       Some {
-        val stop = Text.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")
         s"""WITH RECURSIVE
-           |qt AS (
-           |  SELECT doc_id,
-           |         list_filter(regexp_split_to_array(trim(lower(coalesce(text, ''))), '\\s+'), x -> x != '') AS toks
-           |  FROM documents),
-           |qs AS (
-           |  SELECT doc_id, len(toks) AS m,
-           |         list_sum(list_transform(toks, t -> length(t)))::double / len(toks) AS mean_len,
-           |         len(list_filter(toks, t -> list_contains($stop, t))) AS stop_cnt,
-           |         (len(toks) - len(list_distinct(toks)))::double / len(toks) AS dup_frac
-           |  FROM qt),
-           |q AS (
-           |  SELECT cast(doc_id AS varchar) AS id FROM qs
-           |  WHERE m >= 20 AND m <= 100000 AND mean_len >= 3.0 AND mean_len <= 10.0
-           |    AND stop_cnt >= 1 AND dup_frac <= 0.6),
-           |sh0 AS ($docShinglesSql),
-           |sh AS (SELECT sh0.id, sh0.key FROM sh0 JOIN q ON sh0.id = q.id),
-           |cand AS (
-           |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-           |  FROM sh a JOIN sh b ON a.key = b.key AND a.id < b.id),
-           |sizes AS (SELECT id, count(DISTINCT key) AS sz FROM sh GROUP BY id),
-           |inter AS (
-           |  SELECT c.id_a, c.id_b, count(*) AS i
-           |  FROM cand c JOIN sh ta ON ta.id = c.id_a
-           |              JOIN sh tb ON tb.id = c.id_b AND tb.key = ta.key
-           |  GROUP BY 1, 2),
-           |pairs AS (
-           |  SELECT id_a, id_b FROM inter
-           |  JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b
-           |  WHERE i / (sa.sz + sb.sz - i) >= 0.1),
-           |sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
-           |        UNION SELECT id_b, id_a FROM pairs),
-           |reach(id, lbl) AS (
-           |  SELECT DISTINCT src AS id, src AS lbl FROM sym
-           |  UNION
-           |  SELECT s.dst, r.lbl FROM reach r JOIN sym s ON s.src = r.id),
-           |comp AS (SELECT id, min(lbl) AS component FROM reach GROUP BY id)
+           |$refineGateCtes,
+           |$ngramReachCtes,
+           |$compCte
            |SELECT q.id,
            |       (('0x'||substr(md5(q.id), 1, 15))::bigint % 16)::int AS shard
            |FROM q LEFT JOIN comp c ON c.id = q.id
@@ -1003,39 +949,14 @@ object DedupQueries {
           .orderBy("id")
       },
       Some {
-        val stop = Text.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")
-        val sig = MinHash.signatureSql("SELECT * FROM sh", 16)
-        val buckets = MinHash.bandBucketsSql("SELECT * FROM sig", 4, 4)
-        val estTerms = (0 until 16)
-          .map(i => s"CASE WHEN sa.h$i = sb.h$i THEN 1 ELSE 0 END")
-          .mkString(" + ")
-        s"""WITH qt AS (
-           |  SELECT doc_id,
-           |         list_filter(regexp_split_to_array(trim(lower(coalesce(text, ''))), '\\s+'), x -> x != '') AS toks
-           |  FROM documents),
-           |qs AS (
-           |  SELECT doc_id, len(toks) AS m,
-           |         list_sum(list_transform(toks, t -> length(t)))::double / len(toks) AS mean_len,
-           |         len(list_filter(toks, t -> list_contains($stop, t))) AS stop_cnt,
-           |         (len(toks) - len(list_distinct(toks)))::double / len(toks) AS dup_frac
-           |  FROM qt),
-           |q AS (
-           |  SELECT cast(doc_id AS varchar) AS id FROM qs
-           |  WHERE m >= 20 AND m <= 100000 AND mean_len >= 3.0 AND mean_len <= 10.0
-           |    AND stop_cnt >= 1 AND dup_frac <= 0.6),
-           |sh0 AS ($docShinglesSql),
-           |sh AS (SELECT sh0.id, sh0.key FROM sh0 JOIN q ON sh0.id = q.id),
-           |sig AS ($sig),
-           |buckets AS ($buckets),
-           |cand AS (
-           |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-           |  FROM buckets a JOIN buckets b ON a.key = b.key AND a.id < b.id),
+        s"""WITH $refineGateCtes,
+           |${bandCandCtes("SELECT * FROM sh", " AND a.id < b.id")},
            |dropped AS (
            |  SELECT DISTINCT CASE WHEN id_a::bigint > id_b::bigint
            |                       THEN id_a ELSE id_b END AS id
            |  FROM cand c JOIN sig sa ON sa.id = c.id_a
            |              JOIN sig sb ON sb.id = c.id_b
-           |  WHERE ($estTerms)::double / 16 >= 0.375)
+           |  WHERE ($estTermsSql)::double / 16 >= 0.375)
            |SELECT q.id,
            |       (('0x'||substr(md5(q.id), 1, 15))::bigint % 16)::int AS shard
            |FROM q LEFT JOIN dropped d ON d.id = q.id
@@ -1066,7 +987,7 @@ object DedupQueries {
             "id", 16)
           .orderBy("id")
       },
-      Some("""WITH RECURSIVE
+      Some(s"""WITH RECURSIVE
              |e AS (
              |  SELECT cast(label AS varchar) AS cluster,
              |         cast(vec_id AS varchar) AS id, embedding
@@ -1084,13 +1005,8 @@ object DedupQueries {
              |  SELECT id_a, id_b FROM dots
              |  JOIN norms na ON na.id = id_a JOIN norms nb ON nb.id = id_b
              |  WHERE dot / (na.nrm * nb.nrm) >= 0.4),
-             |sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
-             |        UNION SELECT id_b, id_a FROM pairs),
-             |reach(id, lbl) AS (
-             |  SELECT DISTINCT src AS id, src AS lbl FROM sym
-             |  UNION
-             |  SELECT s.dst, r.lbl FROM reach r JOIN sym s ON s.src = r.id),
-             |comp AS (SELECT id, min(lbl) AS component FROM reach GROUP BY id)
+             |$reachCtes,
+             |$compCte
              |SELECT ids.id,
              |       (('0x'||substr(md5(ids.id), 1, 15))::bigint % 16)::int AS shard
              |FROM (SELECT DISTINCT id FROM e) ids LEFT JOIN comp c ON c.id = ids.id
@@ -1105,32 +1021,12 @@ object DedupQueries {
     "dd_span_dedup" -> QueryDef(
       (s, dir) => Dedup.spanDedup(table(s, dir, "documents"), "doc_id", "text", 8)
         .orderBy("id"),
-      Some("""WITH toks AS (
-             |  SELECT cast(doc_id AS varchar) AS id,
-             |         list_filter(regexp_split_to_array(trim(lower(coalesce(text, ''))), '\s+'), x -> x != '') AS t
-             |  FROM documents),
-             |wins AS (
-             |  SELECT id,
-             |         unnest(range(0, greatest(len(t) - 7, 0))) AS p,
-             |         unnest(list_transform(range(0, greatest(len(t) - 7, 0)),
-             |                               q -> array_to_string(t[q+1:q+8], ' '))) AS gram
-             |  FROM toks),
+      Some(s"""$spanWinsCtes,
              |dup AS (SELECT gram FROM wins GROUP BY gram HAVING count(*) >= 2),
              |cov AS (SELECT DISTINCT id, pos FROM (
              |          SELECT w.id, unnest(range(w.p, w.p + 8)) AS pos
              |          FROM wins w JOIN dup USING (gram))),
-             |pos AS (SELECT id, unnest(range(0, len(t))) AS pos, unnest(t) AS tok
-             |        FROM toks),
-             |kept AS (SELECT p.id, count(*) AS n_kept,
-             |                string_agg(p.tok, ' ' ORDER BY p.pos) AS kept_text
-             |         FROM pos p LEFT JOIN cov c ON c.id = p.id AND c.pos = p.pos
-             |         WHERE c.pos IS NULL
-             |         GROUP BY p.id)
-             |SELECT toks.id, len(toks.t)::bigint AS n_tokens,
-             |       coalesce(k.n_kept, 0)::bigint AS n_kept,
-             |       coalesce(k.kept_text, '') AS kept_text
-             |FROM toks LEFT JOIN kept k ON k.id = toks.id
-             |ORDER BY toks.id""".stripMargin),
+             |$keptTextSql""".stripMargin),
       api = "Dedup.spanDedup",
       desc = "Within-doc repeated-span removal (ExactSubstr-style) — fully linear rolling-hash pass, no pairwise stage."),
 
@@ -1142,18 +1038,8 @@ object DedupQueries {
     "dd_crossdoc_spans" -> QueryDef(
       (s, dir) => Dedup.crossDocSpans(table(s, dir, "documents"), "doc_id", "text", 8)
         .orderBy("id", "span_start"),
-      Some("""WITH toks AS (
-             |  SELECT cast(doc_id AS varchar) AS id,
-             |         list_filter(regexp_split_to_array(trim(lower(coalesce(text, ''))), '\s+'), x -> x != '') AS t
-             |  FROM documents),
-             |wins AS (
-             |  SELECT id,
-             |         unnest(range(0, greatest(len(t) - 7, 0))) AS p,
-             |         unnest(list_transform(range(0, greatest(len(t) - 7, 0)),
-             |                               q -> array_to_string(t[q+1:q+8], ' '))) AS gram
-             |  FROM toks),
-             |shared AS (SELECT gram FROM (
-             |    SELECT gram, count(DISTINCT id) AS d FROM wins GROUP BY 1) WHERE d >= 2),
+      Some(s"""$spanWinsCtes,
+             |$sharedGramsCte,
              |m AS (SELECT id, p FROM wins SEMI JOIN shared USING (gram)),
              |isl AS (SELECT id, p, sum(brk) OVER (PARTITION BY id ORDER BY p) AS isl FROM (
              |  SELECT id, p, CASE WHEN lag(p) OVER (PARTITION BY id ORDER BY p) IS NULL
@@ -1168,33 +1054,12 @@ object DedupQueries {
     "dd_crossdoc_cut" -> QueryDef(
       (s, dir) => Dedup.crossDocCut(table(s, dir, "documents"), "doc_id", "text", 8)
         .orderBy("id"),
-      Some("""WITH toks AS (
-             |  SELECT cast(doc_id AS varchar) AS id,
-             |         list_filter(regexp_split_to_array(trim(lower(coalesce(text, ''))), '\s+'), x -> x != '') AS t
-             |  FROM documents),
-             |wins AS (
-             |  SELECT id,
-             |         unnest(range(0, greatest(len(t) - 7, 0))) AS p,
-             |         unnest(list_transform(range(0, greatest(len(t) - 7, 0)),
-             |                               q -> array_to_string(t[q+1:q+8], ' '))) AS gram
-             |  FROM toks),
-             |shared AS (SELECT gram FROM (
-             |    SELECT gram, count(DISTINCT id) AS d FROM wins GROUP BY 1) WHERE d >= 2),
+      Some(s"""$spanWinsCtes,
+             |$sharedGramsCte,
              |cov AS (SELECT DISTINCT id, pos FROM (
              |          SELECT w.id, unnest(range(w.p, w.p + 8)) AS pos
              |          FROM wins w SEMI JOIN shared USING (gram))),
-             |pos AS (SELECT id, unnest(range(0, len(t))) AS pos, unnest(t) AS tok
-             |        FROM toks),
-             |kept AS (SELECT p.id, count(*) AS n_kept,
-             |                string_agg(p.tok, ' ' ORDER BY p.pos) AS kept_text
-             |         FROM pos p LEFT JOIN cov c ON c.id = p.id AND c.pos = p.pos
-             |         WHERE c.pos IS NULL
-             |         GROUP BY p.id)
-             |SELECT toks.id, len(toks.t)::bigint AS n_tokens,
-             |       coalesce(k.n_kept, 0)::bigint AS n_kept,
-             |       coalesce(k.kept_text, '') AS kept_text
-             |FROM toks LEFT JOIN kept k ON k.id = toks.id
-             |ORDER BY toks.id""".stripMargin),
+             |$keptTextSql""".stripMargin),
       api = "Dedup.crossDocCut",
       desc = "Removes tokens covered by cross-doc shared windows, keeping within-doc-only repeats — the cut form of dd_crossdoc_spans."),
 
@@ -1294,13 +1159,12 @@ object DedupQueries {
           TextAnalysis.qualityScore(col("text")).as("quality_e6"))
         .orderBy("doc_id"),
       Some {
-        val stop = Text.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")
         s"""SELECT doc_id,
            |  len(regexp_split_to_array(trim(text), '\\s+')) AS ws_tokens,
            |  len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\\s]')) AS bpe_tokens,
            |  floor((
            |    least(len(toks) / 100.0, 1.0) * 0.4 +
-           |    (1.0 - len(list_filter(toks, t -> list_contains($stop, t)))::double / len(toks)) * 0.3 +
+           |    (1.0 - len(list_filter(toks, t -> list_contains($stopListSql, t)))::double / len(toks)) * 0.3 +
            |    least((list_sum(list_transform(toks, t -> length(t)))::double / len(toks)) / 8.0, 1.0) * 0.3
            |    ) * 1e6)::bigint AS quality_e6
            |FROM (SELECT doc_id, text,
@@ -1328,13 +1192,12 @@ object DedupQueries {
           countDistinct(col("lang")).as("n_langs"))
         .orderBy("source"),
       Some {
-        val stop = Text.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")
         s"""WITH d AS (
            |  SELECT source, lang,
            |    len(regexp_split_to_array(trim(coalesce(text, '')), '\\s+'))::bigint AS nt,
            |    floor((
            |      least(len(toks) / 100.0, 1.0) * 0.4 +
-           |      (1.0 - len(list_filter(toks, t -> list_contains($stop, t)))::double / len(toks)) * 0.3 +
+           |      (1.0 - len(list_filter(toks, t -> list_contains($stopListSql, t)))::double / len(toks)) * 0.3 +
            |      least((list_sum(list_transform(toks, t -> length(t)))::double / len(toks)) / 8.0, 1.0) * 0.3
            |      ) * 1e6)::bigint AS q
            |  FROM (SELECT source, lang, text,
@@ -1383,7 +1246,6 @@ object DedupQueries {
       (s, dir) => TextAnalysis.qualityFilter(table(s, dir, "documents"))
         .orderBy("doc_id"),
       Some {
-        val stop = Text.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")
         s"""WITH t AS (
            |  SELECT doc_id,
            |         regexp_split_to_array(trim(lower(coalesce(text, ''))), '\\s+') AS toks
@@ -1391,7 +1253,7 @@ object DedupQueries {
            |s AS (
            |  SELECT doc_id, len(toks) AS m,
            |         list_sum(list_transform(toks, t -> length(t)))::double / len(toks) AS mean_len,
-           |         len(list_filter(toks, t -> list_contains($stop, t))) AS stop_cnt,
+           |         len(list_filter(toks, t -> list_contains($stopListSql, t))) AS stop_cnt,
            |         (len(toks) - len(list_distinct(toks)))::double / len(toks) AS dup_frac
            |  FROM t),
            |r AS (
@@ -1654,7 +1516,6 @@ object DedupQueries {
             (col("_pos_mean") > col("_neg_mean")).as("separation_ok"))
       },
       Some {
-        val stop = Text.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")
         s"""WITH c AS (
            |  SELECT regexp_split_to_array(trim(lower(coalesce(text, ''))), '\\s+') AS wtoks
            |  FROM documents WHERE source <> 'src0')
@@ -1663,7 +1524,7 @@ object DedupQueries {
            |       (SELECT count(*) FROM documents WHERE source <> 'src0'
            |          AND (('0x'||substr(md5(cast(doc_id AS varchar)), 1, 15))::bigint % 7) = 0) AS n_neg,
            |       (SELECT ${Num.gridSafeRoundSql(
-                      s"avg(len(list_filter(wtoks, t -> list_contains($stop, t)))::double / len(wtoks))", 6)}
+                      s"avg(len(list_filter(wtoks, t -> list_contains($stopListSql, t)))::double / len(wtoks))", 6)}
            |        FROM c) AS mean_stop_ratio,
            |       true AS range_ok, true AS pos_acc_ok, true AS neg_acc_ok,
            |       true AS separation_ok""".stripMargin
@@ -1691,12 +1552,11 @@ object DedupQueries {
           .orderBy("source", "rk")
       },
       Some {
-        val stop = Text.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")
         s"""WITH q AS (
            |  SELECT doc_id, source,
            |    floor((
            |      least(len(toks) / 100.0, 1.0) * 0.4 +
-           |      (1.0 - len(list_filter(toks, t -> list_contains($stop, t)))::double / len(toks)) * 0.3 +
+           |      (1.0 - len(list_filter(toks, t -> list_contains($stopListSql, t)))::double / len(toks)) * 0.3 +
            |      least((list_sum(list_transform(toks, t -> length(t)))::double / len(toks)) / 8.0, 1.0) * 0.3
            |      ) * 1e6)::bigint AS quality_e6
            |  FROM (SELECT doc_id, source,
@@ -1722,11 +1582,7 @@ object DedupQueries {
       (s, dir) => TextAnalysis.tokenBudget(
           table(s, dir, "documents"), "doc_id", "text", "source", 300L)
         .orderBy("grp", "id"),
-      Some("""WITH d AS (
-             |  SELECT source AS grp, cast(doc_id AS varchar) AS id,
-             |         len(regexp_split_to_array(trim(coalesce(text, '')), '\s+'))::bigint AS n_tokens,
-             |         ('0x'||substr(md5(cast(doc_id AS varchar)), 1, 15))::bigint AS pri
-             |  FROM documents),
+      Some(s"""$budgetDocsCte,
              |c AS (SELECT grp, id, n_tokens,
              |             sum(n_tokens) OVER (PARTITION BY grp ORDER BY pri, id
              |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
@@ -1743,11 +1599,7 @@ object DedupQueries {
       (s, dir) => TextAnalysis.packSequences(
           table(s, dir, "documents"), "doc_id", "text", "source", 200L)
         .orderBy("grp", "id"),
-      Some("""WITH d AS (
-             |  SELECT source AS grp, cast(doc_id AS varchar) AS id,
-             |         len(regexp_split_to_array(trim(coalesce(text, '')), '\s+'))::bigint AS n_tokens,
-             |         ('0x'||substr(md5(cast(doc_id AS varchar)), 1, 15))::bigint AS pri
-             |  FROM documents),
+      Some(s"""$budgetDocsCte,
              |c AS (SELECT grp, id, n_tokens,
              |             coalesce(sum(n_tokens) OVER (PARTITION BY grp ORDER BY pri, id
              |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prev
@@ -1909,16 +1761,9 @@ object DedupQueries {
           .orderBy("id")
       },
       Some {
-        val refToks = QueryDef.duckTokens("cast(doc_id AS varchar)", "text",
-          "(SELECT * FROM documents WHERE source = 'src0')")
-        val docToks = QueryDef.duckTokens("cast(doc_id AS varchar)", "text",
-          "documents")
-        s"""WITH rc AS (SELECT key AS tok, count(*) AS c FROM ($refToks) GROUP BY 1),
-           |tot AS (SELECT sum(c)::double AS n, count(*)::double AS v FROM rc),
-           |dt AS ($docToks)
+        s"""$lmInputCtes
            |SELECT dt.id, count(*) AS n_toks,
-           |       ${Num.stableRoundSql(
-                      "avg(-ln((coalesce(rc.c, 0) + 1.0) / (tot.n + tot.v + 1.0)))", 6)} AS nll_e6
+           |       $lmNllSql AS nll_e6
            |FROM dt LEFT JOIN rc ON rc.tok = dt.key, tot
            |GROUP BY dt.id ORDER BY dt.id""".stripMargin
       },
@@ -1938,16 +1783,9 @@ object DedupQueries {
           .orderBy("id")
       },
       Some {
-        val refToks = QueryDef.duckTokens("cast(doc_id AS varchar)", "text",
-          "(SELECT * FROM documents WHERE source = 'src0')")
-        val docToks = QueryDef.duckTokens("cast(doc_id AS varchar)", "text",
-          "documents")
-        s"""WITH rc AS (SELECT key AS tok, count(*) AS c FROM ($refToks) GROUP BY 1),
-           |tot AS (SELECT sum(c)::double AS n, count(*)::double AS v FROM rc),
-           |dt AS ($docToks),
+        s"""$lmInputCtes,
            |sc AS (SELECT dt.id, count(*) AS n_toks,
-           |         ${Num.stableRoundSql(
-                        "avg(-ln((coalesce(rc.c, 0) + 1.0) / (tot.n + tot.v + 1.0)))", 6)} AS nll_e6
+           |         $lmNllSql AS nll_e6
            |       FROM dt LEFT JOIN rc ON rc.tok = dt.key, tot
            |       GROUP BY dt.id),
            |s AS (SELECT sc.*, d.source AS grp
@@ -1992,11 +1830,10 @@ object DedupQueries {
           .orderBy("id")
       },
       Some {
-        val stop = Text.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")
         def toks(rel: String) =
           s"""SELECT cast(doc_id AS varchar) AS id,
              |  list_filter(regexp_split_to_array(lower(coalesce(text, '')), '[^a-z0-9]+'),
-             |              t -> length(t) >= 3 AND NOT list_contains($stop, t)) AS l
+             |              t -> length(t) >= 3 AND NOT list_contains($stopListSql, t)) AS l
              |FROM $rel""".stripMargin
         s"""WITH base AS (${toks("documents")}),
            |rbase AS (${toks("(SELECT * FROM documents WHERE source = 'src0')")}),
@@ -2220,13 +2057,12 @@ object DedupQueries {
           TextAnalysis.fingerprint(Text.tokenize(col("text"))).as("fp"))
         .orderBy("doc_id"),
       Some {
-        val stop = Text.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")
         s"""SELECT doc_id,
            |  list_reduce(
            |    list_prepend(0::bigint,
            |      list_transform(
            |        list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-           |                    t -> length(t) >= 3 AND NOT list_contains($stop, t)),
+           |                    t -> length(t) >= 3 AND NOT list_contains($stopListSql, t)),
            |        t -> ('0x'||substr(md5(t), 1, 15))::bigint)),
            |    (acc, h) -> (acc * 31 + h) % ${TextAnalysis.FingerprintMod}) AS fp
            |FROM documents ORDER BY doc_id""".stripMargin
@@ -2245,23 +2081,7 @@ object DedupQueries {
       // Position expansion is length-driven (unnest of a scalar range) —
       // no silent document-length cap; the ONLY truncation is the shared
       // WinnowPosMask + k contract bound, applied identically in Spark.
-      Some(s"""WITH norm AS (
-             |  SELECT doc_id,
-             |         substr(regexp_replace(lower(coalesce(text, '')), '[^a-z0-9]', '', 'g'),
-             |                1, ${TextAnalysis.WinnowPosMask + 8}) AS t
-             |  FROM documents),
-             |grams AS (
-             |  SELECT doc_id, i - 1 AS pos,
-             |         ('0x'||substr(md5(substr(t, i, 8)), 1, 10))::bigint AS h
-             |  FROM (SELECT doc_id, t,
-             |          unnest(range(1, length(t) - 6)) AS i FROM norm)),
-             |keyed AS (
-             |  SELECT doc_id, pos, h * 1048576 + (1048575 - pos) AS key FROM grams),
-             |sel AS (
-             |  SELECT doc_id, pos,
-             |         min(key) OVER (PARTITION BY doc_id ORDER BY pos
-             |             ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sel
-             |  FROM keyed),
+      Some(s"""$winnowSelCtes,
              |fp AS (
              |  SELECT DISTINCT doc_id, sel // 1048576 AS h,
              |         1048575 - sel % 1048576 AS fp_pos

@@ -8,7 +8,7 @@ import graft.core.{Blocks, EntityFrame}
 import graft.encoders.{GraphPropagationEncoder, HashTokenEncoder, LightEAEncoder}
 import graft.eval.Evaluation
 import graft.functions.Num
-import QueryDef.{table, duckTokens}
+import QueryDef.{docTokenSidesSql, duckTokens, table}
 
 /** Encoder + embedding-blocker queries (SURVEY.md §2.8 M8-M11, W5, A10).
   * Graph framing: a restricted orders/parts graph (l_orderkey % 20 = 0)
@@ -25,16 +25,8 @@ object EncoderQueries {
     val rel = relFrame(s, dir)
     val ids = rel.select(col("head").as("id"))
       .unionByName(rel.select(col("tail").as("id"))).distinct()
-    val o = table(s, dir, "orders")
-    val p = table(s, dir, "part")
-    val triples = o.select(concat(lit("o"), col("o_orderkey")).as("head"),
-        lit("status").as("rel"), col("o_orderstatus").as("tail"))
-      .unionByName(o.select(concat(lit("o"), col("o_orderkey")).as("head"),
-        lit("priority").as("rel"), col("o_orderpriority").as("tail")))
-      .unionByName(p.select(concat(lit("p"), col("p_partkey")).as("head"),
-        lit("name").as("rel"), col("p_name").as("tail")))
     EntityFrame(
-      triples.join(ids.withColumnRenamed("id", "head"), Seq("head"), "left_semi"),
+      RelationalQueries.attrTriples(s, dir).join(ids.withColumnRenamed("id", "head"), Seq("head"), "left_semi"),
       "graph", "head", isTriple = true)
   }
 
@@ -213,12 +205,7 @@ object EncoderQueries {
   /** One parity side of the documents table as distinct 3-gram shingles
     * (same construction as DedupQueries' docShingles). */
   private def shingleSideSql(parity: Int) =
-    s"""SELECT DISTINCT id, l[i]||' '||l[i+1]||' '||l[i+2] AS key FROM (
-       |  SELECT id, l, unnest(range(1, len(l) - 1)) AS i FROM (
-       |    SELECT cast(doc_id AS varchar) AS id,
-       |           list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-       |                       t -> length(t) >= 1) AS l
-       |    FROM documents WHERE doc_id % 2 = $parity))""".stripMargin
+    DedupQueries.shinglesSql(s"documents WHERE doc_id % 2 = $parity")
 
   /** True near-dup gold across the %2 parity split: 3-gram shingle
     * jaccard >= 0.5. Only genuinely copied text passes at this
@@ -250,6 +237,28 @@ object EncoderQueries {
       .filter(col("i").cast("double") / (col("szl") + col("szr") - col("i")) >= 0.5)
       .select("l", "r")
   }
+
+  /** One parity side of `docs` as a (doc_id, text) entity frame. */
+  private def textSide(docs: DataFrame, p: Int): EntityFrame = EntityFrame(
+    docs.filter(col("doc_id") % 2 === p).select(col("doc_id"), col("text")),
+    s"side$p", "doc_id")
+
+  /** Ids of one parity side the encoder can see (≥ 1 qualifying token)
+    * — deterministic on both engines. */
+  private def encodableIds(docs: DataFrame, p: Int): DataFrame =
+    docs.filter(col("doc_id") % 2 === p)
+      .select(col("doc_id").cast("string").as("id"),
+        size(graft.functions.Text.tokenize(col("text"))).as("_n"))
+      .filter(col("_n") > 0).select("id")
+
+  /** The embedding blockers' invariant counts: the shingle gold size and
+    * the encodable left ids; the caller appends its `true` flags. */
+  private val invariantCountsSql: String =
+    s"""WITH enc AS (SELECT DISTINCT id FROM (
+       |${duckTokens("cast(doc_id AS varchar)", "text", "(SELECT * FROM documents WHERE doc_id % 2 = 0)")})),
+       |g AS ($shingleGoldSql)
+       |SELECT (SELECT count(*) FROM g) AS n_gold,
+       |       (SELECT count(*) FROM enc) AS n_left,""".stripMargin
 
   /** conc text + tokens + md5 pseudo-embedding f0 per graph entity. */
   private val f0Sql =
@@ -316,8 +325,7 @@ object EncoderQueries {
               |SELECT id, pos::int AS pos, floor(((v) + 1e-9) * 1e4 + 0.5) / 1e4 + 0.0 AS v
               |FROM f2 ORDER BY id, pos""".stripMargin),
       api = "GraphPropagationEncoder.encode",
-      desc = "GCN-style neighbor averaging over the relation graph (2 rounds) on hashed token features — one join per round, degree-normalized.",
-      auditAllow = Some("one-row degree-normalization scalar broadcast")),
+      desc = "GCN-style neighbor averaging over the relation graph (2 rounds) on hashed token features — one join per round, degree-normalized."),
 
     // ---- M9: LightEA three-view propagation, depth 2 ----------------------
     // oracle replays the three views in SQL: direction-tagged edges,
@@ -383,17 +391,12 @@ object EncoderQueries {
               |       floor((CASE WHEN fn.nrm = 0 THEN s.v ELSE s.v / fn.nrm END) * 1e4 + 0.5) / 1e4 + 0.0 AS v
               |FROM stack s JOIN fn USING (id) ORDER BY id, pos""".stripMargin),
       api = "LightEAEncoder.encode",
-      desc = "LightEA three-view (entity/relation/attribute) propagation — sparse joins, no training.",
-      auditAllow = Some("one-row norm scalars broadcast per channel")),
+      desc = "LightEA three-view (entity/relation/attribute) propagation — sparse joins, no training."),
 
     // ---- W5: Sinkhorn re-ranking over kNN candidates ----------------------
     "w5_sinkhorn_rerank" -> QueryDef(
       (s, dir) => {
-        val e = table(s, dir, "embeddings")
-        val l = e.filter(col("vec_id") % 2 === 0)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val r = e.filter(col("vec_id") % 2 === 1)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
+        val (l, r) = SimilarityQueries.evenOdd(table(s, dir, "embeddings"))
         val cand = graft.similarity.Similarity.topKCosine(l, r, 3)
           .select(col("left_id"), col("right_id"), ((col("cos") + 1.0) / 2.0).as("s"))
         val scaled = Sinkhorn.rescale(cand, 2)
@@ -407,14 +410,7 @@ object EncoderQueries {
             Num.stableRound(col("s") * 1e6, 2).as("s_scaled"))
           .orderBy("left_id", "rank")
       },
-      Some("""WITH expl AS (
-             |  SELECT vec_id, i.i AS i, embedding[i.i]::double AS v
-             |  FROM embeddings, range(1, 65) i(i)),
-             |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM expl GROUP BY vec_id),
-             |dots AS (
-             |  SELECT a.vec_id AS left_id, b.vec_id AS right_id, sum(a.v * b.v) AS dot
-             |  FROM expl a JOIN expl b ON a.i = b.i
-             |  WHERE a.vec_id % 2 = 0 AND b.vec_id % 2 = 1 GROUP BY 1, 2),
+      Some(s"""WITH ${SimilarityQueries.evenOddDotsCtes("vec_id", "dots")},
              |cand AS (SELECT left_id, right_id,
              |    (dot / (na.nrm * nb.nrm) + 1.0) / 2.0 AS s
              |  FROM dots JOIN norms na ON na.vec_id = left_id
@@ -434,8 +430,7 @@ object EncoderQueries {
              |  right_id, floor((s * 1e6) * 1e2 + 0.5) / 1e2 AS s_scaled
              |FROM i2c ORDER BY left_id, rank""".stripMargin),
       api = "Sinkhorn.rescale",
-      desc = "Sinkhorn row/column normalization re-ranking of kNN candidate scores (W5) — iterations over the candidate table only.",
-      auditAllow = Some("per-block dense re-rank over broadcast-small candidate lists")),
+      desc = "Sinkhorn row/column normalization re-ranking of kNN candidate scores (W5) — iterations over the candidate table only."),
 
     // ---- A11/A12: joint + N-way blocker evaluation ------------------------
     // Three cheap SQL-expressible blockings over the documents parity
@@ -494,10 +489,7 @@ object EncoderQueries {
         val dice = Evaluation.diceOfTruePositives(tok, lang, gold)
         s.range(1).select(Num.stableRound(lit(dice), 6).as("dice"))
       },
-      Some(s"""WITH lt AS (SELECT DISTINCT * FROM (
-              |${duckTokens("cast(doc_id AS varchar)", "text", "(SELECT * FROM documents WHERE doc_id % 2 = 0)")})),
-              |rt AS (SELECT DISTINCT * FROM (
-              |${duckTokens("cast(doc_id AS varchar)", "text", "(SELECT * FROM documents WHERE doc_id % 2 = 1)")})),
+      Some(s"""$docTokenSidesSql
               |tok_pairs AS (SELECT DISTINCT lt.id AS l, rt.id AS r FROM lt JOIN rt USING (key)),
               |lang_pairs AS (
               |  SELECT DISTINCT cast(a.doc_id AS varchar) AS l, cast(b.doc_id AS varchar) AS r
@@ -531,16 +523,9 @@ object EncoderQueries {
     "m11_kmeans_blocker" -> QueryDef(
       (s, dir) => {
         val docs = table(s, dir, "documents")
-        def side(p: Int) = EntityFrame(
-          docs.filter(col("doc_id") % 2 === p).select(col("doc_id"), col("text")),
-          s"side$p", "doc_id")
         val blocks = KMeansClusterBlocker(HashTokenEncoder(8), numClusters = 8)
-          .assign(side(0), side(1)).df.persist()
-        // ids the encoder can see (≥ 1 qualifying token) — deterministic
-        def encIds(p: Int) = docs.filter(col("doc_id") % 2 === p)
-          .select(col("doc_id").cast("string").as("id"),
-            size(graft.functions.Text.tokenize(col("text"))).as("_n"))
-          .filter(col("_n") > 0).select("id")
+          .assign(textSide(docs, 0), textSide(docs, 1)).df.persist()
+        def encIds(p: Int) = encodableIds(docs, p)
         val lmem = blocks.select(col(Blocks.KeyCol).as("k"),
           explode(col(Blocks.LeftCol)).as("id"))
         val rmem = blocks.select(col(Blocks.KeyCol).as("k"),
@@ -577,29 +562,18 @@ object EncoderQueries {
               col("n_tp").cast("double") / col("n_gold") >= 0.80).as("recall_ok")),
           blocks, gold) // one-row invariant output; release the caches
       },
-      Some(s"""WITH enc AS (SELECT DISTINCT id FROM (
-              |${duckTokens("cast(doc_id AS varchar)", "text", "(SELECT * FROM documents WHERE doc_id % 2 = 0)")})),
-              |g AS ($shingleGoldSql)
-              |SELECT (SELECT count(*) FROM g) AS n_gold,
-              |       (SELECT count(*) FROM enc) AS n_left,
+      Some(s"""$invariantCountsSql
               |       true AS membership_ok, true AS n_blocks_ok,
               |       true AS recall_ok""".stripMargin),
       api = "KMeansClusterBlocker.assign",
-      desc = "MLlib KMeans blocker over propagation embeddings — invariant-graded oracle.",
-      auditAllow = Some("MLlib KMeans internals broadcast centroids")),
+      desc = "MLlib KMeans blocker over propagation embeddings — invariant-graded oracle."),
 
     "emb_knn_blocker" -> QueryDef(
       (s, dir) => {
         val docs = table(s, dir, "documents")
-        def side(p: Int) = EntityFrame(
-          docs.filter(col("doc_id") % 2 === p).select(col("doc_id"), col("text")),
-          s"side$p", "doc_id")
         val blocks = EmbeddingKnnBlocker(HashTokenEncoder(8), k = 3, sinkhornIterations = 1)
-          .assign(side(0), side(1)).df.persist()
-        def encIds(p: Int) = docs.filter(col("doc_id") % 2 === p)
-          .select(col("doc_id").cast("string").as("id"),
-            size(graft.functions.Text.tokenize(col("text"))).as("_n"))
-          .filter(col("_n") > 0).select("id")
+          .assign(textSide(docs, 0), textSide(docs, 1)).df.persist()
+        def encIds(p: Int) = encodableIds(docs, p)
         // persist: the shingle-jaccard gold pipeline feeds two branches
         // of the one-row invariant plan (tp join + n_gold count)
         val gold = shingleGold(docs).persist()
@@ -634,15 +608,10 @@ object EncoderQueries {
               col("n_tp").cast("double") / col("n_gold") >= 0.95).as("recall_ok")),
           blocks, gold) // one-row invariant output; release the caches
       },
-      Some(s"""WITH enc AS (SELECT DISTINCT id FROM (
-              |${duckTokens("cast(doc_id AS varchar)", "text", "(SELECT * FROM documents WHERE doc_id % 2 = 0)")})),
-              |g AS ($shingleGoldSql)
-              |SELECT (SELECT count(*) FROM g) AS n_gold,
-              |       (SELECT count(*) FROM enc) AS n_left,
+      Some(s"""$invariantCountsSql
               |       true AS coverage_ok, true AS k_ok,
               |       true AS recall_ok""".stripMargin),
       api = "EmbeddingKnnBlocker.assign",
-      desc = "NN-blocks from embedding kNN (J4): per-left top-k neighbor blocks via the sign-LSH path.",
-      auditAllow = Some("strategy-selected ANN path; small-side broadcast by construction"))
+      desc = "NN-blocks from embedding kNN (J4): per-left top-k neighbor blocks via the sign-LSH path.")
   )
 }

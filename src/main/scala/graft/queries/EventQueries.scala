@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.multimodal.Multimodal
@@ -17,6 +18,145 @@ object EventQueries {
     * both the Spark call and the DuckDB oracle (the standard 3.5 of
     * Iglewicz & Hoaglin 1993). */
   private val MadCut = 3.5
+
+  /** The events table's clicks and purchases. */
+  private def clicksAndPurchases(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val ev = QueryDef.events(s, dir)
+    (ev.filter(col("event_type") === "click"), ev.filter(col("event_type") === "purchase"))
+  }
+
+  /** Every document as media bytes through the real feature decoder. */
+  private def decodedMedia(s: SparkSession, dir: String): DataFrame = {
+    implicit val sp: SparkSession = s
+    import s.implicits._
+    Multimodal.decodeFeatures(
+        Multimodal.withBinary(table(s, dir, "documents"), "doc_id", "text")
+          .as[Multimodal.MediaRecord])
+      .toDF()
+  }
+
+  // ---- DuckDB replay fragments -------------------------------------------
+  // A batch operator and its streaming twin share one contract, so each
+  // replay below is written once and serves both rows.
+
+  /** Clicks `c` and purchases `p` as (user_id, event_id, us). */
+  private val clickPurchaseCtes: String =
+    """WITH c AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us
+      |          FROM events WHERE event_type = 'click'),
+      |     p AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us
+      |          FROM events WHERE event_type = 'purchase')""".stripMargin
+
+  /** Each click joined (`join` = "JOIN" or "LEFT JOIN") to the same
+    * user's purchases within 30 minutes after it. */
+  private def intervalJoinSql(join: String): String =
+    s"""$clickPurchaseCtes
+       |SELECT c.user_id AS user_id, c.event_id AS l_id, p.event_id AS r_id,
+       |       c.us // 1000000 AS l_sec, p.us // 1000000 AS r_sec
+       |FROM c $join p ON c.user_id = p.user_id
+       |  AND p.us >= c.us AND p.us <= c.us + 1800000000
+       |ORDER BY c.user_id, l_id, r_id""".stripMargin
+
+  /** Each purchase with the latest click of its user at most 30 minutes
+    * before it, by candidate join + row_number argmax. */
+  private val asofJoinSql: String =
+    s"""$clickPurchaseCtes,
+       |cand AS (
+       |  SELECT p.user_id, p.event_id AS l_id, p.us AS l_us,
+       |         c.event_id AS r_id, c.us AS r_us,
+       |         row_number() OVER (PARTITION BY p.event_id
+       |             ORDER BY c.us DESC, c.event_id DESC) AS rk
+       |  FROM p LEFT JOIN c ON p.user_id = c.user_id
+       |    AND c.us <= p.us AND c.us >= p.us - 1800000000)
+       |SELECT user_id, l_id, r_id, l_us // 1000000 AS l_sec,
+       |       r_us // 1000000 AS r_sec
+       |FROM cand WHERE rk = 1 ORDER BY user_id, l_id""".stripMargin
+
+  /** The rate limiter's rule: timed events matching `cond` (" AND …" or
+    * "") as `r(key, id, us)`, then `ranked`, each event's place `seq`
+    * in its key's hour window by (us, id). Null-`ts` events have no
+    * window and are dropped. */
+  private def rateRankedCtes(cond: String): String =
+    s"""r AS (
+       |  SELECT user_id::varchar AS key, event_id::varchar AS id,
+       |         epoch_ns(ts) // 1000 AS us
+       |  FROM events WHERE ts IS NOT NULL$cond),
+       |ranked AS (
+       |  SELECT key, id, us,
+       |         us // 3600000000 * 3600 AS win_start,
+       |         row_number() OVER (PARTITION BY key, us // 3600000000
+       |             ORDER BY us, id) AS seq
+       |  FROM r)""".stripMargin
+
+  /** The latest event per (user_id, event_type) by (ts, event_id). */
+  private val compactLatestSql: String =
+    """WITH r AS (
+      |  SELECT *, row_number() OVER (PARTITION BY user_id, event_type
+      |      ORDER BY ts DESC, event_id DESC) AS rn
+      |  FROM events)
+      |SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us,
+      |       floor((value) * 1e6 + 0.5) / 1e6 AS value
+      |FROM r WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin
+
+  /** The signup → view → purchase funnel, 7-day horizon, by per-stage
+    * equi-join + min. */
+  private val funnelSql: String =
+    """WITH e AS (
+      |  SELECT user_id, event_type, epoch_ns(ts) // 1000 AS us FROM events),
+      |s1 AS (
+      |  SELECT user_id, min(us) AS t0
+      |  FROM e WHERE event_type = 'signup' GROUP BY 1),
+      |s2 AS (
+      |  SELECT e.user_id, t0, min(us) AS t1
+      |  FROM e JOIN s1 USING (user_id)
+      |  WHERE event_type = 'view' AND us > t0 AND us <= t0 + 604800000000
+      |  GROUP BY 1, 2),
+      |s3 AS (
+      |  SELECT e.user_id, min(us) AS t2
+      |  FROM e JOIN s2 USING (user_id)
+      |  WHERE event_type = 'purchase' AND us > t1 AND us <= t0 + 604800000000
+      |  GROUP BY 1)
+      |SELECT 1 AS stage, 'signup' AS event_type,
+      |       (SELECT count(*) FROM s1) AS users
+      |UNION ALL SELECT 2, 'view', (SELECT count(*) FROM s2)
+      |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
+      |ORDER BY stage""".stripMargin
+
+  /** The cohort retention matrix over 30 day offsets. */
+  private val retentionSql: String =
+    """WITH f AS (
+      |  SELECT user_id, min(ts)::date AS cohort FROM events GROUP BY 1),
+      |a AS (SELECT DISTINCT user_id, ts::date AS day FROM events),
+      |j AS (
+      |  SELECT cohort, date_diff('day', cohort, day) AS day_offset
+      |  FROM a JOIN f USING (user_id)
+      |  WHERE date_diff('day', cohort, day) <= 30)
+      |SELECT strftime(cohort, '%Y-%m-%d') AS cohort_day,
+      |       day_offset::int AS day_offset, count(*) AS users
+      |FROM j GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+
+  /** First-order event-type transition probabilities per user stream. */
+  private val markovSql: String =
+    """WITH t AS (
+      |  SELECT user_id, event_type,
+      |         lag(event_type) OVER (PARTITION BY user_id
+      |             ORDER BY ts, event_id) AS prev
+      |  FROM events),
+      |c AS (
+      |  SELECT prev AS from_type, event_type AS to_type, count(*) AS n
+      |  FROM t WHERE prev IS NOT NULL GROUP BY 1, 2)
+      |SELECT from_type, to_type, n,
+      |       floor((n::double / sum(n) OVER (PARTITION BY from_type))
+      |             * 1e6 + 0.5) / 1e6 AS p
+      |FROM c ORDER BY from_type, to_type""".stripMargin
+
+  /** Per-document character counts `counts(id, bucket, c)` in 32-wide
+    * codepoint buckets — the byte-histogram feature replay. */
+  private val charBucketCtes: String =
+    """WITH chars AS (
+      |  SELECT doc_id AS id, unnest(split(text, '')) AS ch FROM documents),
+      |counts AS (
+      |  SELECT id, ord(ch) // 32 AS bucket, count(*)::double AS c
+      |  FROM chars GROUP BY id, bucket)""".stripMargin
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -78,13 +218,7 @@ object EventQueries {
           unix_micros(col("ts")).as("ts_us"),
           Num.stableRound(col("value"), 6).as("value"))
         .orderBy("user_id", "event_type"),
-      Some("""WITH r AS (
-             |  SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-             |      ORDER BY ts DESC, event_id DESC) AS rn
-             |  FROM events)
-             |SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us,
-             |       floor((value) * 1e6 + 0.5) / 1e6 AS value
-             |FROM r WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin),
+      Some(compactLatestSql),
       api = "StreamingOps.compactLatest",
       desc = "CDC compaction to latest-per-key (max_by-free: (ts, tiebreak) window) — batch form."),
 
@@ -117,44 +251,22 @@ object EventQueries {
     // and the range predicate bounds the join state.
     "ev_interval_join" -> QueryDef(
       (s, dir) => {
-        val ev = QueryDef.events(s, dir)
-        StreamingOps.intervalJoin(
-          ev.filter(col("event_type") === "click"),
-          ev.filter(col("event_type") === "purchase"),
-          "user_id", 1800L)
+        val (clicks, buys) = clicksAndPurchases(s, dir)
+        StreamingOps.intervalJoin(clicks, buys, "user_id", 1800L)
           .orderBy("user_id", "l_id", "r_id")
       },
-      Some("""WITH c AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us
-             |          FROM events WHERE event_type = 'click'),
-             |     p AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us
-             |          FROM events WHERE event_type = 'purchase')
-             |SELECT c.user_id AS user_id, c.event_id AS l_id, p.event_id AS r_id,
-             |       c.us // 1000000 AS l_sec, p.us // 1000000 AS r_sec
-             |FROM c JOIN p ON c.user_id = p.user_id
-             |  AND p.us >= c.us AND p.us <= c.us + 1800000000
-             |ORDER BY c.user_id, l_id, r_id""".stripMargin),
+      Some(intervalJoinSql("JOIN")),
       api = "StreamingOps.intervalJoin",
       desc = "Interval (range) join events×spans through a bucketed equi-join — range predicates never become a nested loop."),
 
     // ---- event-time interval join, LEFT OUTER (unmatched clicks kept) -----
     "ev_interval_join_outer" -> QueryDef(
       (s, dir) => {
-        val ev = QueryDef.events(s, dir)
-        StreamingOps.intervalJoin(
-          ev.filter(col("event_type") === "click"),
-          ev.filter(col("event_type") === "purchase"),
-          "user_id", 1800L, joinType = "left_outer")
+        val (clicks, buys) = clicksAndPurchases(s, dir)
+        StreamingOps.intervalJoin(clicks, buys, "user_id", 1800L, joinType = "left_outer")
           .orderBy("user_id", "l_id", "r_id")
       },
-      Some("""WITH c AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us
-             |          FROM events WHERE event_type = 'click'),
-             |     p AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us
-             |          FROM events WHERE event_type = 'purchase')
-             |SELECT c.user_id AS user_id, c.event_id AS l_id, p.event_id AS r_id,
-             |       c.us // 1000000 AS l_sec, p.us // 1000000 AS r_sec
-             |FROM c LEFT JOIN p ON c.user_id = p.user_id
-             |  AND p.us >= c.us AND p.us <= c.us + 1800000000
-             |ORDER BY c.user_id, l_id, r_id""".stripMargin),
+      Some(intervalJoinSql("LEFT JOIN")),
       api = "StreamingOps.intervalJoin",
       desc = "Outer interval join: unmatched left rows survive with null span columns, same bucket plan."),
 
@@ -164,27 +276,11 @@ object EventQueries {
     // re-derivation of the union-window pass.
     "ev_asof_join" -> QueryDef(
       (s, dir) => {
-        val ev = QueryDef.events(s, dir)
-        StreamingOps.asofJoin(
-          ev.filter(col("event_type") === "purchase"),
-          ev.filter(col("event_type") === "click"),
-          "user_id", 1800L)
+        val (clicks, buys) = clicksAndPurchases(s, dir)
+        StreamingOps.asofJoin(buys, clicks, "user_id", 1800L)
           .orderBy("user_id", "l_id")
       },
-      Some("""WITH c AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us
-             |          FROM events WHERE event_type = 'click'),
-             |     p AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us
-             |          FROM events WHERE event_type = 'purchase'),
-             |cand AS (
-             |  SELECT p.user_id, p.event_id AS l_id, p.us AS l_us,
-             |         c.event_id AS r_id, c.us AS r_us,
-             |         row_number() OVER (PARTITION BY p.event_id
-             |             ORDER BY c.us DESC, c.event_id DESC) AS rk
-             |  FROM p LEFT JOIN c ON p.user_id = c.user_id
-             |    AND c.us <= p.us AND c.us >= p.us - 1800000000)
-             |SELECT user_id, l_id, r_id, l_us // 1000000 AS l_sec,
-             |       r_us // 1000000 AS r_sec
-             |FROM cand WHERE rk = 1 ORDER BY user_id, l_id""".stripMargin),
+      Some(asofJoinSql),
       api = "StreamingOps.asofJoin",
       desc = "As-of join (latest quote ≤ event ts) via union + last_value window — no per-row subquery."),
 
@@ -194,27 +290,11 @@ object EventQueries {
     // (spec) and hash-identical to ev_asof_join's oracle.
     "ev_asof_join_bucketed" -> QueryDef(
       (s, dir) => {
-        val ev = QueryDef.events(s, dir)
-        StreamingOps.asofJoinBucketed(
-          ev.filter(col("event_type") === "purchase"),
-          ev.filter(col("event_type") === "click"),
-          "user_id", 1800L, bucketSeconds = 3600L)
+        val (clicks, buys) = clicksAndPurchases(s, dir)
+        StreamingOps.asofJoinBucketed(buys, clicks, "user_id", 1800L, bucketSeconds = 3600L)
           .orderBy("user_id", "l_id")
       },
-      Some("""WITH c AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us
-             |          FROM events WHERE event_type = 'click'),
-             |     p AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us
-             |          FROM events WHERE event_type = 'purchase'),
-             |cand AS (
-             |  SELECT p.user_id, p.event_id AS l_id, p.us AS l_us,
-             |         c.event_id AS r_id, c.us AS r_us,
-             |         row_number() OVER (PARTITION BY p.event_id
-             |             ORDER BY c.us DESC, c.event_id DESC) AS rk
-             |  FROM p LEFT JOIN c ON p.user_id = c.user_id
-             |    AND c.us <= p.us AND c.us >= p.us - 1800000000)
-             |SELECT user_id, l_id, r_id, l_us // 1000000 AS l_sec,
-             |       r_us // 1000000 AS r_sec
-             |FROM cand WHERE rk = 1 ORDER BY user_id, l_id""".stripMargin),
+      Some(asofJoinSql),
       api = "StreamingOps.asofJoinBucketed",
       desc = "As-of join for hot keys: time-bucketed equi-join carries only bucket-local candidates — the 100 TB shape."),
 
@@ -239,20 +319,7 @@ object EventQueries {
             expr("rUs div 1000000").as("r_sec"))
           .orderBy("user_id", "l_id")
       },
-      Some("""WITH c AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us
-             |          FROM events WHERE event_type = 'click'),
-             |     p AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us
-             |          FROM events WHERE event_type = 'purchase'),
-             |cand AS (
-             |  SELECT p.user_id, p.event_id AS l_id, p.us AS l_us,
-             |         c.event_id AS r_id, c.us AS r_us,
-             |         row_number() OVER (PARTITION BY p.event_id
-             |             ORDER BY c.us DESC, c.event_id DESC) AS rk
-             |  FROM p LEFT JOIN c ON p.user_id = c.user_id
-             |    AND c.us <= p.us AND c.us >= p.us - 1800000000)
-             |SELECT user_id, l_id, r_id, l_us // 1000000 AS l_sec,
-             |       r_us // 1000000 AS r_sec
-             |FROM cand WHERE rk = 1 ORDER BY user_id, l_id""".stripMargin),
+      Some(asofJoinSql),
       api = "StreamingOps.streamAsofJoin",
       desc = "Streaming as-of join with keyed quote state and watermark expiry."),
 
@@ -275,16 +342,7 @@ object EventQueries {
             col("seqInWin").as("seq_in_win"))
           .orderBy("key", "win_start", "seq_in_win")
       },
-      Some("""WITH r AS (
-             |  SELECT user_id::varchar AS key, event_id::varchar AS id,
-             |         epoch_ns(ts) // 1000 AS us
-             |  FROM events),
-             |ranked AS (
-             |  SELECT key, id,
-             |         us // 3600000000 * 3600 AS win_start,
-             |         row_number() OVER (PARTITION BY key, us // 3600000000
-             |             ORDER BY us, id) AS seq
-             |  FROM r)
+      Some(s"""WITH ${rateRankedCtes("")}
              |SELECT key, id, win_start, seq::int AS seq_in_win
              |FROM ranked WHERE seq <= 2
              |ORDER BY key, win_start, seq_in_win""".stripMargin),
@@ -298,33 +356,22 @@ object EventQueries {
     "ev_rate_limited_join" -> QueryDef(
       (s, dir) => {
         implicit val sp = s
-        val ev = QueryDef.events(s, dir)
-        StreamingOps.rateLimitedIntervalJoin(
-          ev.filter(col("event_type") === "click"),
-          ev.filter(col("event_type") === "purchase"),
-          "user_id", maxPerWindow = 2, windowSeconds = 3600L,
-          boundSeconds = 1800L)
+        val (clicks, buys) = clicksAndPurchases(s, dir)
+        StreamingOps.rateLimitedIntervalJoin(clicks, buys, "user_id",
+          maxPerWindow = 2, windowSeconds = 3600L, boundSeconds = 1800L)
           .orderBy("user_id", "l_id", "r_id")
       },
-      Some("""WITH c AS (
-             |  SELECT user_id::varchar AS user_id, event_id::varchar AS event_id,
-             |         epoch_ns(ts) // 1000 AS us
-             |  FROM events WHERE event_type = 'click'),
-             |capped AS (
-             |  SELECT user_id, event_id, us,
-             |         row_number() OVER (PARTITION BY user_id, us // 3600000000
-             |             ORDER BY us, event_id) AS seq
-             |  FROM c),
+      Some(s"""WITH ${rateRankedCtes(" AND event_type = 'click'")},
              |p AS (
              |  SELECT user_id::varchar AS user_id, event_id::varchar AS event_id,
              |         epoch_ns(ts) // 1000 AS us
              |  FROM events WHERE event_type = 'purchase')
-             |SELECT c.user_id AS user_id, c.event_id AS l_id, p.event_id AS r_id,
+             |SELECT c.key AS user_id, c.id AS l_id, p.event_id AS r_id,
              |       c.us // 1000000 AS l_sec, p.us // 1000000 AS r_sec
-             |FROM capped c JOIN p ON c.user_id = p.user_id
+             |FROM ranked c JOIN p ON c.key = p.user_id
              |  AND p.us >= c.us AND p.us <= c.us + 1800000000
              |WHERE c.seq <= 2
-             |ORDER BY c.user_id, l_id, r_id""".stripMargin),
+             |ORDER BY c.key, l_id, r_id""".stripMargin),
       api = "StreamingOps.rateLimitedIntervalJoin",
       desc = "Rate limiter composed with the interval join — admission control before join fan-out."),
 
@@ -443,22 +490,13 @@ object EventQueries {
     // proves the real dispatch ran; the pixel branch is spec-asserted.
     "mm_features" -> QueryDef(
       (s, dir) => {
-        implicit val sp = s
-        import s.implicits._
-        Multimodal.decodeFeatures(
-            Multimodal.withBinary(table(s, dir, "documents"), "doc_id", "text")
-              .as[Multimodal.MediaRecord])
-          .toDF()
+        decodedMedia(s, dir)
           .select(col("id"), posexplode(col("features")), col("decoded"))
           .select(col("id"), col("pos").cast("int").as("bucket"),
             col("col").as("v"), col("decoded"))
           .orderBy("id", "bucket")
       },
-      Some("""WITH chars AS (
-             |  SELECT doc_id AS id, unnest(split(text, '')) AS ch FROM documents),
-             |counts AS (
-             |  SELECT id, ord(ch) // 32 AS bucket, count(*)::double AS c
-             |  FROM chars GROUP BY id, bucket),
+      Some(s"""$charBucketCtes,
              |grid AS (
              |  SELECT doc_id AS id,
              |         greatest(octet_length(encode(text)), 1)::double AS n,
@@ -486,12 +524,7 @@ object EventQueries {
     // Zero-length media still hash (n floor-guarded to 1 upstream).
     "mm_phash_dedup" -> QueryDef(
       (s, dir) => {
-        implicit val sp = s
-        import s.implicits._
-        Multimodal.decodeFeatures(
-            Multimodal.withBinary(table(s, dir, "documents"), "doc_id", "text")
-              .as[Multimodal.MediaRecord])
-          .toDF()
+        decodedMedia(s, dir)
           .select(col("id").cast("string").as("id"),
             md5(concat_ws(",",
               transform(col("features"),
@@ -502,11 +535,7 @@ object EventQueries {
           .filter(col("n") >= 2)
           .orderBy("phash")
       },
-      Some("""WITH chars AS (
-             |  SELECT doc_id AS id, unnest(split(text, '')) AS ch FROM documents),
-             |counts AS (
-             |  SELECT id, ord(ch) // 32 AS bucket, count(*)::double AS c
-             |  FROM chars GROUP BY id, bucket),
+      Some(s"""$charBucketCtes,
              |grid AS (
              |  SELECT doc_id AS id,
              |         greatest(octet_length(encode(text)), 1)::double AS n,
@@ -538,26 +567,7 @@ object EventQueries {
       (s, dir) => graft.events.EventAnalytics.funnel(
         QueryDef.events(s, dir), Seq("signup", "view", "purchase"),
         horizonSec = 7 * 86400L).orderBy("stage"),
-      Some("""WITH e AS (
-             |  SELECT user_id, event_type, epoch_ns(ts) // 1000 AS us FROM events),
-             |s1 AS (
-             |  SELECT user_id, min(us) AS t0
-             |  FROM e WHERE event_type = 'signup' GROUP BY 1),
-             |s2 AS (
-             |  SELECT e.user_id, t0, min(us) AS t1
-             |  FROM e JOIN s1 USING (user_id)
-             |  WHERE event_type = 'view' AND us > t0 AND us <= t0 + 604800000000
-             |  GROUP BY 1, 2),
-             |s3 AS (
-             |  SELECT e.user_id, min(us) AS t2
-             |  FROM e JOIN s2 USING (user_id)
-             |  WHERE event_type = 'purchase' AND us > t1 AND us <= t0 + 604800000000
-             |  GROUP BY 1)
-             |SELECT 1 AS stage, 'signup' AS event_type,
-             |       (SELECT count(*) FROM s1) AS users
-             |UNION ALL SELECT 2, 'view', (SELECT count(*) FROM s2)
-             |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
-             |ORDER BY stage""".stripMargin),
+      Some(funnelSql),
       api = "EventAnalytics.funnel",
       desc = "K-stage funnel in ONE user-keyed shuffle (ordered-stage scan per user, hot-user bound) — not O(k²) self-joins."),
 
@@ -566,16 +576,7 @@ object EventQueries {
       (s, dir) => graft.events.EventAnalytics.retention(
         QueryDef.events(s, dir), maxOffsetDays = 30)
         .orderBy("cohort_day", "day_offset"),
-      Some("""WITH f AS (
-             |  SELECT user_id, min(ts)::date AS cohort FROM events GROUP BY 1),
-             |a AS (SELECT DISTINCT user_id, ts::date AS day FROM events),
-             |j AS (
-             |  SELECT cohort, date_diff('day', cohort, day) AS day_offset
-             |  FROM a JOIN f USING (user_id)
-             |  WHERE date_diff('day', cohort, day) <= 30)
-             |SELECT strftime(cohort, '%Y-%m-%d') AS cohort_day,
-             |       day_offset::int AS day_offset, count(*) AS users
-             |FROM j GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      Some(retentionSql),
       api = "EventAnalytics.retention",
       desc = "Cohort retention matrix: first-seen cohort × activity period, two aggs."),
 
@@ -622,18 +623,7 @@ object EventQueries {
     "ev_markov_transitions" -> QueryDef(
       (s, dir) => graft.events.EventAnalytics.markovTransitions(
         QueryDef.events(s, dir)).orderBy("from_type", "to_type"),
-      Some("""WITH t AS (
-             |  SELECT user_id, event_type,
-             |         lag(event_type) OVER (PARTITION BY user_id
-             |             ORDER BY ts, event_id) AS prev
-             |  FROM events),
-             |c AS (
-             |  SELECT prev AS from_type, event_type AS to_type, count(*) AS n
-             |  FROM t WHERE prev IS NOT NULL GROUP BY 1, 2)
-             |SELECT from_type, to_type, n,
-             |       floor((n::double / sum(n) OVER (PARTITION BY from_type))
-             |             * 1e6 + 0.5) / 1e6 AS p
-             |FROM c ORDER BY from_type, to_type""".stripMargin),
+      Some(markovSql),
       api = "EventAnalytics.markovTransitions",
       desc = "Event-type Markov transition matrix via lag over per-user ordered streams."),
 
@@ -663,16 +653,7 @@ object EventQueries {
             col("offset").cast("int").as("day_offset"), col("users"))
           .orderBy("cohort_day", "day_offset")
       },
-      Some("""WITH f AS (
-             |  SELECT user_id, min(ts)::date AS cohort FROM events GROUP BY 1),
-             |a AS (SELECT DISTINCT user_id, ts::date AS day FROM events),
-             |j AS (
-             |  SELECT cohort, date_diff('day', cohort, day) AS day_offset
-             |  FROM a JOIN f USING (user_id)
-             |  WHERE date_diff('day', cohort, day) <= 30)
-             |SELECT strftime(cohort, '%Y-%m-%d') AS cohort_day,
-             |       day_offset::int AS day_offset, count(*) AS users
-             |FROM j GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      Some(retentionSql),
       api = "StreamingOps.streamRetention",
       desc = "Streaming retention with per-user first-seen state."),
 
@@ -692,18 +673,7 @@ object EventQueries {
         trans.withColumn("p", Num.stableRound(col("n") / sum(col("n")).over(w), 6))
           .orderBy("from_type", "to_type")
       },
-      Some("""WITH t AS (
-             |  SELECT user_id, event_type,
-             |         lag(event_type) OVER (PARTITION BY user_id
-             |             ORDER BY ts, event_id) AS prev
-             |  FROM events),
-             |c AS (
-             |  SELECT prev AS from_type, event_type AS to_type, count(*) AS n
-             |  FROM t WHERE prev IS NOT NULL GROUP BY 1, 2)
-             |SELECT from_type, to_type, n,
-             |       floor((n::double / sum(n) OVER (PARTITION BY from_type))
-             |             * 1e6 + 0.5) / 1e6 AS p
-             |FROM c ORDER BY from_type, to_type""".stripMargin),
+      Some(markovSql),
       api = "StreamingOps.streamMarkov",
       desc = "Streaming Markov transitions: last-state-per-user keyed state."),
 
@@ -814,26 +784,7 @@ object EventQueries {
             coalesce(col("n"), lit(0L)).as("users"))
           .orderBy("stage")
       },
-      Some("""WITH e AS (
-             |  SELECT user_id, event_type, epoch_ns(ts) // 1000 AS us FROM events),
-             |s1 AS (
-             |  SELECT user_id, min(us) AS t0
-             |  FROM e WHERE event_type = 'signup' GROUP BY 1),
-             |s2 AS (
-             |  SELECT e.user_id, t0, min(us) AS t1
-             |  FROM e JOIN s1 USING (user_id)
-             |  WHERE event_type = 'view' AND us > t0 AND us <= t0 + 604800000000
-             |  GROUP BY 1, 2),
-             |s3 AS (
-             |  SELECT e.user_id, min(us) AS t2
-             |  FROM e JOIN s2 USING (user_id)
-             |  WHERE event_type = 'purchase' AND us > t1 AND us <= t0 + 604800000000
-             |  GROUP BY 1)
-             |SELECT 1 AS stage, 'signup' AS event_type,
-             |       (SELECT count(*) FROM s1) AS users
-             |UNION ALL SELECT 2, 'view', (SELECT count(*) FROM s2)
-             |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
-             |ORDER BY stage""".stripMargin),
+      Some(funnelSql),
       api = "StreamingOps.streamFunnel",
       desc = "Streaming funnel: per-user O(1) stage-progress state, population-bounded."),
 
@@ -856,13 +807,7 @@ object EventQueries {
             Num.stableRound(col("value"), 6).as("value"))
           .orderBy("user_id", "event_type")
       },
-      Some("""WITH r AS (
-             |  SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-             |      ORDER BY ts DESC, event_id DESC) AS rn
-             |  FROM events)
-             |SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us,
-             |       floor((value) * 1e6 + 0.5) / 1e6 AS value
-             |FROM r WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin),
+      Some(compactLatestSql),
       api = "StreamingOps.streamCompactLatest",
       desc = "Streaming CDC compaction with keyed state — one row per key, updates collapse in-state.")
   )

@@ -12,6 +12,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * API it exercises, `desc` what it computes) and, in `auditAllow`, why
   * a CartesianProduct / BroadcastNestedLoopJoin in its plan is
   * acceptable ([[graft.PlanAudit]] flags the operator otherwise).
+  *
+  * Oracles replay, never share code with, the Spark side. A DuckDB
+  * chain that several oracles use is written once, as a fragment beside
+  * its queries (`private[queries]` when another module reuses it), and
+  * takes as parameters only what differs between its callers. Every
+  * oracle string is pinned by sha256 in `oracle_sql.sha256`
+  * (`OracleSqlSpec`); `sbt 'Test/runMain graft.OracleSqlSpec'` prints
+  * the file for an intended change.
   */
 final case class QueryDef(
     fn: (SparkSession, String) => DataFrame,
@@ -55,6 +63,37 @@ object QueryDef {
     }
   }
 
+  /** A blocker's output as (block_key, left_ids, right_ids) rows — the
+    * id lists comma-joined — ordered by block key: the shape every
+    * blocking query's oracle replays. */
+  def blockRows(b: graft.core.Blocks): DataFrame = {
+    import org.apache.spark.sql.functions.{array_join, col}
+    import graft.core.Blocks._
+    b.df.select(col(KeyCol),
+        array_join(col(LeftCol), ",").as("left_ids"),
+        array_join(col(RightCol), ",").as("right_ids"))
+      .orderBy(KeyCol)
+  }
+
+  /** customer and supplier as (id, key) blocking sides keyed by their
+    * nation — the key-equality blocking fixture. */
+  def nationSides(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.functions.col
+    (table(spark, dir, "customer")
+      .select(col("c_custkey").as("id"), col("c_nationkey").cast("string").as("key")),
+     table(spark, dir, "supplier")
+      .select(col("s_suppkey").as("id"), col("s_nationkey").cast("string").as("key")))
+  }
+
+  /** `docs` split into even/odd doc_id entity frames of (doc_id, text). */
+  def docSides(docs: DataFrame): (graft.core.EntityFrame, graft.core.EntityFrame) = {
+    import org.apache.spark.sql.functions.col
+    def side(parity: Int, name: String) = graft.core.EntityFrame(
+      docs.filter(col("doc_id") % 2 === parity).select(col("doc_id"), col("text")),
+      name, "doc_id")
+    (side(0, "docs_even"), side(1, "docs_odd"))
+  }
+
   /** Shared tokenizer fragments — MUST stay in lockstep with
     * [[graft.functions.Text.tokenize]]. */
   val stopwordsSqlList: String =
@@ -67,4 +106,12 @@ object QueryDef {
        |         unnest(regexp_split_to_array(lower($textExpr), '[^a-z0-9]+')) AS tok
        |  FROM $table)
        |WHERE length(tok) >= $minLen AND tok NOT IN $stopwordsSqlList""".stripMargin
+
+  /** The distinct (id, key) tokens `lt`/`rt` of the even/odd documents,
+    * opening a WITH chain — the DuckDB side of [[docSides]]. */
+  val docTokenSidesSql: String =
+    s"""WITH lt AS (SELECT DISTINCT * FROM (
+       |${duckTokens("cast(doc_id AS varchar)", "text", "(SELECT * FROM documents WHERE doc_id % 2 = 0)")})),
+       |rt AS (SELECT DISTINCT * FROM (
+       |${duckTokens("cast(doc_id AS varchar)", "text", "(SELECT * FROM documents WHERE doc_id % 2 = 1)")})),""".stripMargin
 }

@@ -6,7 +6,7 @@ import graft.blockers._
 import graft.core.{Blocks, EntityFrame}
 import graft.relational.Relational
 import graft.functions.Num
-import QueryDef.{table, duckTokens}
+import QueryDef.{blockRows, docSides, docTokenSidesSql, duckTokens, nationSides, table}
 
 /** Relation-aware operators + block algebra (SURVEY.md §2.2/§2.3/§2.4/
   * §2.5/§2.6), each oracle-checked.
@@ -24,7 +24,7 @@ object RelationalQueries {
       concat(lit("ln_"), col("l_linenumber")).as("rel"),
       concat(lit("p"), col("l_partkey")).as("tail"))
 
-  private def attrTriples(s: SparkSession, dir: String): DataFrame = {
+  private[queries] def attrTriples(s: SparkSession, dir: String): DataFrame = {
     val o = table(s, dir, "orders")
     val p = table(s, dir, "part")
     o.select(concat(lit("o"), col("o_orderkey")).as("head"),
@@ -46,6 +46,44 @@ object RelationalQueries {
     """SELECT 'o'||o_orderkey AS head, 'status' AS rel, o_orderstatus AS tail FROM orders
       |UNION ALL SELECT 'o'||o_orderkey, 'priority', o_orderpriority FROM orders
       |UNION ALL SELECT 'p'||p_partkey, 'name', p_name FROM part""".stripMargin
+
+  /** `n(n)`: the number of distinct graph entities. */
+  private val entityCountCte: String =
+    s"""n AS (SELECT count(DISTINCT e) AS n FROM (
+       |    SELECT head AS e FROM ($attrSql)
+       |    UNION ALL SELECT head FROM ($relSql)
+       |    UNION ALL SELECT tail FROM ($relSql)))""".stripMargin
+
+  /** Each head's top-`n` (head, rel) `pairs` by `imp` importance (ties
+    * by rel), and the triples of `src` on them. */
+  private def topByImportanceSql(src: String, n: Int): String =
+    s"""ranked AS (SELECT p.head, p.rel,
+       |    row_number() OVER (PARTITION BY p.head
+       |                       ORDER BY i.importance DESC, p.rel ASC) AS rn
+       |  FROM pairs p LEFT JOIN imp i USING (rel)),
+       |keep AS (SELECT head, rel FROM ranked WHERE rn <= $n)
+       |SELECT t.head, t.rel, t.tail FROM ($src) t
+       |SEMI JOIN keep k ON t.head = k.head AND t.rel = k.rel
+       |ORDER BY 1, 2, 3""".stripMargin
+
+  /** The key-skew profile's exact head over the document tokens: key
+    * counts `c`, then n_keys, total and max rows and the top-1 share. */
+  private val skewHeadSql: String =
+    s"""WITH t AS (${duckTokens("doc_id", "text", "documents")}),
+       |c AS (SELECT key, count(*) AS c FROM t GROUP BY 1)
+       |SELECT count(*) AS n_keys, sum(c)::bigint AS total_rows,
+       |  max(c)::bigint AS max_key_rows,
+       |  ${Num.stableRoundSql("max(c)::double / sum(c)", 6)} AS top1_share,""".stripMargin
+
+  /** The part value fixture: (p_partkey, "name brand size") as the left
+    * frame, the same values under ids shifted by 10⁷ as the right. */
+  private def partValueSides(s: SparkSession, dir: String): (EntityFrame, EntityFrame) = {
+    val p = table(s, dir, "part").select(col("p_partkey"),
+      concat_ws(" ", col("p_name"), col("p_brand"), col("p_size")).as("v"))
+    (EntityFrame(p, "parts_l", "p_partkey"),
+     EntityFrame(p.select((col("p_partkey") + 10000000L).as("p_partkey"), col("v")),
+       "parts_r", "p_partkey"))
+  }
 
   /** conc text per entity (own attributes): sorted distinct tails. */
   private val concSql =
@@ -107,10 +145,7 @@ object RelationalQueries {
           .select(col("rel"), Num.stableRound(col("importance"), 6).as("importance"))
           .orderBy("rel")
       },
-      Some(s"""WITH n AS (SELECT count(DISTINCT e) AS n FROM (
-              |    SELECT head AS e FROM ($attrSql)
-              |    UNION ALL SELECT head FROM ($relSql)
-              |    UNION ALL SELECT tail FROM ($relSql))),
+      Some(s"""WITH $entityCountCte,
               |c AS (SELECT rel, count(*) AS rc, count(DISTINCT tail) AS tc
               |      FROM ($relSql) GROUP BY rel)
               |SELECT rel, floor((
@@ -131,10 +166,7 @@ object RelationalQueries {
           .select(col("rel"), Num.stableRound(col("importance"), 6).as("importance"))
           .orderBy("rel")
       },
-      Some(s"""WITH n AS (SELECT count(DISTINCT e) AS n FROM (
-              |    SELECT head AS e FROM ($attrSql)
-              |    UNION ALL SELECT head FROM ($relSql)
-              |    UNION ALL SELECT tail FROM ($relSql))),
+      Some(s"""WITH $entityCountCte,
               |c AS (SELECT rel, count(head) AS hc, count(*) AS rc,
               |             count(DISTINCT tail) AS tc
               |      FROM ($attrSql) GROUP BY rel)
@@ -156,22 +188,12 @@ object RelationalQueries {
         Relational.filterImportance(rel, imp, 2)
           .orderBy("head", "rel", "tail")
       },
-      Some(s"""WITH n AS (SELECT count(DISTINCT e) AS n FROM (
-              |    SELECT head AS e FROM ($attrSql)
-              |    UNION ALL SELECT head FROM ($relSql)
-              |    UNION ALL SELECT tail FROM ($relSql))),
+      Some(s"""WITH $entityCountCte,
               |imp AS (SELECT rel, 2*(rc/(n.n*n.n))*(tc/rc)/((rc/(n.n*n.n)) + (tc/rc)) AS importance
               |        FROM (SELECT rel, count(*) AS rc, count(DISTINCT tail) AS tc
               |              FROM ($relSql) GROUP BY rel) c, n),
               |pairs AS (SELECT DISTINCT t.head, t.rel FROM ($relSql) t),
-              |ranked AS (SELECT p.head, p.rel,
-              |    row_number() OVER (PARTITION BY p.head
-              |                       ORDER BY i.importance DESC, p.rel ASC) AS rn
-              |  FROM pairs p LEFT JOIN imp i USING (rel)),
-              |keep AS (SELECT head, rel FROM ranked WHERE rn <= 2)
-              |SELECT t.head, t.rel, t.tail FROM ($relSql) t
-              |SEMI JOIN keep k ON t.head = k.head AND t.rel = k.rel
-              |ORDER BY 1, 2, 3""".stripMargin),
+              |${topByImportanceSql(relSql, 2)}""".stripMargin),
       api = "Relational.filterImportance",
       desc = "Keeps each entity's top-n most important relations — broadcast importance join + per-entity window (P8/J6/W1).",
       auditAllow = Some("consumes a4's importance pipeline (one-row total broadcast)")),
@@ -181,10 +203,7 @@ object RelationalQueries {
       (s, dir) => Relational
         .topNNameProperties(attrFrame(s, dir), relFrame(s, dir), 1)
         .orderBy("head", "rel", "tail"),
-      Some(s"""WITH n AS (SELECT count(DISTINCT e) AS n FROM (
-              |    SELECT head AS e FROM ($attrSql)
-              |    UNION ALL SELECT head FROM ($relSql)
-              |    UNION ALL SELECT tail FROM ($relSql))),
+      Some(s"""WITH $entityCountCte,
               |imp AS (SELECT rel,
               |    CASE WHEN (hc/n.n + tc/rc) = 0 THEN 0
               |         ELSE 2*(hc/n.n)*(tc/rc)/((hc/n.n) + (tc/rc)) END AS importance
@@ -192,14 +211,7 @@ object RelationalQueries {
               |               count(DISTINCT tail) AS tc
               |        FROM ($attrSql) GROUP BY rel) c, n),
               |pairs AS (SELECT DISTINCT head, rel FROM ($attrSql)),
-              |ranked AS (SELECT p.head, p.rel,
-              |    row_number() OVER (PARTITION BY p.head
-              |                       ORDER BY i.importance DESC, p.rel ASC) AS rn
-              |  FROM pairs p LEFT JOIN imp i USING (rel)),
-              |keep AS (SELECT head, rel FROM ranked WHERE rn <= 1)
-              |SELECT t.head, t.rel, t.tail FROM ($attrSql) t
-              |SEMI JOIN keep k ON t.head = k.head AND t.rel = k.rel
-              |ORDER BY 1, 2, 3""".stripMargin),
+              |${topByImportanceSql(attrSql, 1)}""".stripMargin),
       api = "Window.partitionBy + row_number",
       desc = "Top-n name properties per entity by importance — the W1 window form with a deterministic tiebreak.",
       auditAllow = Some("consumes a5's importance pipeline (one-row total broadcast)")),
@@ -241,12 +253,7 @@ object RelationalQueries {
             .unionByName(rel.select(col("tail").as("e"))).distinct()
           attr.copy(df = attr.df.join(ids.withColumnRenamed("e", "head"), Seq("head"), "left_semi"))
         }
-        val b = blocker.assign(restrict(la, lr), restrict(ra, rr), Some(lr), Some(rr))
-        b.df.select(
-          col(Blocks.KeyCol),
-          array_join(col(Blocks.LeftCol), ",").as("left_ids"),
-          array_join(col(Blocks.RightCol), ",").as("right_ids"))
-          .orderBy(Blocks.KeyCol)
+        blockRows(blocker.assign(restrict(la, lr), restrict(ra, rr), Some(lr), Some(rr)))
       },
       Some {
         def sideSql(parity: Int) =
@@ -283,10 +290,7 @@ object RelationalQueries {
     // ---- A7: block statistics --------------------------------------------
     "a7_block_stats" -> QueryDef(
       (s, dir) => {
-        val l = table(s, dir, "customer")
-          .select(col("c_custkey").as("id"), col("c_nationkey").cast("string").as("key"))
-        val r = table(s, dir, "supplier")
-          .select(col("s_suppkey").as("id"), col("s_nationkey").cast("string").as("key"))
+        val (l, r) = nationSides(s, dir)
         Blocker.blockJoin(l, r).statistics.orderBy(Blocks.KeyCol)
       },
       Some("""WITH lb AS (SELECT cast(c_nationkey AS varchar) AS block_key,
@@ -303,20 +307,14 @@ object RelationalQueries {
     "p10_block_cap" -> QueryDef(
       (s, dir) => {
         val docs = table(s, dir, "documents")
-        val lf = EntityFrame(docs.filter(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), col("text")), "docs_even", "doc_id")
-        val rf = EntityFrame(docs.filter(col("doc_id") % 2 === 1)
-          .select(col("doc_id"), col("text")), "docs_odd", "doc_id")
+        val (lf, rf) = docSides(docs)
         TokenBlocker().assign(lf, rf).cap(20000)
           .df.select(col(Blocks.KeyCol),
             size(col(Blocks.LeftCol)).as("left_size"),
             size(col(Blocks.RightCol)).as("right_size"))
           .orderBy(Blocks.KeyCol)
       },
-      Some(s"""WITH lt AS (SELECT DISTINCT * FROM (
-              |${duckTokens("cast(doc_id AS varchar)", "text", "(SELECT * FROM documents WHERE doc_id % 2 = 0)")})),
-              |rt AS (SELECT DISTINCT * FROM (
-              |${duckTokens("cast(doc_id AS varchar)", "text", "(SELECT * FROM documents WHERE doc_id % 2 = 1)")})),
+      Some(s"""$docTokenSidesSql
               |lb AS (SELECT key, count(*) AS ls FROM lt GROUP BY key),
               |rb AS (SELECT key, count(*) AS rs FROM rt GROUP BY key)
               |SELECT key AS block_key, ls::int AS left_size, rs::int AS right_size
@@ -331,26 +329,16 @@ object RelationalQueries {
     "j3_combine_blocks" -> QueryDef(
       (s, dir) => {
         val docs = table(s, dir, "documents")
-        val lf = EntityFrame(docs.filter(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), col("text")), "docs_even", "doc_id")
-        val rf = EntityFrame(docs.filter(col("doc_id") % 2 === 1)
-          .select(col("doc_id"), col("text")), "docs_odd", "doc_id")
+        val (lf, rf) = docSides(docs)
         val tok = TokenBlocker().assign(lf, rf)
         val lang = StandardBlocker("lang").assign(
           EntityFrame(docs.filter(col("doc_id") % 2 === 0)
             .select(col("doc_id"), col("lang")), "docs_even", "doc_id"),
           EntityFrame(docs.filter(col("doc_id") % 2 === 1)
             .select(col("doc_id"), col("lang")), "docs_odd", "doc_id"))
-        tok.combine(lang)
-          .df.select(col(Blocks.KeyCol),
-            array_join(col(Blocks.LeftCol), ",").as("left_ids"),
-            array_join(col(Blocks.RightCol), ",").as("right_ids"))
-          .orderBy(Blocks.KeyCol)
+        blockRows(tok.combine(lang))
       },
-      Some(s"""WITH lt AS (SELECT DISTINCT * FROM (
-              |${duckTokens("cast(doc_id AS varchar)", "text", "(SELECT * FROM documents WHERE doc_id % 2 = 0)")})),
-              |rt AS (SELECT DISTINCT * FROM (
-              |${duckTokens("cast(doc_id AS varchar)", "text", "(SELECT * FROM documents WHERE doc_id % 2 = 1)")})),
+      Some(s"""$docTokenSidesSql
               |tok AS (
               |  SELECT key, list_sort(list(DISTINCT id)) AS l FROM lt GROUP BY key),
               |tokr AS (
@@ -377,17 +365,11 @@ object RelationalQueries {
     "w3_purge" -> QueryDef(
       (s, dir) => {
         val docs = table(s, dir, "documents")
-        val lf = EntityFrame(docs.filter(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), col("text")), "docs_even", "doc_id")
-        val rf = EntityFrame(docs.filter(col("doc_id") % 2 === 1)
-          .select(col("doc_id"), col("text")), "docs_odd", "doc_id")
+        val (lf, rf) = docSides(docs)
         TokenBlocker().assign(lf, rf).purge()
           .df.select(col(Blocks.KeyCol)).orderBy(Blocks.KeyCol)
       },
-      Some(s"""WITH lt AS (SELECT DISTINCT * FROM (
-              |${duckTokens("cast(doc_id AS varchar)", "text", "(SELECT * FROM documents WHERE doc_id % 2 = 0)")})),
-              |rt AS (SELECT DISTINCT * FROM (
-              |${duckTokens("cast(doc_id AS varchar)", "text", "(SELECT * FROM documents WHERE doc_id % 2 = 1)")})),
+      Some(s"""$docTokenSidesSql
               |lb AS (SELECT key, count(*) AS ls FROM lt GROUP BY key),
               |rb AS (SELECT key, count(*) AS rs FROM rt GROUP BY key),
               |st AS (SELECT key AS block_key, ls + rs AS assignments,
@@ -434,16 +416,8 @@ object RelationalQueries {
     // same parts with shifted ids, so unique values block 1:1.
     "un_unique_name_blocker" -> QueryDef(
       (s, dir) => {
-        val p = table(s, dir, "part").select(col("p_partkey"),
-          concat_ws(" ", col("p_name"), col("p_brand"), col("p_size")).as("v"))
-        val lf = EntityFrame(p, "parts_l", "p_partkey")
-        val rf = EntityFrame(p.select((col("p_partkey") + 10000000L).as("p_partkey"), col("v")),
-          "parts_r", "p_partkey")
-        UniqueNameBlocker().assign(lf, rf)
-          .df.select(col(Blocks.KeyCol),
-            array_join(col(Blocks.LeftCol), ",").as("left_ids"),
-            array_join(col(Blocks.RightCol), ",").as("right_ids"))
-          .orderBy(Blocks.KeyCol)
+        val (lf, rf) = partValueSides(s, dir)
+        blockRows(UniqueNameBlocker().assign(lf, rf))
       },
       Some("""WITH uniq AS (
              |  SELECT p_name||' '||p_brand||' '||p_size AS v,
@@ -457,11 +431,7 @@ object RelationalQueries {
 
     "p6_anti_filter" -> QueryDef(
       (s, dir) => {
-        val p = table(s, dir, "part").select(col("p_partkey"),
-          concat_ws(" ", col("p_name"), col("p_brand"), col("p_size")).as("v"))
-        val lf = EntityFrame(p, "parts_l", "p_partkey")
-        val rf = EntityFrame(p.select((col("p_partkey") + 10000000L).as("p_partkey"), col("v")),
-          "parts_r", "p_partkey")
+        val (lf, rf) = partValueSides(s, dir)
         val unique = UniqueNameBlocker().assign(lf, rf)
         val covered = unique.df
           .select(explode(col(Blocks.LeftCol)).as("cid")).distinct()
@@ -563,11 +533,7 @@ object RelationalQueries {
         table(s, dir, "documents")
           .select(explode(graft.functions.Text.tokenize(col("text"))).as("key")),
         "key"),
-      Some(s"""WITH t AS (${duckTokens("doc_id", "text", "documents")}),
-              |c AS (SELECT key, count(*) AS c FROM t GROUP BY 1)
-              |SELECT count(*) AS n_keys, sum(c)::bigint AS total_rows,
-              |  max(c)::bigint AS max_key_rows,
-              |  ${Num.stableRoundSql("max(c)::double / sum(c)", 6)} AS top1_share,
+      Some(s"""$skewHeadSql
               |  ${Num.stableRoundSql("quantile_cont(c, 0.5)", 6)} AS p50,
               |  ${Num.stableRoundSql("quantile_cont(c, 0.9)", 6)} AS p90,
               |  ${Num.stableRoundSql("quantile_cont(c, 0.99)", 6)} AS p99,
@@ -612,11 +578,7 @@ object RelationalQueries {
             rankOk(0.9, "lt90", "le90").as("p90_ok"),
             rankOk(0.99, "lt99", "le99").as("p99_ok"))
       },
-      Some(s"""WITH t AS (${duckTokens("doc_id", "text", "documents")}),
-              |c AS (SELECT key, count(*) AS c FROM t GROUP BY 1)
-              |SELECT count(*) AS n_keys, sum(c)::bigint AS total_rows,
-              |  max(c)::bigint AS max_key_rows,
-              |  ${Num.stableRoundSql("max(c)::double / sum(c)", 6)} AS top1_share,
+      Some(s"""$skewHeadSql
               |  true AS p50_ok, true AS p90_ok, true AS p99_ok
               |FROM c""".stripMargin),
       api = "Diagnostics.keySkewApprox",

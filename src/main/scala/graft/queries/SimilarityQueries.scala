@@ -7,7 +7,7 @@ import graft.core.{Blocks, EntityFrame}
 import graft.encoders.HashTokenEncoder
 import graft.functions.{MinHash, Num, Text}
 import graft.similarity.{IndexStore, Similarity}
-import QueryDef.{table, duckTokens}
+import QueryDef.{blockRows, duckTokens, table}
 
 /** Similarity layer (SURVEY.md §2.8): MinHash-LSH, TF-IDF filtering,
   * token overlap, vector kNN (brute/IVF/sign-LSH), cluster blocking,
@@ -31,6 +31,12 @@ object SimilarityQueries {
   private def docTokensParitySql(parity: Int) =
     duckTokens("cast(doc_id AS varchar)", "text",
       s"(SELECT * FROM documents WHERE doc_id % 10 = $parity)")
+
+  /** `lt`/`rt`: the distinct (id, key) tokens of the even/odd document
+    * sides, as the opening of a WITH chain. */
+  private val docTokenSidesCtes: String =
+    s"""WITH lt AS (SELECT DISTINCT * FROM (${docTokensSql(0)})),
+       |rt AS (SELECT DISTINCT * FROM (${docTokensSql(1)}))""".stripMargin
 
   private def embs(s: SparkSession, dir: String): DataFrame =
     table(s, dir, "embeddings")
@@ -65,130 +71,340 @@ object SimilarityQueries {
       |        ELSE 20.0 + (i - 22) * 1.0 END, 0.0] AS embedding
       |FROM range(27) t(i)""".stripMargin
 
-  /** Shared brute-force candidate graph for the m13 hubness-reduction
-    * family: top-10 cosine candidates, even vec_ids querying odd. */
+  /** The even/odd vec_id sides every embedding kNN query searches:
+    * even ids query, odd ids are the corpus. */
+  private[queries] def evenOdd(e: DataFrame): (DataFrame, DataFrame) =
+    (e.filter(col("vec_id") % 2 === 0)
+      .select(col("vec_id").as("id"), col("embedding").as("vec")),
+     e.filter(col("vec_id") % 2 === 1)
+      .select(col("vec_id").as("id"), col("embedding").as("vec")))
+
+  /** The IVF sides: even-id queries and the odd-id corpus bucketed by
+    * its precomputed label. */
+  private def ivfSides(e: DataFrame): (DataFrame, DataFrame) =
+    (evenOdd(e)._1,
+     e.filter(col("vec_id") % 2 === 1)
+      .select(col("label").cast("string").as("bucket"),
+        col("vec_id").as("id"), col("embedding").as("vec")))
+
   /** The m13 family's shared candidate construction: even/odd vec_id
     * sides and the top-10 cosine candidate graph. DisSimLocal needs the
     * side frames too (its σ terms read the VECTORS), so all three are
     * exposed — every m13 query derives from this one definition. */
   private def m13Sides(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val e = embs(s, dir)
-    val l = e.filter(col("vec_id") % 2 === 0)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val r = e.filter(col("vec_id") % 2 === 1)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val (l, r) = evenOdd(embs(s, dir))
     (l, r, Similarity.topKCosine(l, r, 10))
   }
 
   private def m13Candidates(s: SparkSession, dir: String): DataFrame =
     m13Sides(s, dir)._3
 
-  /** The DuckDB side of [[m13Candidates]]: CTE chain ending in
-    * `cand(left_id, right_id, cos)` — prepend as `WITH $knnCandCtesSql,
-    * ...`. Identical to the inline chain in m13_csls_knn's oracle. */
-  private lazy val knnCandCtesSql: String =
-    s"""expl AS (
-       |  SELECT vec_id, i.i AS i, embedding[i.i]::double AS v
-       |  FROM embeddings, range(1, 65) i(i)),
-       |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM expl GROUP BY vec_id),
-       |dots AS (
+  /** A ranked kNN result as (left_id, rank, right_id, score) rows with
+    * the score rounded to 6 places, ordered by (left_id, rank). */
+  private def topRows(ranked: DataFrame, score: String): DataFrame =
+    ranked.select(col("left_id"), col("rank"), col("right_id"),
+        Num.stableRound(col(score), 6).as(score))
+      .orderBy("left_id", "rank")
+
+  // ---- DuckDB replay fragments -------------------------------------------
+  // Each chain below is written once and interpolated into every oracle
+  // that replays it; parameters carry only what differs between callers.
+
+  /** CTE `name(cols…, i, v)`: embeddings exploded to one row per
+    * 1-based dimension, restricted by `where` (" WHERE …" or ""). */
+  private def explCte(name: String, cols: String = "vec_id", where: String = ""): String =
+    s"""$name AS (
+       |  SELECT $cols, i.i AS i, embedding[i.i]::double AS v
+       |  FROM embeddings, range(1, 65) i(i)$where)""".stripMargin
+
+  /** CTE `name(vec_id, nrm)`: L2 norms of an exploded CTE. */
+  private def normsCte(name: String, expl: String): String =
+    s"$name AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM $expl GROUP BY vec_id)"
+
+  /** CTE `name(left_id, right_id, dot)`: every even × odd dot product
+    * over `expl`. */
+  private def evenOddDotsCte(name: String): String =
+    s"""$name AS (
        |  SELECT a.vec_id AS left_id, b.vec_id AS right_id, sum(a.v * b.v) AS dot
        |  FROM expl a JOIN expl b ON a.i = b.i
-       |  WHERE a.vec_id % 2 = 0 AND b.vec_id % 2 = 1 GROUP BY 1, 2),
+       |  WHERE a.vec_id % 2 = 0 AND b.vec_id % 2 = 1 GROUP BY 1, 2)""".stripMargin
+
+  /** `expl`, `norms` and the even × odd dot products `dots`. */
+  private[queries] def evenOddDotsCtes(explCols: String, dots: String): String =
+    s"""${explCte("expl", explCols)},
+       |${normsCte("norms", "expl")},
+       |${evenOddDotsCte(dots)}""".stripMargin
+
+  /** [[evenOddDotsCtes]] plus `scored(left_id, right_id, cos)`. */
+  private val cosScoredCtes: String =
+    s"""${evenOddDotsCtes("vec_id", "dots")},
        |scored AS (
        |  SELECT left_id, right_id, dot / (na.nrm * nb.nrm) AS cos
        |  FROM dots JOIN norms na ON na.vec_id = left_id
-       |            JOIN norms nb ON nb.vec_id = right_id),
+       |            JOIN norms nb ON nb.vec_id = right_id)""".stripMargin
+
+  /** The DuckDB side of [[m13Candidates]]: CTE chain ending in
+    * `cand(left_id, right_id, cos)` — prepend as `WITH $knnCandCtesSql,
+    * ...`. */
+  private val knnCandCtesSql: String =
+    s"""$cosScoredCtes,
        |cand AS (
        |  SELECT left_id, right_id, cos FROM (
        |    SELECT left_id, right_id, cos, row_number() OVER (
        |      PARTITION BY left_id ORDER BY cos DESC, right_id ASC) AS r
        |    FROM scored) WHERE r <= 10)""".stripMargin
 
+  /** Top-3 per left_id of `from` by `score` descending, then the output
+    * select with `score` rounded to 6 places. */
+  private def top3Sql(score: String, from: String): String =
+    s"""ranked AS (SELECT left_id, right_id, $score, row_number() OVER (
+       |    PARTITION BY left_id ORDER BY $score DESC, right_id ASC) AS rank
+       |  FROM $from)
+       |SELECT left_id, rank::int AS rank, right_id, floor(($score) * 1e6 + 0.5) / 1e6 AS $score
+       |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin
+
+  /** The hubness re-rank tail over `sc`: top-3 by the ROUNDED `score`
+    * in `order` ("ASC", "DESC", or with further keys). */
+  private def rerankTop3Sql(score: String, order: String): String =
+    s"""ranked AS (SELECT left_id, right_id, $score, row_number() OVER (
+       |    PARTITION BY left_id
+       |    ORDER BY floor(($score) * 1e6 + 0.5) / 1e6 $order, right_id ASC) AS rank
+       |  FROM sc)
+       |SELECT left_id, rank::int AS rank, right_id,
+       |       floor(($score) * 1e6 + 0.5) / 1e6 AS $score
+       |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin
+
+  /** Rank window + norm joins of a cosine top-k over `dots`; the caller
+    * writes the CTE head and its select list. */
+  private val cosRankOverDots: String =
+    """         row_number() OVER (PARTITION BY left_id
+      |             ORDER BY dot / (na.nrm * nb.nrm) DESC, right_id ASC) AS rank
+      |  FROM dots JOIN norms na ON na.vec_id = left_id
+      |            JOIN norms nb ON nb.vec_id = right_id)""".stripMargin
+
+  /** CTE `name(key…, left_id, right_id)`: the top-3 right_ids per
+    * (key…, left_id) of `dots` by cosine; `key` is "" or "p, ". */
+  private def top3IdsCte(name: String, dots: String, key: String): String =
+    s"""$name AS (SELECT ${key}left_id, right_id FROM (
+       |  SELECT ${key}left_id, right_id, row_number() OVER (PARTITION BY ${key}left_id
+       |      ORDER BY dot / (na.nrm * nb.nrm) DESC, right_id ASC) AS rk
+       |  FROM $dots JOIN norms na ON na.vec_id = left_id
+       |             JOIN norms nb ON nb.vec_id = right_id) WHERE rk <= 3)""".stripMargin
+
+  /** Centroids `cents(label, i, c)` of an exploded CTE and their norms
+    * `cnorms(label, nrm)`. */
+  private def centroidCtes(expl: String): String =
+    s"""cents AS (SELECT label, i, avg(v) AS c FROM $expl GROUP BY label, i),
+       |cnorms AS (SELECT label, sqrt(sum(c*c)) AS nrm FROM cents GROUP BY label)""".stripMargin
+
+  /** The open subquery ranking each vector's centroids by cosine: rows
+    * of `dots` aliased `a` (vec_id, label, dot), norms from `norms`;
+    * `extra` adds columns before the rank. Close with a `WHERE rn …`. */
+  private def cellRankSql(dots: String, norms: String, a: String, extra: String = ""): String =
+    s"""  SELECT $a.vec_id, $a.label, ${extra}row_number() OVER (PARTITION BY $a.vec_id
+       |      ORDER BY $a.dot / (n.nrm * cn.nrm) DESC, $a.label::varchar ASC) AS rn
+       |  FROM $dots $a JOIN $norms n ON n.vec_id = $a.vec_id
+       |               JOIN cnorms cn ON cn.label = $a.label)""".stripMargin
+
+  /** The IVF query side: even vectors `qexpl`, norms `qnorms`, and
+    * `qdots(vec_id, label, dot)` against every centroid in `cents`. */
+  private val ivfQueryCtes: String =
+    s"""${explCte("qexpl", where = " WHERE vec_id % 2 = 0")},
+       |${normsCte("qnorms", "qexpl")},
+       |qdots AS (
+       |  SELECT e.vec_id, c.label, sum(e.v * c.c) AS dot
+       |  FROM qexpl e JOIN cents c ON e.i = c.i GROUP BY 1, 2)""".stripMargin
+
+  /** `assign(left_id, label)`: each query's single nearest cell. */
+  private val ivfAssignCte: String =
+    s"""assign AS (SELECT vec_id AS left_id, label FROM (
+       |${cellRankSql("qdots", "qnorms", "q")} WHERE rn = 1)""".stripMargin
+
+  /** Odd-id corpus `oexpl` with its label, and its centroids. */
+  private val oddCentroidCtes: String =
+    s"""${explCte("oexpl", "vec_id, label", " WHERE vec_id % 2 = 1")},
+       |${centroidCtes("oexpl")}""".stripMargin
+
+  /** CTE `g(cols…, s, c, dist)`: squared distance of every subvector to
+    * every PQ codeword, rounded 1e-6; `tail` is the grouping clause. */
+  private def pqDistCte(cols: String, tail: String): String =
+    s"""g AS (
+       |  SELECT $cols, s.s AS s, c.c AS c,
+       |         floor((sum(power(embedding[s.s*8 + d.d + 1]::double
+       |             - ${Similarity.pqComponentSql("s.s", "c.c", "d.d")}), 2))) * 1e6 + 0.5) / 1e6 AS dist
+       |  FROM embeddings, range(0, 8) s(s), range(0, 16) c(c), range(0, 8) d(d)
+       |  $tail)""".stripMargin
+
+  /** CTE `name(out…, s, c)`: the nearest codeword per (vec_id, s) of
+    * `g`, whose rows carry `cols`. */
+  private def pqCodesCte(name: String, out: String, cols: String): String =
+    s"""$name AS (
+       |  SELECT $out, s, c FROM (
+       |    SELECT $cols, s, c, row_number() OVER (
+       |        PARTITION BY vec_id, s ORDER BY dist ASC, c ASC) AS rn
+       |    FROM g) WHERE rn = 1)""".stripMargin
+
+  /** CTE `lut(left_id, s, c, part)`: each even query's subvector dot
+    * with every codeword — the ADC lookup table. */
+  private val pqLutCte: String =
+    s"""lut AS (
+       |  SELECT vec_id AS left_id, s.s AS s, c.c AS c,
+       |         sum(embedding[s.s*8 + d.d + 1]::double
+       |             * ${Similarity.pqComponentSql("s.s", "c.c", "d.d")})) AS part
+       |  FROM embeddings, range(0, 8) s(s), range(0, 16) c(c), range(0, 8) d(d)
+       |  WHERE vec_id % 2 = 0 GROUP BY 1, 2, 3)""".stripMargin
+
+  /** Top-3 per left_id of `scored` by rounded ADC score, and the output
+    * select. */
+  private val adcTop3Sql: String =
+    """ranked AS (
+      |  SELECT left_id, right_id, adc, row_number() OVER (
+      |      PARTITION BY left_id
+      |      ORDER BY floor((adc) * 1e6 + 0.5) / 1e6 DESC, right_id ASC) AS rank
+      |  FROM scored)
+      |SELECT left_id, rank::int AS rank, right_id, floor((adc) * 1e6 + 0.5) / 1e6 AS adc
+      |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin
+
+  /** The IVF-PQ probe: ADC over the codes in each query's assigned cell,
+    * then [[adcTop3Sql]]. */
+  private val ivfAdcTop3Sql: String =
+    s"""scored AS (
+       |  SELECT a.left_id, cd.right_id, sum(l.part) AS adc
+       |  FROM assign a
+       |  JOIN codes cd ON cd.label = a.label
+       |  JOIN lut l ON l.left_id = a.left_id AND l.s = cd.s AND l.c = cd.c
+       |  GROUP BY 1, 2),
+       |$adcTop3Sql""".stripMargin
+
+  /** The IVF self-probe head shared by the label-bucket queries: every
+    * vector (with its label) probes the label centroids. Ends with a
+    * comma; the caller continues with its `assign`. */
+  private val ivfSelfProbeCtes: String =
+    s"""WITH ${explCte("expl", "vec_id, label")},
+       |cents AS (SELECT label, i, avg(v) AS c FROM expl GROUP BY label, i),
+       |${normsCte("norms", "expl")},
+       |cnorms AS (SELECT label, sqrt(sum(c*c)) AS nrm FROM cents GROUP BY label),
+       |qdots AS (
+       |  SELECT e.vec_id, c.label, sum(e.v * c.c) AS dot
+       |  FROM expl e JOIN cents c ON e.i = c.i GROUP BY 1, 2),""".stripMargin
+
+  /** Over the point table `e(id, embedding)`: rounded pairwise
+    * distances `d` (`mat` is "" or " MATERIALIZED") and each point's
+    * 3rd-nearest distance `core(id, c)`, left open after its `WHERE r = 3`
+    * for the caller's eps bound and close. */
+  private def fixtureCoreSql(mat: String): String =
+    s"""expl AS (SELECT id, unnest(embedding)::double AS v,
+       |                generate_subscripts(embedding, 1) AS i FROM e),
+       |d AS$mat (SELECT a.id AS ia, b.id AS ib,
+       |        floor(sqrt(sum((ea.v - eb.v) * (ea.v - eb.v))) * 1e6 + 0.5) / 1e6 AS d
+       |      FROM e a JOIN e b ON a.id <> b.id
+       |      JOIN expl ea ON ea.id = a.id
+       |      JOIN expl eb ON eb.id = b.id AND eb.i = ea.i
+       |      GROUP BY 1, 2),
+       |core AS (SELECT ia AS id, d AS c FROM (
+       |    SELECT ia, d, row_number() OVER (PARTITION BY ia ORDER BY d ASC, ib ASC) AS r
+       |    FROM d) WHERE r = 3""".stripMargin
+
+  /** The near-dup output select over `dots(id_a, id_b, dot)`: pairs
+    * at cosine ≥ 0.4, rounded. */
+  private val nearDupCosSelect: String =
+    """SELECT id_a, id_b, floor((dot / (na.nrm * nb.nrm)) * 1e6 + 0.5) / 1e6 AS cos
+      |FROM dots JOIN norms na ON na.vec_id = id_a
+      |          JOIN norms nb ON nb.vec_id = id_b
+      |WHERE dot / (na.nrm * nb.nrm) >= 0.4 ORDER BY id_a, id_b""".stripMargin
+
+  /** The recall queries' middle: the exact top-3 `brute` over `bdots`,
+    * odd-id centroids, and every even query's centroid dots `qdots`.
+    * Ends with a comma; the caller continues with its `assign`. */
+  private val ivfRecallProbeCtes: String =
+    s"""${top3IdsCte("brute", "bdots", "")},
+       |oddexpl AS (SELECT * FROM expl WHERE vec_id % 2 = 1),
+       |${centroidCtes("oddexpl")},
+       |qdots AS (
+       |  SELECT e.vec_id, c.label, sum(e.v * c.c) AS dot
+       |  FROM expl e JOIN cents c ON e.i = c.i
+       |  WHERE e.vec_id % 2 = 0 GROUP BY 1, 2),""".stripMargin
+
   /** IVF-PQ top-k oracle — shared by `ann_ivf_pq_topk` (direct operator)
     * and `ann_ivf_pq_saved` (build -> save -> load -> search round-trip):
     * identical semantics by construction, so one SQL serves both. */
-  private lazy val ivfPqTopkSql: String =
-    s"""WITH oexpl AS (
-              |  SELECT vec_id, label, i.i AS i, embedding[i.i]::double AS v
-              |  FROM embeddings, range(1, 65) i(i) WHERE vec_id % 2 = 1),
-              |cents AS (SELECT label, i, avg(v) AS c FROM oexpl GROUP BY label, i),
-              |cnorms AS (SELECT label, sqrt(sum(c*c)) AS nrm FROM cents GROUP BY label),
-              |qexpl AS (
-              |  SELECT vec_id, i.i AS i, embedding[i.i]::double AS v
-              |  FROM embeddings, range(1, 65) i(i) WHERE vec_id % 2 = 0),
-              |qnorms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM qexpl GROUP BY vec_id),
-              |qdots AS (
-              |  SELECT e.vec_id, c.label, sum(e.v * c.c) AS dot
-              |  FROM qexpl e JOIN cents c ON e.i = c.i GROUP BY 1, 2),
-              |assign AS (SELECT vec_id AS left_id, label FROM (
-              |  SELECT q.vec_id, q.label, row_number() OVER (PARTITION BY q.vec_id
-              |      ORDER BY q.dot / (n.nrm * cn.nrm) DESC, q.label::varchar ASC) AS rn
-              |  FROM qdots q JOIN qnorms n ON n.vec_id = q.vec_id
-              |               JOIN cnorms cn ON cn.label = q.label) WHERE rn = 1),
-              |g AS (
-              |  SELECT vec_id, label, s.s AS s, c.c AS c,
-              |         floor((sum(power(embedding[s.s*8 + d.d + 1]::double
-              |             - ${Similarity.pqComponentSql("s.s", "c.c", "d.d")}), 2))) * 1e6 + 0.5) / 1e6 AS dist
-              |  FROM embeddings, range(0, 8) s(s), range(0, 16) c(c), range(0, 8) d(d)
-              |  WHERE vec_id % 2 = 1 GROUP BY 1, 2, 3, 4),
-              |codes AS (
-              |  SELECT vec_id AS right_id, label, s, c FROM (
-              |    SELECT vec_id, label, s, c, row_number() OVER (
-              |        PARTITION BY vec_id, s ORDER BY dist ASC, c ASC) AS rn
-              |    FROM g) WHERE rn = 1),
-              |lut AS (
-              |  SELECT vec_id AS left_id, s.s AS s, c.c AS c,
-              |         sum(embedding[s.s*8 + d.d + 1]::double
-              |             * ${Similarity.pqComponentSql("s.s", "c.c", "d.d")})) AS part
-              |  FROM embeddings, range(0, 8) s(s), range(0, 16) c(c), range(0, 8) d(d)
-              |  WHERE vec_id % 2 = 0 GROUP BY 1, 2, 3),
-              |scored AS (
-              |  SELECT a.left_id, cd.right_id, sum(l.part) AS adc
-              |  FROM assign a
-              |  JOIN codes cd ON cd.label = a.label
-              |  JOIN lut l ON l.left_id = a.left_id AND l.s = cd.s AND l.c = cd.c
-              |  GROUP BY 1, 2),
-              |ranked AS (
-              |  SELECT left_id, right_id, adc, row_number() OVER (
-              |      PARTITION BY left_id
-              |      ORDER BY floor((adc) * 1e6 + 0.5) / 1e6 DESC, right_id ASC) AS rank
-              |  FROM scored)
-              |SELECT left_id, rank::int AS rank, right_id, floor((adc) * 1e6 + 0.5) / 1e6 AS adc
-              |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin
+  private val ivfPqTopkSql: String =
+    s"""WITH $oddCentroidCtes,
+       |$ivfQueryCtes,
+       |$ivfAssignCte,
+       |${pqDistCte("vec_id, label", "WHERE vec_id % 2 = 1 GROUP BY 1, 2, 3, 4")},
+       |${pqCodesCte("codes", "vec_id AS right_id, label", "vec_id, label")},
+       |$pqLutCte,
+       |$ivfAdcTop3Sql""".stripMargin
+
+  /** SIF token statistics: document tokens `toks`, per-token `counts`
+    * and the corpus `total`. */
+  private val sifCountsCtes: String =
+    s"""WITH toks AS (${duckTokens("doc_id", "text", "documents", 3)}),
+       |counts AS (SELECT key, count(*) AS freq FROM toks GROUP BY key),
+       |total AS (SELECT count(*)::double AS t FROM toks)""".stripMargin
+
+  /** [[sifCountsCtes]] plus `weighted(id, x, w)`: each token's hash and
+    * SIF weight a/(a + freq/total), a = 1e-3. */
+  private val sifWeightedCtes: String =
+    s"""$sifCountsCtes,
+       |weighted AS (
+       |  SELECT toks.id, ${HashTokenEncoder.tokenHashSql("toks.key")} AS x,
+       |         0.001 / (0.001 + counts.freq / total.t) AS w
+       |  FROM toks JOIN counts USING (key), total)""".stripMargin
+
+  /** The SIF-weighted mean of the first `n` hash dimensions, rounded. */
+  private def sifDimsSql(n: Int): String =
+    (0 until n).map(d =>
+      s"floor((sum(w * ${HashTokenEncoder.dimValueSql("x", d)}) / sum(w)) * 1e6 + 0.5) / 1e6 AS d$d")
+      .mkString(", ")
+
+  /** [[sifWeightedCtes]] plus the 2-dim SIF embedding `emb(doc_id, d0,
+    * d1)` and its unit first principal component `pcn(px, py)` in
+    * closed form: λ = ((gxx+gyy)+√((gxx−gyy)²+4gxy²))/2, v ∝ (gxy, λ−gxx). */
+  private val sifPcCtes: String = {
+    def h(d: Int) = HashTokenEncoder.dimValueSql("x", d)
+    s"""$sifWeightedCtes,
+       |emb AS (
+       |  SELECT id AS doc_id,
+       |         sum(w * ${h(0)}) / sum(w) AS d0,
+       |         sum(w * ${h(1)}) / sum(w) AS d1
+       |  FROM weighted GROUP BY id),
+       |g AS (SELECT sum(d0*d0) AS gxx, sum(d0*d1) AS gxy, sum(d1*d1) AS gyy FROM emb),
+       |pc AS (SELECT
+       |  CASE WHEN gxy = 0 THEN (CASE WHEN gxx >= gyy THEN 1.0 ELSE 0.0 END)
+       |       ELSE gxy END AS vx,
+       |  CASE WHEN gxy = 0 THEN (CASE WHEN gxx >= gyy THEN 0.0 ELSE 1.0 END)
+       |       ELSE ((gxx+gyy) + sqrt((gxx-gyy)*(gxx-gyy) + 4*gxy*gxy))/2 - gxx END AS vy
+       |  FROM g),
+       |pcn AS (SELECT vx/sqrt(vx*vx+vy*vy) AS px, vy/sqrt(vx*vx+vy*vy) AS py FROM pc)""".stripMargin
+  }
+
+  /** Blocks from the per-side keyed rows `left` and `right` (id, key):
+    * comma-joined sorted id lists per key present on both sides. */
+  private def blockJoinSql(left: String, right: String): String =
+    s"""lb AS (SELECT key, array_to_string(list_sort(list(DISTINCT id)), ',') AS left_ids
+       |       FROM $left GROUP BY key),
+       |rb AS (SELECT key, array_to_string(list_sort(list(DISTINCT id)), ',') AS right_ids
+       |       FROM $right GROUP BY key)
+       |SELECT key AS block_key, left_ids, right_ids
+       |FROM lb JOIN rb USING (key) ORDER BY block_key""".stripMargin
 
   /** DuckDB replay of the SIF-pooled 8-dim embedding — shared by
     * `m4_sif_embedding` (direct) and `s7_embedding_cache` (the same
     * vectors routed through the save/load cache round-trip). */
-  private val sifEmbeddingOracleSql: String = {
-    val toks = duckTokens("doc_id", "text", "documents", 3)
-    val dimExprs = (0 until 8).map(d =>
-      s"floor((sum(w * ${HashTokenEncoder.dimValueSql("x", d)}) / sum(w)) * 1e6 + 0.5) / 1e6 AS d$d")
-      .mkString(", ")
-    s"""WITH toks AS ($toks),
-       |counts AS (SELECT key, count(*) AS freq FROM toks GROUP BY key),
-       |total AS (SELECT count(*)::double AS t FROM toks),
-       |weighted AS (
-       |  SELECT toks.id, ${HashTokenEncoder.tokenHashSql("toks.key")} AS x,
-       |         0.001 / (0.001 + counts.freq / total.t) AS w
-       |  FROM toks JOIN counts USING (key), total)
-       |SELECT id AS doc_id, $dimExprs
+  private val sifEmbeddingOracleSql: String =
+    s"""$sifWeightedCtes
+       |SELECT id AS doc_id, ${sifDimsSql(8)}
        |FROM weighted GROUP BY id ORDER BY doc_id""".stripMargin
-  }
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
     // ---- M1/J9: MinHash-LSH blocker ---------------------------------------
     "mh_minhash_lsh_blocker" -> QueryDef(
-      (s, dir) => {
-        val b = MinHashLSHBlocker(numPerm = 16, bands = 4)
-          .assign(docSide(s, dir, 0), docSide(s, dir, 1))
-        b.df.select(col(Blocks.KeyCol),
-          array_join(col(Blocks.LeftCol), ",").as("left_ids"),
-          array_join(col(Blocks.RightCol), ",").as("right_ids"))
-          .orderBy(Blocks.KeyCol)
-      },
+      (s, dir) => blockRows(MinHashLSHBlocker(numPerm = 16, bands = 4)
+        .assign(docSide(s, dir, 0), docSide(s, dir, 1))),
       Some {
         def side(parity: Int) = {
           val sig = MinHash.signatureSql(
@@ -276,29 +492,17 @@ object SimilarityQueries {
            |       true AS precision_ok, true AS recall_ok""".stripMargin
       },
       api = "MlLibMinHashBlocker.assign",
-      desc = "MLlib MinHashLSH approxSimilarityJoin wrapped as a blocker — invariant-graded oracle (library RNG is not SQL-replayable).",
-      auditAllow = Some("one-row invariant-summary scalars crossJoined for the single-row output")),
+      desc = "MLlib MinHashLSH approxSimilarityJoin wrapped as a blocker — invariant-graded oracle (library RNG is not SQL-replayable)."),
 
     // ---- M3: TF-IDF filtered token blocker --------------------------------
     "m3_tfidf_token_blocker" -> QueryDef(
-      (s, dir) => {
-        val b = TfIdfFilteredTokenBlocker(threshold = 0.15)
-          .assign(docSide(s, dir, 0), docSide(s, dir, 1))
-        b.df.select(col(Blocks.KeyCol),
-          array_join(col(Blocks.LeftCol), ",").as("left_ids"),
-          array_join(col(Blocks.RightCol), ",").as("right_ids"))
-          .orderBy(Blocks.KeyCol)
-      },
+      (s, dir) => blockRows(TfIdfFilteredTokenBlocker(threshold = 0.15)
+        .assign(docSide(s, dir, 0), docSide(s, dir, 1))),
       Some {
         val blocker = TfIdfFilteredTokenBlocker(threshold = 0.15)
         def side(parity: Int) = blocker.filteredTokensSql(docTokensSql(parity))
         s"""WITH lk AS (${side(0)}), rk AS (${side(1)}),
-           |lb AS (SELECT key, array_to_string(list_sort(list(DISTINCT id)), ',') AS left_ids
-           |       FROM lk GROUP BY key),
-           |rb AS (SELECT key, array_to_string(list_sort(list(DISTINCT id)), ',') AS right_ids
-           |       FROM rk GROUP BY key)
-           |SELECT key AS block_key, left_ids, right_ids
-           |FROM lb JOIN rb USING (key) ORDER BY block_key""".stripMargin
+           |${blockJoinSql("lk", "rk")}""".stripMargin
       },
       api = "TfIdfFilteredTokenBlocker.assign",
       desc = "Token blocking restricted to each entity's top TF-IDF tokens (M3) — IDF from one doc-frequency agg, threshold filter before the join.",
@@ -325,8 +529,7 @@ object SimilarityQueries {
             col("rid").cast("string").as("right_id"), col("overlap"))
           .orderBy("left_id", "right_id")
       },
-      Some(s"""WITH lt AS (SELECT DISTINCT * FROM (${docTokensSql(0)})),
-              |rt AS (SELECT DISTINCT * FROM (${docTokensSql(1)}))
+      Some(s"""$docTokenSidesCtes
               |SELECT lt.id AS left_id, rt.id AS right_id, count(*) AS overlap
               |FROM lt JOIN rt USING (key)
               |GROUP BY 1, 2 HAVING count(*) >= 10 ORDER BY 1, 2""".stripMargin),
@@ -336,33 +539,10 @@ object SimilarityQueries {
     // ---- J8/W4: brute-force kNN (cosine top-3, even → odd) ----------------
     "ann_brute_topk" -> QueryDef(
       (s, dir) => {
-        val e = embs(s, dir)
-        val l = e.filter(col("vec_id") % 2 === 0)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val r = e.filter(col("vec_id") % 2 === 1)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        Similarity.topKCosine(l, r, 3)
-          .select(col("left_id"), col("rank"), col("right_id"),
-            Num.stableRound(col("cos"), 6).as("cos"))
-          .orderBy("left_id", "rank")
+        val (l, r) = evenOdd(embs(s, dir))
+        topRows(Similarity.topKCosine(l, r, 3), "cos")
       },
-      Some("""WITH expl AS (
-             |  SELECT vec_id, i.i AS i, embedding[i.i]::double AS v
-             |  FROM embeddings, range(1, 65) i(i)),
-             |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM expl GROUP BY vec_id),
-             |dots AS (
-             |  SELECT a.vec_id AS left_id, b.vec_id AS right_id, sum(a.v * b.v) AS dot
-             |  FROM expl a JOIN expl b ON a.i = b.i
-             |  WHERE a.vec_id % 2 = 0 AND b.vec_id % 2 = 1 GROUP BY 1, 2),
-             |scored AS (
-             |  SELECT left_id, right_id, dot / (na.nrm * nb.nrm) AS cos
-             |  FROM dots JOIN norms na ON na.vec_id = left_id
-             |            JOIN norms nb ON nb.vec_id = right_id),
-             |ranked AS (SELECT left_id, right_id, cos, row_number() OVER (
-             |    PARTITION BY left_id ORDER BY cos DESC, right_id ASC) AS rank
-             |  FROM scored)
-             |SELECT left_id, rank::int AS rank, right_id, floor((cos) * 1e6 + 0.5) / 1e6 AS cos
-             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+      Some(s"WITH $cosScoredCtes,\n${top3Sql("cos", "scored")}"),
       api = "Similarity.topKCosine",
       desc = "Brute-force cosine top-k over embeddings — the exact ANN baseline (codegen'd dot product, per-query window).",
       auditAllow = Some("documented exact baseline: brute-force cosine over a broadcast query side")),
@@ -371,35 +551,9 @@ object SimilarityQueries {
     // candidate stream = exact top-10 (so the candidate-graph scales are
     // reproducible in SQL); scaleK = 5, final k = 3
     "m13_csls_knn" -> QueryDef(
-      (s, dir) => {
-        val e = embs(s, dir)
-        val l = e.filter(col("vec_id") % 2 === 0)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val r = e.filter(col("vec_id") % 2 === 1)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val cand = Similarity.topKCosine(l, r, 10)
-        Similarity.cslsRerank(cand, k = 3, scaleK = 5)
-          .select(col("left_id"), col("rank"), col("right_id"),
-            Num.stableRound(col("csls"), 6).as("csls"))
-          .orderBy("left_id", "rank")
-      },
-      Some("""WITH expl AS (
-             |  SELECT vec_id, i.i AS i, embedding[i.i]::double AS v
-             |  FROM embeddings, range(1, 65) i(i)),
-             |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM expl GROUP BY vec_id),
-             |dots AS (
-             |  SELECT a.vec_id AS left_id, b.vec_id AS right_id, sum(a.v * b.v) AS dot
-             |  FROM expl a JOIN expl b ON a.i = b.i
-             |  WHERE a.vec_id % 2 = 0 AND b.vec_id % 2 = 1 GROUP BY 1, 2),
-             |scored AS (
-             |  SELECT left_id, right_id, dot / (na.nrm * nb.nrm) AS cos
-             |  FROM dots JOIN norms na ON na.vec_id = left_id
-             |            JOIN norms nb ON nb.vec_id = right_id),
-             |cand AS (
-             |  SELECT left_id, right_id, cos FROM (
-             |    SELECT left_id, right_id, cos, row_number() OVER (
-             |      PARTITION BY left_id ORDER BY cos DESC, right_id ASC) AS r
-             |    FROM scored) WHERE r <= 10),
+      (s, dir) => topRows(
+        Similarity.cslsRerank(m13Candidates(s, dir), k = 3, scaleK = 5), "csls"),
+      Some(s"""WITH $knnCandCtesSql,
              |rl AS (
              |  SELECT left_id, avg(cos) AS rq FROM (
              |    SELECT left_id, cos, row_number() OVER (
@@ -413,14 +567,9 @@ object SimilarityQueries {
              |cs AS (
              |  SELECT c.left_id, c.right_id, 2 * c.cos - rl.rq - rr.rt AS csls
              |  FROM cand c JOIN rl USING (left_id) JOIN rr USING (right_id)),
-             |ranked AS (SELECT left_id, right_id, csls, row_number() OVER (
-             |    PARTITION BY left_id ORDER BY csls DESC, right_id ASC) AS rank
-             |  FROM cs)
-             |SELECT left_id, rank::int AS rank, right_id, floor((csls) * 1e6 + 0.5) / 1e6 AS csls
-             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+             |${top3Sql("csls", "cs")}""".stripMargin),
       api = "Similarity.cslsRerank",
-      desc = "CSLS hubness-corrected kNN (M13): mean neighbor similarity both directions re-scores the top-k.",
-      auditAllow = Some("neighborhood-statistics join over the bounded candidate list")),
+      desc = "CSLS hubness-corrected kNN (M13): mean neighbor similarity both directions re-scores the top-k."),
 
     // ---- M13 non-CSLS hubness reduction (kiez parity) ---------------------
     // the other reduction methods kiez layers over any NN algorithm
@@ -430,13 +579,8 @@ object SimilarityQueries {
     // rank-based joint farther-probability). All share the brute top-10
     // candidate graph with m13_csls_knn.
     "m13_nicdm_knn" -> QueryDef(
-      (s, dir) => {
-        Similarity.nicdmRerank(m13Candidates(s, dir), k = 3, scaleK = 5,
-            rankScale = 6)
-          .select(col("left_id"), col("rank"), col("right_id"),
-            Num.stableRound(col("nicdm"), 6).as("nicdm"))
-          .orderBy("left_id", "rank")
-      },
+      (s, dir) => topRows(Similarity.nicdmRerank(m13Candidates(s, dir), k = 3,
+        scaleK = 5, rankScale = 6), "nicdm"),
       Some(s"""WITH $knnCandCtesSql,
              |mul AS (
              |  SELECT left_id, avg(1 - cos) AS mq FROM (
@@ -453,25 +597,13 @@ object SimilarityQueries {
              |         CASE WHEN mul.mq * mur.mt <= 0 THEN 1 - c.cos
              |              ELSE (1 - c.cos) / sqrt(mul.mq * mur.mt) END AS nicdm
              |  FROM cand c JOIN mul USING (left_id) JOIN mur USING (right_id)),
-             |ranked AS (SELECT left_id, right_id, nicdm, row_number() OVER (
-             |    PARTITION BY left_id
-             |    ORDER BY floor((nicdm) * 1e6 + 0.5) / 1e6 ASC, right_id ASC) AS rank
-             |  FROM sc)
-             |SELECT left_id, rank::int AS rank, right_id,
-             |       floor((nicdm) * 1e6 + 0.5) / 1e6 AS nicdm
-             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+             |${rerankTop3Sql("nicdm", "ASC")}""".stripMargin),
       api = "Similarity.nicdmRerank",
-      desc = "NICDM hubness reduction (M13, kiez 'nicdm'): distances rescaled by sqrt of both endpoints' mean local distance scale over the candidate graph.",
-      auditAllow = Some("neighborhood-statistics join over the bounded candidate list")),
+      desc = "NICDM hubness reduction (M13, kiez 'nicdm'): distances rescaled by sqrt of both endpoints' mean local distance scale over the candidate graph."),
 
     "m13_ls_knn" -> QueryDef(
-      (s, dir) => {
-        Similarity.localScalingRerank(m13Candidates(s, dir), k = 3, scaleK = 5,
-            rankScale = 6)
-          .select(col("left_id"), col("rank"), col("right_id"),
-            Num.stableRound(col("ls"), 6).as("ls"))
-          .orderBy("left_id", "rank")
-      },
+      (s, dir) => topRows(Similarity.localScalingRerank(m13Candidates(s, dir),
+        k = 3, scaleK = 5, rankScale = 6), "ls"),
       Some(s"""WITH $knnCandCtesSql,
              |sgl AS (
              |  SELECT left_id, (1 - cos) AS sq FROM (
@@ -492,25 +624,13 @@ object SimilarityQueries {
              |              ELSE exp(-((1 - c.cos) * (1 - c.cos)) / (sgl.sq * sgr.st))
              |         END AS ls
              |  FROM cand c JOIN sgl USING (left_id) JOIN sgr USING (right_id)),
-             |ranked AS (SELECT left_id, right_id, ls, row_number() OVER (
-             |    PARTITION BY left_id
-             |    ORDER BY floor((ls) * 1e6 + 0.5) / 1e6 DESC, right_id ASC) AS rank
-             |  FROM sc)
-             |SELECT left_id, rank::int AS rank, right_id,
-             |       floor((ls) * 1e6 + 0.5) / 1e6 AS ls
-             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+             |${rerankTop3Sql("ls", "DESC")}""".stripMargin),
       api = "Similarity.localScalingRerank",
-      desc = "Local-scaling hubness reduction (M13, kiez 'ls'): exp(−d²/(σq·σx)) with σ = scaleK-th candidate distance each side.",
-      auditAllow = Some("neighborhood-statistics join over the bounded candidate list")),
+      desc = "Local-scaling hubness reduction (M13, kiez 'ls'): exp(−d²/(σq·σx)) with σ = scaleK-th candidate distance each side."),
 
     "m13_mp_knn" -> QueryDef(
-      (s, dir) => {
-        Similarity.mutualProximityRerank(m13Candidates(s, dir), k = 3,
-            rankScale = 6)
-          .select(col("left_id"), col("rank"), col("right_id"),
-            Num.stableRound(col("mp"), 6).as("mp"))
-          .orderBy("left_id", "rank")
-      },
+      (s, dir) => topRows(Similarity.mutualProximityRerank(m13Candidates(s, dir),
+        k = 3, rankScale = 6), "mp"),
       Some(s"""WITH $knnCandCtesSql,
              |sc AS (
              |  SELECT left_id, right_id, cos,
@@ -519,16 +639,9 @@ object SimilarityQueries {
              |         * (((rank() OVER (PARTITION BY right_id ORDER BY cos ASC)) - 1)::double
              |           / (count(*) OVER (PARTITION BY right_id))) AS mp
              |  FROM cand),
-             |ranked AS (SELECT left_id, right_id, mp, row_number() OVER (
-             |    PARTITION BY left_id
-             |    ORDER BY floor((mp) * 1e6 + 0.5) / 1e6 DESC, cos DESC, right_id ASC) AS rank
-             |  FROM sc)
-             |SELECT left_id, rank::int AS rank, right_id,
-             |       floor((mp) * 1e6 + 0.5) / 1e6 AS mp
-             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+             |${rerankTop3Sql("mp", "DESC, cos DESC")}""".stripMargin),
       api = "Similarity.mutualProximityRerank",
-      desc = "Empiric mutual proximity (M13, kiez 'mp'): joint farther-probability over both candidate views — pure rank arithmetic, density-immune.",
-      auditAllow = Some("neighborhood-statistics join over the bounded candidate list")),
+      desc = "Empiric mutual proximity (M13, kiez 'mp'): joint farther-probability over both candidate views — pure rank arithmetic, density-immune."),
 
     // DisSimLocal (Hara et al. AAAI 2016 — kiez's "dsl", the vector-aware
     // member of its registry): ‖q−x‖² − ‖q−c(q)‖² − ‖x−c(x)‖² with local
@@ -537,10 +650,7 @@ object SimilarityQueries {
     "m13_dsl_knn" -> QueryDef(
       (s, dir) => {
         val (l, r, cand) = m13Sides(s, dir)
-        Similarity.dslRerank(cand, l, r, k = 3, scaleK = 5, rankScale = 6)
-          .select(col("left_id"), col("rank"), col("right_id"),
-            Num.stableRound(col("dsl"), 6).as("dsl"))
-          .orderBy("left_id", "rank")
+        topRows(Similarity.dslRerank(cand, l, r, k = 3, scaleK = 5, rankScale = 6), "dsl")
       },
       Some(s"""WITH $knnCandCtesSql,
              |topl AS (
@@ -575,16 +685,9 @@ object SimilarityQueries {
              |sc AS (
              |  SELECT d2.left_id, d2.right_id, d2.d2 - selfl.sq - selfr.st AS dsl
              |  FROM d2 JOIN selfl USING (left_id) JOIN selfr USING (right_id)),
-             |ranked AS (SELECT left_id, right_id, dsl, row_number() OVER (
-             |    PARTITION BY left_id
-             |    ORDER BY floor((dsl) * 1e6 + 0.5) / 1e6 ASC, right_id ASC) AS rank
-             |  FROM sc)
-             |SELECT left_id, rank::int AS rank, right_id,
-             |       floor((dsl) * 1e6 + 0.5) / 1e6 AS dsl
-             |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+             |${rerankTop3Sql("dsl", "ASC")}""".stripMargin),
       api = "Similarity.dslRerank",
-      desc = "DisSimLocal hubness reduction (M13, kiez 'dsl'): d² minus each endpoint's squared distance to its scaleK-candidate centroid — the vector-aware member, completing the kiez method set.",
-      auditAllow = Some("neighborhood-statistics join over the bounded candidate list")),
+      desc = "DisSimLocal hubness reduction (M13, kiez 'dsl'): d² minus each endpoint's squared distance to its scaleK-candidate centroid — the vector-aware member, completing the kiez method set."),
 
     // ---- IVF kNN: label buckets, nearest-centroid probe -------------------
     "ann_ivf_label" -> QueryDef(
@@ -598,20 +701,9 @@ object SimilarityQueries {
             Num.stableRound(col("cos"), 6).as("cos"))
           .orderBy("left_id", "rank")
       },
-      Some("""WITH expl AS (
-             |  SELECT vec_id, label, i.i AS i, embedding[i.i]::double AS v
-             |  FROM embeddings, range(1, 65) i(i)),
-             |cents AS (SELECT label, i, avg(v) AS c FROM expl GROUP BY label, i),
-             |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM expl GROUP BY vec_id),
-             |cnorms AS (SELECT label, sqrt(sum(c*c)) AS nrm FROM cents GROUP BY label),
-             |qdots AS (
-             |  SELECT e.vec_id, c.label, sum(e.v * c.c) AS dot
-             |  FROM expl e JOIN cents c ON e.i = c.i GROUP BY 1, 2),
+      Some(s"""$ivfSelfProbeCtes
              |assign AS (SELECT vec_id, label FROM (
-             |  SELECT q.vec_id, q.label, row_number() OVER (PARTITION BY q.vec_id
-             |      ORDER BY q.dot / (n.nrm * cn.nrm) DESC, q.label::varchar ASC) AS rn
-             |  FROM qdots q JOIN norms n ON n.vec_id = q.vec_id
-             |               JOIN cnorms cn ON cn.label = q.label) WHERE rn = 1),
+             |${cellRankSql("qdots", "norms", "q")} WHERE rn = 1),
              |dots AS (
              |  SELECT a.vec_id AS left_id, s.label, b.vec_id AS right_id,
              |         sum(a.v * b.v) AS dot
@@ -621,10 +713,7 @@ object SimilarityQueries {
              |ranked AS (
              |  SELECT left_id, label, right_id,
              |         dot / (na.nrm * nb.nrm) AS cos,
-             |         row_number() OVER (PARTITION BY left_id
-             |             ORDER BY dot / (na.nrm * nb.nrm) DESC, right_id ASC) AS rank
-             |  FROM dots JOIN norms na ON na.vec_id = left_id
-             |            JOIN norms nb ON nb.vec_id = right_id)
+             |$cosRankOverDots
              |SELECT left_id, label::varchar AS bucket, rank::int AS rank, right_id,
              |       floor((cos) * 1e6 + 0.5) / 1e6 AS cos
              |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
@@ -639,25 +728,11 @@ object SimilarityQueries {
         val bucketed = e.select(col("label").cast("string").as("bucket"),
           col("vec_id").as("id"), col("embedding").as("vec"))
         val q = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-        Similarity.ivfTopK(q, bucketed, 3, probes = 2)
-          .select(col("left_id"), col("rank"), col("right_id"),
-            Num.stableRound(col("cos"), 6).as("cos"))
-          .orderBy("left_id", "rank")
+        topRows(Similarity.ivfTopK(q, bucketed, 3, probes = 2), "cos")
       },
-      Some("""WITH expl AS (
-             |  SELECT vec_id, label, i.i AS i, embedding[i.i]::double AS v
-             |  FROM embeddings, range(1, 65) i(i)),
-             |cents AS (SELECT label, i, avg(v) AS c FROM expl GROUP BY label, i),
-             |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM expl GROUP BY vec_id),
-             |cnorms AS (SELECT label, sqrt(sum(c*c)) AS nrm FROM cents GROUP BY label),
-             |qdots AS (
-             |  SELECT e.vec_id, c.label, sum(e.v * c.c) AS dot
-             |  FROM expl e JOIN cents c ON e.i = c.i GROUP BY 1, 2),
+      Some(s"""$ivfSelfProbeCtes
              |assign AS (SELECT vec_id, label FROM (
-             |  SELECT q.vec_id, q.label, row_number() OVER (PARTITION BY q.vec_id
-             |      ORDER BY q.dot / (n.nrm * cn.nrm) DESC, q.label::varchar ASC) AS rn
-             |  FROM qdots q JOIN norms n ON n.vec_id = q.vec_id
-             |               JOIN cnorms cn ON cn.label = q.label) WHERE rn <= 2),
+             |${cellRankSql("qdots", "norms", "q")} WHERE rn <= 2),
              |dots AS (
              |  SELECT a.vec_id AS left_id, b.vec_id AS right_id,
              |         sum(a.v * b.v) AS dot
@@ -667,10 +742,7 @@ object SimilarityQueries {
              |ranked AS (
              |  SELECT left_id, right_id,
              |         dot / (na.nrm * nb.nrm) AS cos,
-             |         row_number() OVER (PARTITION BY left_id
-             |             ORDER BY dot / (na.nrm * nb.nrm) DESC, right_id ASC) AS rank
-             |  FROM dots JOIN norms na ON na.vec_id = left_id
-             |            JOIN norms nb ON nb.vec_id = right_id)
+             |$cosRankOverDots
              |SELECT left_id, rank::int AS rank, right_id, floor((cos) * 1e6 + 0.5) / 1e6 AS cos
              |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
       api = "Similarity.ivfTopK",
@@ -683,64 +755,27 @@ object SimilarityQueries {
           embs(s, dir).select(col("vec_id").as("id"), col("embedding").as("vec")))
         .select(col("id"), array_join(col("codes"), ",").as("codes"))
         .orderBy("id"),
-      Some(s"""WITH g AS (
-              |  SELECT vec_id, s.s AS s, c.c AS c,
-              |         floor((sum(power(embedding[s.s*8 + d.d + 1]::double
-              |             - ${Similarity.pqComponentSql("s.s", "c.c", "d.d")}), 2))) * 1e6 + 0.5) / 1e6 AS dist
-              |  FROM embeddings, range(0, 8) s(s), range(0, 16) c(c), range(0, 8) d(d)
-              |  GROUP BY 1, 2, 3),
-              |best AS (
-              |  SELECT vec_id, s, c FROM (
-              |    SELECT vec_id, s, c, row_number() OVER (
-              |        PARTITION BY vec_id, s ORDER BY dist ASC, c ASC) AS rn
-              |    FROM g) WHERE rn = 1)
+      Some(s"""WITH ${pqDistCte("vec_id", "GROUP BY 1, 2, 3")},
+              |${pqCodesCte("best", "vec_id", "vec_id")}
               |SELECT vec_id AS id, string_agg(c, ',' ORDER BY s) AS codes
               |FROM best GROUP BY vec_id ORDER BY id""".stripMargin),
       api = "Similarity.pqEncode",
-      desc = "Product-quantization encoding: per-subspace codebooks, embeddings → code bytes (the 100×-compression layout).",
-      auditAllow = Some("PQ codebook broadcast to every partition")),
+      desc = "Product-quantization encoding: per-subspace codebooks, embeddings → code bytes (the 100×-compression layout)."),
 
     // ---- PQ/ADC top-k: exact queries against the compressed corpus --------
     "ann_pq_adc_topk" -> QueryDef(
       (s, dir) => {
-        val e = embs(s, dir)
-        val q = e.filter(col("vec_id") % 2 === 0)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val codes = Similarity.pqEncode(e.filter(col("vec_id") % 2 === 1)
-          .select(col("vec_id").as("id"), col("embedding").as("vec")))
-        Similarity.pqTopK(q, codes, 3, rankScale = 6)
-          .select(col("left_id"), col("rank"), col("right_id"),
-            Num.stableRound(col("adc"), 6).as("adc"))
-          .orderBy("left_id", "rank")
+        val (q, r) = evenOdd(embs(s, dir))
+        topRows(Similarity.pqTopK(q, Similarity.pqEncode(r), 3, rankScale = 6), "adc")
       },
-      Some(s"""WITH g AS (
-              |  SELECT vec_id, s.s AS s, c.c AS c,
-              |         floor((sum(power(embedding[s.s*8 + d.d + 1]::double
-              |             - ${Similarity.pqComponentSql("s.s", "c.c", "d.d")}), 2))) * 1e6 + 0.5) / 1e6 AS dist
-              |  FROM embeddings, range(0, 8) s(s), range(0, 16) c(c), range(0, 8) d(d)
-              |  WHERE vec_id % 2 = 1 GROUP BY 1, 2, 3),
-              |codes AS (
-              |  SELECT vec_id AS right_id, s, c FROM (
-              |    SELECT vec_id, s, c, row_number() OVER (
-              |        PARTITION BY vec_id, s ORDER BY dist ASC, c ASC) AS rn
-              |    FROM g) WHERE rn = 1),
-              |lut AS (
-              |  SELECT vec_id AS left_id, s.s AS s, c.c AS c,
-              |         sum(embedding[s.s*8 + d.d + 1]::double
-              |             * ${Similarity.pqComponentSql("s.s", "c.c", "d.d")})) AS part
-              |  FROM embeddings, range(0, 8) s(s), range(0, 16) c(c), range(0, 8) d(d)
-              |  WHERE vec_id % 2 = 0 GROUP BY 1, 2, 3),
+      Some(s"""WITH ${pqDistCte("vec_id", "WHERE vec_id % 2 = 1 GROUP BY 1, 2, 3")},
+              |${pqCodesCte("codes", "vec_id AS right_id", "vec_id")},
+              |$pqLutCte,
               |scored AS (
               |  SELECT l.left_id, cd.right_id, sum(l.part) AS adc
               |  FROM codes cd JOIN lut l USING (s, c)
               |  GROUP BY 1, 2),
-              |ranked AS (
-              |  SELECT left_id, right_id, adc, row_number() OVER (
-              |      PARTITION BY left_id
-              |      ORDER BY floor((adc) * 1e6 + 0.5) / 1e6 DESC, right_id ASC) AS rank
-              |  FROM scored)
-              |SELECT left_id, rank::int AS rank, right_id, floor((adc) * 1e6 + 0.5) / 1e6 AS adc
-              |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+              |$adcTop3Sql""".stripMargin),
       api = "Similarity.pqTopK",
       desc = "PQ asymmetric-distance top-k: query-to-codebook lookup tables broadcast, scan costs table lookups not float ops.",
       auditAllow = Some("PQ codebook (k×m floats) broadcast to every partition")),
@@ -748,21 +783,12 @@ object SimilarityQueries {
     // ---- IVF-PQ: probe nearest label bucket, ADC over its PQ codes --------
     "ann_ivf_pq_topk" -> QueryDef(
       (s, dir) => {
-        val e = embs(s, dir)
-        val q = e.filter(col("vec_id") % 2 === 0)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val bucketed = e.filter(col("vec_id") % 2 === 1)
-          .select(col("label").cast("string").as("bucket"),
-            col("vec_id").as("id"), col("embedding").as("vec"))
-        Similarity.ivfPqTopK(q, bucketed, 3, rankScale = 6)
-          .select(col("left_id"), col("rank"), col("right_id"),
-            Num.stableRound(col("adc"), 6).as("adc"))
-          .orderBy("left_id", "rank")
+        val (q, bucketed) = ivfSides(embs(s, dir))
+        topRows(Similarity.ivfPqTopK(q, bucketed, 3, rankScale = 6), "adc")
       },
       Some(ivfPqTopkSql),
       api = "Similarity.ivfPqTopK",
-      desc = "IVF+PQ: coarse cells prune the corpus, PQ ADC ranks inside cells — the billion-scale ANN layout.",
-      auditAllow = Some("PQ codebook + centroid table broadcast (both tiny by construction)")),
+      desc = "IVF+PQ: coarse cells prune the corpus, PQ ADC ranks inside cells — the billion-scale ANN layout."),
 
     // ---- persisted IVF-PQ index: build -> save -> load -> search ----------
     // the serving contract: corpus-side work (centroids + PQ codes) is
@@ -772,12 +798,7 @@ object SimilarityQueries {
     // hash check proves it (parquet preserves doubles exactly).
     "ann_ivf_pq_saved" -> QueryDef(
       (s, dir) => {
-        val e = embs(s, dir)
-        val q = e.filter(col("vec_id") % 2 === 0)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val bucketed = e.filter(col("vec_id") % 2 === 1)
-          .select(col("label").cast("string").as("bucket"),
-            col("vec_id").as("id"), col("embedding").as("vec"))
+        val (q, bucketed) = ivfSides(embs(s, dir))
         // per-run temp dir: two concurrent runs against the same dataset
         // must not race on one fixed path (cleanup is the tmp policy's —
         // the index must outlive this lambda because search scans the
@@ -785,10 +806,7 @@ object SimilarityQueries {
         val path = java.nio.file.Files
           .createTempDirectory("graft_ivfpq_index_").toString
         IndexStore.save(IndexStore.buildIvfPq(bucketed), path)
-        IndexStore.search(q, IndexStore.load(s, path), 3, rankScale = 6)
-          .select(col("left_id"), col("rank"), col("right_id"),
-            Num.stableRound(col("adc"), 6).as("adc"))
-          .orderBy("left_id", "rank")
+        topRows(IndexStore.search(q, IndexStore.load(s, path), 3, rankScale = 6), "adc")
       },
       Some(ivfPqTopkSql),
       api = "IndexStore.save/load/search",
@@ -817,74 +835,31 @@ object SimilarityQueries {
         val baseIdx = IndexStore.buildIvfPq(base)
         val appended = IndexStore.appendIvfPq(baseIdx,
           IndexStore.assignBuckets(delta, baseIdx))
-        IndexStore.search(q, appended, 3, rankScale = 6)
-          .select(col("left_id"), col("rank"), col("right_id"),
-            Num.stableRound(col("adc"), 6).as("adc"))
-          .orderBy("left_id", "rank")
+        topRows(IndexStore.search(q, appended, 3, rankScale = 6), "adc")
       },
-      Some(s"""WITH bexpl AS (
-              |  SELECT vec_id, label, i.i AS i, embedding[i.i]::double AS v
-              |  FROM embeddings, range(1, 65) i(i) WHERE vec_id % 4 = 1),
-              |cents AS (SELECT label, i, avg(v) AS c FROM bexpl GROUP BY label, i),
-              |cnorms AS (SELECT label, sqrt(sum(c*c)) AS nrm FROM cents GROUP BY label),
-              |dexpl AS (
-              |  SELECT vec_id, i.i AS i, embedding[i.i]::double AS v
-              |  FROM embeddings, range(1, 65) i(i) WHERE vec_id % 4 = 3),
-              |dnorms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM dexpl GROUP BY vec_id),
+      Some(s"""WITH ${explCte("bexpl", "vec_id, label", " WHERE vec_id % 4 = 1")},
+              |${centroidCtes("bexpl")},
+              |${explCte("dexpl", where = " WHERE vec_id % 4 = 3")},
+              |${normsCte("dnorms", "dexpl")},
               |ddots AS (
               |  SELECT e.vec_id, c.label, sum(e.v * c.c) AS dot
               |  FROM dexpl e JOIN cents c ON e.i = c.i GROUP BY 1, 2),
               |dassign AS (SELECT vec_id, label FROM (
-              |  SELECT d.vec_id, d.label, row_number() OVER (PARTITION BY d.vec_id
-              |      ORDER BY d.dot / (n.nrm * cn.nrm) DESC, d.label::varchar ASC) AS rn
-              |  FROM ddots d JOIN dnorms n ON n.vec_id = d.vec_id
-              |               JOIN cnorms cn ON cn.label = d.label) WHERE rn = 1),
+              |${cellRankSql("ddots", "dnorms", "d")} WHERE rn = 1),
               |buckets AS (
               |  SELECT vec_id, label FROM embeddings WHERE vec_id % 4 = 1
               |  UNION ALL SELECT vec_id, label FROM dassign),
-              |qexpl AS (
-              |  SELECT vec_id, i.i AS i, embedding[i.i]::double AS v
-              |  FROM embeddings, range(1, 65) i(i) WHERE vec_id % 2 = 0),
-              |qnorms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM qexpl GROUP BY vec_id),
-              |qdots AS (
-              |  SELECT e.vec_id, c.label, sum(e.v * c.c) AS dot
-              |  FROM qexpl e JOIN cents c ON e.i = c.i GROUP BY 1, 2),
-              |assign AS (SELECT vec_id AS left_id, label FROM (
-              |  SELECT q.vec_id, q.label, row_number() OVER (PARTITION BY q.vec_id
-              |      ORDER BY q.dot / (n.nrm * cn.nrm) DESC, q.label::varchar ASC) AS rn
-              |  FROM qdots q JOIN qnorms n ON n.vec_id = q.vec_id
-              |               JOIN cnorms cn ON cn.label = q.label) WHERE rn = 1),
-              |g AS (
-              |  SELECT vec_id, s.s AS s, c.c AS c,
-              |         floor((sum(power(embedding[s.s*8 + d.d + 1]::double
-              |             - ${Similarity.pqComponentSql("s.s", "c.c", "d.d")}), 2))) * 1e6 + 0.5) / 1e6 AS dist
-              |  FROM embeddings, range(0, 8) s(s), range(0, 16) c(c), range(0, 8) d(d)
-              |  WHERE vec_id % 2 = 1 GROUP BY 1, 2, 3),
+              |$ivfQueryCtes,
+              |$ivfAssignCte,
+              |${pqDistCte("vec_id", "WHERE vec_id % 2 = 1 GROUP BY 1, 2, 3")},
               |codes AS (
               |  SELECT g2.vec_id AS right_id, b.label, g2.s, g2.c FROM (
               |    SELECT vec_id, s, c, row_number() OVER (
               |        PARTITION BY vec_id, s ORDER BY dist ASC, c ASC) AS rn
               |    FROM g) g2 JOIN buckets b ON b.vec_id = g2.vec_id
               |  WHERE g2.rn = 1),
-              |lut AS (
-              |  SELECT vec_id AS left_id, s.s AS s, c.c AS c,
-              |         sum(embedding[s.s*8 + d.d + 1]::double
-              |             * ${Similarity.pqComponentSql("s.s", "c.c", "d.d")})) AS part
-              |  FROM embeddings, range(0, 8) s(s), range(0, 16) c(c), range(0, 8) d(d)
-              |  WHERE vec_id % 2 = 0 GROUP BY 1, 2, 3),
-              |scored AS (
-              |  SELECT a.left_id, cd.right_id, sum(l.part) AS adc
-              |  FROM assign a
-              |  JOIN codes cd ON cd.label = a.label
-              |  JOIN lut l ON l.left_id = a.left_id AND l.s = cd.s AND l.c = cd.c
-              |  GROUP BY 1, 2),
-              |ranked AS (
-              |  SELECT left_id, right_id, adc, row_number() OVER (
-              |      PARTITION BY left_id
-              |      ORDER BY floor((adc) * 1e6 + 0.5) / 1e6 DESC, right_id ASC) AS rank
-              |  FROM scored)
-              |SELECT left_id, rank::int AS rank, right_id, floor((adc) * 1e6 + 0.5) / 1e6 AS adc
-              |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+              |$pqLutCte,
+              |$ivfAdcTop3Sql""".stripMargin),
       api = "IndexStore.assignBuckets/appendIvfPq",
       desc = "Incremental index ingest: a bucketless delta routed to its nearest IVF cell, PQ-encoded against the FIXED base geometry and appended — O(delta) daily arrivals, oracle replays the full path.",
       auditAllow = Some("centroid table broadcast (one row per IVF bucket) for delta assignment + probe")),
@@ -896,19 +871,11 @@ object SimilarityQueries {
     "st_ann_serve" -> QueryDef(
       (s, dir) => {
         implicit val sp: SparkSession = s
-        val e = embs(s, dir)
-        val q = e.filter(col("vec_id") % 2 === 0)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val bucketed = e.filter(col("vec_id") % 2 === 1)
-          .select(col("label").cast("string").as("bucket"),
-            col("vec_id").as("id"), col("embedding").as("vec"))
-        graft.streaming.AnnServing
+        val (q, bucketed) = ivfSides(embs(s, dir))
+        topRows(graft.streaming.AnnServing
           .serveIvfPq(q, graft.similarity.IndexStore.buildIvfPq(bucketed),
             3, rankScale = 6)
-          .toDF()
-          .select(col("left_id"), col("rank"), col("right_id"),
-            Num.stableRound(col("adc"), 6).as("adc"))
-          .orderBy("left_id", "rank")
+          .toDF(), "adc")
       },
       Some(ivfPqTopkSql),
       api = "AnnServing.serveIvfPq",
@@ -921,34 +888,13 @@ object SimilarityQueries {
     // ann_ivf_pq_topk — only the encode input and the score differ.
     "ann_ivf_pq_residual" -> QueryDef(
       (s, dir) => {
-        val e = embs(s, dir)
-        val q = e.filter(col("vec_id") % 2 === 0)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val bucketed = e.filter(col("vec_id") % 2 === 1)
-          .select(col("label").cast("string").as("bucket"),
-            col("vec_id").as("id"), col("embedding").as("vec"))
-        Similarity.ivfPqTopK(q, bucketed, 3, rankScale = 6, residual = true)
-          .select(col("left_id"), col("rank"), col("right_id"),
-            Num.stableRound(col("adc"), 6).as("adc"))
-          .orderBy("left_id", "rank")
+        val (q, bucketed) = ivfSides(embs(s, dir))
+        topRows(Similarity.ivfPqTopK(q, bucketed, 3, rankScale = 6, residual = true), "adc")
       },
-      Some(s"""WITH oexpl AS (
-              |  SELECT vec_id, label, i.i AS i, embedding[i.i]::double AS v
-              |  FROM embeddings, range(1, 65) i(i) WHERE vec_id % 2 = 1),
-              |cents AS (SELECT label, i, avg(v) AS c FROM oexpl GROUP BY label, i),
-              |cnorms AS (SELECT label, sqrt(sum(c*c)) AS nrm FROM cents GROUP BY label),
-              |qexpl AS (
-              |  SELECT vec_id, i.i AS i, embedding[i.i]::double AS v
-              |  FROM embeddings, range(1, 65) i(i) WHERE vec_id % 2 = 0),
-              |qnorms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM qexpl GROUP BY vec_id),
-              |qdots AS (
-              |  SELECT e.vec_id, c.label, sum(e.v * c.c) AS dot
-              |  FROM qexpl e JOIN cents c ON e.i = c.i GROUP BY 1, 2),
+      Some(s"""WITH $oddCentroidCtes,
+              |$ivfQueryCtes,
               |assign AS (SELECT vec_id AS left_id, label, dot FROM (
-              |  SELECT q.vec_id, q.label, q.dot, row_number() OVER (PARTITION BY q.vec_id
-              |      ORDER BY q.dot / (n.nrm * cn.nrm) DESC, q.label::varchar ASC) AS rn
-              |  FROM qdots q JOIN qnorms n ON n.vec_id = q.vec_id
-              |               JOIN cnorms cn ON cn.label = q.label) WHERE rn = 1),
+              |${cellRankSql("qdots", "qnorms", "q", "q.dot, ")} WHERE rn = 1),
               |g AS (
               |  SELECT e.vec_id, e.label, ((e.i - 1) // 8) AS s, c.c AS c,
               |         floor((sum(power((e.v - ct.c)
@@ -956,33 +902,17 @@ object SimilarityQueries {
               |  FROM oexpl e JOIN cents ct ON ct.label = e.label AND ct.i = e.i,
               |       range(0, 16) c(c)
               |  GROUP BY 1, 2, 3, 4),
-              |codes AS (
-              |  SELECT vec_id AS right_id, label, s, c FROM (
-              |    SELECT vec_id, label, s, c, row_number() OVER (
-              |        PARTITION BY vec_id, s ORDER BY dist ASC, c ASC) AS rn
-              |    FROM g) WHERE rn = 1),
-              |lut AS (
-              |  SELECT vec_id AS left_id, s.s AS s, c.c AS c,
-              |         sum(embedding[s.s*8 + d.d + 1]::double
-              |             * ${Similarity.pqComponentSql("s.s", "c.c", "d.d")})) AS part
-              |  FROM embeddings, range(0, 8) s(s), range(0, 16) c(c), range(0, 8) d(d)
-              |  WHERE vec_id % 2 = 0 GROUP BY 1, 2, 3),
+              |${pqCodesCte("codes", "vec_id AS right_id, label", "vec_id, label")},
+              |$pqLutCte,
               |scored AS (
               |  SELECT a.left_id, cd.right_id, a.dot + sum(l.part) AS adc
               |  FROM assign a
               |  JOIN codes cd ON cd.label = a.label
               |  JOIN lut l ON l.left_id = a.left_id AND l.s = cd.s AND l.c = cd.c
               |  GROUP BY 1, 2, a.dot),
-              |ranked AS (
-              |  SELECT left_id, right_id, adc, row_number() OVER (
-              |      PARTITION BY left_id
-              |      ORDER BY floor((adc) * 1e6 + 0.5) / 1e6 DESC, right_id ASC) AS rank
-              |  FROM scored)
-              |SELECT left_id, rank::int AS rank, right_id, floor((adc) * 1e6 + 0.5) / 1e6 AS adc
-              |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
+              |$adcTop3Sql""".stripMargin),
       api = "Similarity.ivfPqTopK",
-      desc = "IVF+PQ on residuals (vector − centroid) — finer quantization at identical storage.",
-      auditAllow = Some("PQ codebook + centroid table broadcast (both tiny by construction)")),
+      desc = "IVF+PQ on residuals (vector − centroid) — finer quantization at identical storage."),
 
     // ---- sign-LSH bucketing (first 16 dims, 6 planes) ---------------------
     "ann_hyperplane_lsh" -> QueryDef(
@@ -993,31 +923,21 @@ object SimilarityQueries {
       Some(s"""SELECT vec_id, ${Similarity.hyperplaneBucketSql("embedding", 6, 16)} AS bucket
               |FROM embeddings ORDER BY vec_id""".stripMargin),
       api = "Similarity.hyperplaneBucket",
-      desc = "Sign-LSH bucketing: md5-deterministic hyperplanes hash embeddings to bucket keys (SQL-replayable).",
-      auditAllow = Some("hyperplane matrix broadcast (bits×dims floats)")),
+      desc = "Sign-LSH bucketing: md5-deterministic hyperplanes hash embeddings to bucket keys (SQL-replayable)."),
 
     // ---- sign-LSH kNN: bucket equi-join candidates + exact re-rank --------
     // the EmbeddingKnnBlocker SignLsh path, oracle-checked end-to-end
     // (buckets are md5-deterministic, so DuckDB regenerates them exactly)
     "ann_lsh_topk" -> QueryDef(
       (s, dir) => {
-        val e = embs(s, dir)
-        val l = e.filter(col("vec_id") % 2 === 0)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val r = e.filter(col("vec_id") % 2 === 1)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        Similarity.lshTopK(l, r, 3, numPlanes = 4, planeDims = 16)
-          .select(col("left_id"), col("rank"), col("right_id"),
-            Num.stableRound(col("cos"), 6).as("cos"))
-          .orderBy("left_id", "rank")
+        val (l, r) = evenOdd(embs(s, dir))
+        topRows(Similarity.lshTopK(l, r, 3, numPlanes = 4, planeDims = 16), "cos")
       },
       Some(s"""WITH buck AS (
               |  SELECT vec_id, ${Similarity.hyperplaneBucketSql("embedding", 4, 16)} AS b
               |  FROM embeddings),
-              |expl AS (
-              |  SELECT vec_id, i.i AS i, embedding[i.i]::double AS v
-              |  FROM embeddings, range(1, 65) i(i)),
-              |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM expl GROUP BY vec_id),
+              |${explCte("expl")},
+              |${normsCte("norms", "expl")},
               |cand AS (
               |  SELECT l.vec_id AS left_id, r.vec_id AS right_id
               |  FROM buck l JOIN buck r ON l.b = r.b
@@ -1029,15 +949,11 @@ object SimilarityQueries {
               |  GROUP BY 1, 2),
               |ranked AS (
               |  SELECT left_id, right_id, dot / (na.nrm * nb.nrm) AS cos,
-              |         row_number() OVER (PARTITION BY left_id
-              |             ORDER BY dot / (na.nrm * nb.nrm) DESC, right_id ASC) AS rank
-              |  FROM dots JOIN norms na ON na.vec_id = left_id
-              |            JOIN norms nb ON nb.vec_id = right_id)
+              |$cosRankOverDots
               |SELECT left_id, rank::int AS rank, right_id, floor((cos) * 1e6 + 0.5) / 1e6 AS cos
               |FROM ranked WHERE rank <= 3 ORDER BY left_id, rank""".stripMargin),
       api = "Similarity.lshTopK",
-      desc = "Sign-LSH kNN: bucket equi-join candidates + exact cosine re-rank — the EmbeddingKnnBlocker scale path.",
-      auditAllow = Some("hyperplane matrix broadcast (bits×dims floats)")),
+      desc = "Sign-LSH kNN: bucket equi-join candidates + exact cosine re-rank — the EmbeddingKnnBlocker scale path."),
 
     // ---- dedup: embedding-cosine near-duplicates --------------------------
     "dd_embedding_neardup" -> QueryDef(
@@ -1045,18 +961,13 @@ object SimilarityQueries {
           embs(s, dir).select(col("vec_id").as("id"), col("embedding").as("vec")), 0.4)
         .select(col("id_a"), col("id_b"), Num.stableRound(col("cos"), 6).as("cos"))
         .orderBy("id_a", "id_b"),
-      Some("""WITH expl AS (
-             |  SELECT vec_id, i.i AS i, embedding[i.i]::double AS v
-             |  FROM embeddings, range(1, 65) i(i)),
-             |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM expl GROUP BY vec_id),
+      Some(s"""WITH ${explCte("expl")},
+             |${normsCte("norms", "expl")},
              |dots AS (
              |  SELECT a.vec_id AS id_a, b.vec_id AS id_b, sum(a.v * b.v) AS dot
              |  FROM expl a JOIN expl b ON a.i = b.i AND a.vec_id < b.vec_id
              |  GROUP BY 1, 2)
-             |SELECT id_a, id_b, floor((dot / (na.nrm * nb.nrm)) * 1e6 + 0.5) / 1e6 AS cos
-             |FROM dots JOIN norms na ON na.vec_id = id_a
-             |          JOIN norms nb ON nb.vec_id = id_b
-             |WHERE dot / (na.nrm * nb.nrm) >= 0.4 ORDER BY id_a, id_b""".stripMargin),
+             |$nearDupCosSelect""".stripMargin),
       api = "Similarity.selfJoinNearDup",
       desc = "Exact embedding cosine near-dup pairs — the documented O(n²) baseline; `dd_embedding_neardup_lsh` is the scale sibling.",
       auditAllow = Some("documented exact O(n²) baseline (the _lsh variant is the scale path)")),
@@ -1078,10 +989,8 @@ object SimilarityQueries {
             Num.stableRound(col("cos"), 6).as("cos"), col("contaminated"))
           .orderBy("id")
       },
-      Some("""WITH expl AS (
-             |  SELECT vec_id, i.i AS i, embedding[i.i]::double AS v
-             |  FROM embeddings, range(1, 65) i(i)),
-             |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM expl GROUP BY vec_id),
+      Some(s"""WITH ${explCte("expl")},
+             |${normsCte("norms", "expl")},
              |bench AS (SELECT vec_id FROM embeddings WHERE vec_id % 2 = 1 AND label = 0),
              |dots AS (
              |  SELECT a.vec_id AS id, b.vec_id AS bench_id, sum(a.v * b.v) AS dot
@@ -1111,10 +1020,8 @@ object SimilarityQueries {
       Some(s"""WITH bucketed AS (
               |  SELECT vec_id, ${Similarity.hyperplaneBucketSql("embedding", 6, 16)} AS b
               |  FROM embeddings),
-              |expl AS (
-              |  SELECT vec_id, i.i AS i, embedding[i.i]::double AS v
-              |  FROM embeddings, range(1, 65) i(i)),
-              |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM expl GROUP BY vec_id),
+              |${explCte("expl")},
+              |${normsCte("norms", "expl")},
               |cand AS (
               |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
               |  FROM bucketed a JOIN bucketed b ON a.b = b.b AND a.vec_id < b.vec_id),
@@ -1123,13 +1030,9 @@ object SimilarityQueries {
               |  FROM cand c JOIN expl ea ON ea.vec_id = c.id_a
               |              JOIN expl eb ON eb.vec_id = c.id_b AND eb.i = ea.i
               |  GROUP BY 1, 2)
-              |SELECT id_a, id_b, floor((dot / (na.nrm * nb.nrm)) * 1e6 + 0.5) / 1e6 AS cos
-              |FROM dots JOIN norms na ON na.vec_id = id_a
-              |          JOIN norms nb ON nb.vec_id = id_b
-              |WHERE dot / (na.nrm * nb.nrm) >= 0.4 ORDER BY id_a, id_b""".stripMargin),
+              |$nearDupCosSelect""".stripMargin),
       api = "Similarity.bucketedNearDup",
-      desc = "Embedding near-dup via sign-LSH buckets: pair work confined to bucket-mates, capped per bucket.",
-      auditAllow = Some("sign-LSH hyperplane matrix broadcast")),
+      desc = "Embedding near-dup via sign-LSH buckets: pair work confined to bucket-mates, capped per bucket."),
 
     // ---- M11: cluster-label blocking --------------------------------------
     "m11_cluster_blocks" -> QueryDef(
@@ -1139,11 +1042,7 @@ object SimilarityQueries {
           .select(col("vec_id").as("id"), col("label").cast("string").as("key"))
         val r = e.filter(col("vec_id") % 2 === 1)
           .select(col("vec_id").as("id"), col("label").cast("string").as("key"))
-        Blocker.blockJoin(l, r)
-          .df.select(col(Blocks.KeyCol),
-            array_join(col(Blocks.LeftCol), ",").as("left_ids"),
-            array_join(col(Blocks.RightCol), ",").as("right_ids"))
-          .orderBy(Blocks.KeyCol)
+        blockRows(Blocker.blockJoin(l, r))
       },
       Some("""SELECT label::varchar AS block_key,
              |  array_to_string(list_sort(list(DISTINCT vec_id::varchar) FILTER (vec_id % 2 = 0)), ',') AS left_ids,
@@ -1153,8 +1052,7 @@ object SimilarityQueries {
              |   AND len(list(DISTINCT vec_id) FILTER (vec_id % 2 = 1)) > 0
              |ORDER BY block_key""".stripMargin),
       api = "EmbeddingBlocker",
-      desc = "Cluster-ID blocking from embedding space (M11): deterministic coarse clustering, one block per cluster.",
-      auditAllow = Some("centroid table broadcast (k rows)")),
+      desc = "Cluster-ID blocking from embedding space (M11): deterministic coarse clustering, one block per cluster."),
 
     // ---- M11 density variant: DBSCAN* cluster labels -----------------------
     // The HDBSCAN-semantics path (Density.dbscanStar — core distances,
@@ -1181,20 +1079,10 @@ object SimilarityQueries {
             coalesce(col("cluster"), lit("noise")).as("cluster"))
           .orderBy("vec_id")
       },
-      Some("""WITH RECURSIVE
+      Some(s"""WITH RECURSIVE
              |e AS (SELECT cast(vec_id AS varchar) AS id, vec_id % 2 AS par, embedding
              |      FROM embeddings WHERE vec_id < 200),
-             |expl AS (SELECT id, unnest(embedding)::double AS v,
-             |                generate_subscripts(embedding, 1) AS i FROM e),
-             |d AS (SELECT a.id AS ia, b.id AS ib,
-             |        floor(sqrt(sum((ea.v - eb.v) * (ea.v - eb.v))) * 1e6 + 0.5) / 1e6 AS d
-             |      FROM e a JOIN e b ON a.id <> b.id
-             |      JOIN expl ea ON ea.id = a.id
-             |      JOIN expl eb ON eb.id = b.id AND eb.i = ea.i
-             |      GROUP BY 1, 2),
-             |core AS (SELECT ia AS id, d AS c FROM (
-             |    SELECT ia, d, row_number() OVER (PARTITION BY ia ORDER BY d ASC, ib ASC) AS r
-             |    FROM d) WHERE r = 3 AND d <= 1.17),
+             |${fixtureCoreSql("")} AND d <= 1.17),
              |edges AS (
              |  SELECT d.ia AS ea, d.ib AS eb
              |  FROM d JOIN core ca ON ca.id = d.ia JOIN core cb ON cb.id = d.ib
@@ -1209,8 +1097,7 @@ object SimilarityQueries {
              |FROM e LEFT JOIN labels USING (id)
              |ORDER BY vec_id""".stripMargin),
       api = "Density.dbscanStar",
-      desc = "DBSCAN* density clustering (HDBSCAN's fixed-eps slice): core distances, mutual-reachability edges, components of core points; noise genuinely unassigned. Oracle replays the full algorithm incl. a recursive-CTE transitive closure.",
-      auditAllow = Some("documented exact all-pairs baseline over a dimension-sized value set (Density.dbscanStar lshPlanes=0; lshPlanes>0 is the bucketed scale path)")),
+      desc = "DBSCAN* density clustering (HDBSCAN's fixed-eps slice): core distances, mutual-reachability edges, components of core points; noise genuinely unassigned. Oracle replays the full algorithm incl. a recursive-CTE transitive closure."),
 
     // ---- M11 hierarchy variant: HDBSCAN flat cut over an eps ladder --------
     // The excess-of-mass extraction (Density.hdbscanFlatCut) on the same
@@ -1247,8 +1134,7 @@ object SimilarityQueries {
            |ORDER BY vec_id""".stripMargin
       },
       api = "Density.hdbscanFlatCut",
-      desc = "HDBSCAN flat cut over an eps ladder: per-level DBSCAN* components, condensed-tree stability, excess-of-mass selection — per-branch eps, the hierarchy extraction the fixed-eps slice lacks. Oracle replays the whole algorithm incl. the eom DP unrolled per birth level.",
-      auditAllow = Some("documented exact all-pairs baseline over a dimension-sized value set (Density.hdbscanFlatCut lshPlanes=0; lshPlanes>0 is the bucketed scale path)")),
+      desc = "HDBSCAN flat cut over an eps ladder: per-level DBSCAN* components, condensed-tree stability, excess-of-mass selection — per-branch eps, the hierarchy extraction the fixed-eps slice lacks. Oracle replays the whole algorithm incl. the eom DP unrolled per birth level."),
 
     // ---- M11 auto ladder: the data-derived eps ladder itself --------------
     // Density.autoEpsLadder on the 200-point fixture: per-point minimum
@@ -1270,19 +1156,9 @@ object SimilarityQueries {
           .zipWithIndex.map { case (eps, i) => ((i + 1).toLong, eps) }
           .toDF("level", "eps").orderBy("level")
       },
-      Some("""WITH e AS (SELECT cast(vec_id AS varchar) AS id, embedding
+      Some(s"""WITH e AS (SELECT cast(vec_id AS varchar) AS id, embedding
              |           FROM embeddings WHERE vec_id < 200),
-             |expl AS (SELECT id, unnest(embedding)::double AS v,
-             |                generate_subscripts(embedding, 1) AS i FROM e),
-             |d AS MATERIALIZED (SELECT a.id AS ia, b.id AS ib,
-             |        floor(sqrt(sum((ea.v - eb.v) * (ea.v - eb.v))) * 1e6 + 0.5) / 1e6 AS d
-             |      FROM e a JOIN e b ON a.id <> b.id
-             |      JOIN expl ea ON ea.id = a.id
-             |      JOIN expl eb ON eb.id = b.id AND eb.i = ea.i
-             |      GROUP BY 1, 2),
-             |core AS (SELECT ia AS id, d AS c FROM (
-             |    SELECT ia, d, row_number() OVER (PARTITION BY ia ORDER BY d ASC, ib ASC) AS r
-             |    FROM d) WHERE r = 3),
+             |${fixtureCoreSql(" MATERIALIZED")}),
              |rm AS (SELECT d.ia AS id, min(greatest(ca.c, cb.c, d.d)) AS r
              |       FROM d JOIN core ca ON ca.id = d.ia
              |              JOIN core cb ON cb.id = d.ib
@@ -1342,8 +1218,7 @@ object SimilarityQueries {
            |ORDER BY id""".stripMargin
       },
       api = "Density.hdbscanExact",
-      desc = "EXACT HDBSCAN — the continuous mutual-reachability dendrogram with no eps ladder: distributed Borůvka MST + a value-set-sized driver condensed tree (continuous λ stability, eom). Oracle replays the complete-ladder flat cut — a different algorithm — on a known-radius fixture.",
-      auditAllow = Some("documented exact all-pairs baseline over a 27-point known-radius fixture (Density.hdbscanExact lshPlanes=0; lshPlanes>0 is the bucketed scale path)")),
+      desc = "EXACT HDBSCAN — the continuous mutual-reachability dendrogram with no eps ladder: distributed Borůvka MST + a value-set-sized driver condensed tree (continuous λ stability, eom). Oracle replays the complete-ladder flat cut — a different algorithm — on a known-radius fixture."),
 
     // ---- M11 auto ladder COMPOSED: derivation → flat cut end-to-end --------
     // The `--eps-ladder auto` path as one operator
@@ -1402,8 +1277,7 @@ object SimilarityQueries {
            |ORDER BY id""".stripMargin
       },
       api = "Density.hdbscanFlatCutAuto",
-      desc = "The COMPOSED --eps-ladder auto path: derive the ladder from the data's first-connection radii, then run the eom flat cut. Oracle re-derives the ladder in SQL on a closed-form-radius fixture, gates on the constants, and replays the full cut.",
-      auditAllow = Some("documented exact all-pairs baseline over the same 27-point known-radius fixture (Density.hdbscanFlatCutAuto lshPlanes=0; lshPlanes>0 is the bucketed scale path)")),
+      desc = "The COMPOSED --eps-ladder auto path: derive the ladder from the data's first-connection radii, then run the eom flat cut. Oracle re-derives the ladder in SQL on a closed-form-radius fixture, gates on the constants, and replays the full cut."),
 
     // ---- M12: token-clustering blockers -----------------------------------
     // cluster TOKENS (not attribute values), pseudo-token replacement, then
@@ -1412,46 +1286,28 @@ object SimilarityQueries {
     // key mapping, downstream blocking — is oracle-checked; the KMeans
     // assigner path is spec-covered (EncoderSpec).
     "m12_token_cluster_blocker" -> QueryDef(
-      (s, dir) => {
-        val b = TokenClusteringTokenBlocker(
+      (s, dir) => blockRows(TokenClusteringTokenBlocker(
           HashBucketClusterAssigner(16), minClusterSize = 3,
           noise = NoiseHandling.Token)
-          .assign(docSide(s, dir, 0), docSide(s, dir, 1))
-        b.df.select(col(Blocks.KeyCol),
-          array_join(col(Blocks.LeftCol), ",").as("left_ids"),
-          array_join(col(Blocks.RightCol), ",").as("right_ids"))
-          .orderBy(Blocks.KeyCol)
-      },
+        .assign(docSide(s, dir, 0), docSide(s, dir, 1))),
       Some {
         val lab = TokenClustering.labelsSql(
           s"SELECT key AS v FROM lt UNION SELECT key FROM rt",
           HashBucketClusterAssigner(16), 3, NoiseHandling.Token)
-        s"""WITH lt AS (SELECT DISTINCT * FROM (${docTokensSql(0)})),
-           |rt AS (SELECT DISTINCT * FROM (${docTokensSql(1)})),
+        s"""$docTokenSidesCtes,
            |lab AS ($lab),
            |lk AS (SELECT DISTINCT id, lab.key FROM lt JOIN lab ON lt.key = lab.v),
            |rk AS (SELECT DISTINCT id, lab.key FROM rt JOIN lab ON rt.key = lab.v),
-           |lb AS (SELECT key, array_to_string(list_sort(list(DISTINCT id)), ',') AS left_ids
-           |       FROM lk GROUP BY key),
-           |rb AS (SELECT key, array_to_string(list_sort(list(DISTINCT id)), ',') AS right_ids
-           |       FROM rk GROUP BY key)
-           |SELECT key AS block_key, left_ids, right_ids
-           |FROM lb JOIN rb USING (key) ORDER BY block_key""".stripMargin
+           |${blockJoinSql("lk", "rk")}""".stripMargin
       },
       api = "TokenClusteringTokenBlocker.assign",
       desc = "Attribute/token clustering blocker (M12): tokens clustered by co-occurrence, blocks keyed by cluster id."),
 
     "m12_token_cluster_minhash" -> QueryDef(
-      (s, dir) => {
-        val b = TokenClusteringMinHashLSHBlocker(
+      (s, dir) => blockRows(TokenClusteringMinHashLSHBlocker(
           HashBucketClusterAssigner(16), minClusterSize = 3,
           noise = NoiseHandling.Remove, numPerm = 16, bands = 4)
-          .assign(docSide(s, dir, 0), docSide(s, dir, 1))
-        b.df.select(col(Blocks.KeyCol),
-          array_join(col(Blocks.LeftCol), ",").as("left_ids"),
-          array_join(col(Blocks.RightCol), ",").as("right_ids"))
-          .orderBy(Blocks.KeyCol)
-      },
+        .assign(docSide(s, dir, 0), docSide(s, dir, 1))),
       Some {
         val lab = TokenClustering.labelsSql(
           s"SELECT key AS v FROM lt UNION SELECT key FROM rt",
@@ -1460,15 +1316,9 @@ object SimilarityQueries {
           val keyed = s"SELECT DISTINCT id, lab.key FROM $tok JOIN lab ON $tok.key = lab.v"
           MinHash.bandBucketsSql(MinHash.signatureSql(keyed, 16), 4, 4)
         }
-        s"""WITH lt AS (SELECT DISTINCT * FROM (${docTokensSql(0)})),
-           |rt AS (SELECT DISTINCT * FROM (${docTokensSql(1)})),
+        s"""$docTokenSidesCtes,
            |lab AS ($lab),
-           |lb AS (SELECT key, array_to_string(list_sort(list(DISTINCT id)), ',') AS left_ids
-           |       FROM (${side("lt")}) GROUP BY key),
-           |rb AS (SELECT key, array_to_string(list_sort(list(DISTINCT id)), ',') AS right_ids
-           |       FROM (${side("rt")}) GROUP BY key)
-           |SELECT key AS block_key, left_ids, right_ids
-           |FROM lb JOIN rb USING (key) ORDER BY block_key""".stripMargin
+           |${blockJoinSql(s"(${side("lt")})", s"(${side("rt")})")}""".stripMargin
       },
       api = "TokenClusteringMinHashLSHBlocker.assign",
       desc = "M12 variant with MinHash-LSH inside token clusters — cluster scoping bounds the banded join."),
@@ -1533,11 +1383,7 @@ object SimilarityQueries {
         val rf = EntityFrame(gen.filter(col("i") % 2 === 1)
           .select(concat(lit("r"), col("token")).as("eid"),
             col("token").as("val")), "dens_right", "eid")
-        blocker.assign(lf, rf)
-          .df.select(col(Blocks.KeyCol),
-            array_join(col(Blocks.LeftCol), ",").as("left_ids"),
-            array_join(col(Blocks.RightCol), ",").as("right_ids"))
-          .orderBy(Blocks.KeyCol)
+        blockRows(blocker.assign(lf, rf))
       },
       Some {
         val points =
@@ -1568,16 +1414,10 @@ object SimilarityQueries {
            |       FROM sides s JOIN lab ON lab.v = s.v WHERE s.par = 0),
            |rk AS (SELECT DISTINCT 'r'||s.v AS id, lab.key
            |       FROM sides s JOIN lab ON lab.v = s.v WHERE s.par = 1),
-           |lb AS (SELECT key, array_to_string(list_sort(list(DISTINCT id)), ',') AS left_ids
-           |       FROM lk GROUP BY key),
-           |rb AS (SELECT key, array_to_string(list_sort(list(DISTINCT id)), ',') AS right_ids
-           |       FROM rk GROUP BY key)
-           |SELECT key AS block_key, left_ids, right_ids
-           |FROM lb JOIN rb USING (key) ORDER BY block_key""".stripMargin
+           |${blockJoinSql("lk", "rk")}""".stripMargin
       },
       api = "AttributeClusteringBlocker + DensityClusterAssigner",
-      desc = "The composed density blocking pipeline on a synthesized 200-token vocabulary: table-vector encode → HDBSCAN flat cut → size-gated noise keys → block join, full SQL replay.",
-      auditAllow = Some("documented exact all-pairs baseline over a 200-token synthetic vocabulary (Density.hdbscanFlatCut lshPlanes=0 inside DensityClusterAssigner; lshPlanes>0 is the bucketed scale path)")),
+      desc = "The composed density blocking pipeline on a synthesized 200-token vocabulary: table-vector encode → HDBSCAN flat cut → size-gated noise keys → block join, full SQL replay."),
 
     // ---- §2.10: incremental token blocker, batch-parity oracle ------------
     // flatMapGroupsWithState on a BATCH dataset = one mega-batch: the
@@ -1795,13 +1635,7 @@ object SimilarityQueries {
           .orderBy("doc_id")
       },
       Some {
-        val toks = duckTokens("doc_id", "text", "documents", 3)
-        val dimExprs = (0 until 4).map(d =>
-          s"floor((sum(w * ${HashTokenEncoder.dimValueSql("x", d)}) / sum(w)) * 1e6 + 0.5) / 1e6 AS d$d")
-          .mkString(", ")
-        s"""WITH toks AS ($toks),
-           |counts AS (SELECT key, count(*) AS freq FROM toks GROUP BY key),
-           |total AS (SELECT count(*)::double AS t FROM toks),
+        s"""$sifCountsCtes,
            |vocab AS (
            |  SELECT key, x FROM (
            |    SELECT key, ${HashTokenEncoder.tokenHashSql("key")} AS x FROM counts)
@@ -1810,7 +1644,7 @@ object SimilarityQueries {
            |  SELECT toks.id, vocab.x,
            |         0.001 / (0.001 + counts.freq / total.t) AS w
            |  FROM toks JOIN counts USING (key) JOIN vocab USING (key), total)
-           |SELECT id AS doc_id, $dimExprs
+           |SELECT id AS doc_id, ${sifDimsSql(4)}
            |FROM weighted GROUP BY id ORDER BY doc_id""".stripMargin
       },
       api = "TableTokenEncoder",
@@ -1868,36 +1702,14 @@ object SimilarityQueries {
           .orderBy("doc_id")
       },
       Some {
-        val toks = duckTokens("doc_id", "text", "documents", 3)
-        def h(d: Int) = HashTokenEncoder.dimValueSql("x", d)
-        s"""WITH toks AS ($toks),
-           |counts AS (SELECT key, count(*) AS freq FROM toks GROUP BY key),
-           |total AS (SELECT count(*)::double AS t FROM toks),
-           |weighted AS (
-           |  SELECT toks.id, ${HashTokenEncoder.tokenHashSql("toks.key")} AS x,
-           |         0.001 / (0.001 + counts.freq / total.t) AS w
-           |  FROM toks JOIN counts USING (key), total),
-           |emb AS (
-           |  SELECT id AS doc_id,
-           |         sum(w * ${h(0)}) / sum(w) AS d0,
-           |         sum(w * ${h(1)}) / sum(w) AS d1
-           |  FROM weighted GROUP BY id),
-           |g AS (SELECT sum(d0*d0) AS gxx, sum(d0*d1) AS gxy, sum(d1*d1) AS gyy FROM emb),
-           |pc AS (SELECT
-           |  CASE WHEN gxy = 0 THEN (CASE WHEN gxx >= gyy THEN 1.0 ELSE 0.0 END)
-           |       ELSE gxy END AS vx,
-           |  CASE WHEN gxy = 0 THEN (CASE WHEN gxx >= gyy THEN 0.0 ELSE 1.0 END)
-           |       ELSE ((gxx+gyy) + sqrt((gxx-gyy)*(gxx-gyy) + 4*gxy*gxy))/2 - gxx END AS vy
-           |  FROM g),
-           |pcn AS (SELECT vx/sqrt(vx*vx+vy*vy) AS px, vy/sqrt(vx*vx+vy*vy) AS py FROM pc)
+        s"""$sifPcCtes
            |SELECT doc_id,
            |  floor((d0 - (d0*px + d1*py)*px) * 1e6 + 0.5) / 1e6 AS d0,
            |  floor((d1 - (d0*px + d1*py)*py) * 1e6 + 0.5) / 1e6 AS d1
            |FROM emb, pcn ORDER BY doc_id""".stripMargin
       },
       api = "SifEncoder",
-      desc = "SIF + first-principal-component removal (M5 step): PC via distributed Gram matrix + driver-side eigh on d×d.",
-      auditAllow = Some("one-row first-PC vector broadcast into the projection")),
+      desc = "SIF + first-principal-component removal (M5 step): PC via distributed Gram matrix + driver-side eigh on d×d."),
 
     // ---- M5: PCA dim-reduce (the documented UMAP substitution) ------------
     // 2D SIF embeddings → 1D coordinate on the top singular vector, sign
@@ -1915,28 +1727,7 @@ object SimilarityQueries {
           .orderBy("doc_id")
       },
       Some {
-        val toks = duckTokens("doc_id", "text", "documents", 3)
-        def h(d: Int) = HashTokenEncoder.dimValueSql("x", d)
-        s"""WITH toks AS ($toks),
-           |counts AS (SELECT key, count(*) AS freq FROM toks GROUP BY key),
-           |total AS (SELECT count(*)::double AS t FROM toks),
-           |weighted AS (
-           |  SELECT toks.id, ${HashTokenEncoder.tokenHashSql("toks.key")} AS x,
-           |         0.001 / (0.001 + counts.freq / total.t) AS w
-           |  FROM toks JOIN counts USING (key), total),
-           |emb AS (
-           |  SELECT id AS doc_id,
-           |         sum(w * ${h(0)}) / sum(w) AS d0,
-           |         sum(w * ${h(1)}) / sum(w) AS d1
-           |  FROM weighted GROUP BY id),
-           |g AS (SELECT sum(d0*d0) AS gxx, sum(d0*d1) AS gxy, sum(d1*d1) AS gyy FROM emb),
-           |pc AS (SELECT
-           |  CASE WHEN gxy = 0 THEN (CASE WHEN gxx >= gyy THEN 1.0 ELSE 0.0 END)
-           |       ELSE gxy END AS vx,
-           |  CASE WHEN gxy = 0 THEN (CASE WHEN gxx >= gyy THEN 0.0 ELSE 1.0 END)
-           |       ELSE ((gxx+gyy) + sqrt((gxx-gyy)*(gxx-gyy) + 4*gxy*gxy))/2 - gxx END AS vy
-           |  FROM g),
-           |pcn AS (SELECT vx/sqrt(vx*vx+vy*vy) AS px, vy/sqrt(vx*vx+vy*vy) AS py FROM pc),
+        s"""$sifPcCtes,
            |canon AS (SELECT
            |  CASE WHEN (CASE WHEN abs(px) >= abs(py) THEN px ELSE py END) < 0
            |       THEN -px ELSE px END AS px,
@@ -1947,8 +1738,7 @@ object SimilarityQueries {
            |FROM emb, canon ORDER BY doc_id""".stripMargin
       },
       api = "PcaReducer",
-      desc = "PCA dimensionality reduction of embeddings — Gram-matrix eigendecomposition, d×d never data-sized.",
-      auditAllow = Some("one-row PCA basis broadcast into the projection")),
+      desc = "PCA dimensionality reduction of embeddings — Gram-matrix eigendecomposition, d×d never data-sized."),
 
     // ---- IVF recall report (honest ANN approximation gate) ---------------
     // same search task for both paths (even queries vs odd candidates);
@@ -1959,15 +1749,10 @@ object SimilarityQueries {
     "ann_ivf_recall" -> QueryDef(
       (s, dir) => {
         val e = embs(s, dir)
-        val l = e.filter(col("vec_id") % 2 === 0)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val r = e.filter(col("vec_id") % 2 === 1)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
+        val (l, r) = evenOdd(e)
         val brute = Similarity.topKCosine(l, r, 3)
           .select(col("left_id"), col("right_id"))
-        val bucketed = e.filter(col("vec_id") % 2 === 1)
-          .select(col("label").cast("string").as("bucket"),
-            col("vec_id").as("id"), col("embedding").as("vec"))
+        val (_, bucketed) = ivfSides(e)
         val ivf = Similarity.ivfTopK(l, bucketed, 3)
           .select(col("left_id"), col("right_id"), lit(1).as("_hit"))
         val perQuery = brute.join(ivf, Seq("left_id", "right_id"), "left")
@@ -1976,41 +1761,16 @@ object SimilarityQueries {
         perQuery.agg(count(lit(1)).as("n_queries"),
           Num.stableRound(avg(col("rec")), 6).as("recall_at3"))
       },
-      Some("""WITH expl AS (
-             |  SELECT vec_id, label, i.i AS i, embedding[i.i]::double AS v
-             |  FROM embeddings, range(1, 65) i(i)),
-             |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM expl GROUP BY vec_id),
-             |bdots AS (
-             |  SELECT a.vec_id AS left_id, b.vec_id AS right_id, sum(a.v * b.v) AS dot
-             |  FROM expl a JOIN expl b ON a.i = b.i
-             |  WHERE a.vec_id % 2 = 0 AND b.vec_id % 2 = 1 GROUP BY 1, 2),
-             |brute AS (SELECT left_id, right_id FROM (
-             |  SELECT left_id, right_id, row_number() OVER (PARTITION BY left_id
-             |      ORDER BY dot / (na.nrm * nb.nrm) DESC, right_id ASC) AS rk
-             |  FROM bdots JOIN norms na ON na.vec_id = left_id
-             |             JOIN norms nb ON nb.vec_id = right_id) WHERE rk <= 3),
-             |oddexpl AS (SELECT * FROM expl WHERE vec_id % 2 = 1),
-             |cents AS (SELECT label, i, avg(v) AS c FROM oddexpl GROUP BY label, i),
-             |cnorms AS (SELECT label, sqrt(sum(c*c)) AS nrm FROM cents GROUP BY label),
-             |qdots AS (
-             |  SELECT e.vec_id, c.label, sum(e.v * c.c) AS dot
-             |  FROM expl e JOIN cents c ON e.i = c.i
-             |  WHERE e.vec_id % 2 = 0 GROUP BY 1, 2),
+      Some(s"""WITH ${evenOddDotsCtes("vec_id, label", "bdots")},
+             |$ivfRecallProbeCtes
              |assign AS (SELECT vec_id, label FROM (
-             |  SELECT q.vec_id, q.label, row_number() OVER (PARTITION BY q.vec_id
-             |      ORDER BY q.dot / (n.nrm * cn.nrm) DESC, q.label::varchar ASC) AS rn
-             |  FROM qdots q JOIN norms n ON n.vec_id = q.vec_id
-             |               JOIN cnorms cn ON cn.label = q.label) WHERE rn = 1),
+             |${cellRankSql("qdots", "norms", "q")} WHERE rn = 1),
              |idots AS (
              |  SELECT s.vec_id AS left_id, b.vec_id AS right_id, sum(a.v * b.v) AS dot
              |  FROM assign s JOIN expl a ON a.vec_id = s.vec_id
              |                JOIN oddexpl b ON b.label = s.label AND b.i = a.i
              |  GROUP BY 1, 2),
-             |ivf AS (SELECT left_id, right_id FROM (
-             |  SELECT left_id, right_id, row_number() OVER (PARTITION BY left_id
-             |      ORDER BY dot / (na.nrm * nb.nrm) DESC, right_id ASC) AS rk
-             |  FROM idots JOIN norms na ON na.vec_id = left_id
-             |             JOIN norms nb ON nb.vec_id = right_id) WHERE rk <= 3),
+             |${top3IdsCte("ivf", "idots", "")},
              |pq AS (
              |  SELECT b.left_id,
              |         sum(CASE WHEN i.right_id IS NOT NULL THEN 1 ELSE 0 END) / 3.0 AS rec
@@ -2056,35 +1816,18 @@ object SimilarityQueries {
             .orderBy("probes"),
           e)
       },
-      Some("""WITH expl AS (
+      Some(s"""WITH expl AS (
              |  SELECT vec_id, vec_id % 8 AS label, i.i - 1 AS i,
              |         ((('0x'||substr(md5((vec_id % 8) || ':' || (i.i - 1)), 1, 15))::bigint
              |             % 2001 - 1000) / 1000.0
              |          + (('0x'||substr(md5(vec_id || 'n' || (i.i - 1)), 1, 15))::bigint
              |             % 2001 - 1000) / 2000.0) AS v
              |  FROM embeddings, range(1, 65) i(i)),
-             |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM expl GROUP BY vec_id),
-             |bdots AS (
-             |  SELECT a.vec_id AS left_id, b.vec_id AS right_id, sum(a.v * b.v) AS dot
-             |  FROM expl a JOIN expl b ON a.i = b.i
-             |  WHERE a.vec_id % 2 = 0 AND b.vec_id % 2 = 1 GROUP BY 1, 2),
-             |brute AS (SELECT left_id, right_id FROM (
-             |  SELECT left_id, right_id, row_number() OVER (PARTITION BY left_id
-             |      ORDER BY dot / (na.nrm * nb.nrm) DESC, right_id ASC) AS rk
-             |  FROM bdots JOIN norms na ON na.vec_id = left_id
-             |             JOIN norms nb ON nb.vec_id = right_id) WHERE rk <= 3),
-             |oddexpl AS (SELECT * FROM expl WHERE vec_id % 2 = 1),
-             |cents AS (SELECT label, i, avg(v) AS c FROM oddexpl GROUP BY label, i),
-             |cnorms AS (SELECT label, sqrt(sum(c*c)) AS nrm FROM cents GROUP BY label),
-             |qdots AS (
-             |  SELECT e.vec_id, c.label, sum(e.v * c.c) AS dot
-             |  FROM expl e JOIN cents c ON e.i = c.i
-             |  WHERE e.vec_id % 2 = 0 GROUP BY 1, 2),
+             |${normsCte("norms", "expl")},
+             |${evenOddDotsCte("bdots")},
+             |$ivfRecallProbeCtes
              |assign AS (
-             |  SELECT q.vec_id, q.label, row_number() OVER (PARTITION BY q.vec_id
-             |      ORDER BY q.dot / (n.nrm * cn.nrm) DESC, q.label::varchar ASC) AS rn
-             |  FROM qdots q JOIN norms n ON n.vec_id = q.vec_id
-             |               JOIN cnorms cn ON cn.label = q.label),
+             |${cellRankSql("qdots", "norms", "q")},
              |grid AS (SELECT * FROM (VALUES (1), (2), (4), (8)) g(p)),
              |cand AS (SELECT g.p, a.vec_id, a.label
              |         FROM assign a JOIN grid g ON a.rn <= g.p),
@@ -2094,11 +1837,7 @@ object SimilarityQueries {
              |  FROM cand c JOIN expl a ON a.vec_id = c.vec_id
              |              JOIN oddexpl b ON b.label = c.label AND b.i = a.i
              |  GROUP BY 1, 2, 3),
-             |ivf AS (SELECT p, left_id, right_id FROM (
-             |  SELECT p, left_id, right_id, row_number() OVER (PARTITION BY p, left_id
-             |      ORDER BY dot / (na.nrm * nb.nrm) DESC, right_id ASC) AS rk
-             |  FROM idots JOIN norms na ON na.vec_id = left_id
-             |             JOIN norms nb ON nb.vec_id = right_id) WHERE rk <= 3),
+             |${top3IdsCte("ivf", "idots", "p, ")},
              |pq AS (
              |  SELECT g.p, b.left_id,
              |         sum(CASE WHEN i.right_id IS NOT NULL THEN 1 ELSE 0 END) / 3.0 AS rec
@@ -2110,8 +1849,7 @@ object SimilarityQueries {
              |       floor((avg(rec)) * 1e6 + 0.5) / 1e6 AS recall_at3
              |FROM pq GROUP BY 1 ORDER BY probes""".stripMargin),
       api = "Similarity.ivfRecallCurve",
-      desc = "Recall-vs-nprobe curve from ONE clustering pass serving the whole probe sweep.",
-      auditAllow = Some("brute baseline (broadcast query side) + 8-row centroid table broadcast, shared across the probes sweep")),
+      desc = "Recall-vs-nprobe curve from ONE clustering pass serving the whole probe sweep."),
 
     // ---- LSH (b, r) tuning S-curves --------------------------------------
     "mh_lsh_tuning" -> QueryDef(

@@ -931,7 +931,8 @@ object StreamingOps {
     * A single-batch run over a static frame therefore equals the batch
     * rule `row_number() OVER (PARTITION BY key, window ORDER BY ts, id)
     * <= maxPerWindow` — the oracle; cross-batch state persistence is
-    * spec-tested with MemoryStream.
+    * spec-tested with MemoryStream. A null-`ts` record has no window and
+    * is dropped, as in [[rateLimitWithTtl]].
     */
   def rateLimit(
       records: Dataset[RateRecord],
@@ -939,7 +940,7 @@ object StreamingOps {
       windowSeconds: Long = 3600L)(
       implicit spark: SparkSession): Dataset[RateAdmit] = {
     import spark.implicits._
-    records.groupByKey(_.key)
+    records.filter(col("ts").isNotNull).groupByKey(_.key)
       .flatMapGroupsWithState[RateState, RateAdmit](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, batch: Iterator[RateRecord], state: GroupState[RateState]) =>

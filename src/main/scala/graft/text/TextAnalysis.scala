@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.TextOps
+import graft.core.CacheScope
 import graft.functions.{Num, Text}
 
 /** Text-corpus analysis operators for training-data pipelines: language
@@ -399,7 +400,7 @@ object TextAnalysis {
     * Output: (round 1.., pair "x·y", cnt) — the learned merge table in
     * order. */
   def bpeMerges(docs: DataFrame, textCol: String, rounds: Int): DataFrame =
-    bpeLearn(docs, textCol, rounds)._1
+    bpeLearn(docs, textCol, rounds)((merges, _) => merges)
 
   /** BPE application — segment the corpus with the merges [[bpeMerges]]
     * learns and report the per-document subword count next to the word
@@ -412,22 +413,23 @@ object TextAnalysis {
     *
     * Output: (id, n_words, n_subwords). */
   def bpeEncode(docs: DataFrame, idCol: String, textCol: String,
-                rounds: Int): DataFrame = {
-    val (_, vocab) = bpeLearn(docs, textCol, rounds)
-    val sub = vocab.select(col("w"),
-      size(filter(split(col("sym"), "·"), t => t =!= "")).as("n_sub"))
-    docs.select(col(idCol).cast("string").as("id"),
-        explode(Text.tokenize(col(textCol), minLength = 1, stopwords = Nil)).as("w"))
-      .join(sub, Seq("w"))
-      .groupBy("id")
-      .agg(count(lit(1)).as("n_words"), sum(col("n_sub")).as("n_subwords"))
-  }
+                rounds: Int): DataFrame =
+    bpeLearn(docs, textCol, rounds) { (_, vocab) =>
+      val sub = vocab.select(col("w"),
+        size(filter(split(col("sym"), "·"), t => t =!= "")).as("n_sub"))
+      docs.select(col(idCol).cast("string").as("id"),
+          explode(Text.tokenize(col(textCol), minLength = 1, stopwords = Nil)).as("w"))
+        .join(sub, Seq("w"))
+        .groupBy("id")
+        .agg(count(lit(1)).as("n_words"), sum(col("n_sub")).as("n_subwords"))
+    }
 
-  /** The shared BPE learner behind [[bpeMerges]] / [[bpeEncode]]:
-    * returns (merge table, final vocabulary with each word's segmented
-    * symbol string). */
-  private def bpeLearn(docs: DataFrame, textCol: String,
-      rounds: Int): (DataFrame, DataFrame) = {
+  /** The shared BPE learner behind [[bpeMerges]] / [[bpeEncode]]: hands
+    * (merge table, final vocabulary with each word's segmented symbol
+    * string) to `use` and seals its result, releasing every round's
+    * vocabulary and top-pair checkpoint. */
+  private def bpeLearn(docs: DataFrame, textCol: String, rounds: Int)(
+      use: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     require(rounds >= 1, "need at least one merge round")
     val words = docs.select(explode(Text.tokenize(
         col(textCol), minLength = 1, stopwords = Nil)).as("w"))
@@ -446,6 +448,7 @@ object TextAnalysis {
           i => substring(col("w"), i, lit(1)))), lit("·")).as("sym"),
       col("cnt")).localCheckpoint(eager = false)
     val merges = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val cached = scala.collection.mutable.ArrayBuffer(vocab)
     for (round <- 1 to rounds) {
       val toks = filter(split(col("sym"), "·"), t => t =!= "")
       // guard single-symbol words: sequence(1, 0) is DESCENDING in Spark
@@ -461,6 +464,7 @@ object TextAnalysis {
       val top = pairs.orderBy(col("pcnt").desc, col("pair").asc).limit(1)
         .select(col("pair").as("_p"), col("pcnt").as("_c"))
         .localCheckpoint() // one row; evaluated eagerly, reused twice
+      cached += top
       merges += top.select(lit(round).as("round"), col("_p").as("pair"),
         col("_c").as("cnt"))
       // a round with NO pairs (all-singleton vocabulary) must be a no-op,
@@ -481,8 +485,9 @@ object TextAnalysis {
               lit("·"))).as("sym"),
           col("cnt"))
         .localCheckpoint(eager = false)
+      cached += vocab
     }
-    (merges.reduce(_.unionByName(_)), vocab)
+    CacheScope.seal(use(merges.reduce(_.unionByName(_)), vocab), cached.toSeq: _*)
   }
 
   /** Materialize [[packSequences]]' bins as training samples: one row

@@ -7,6 +7,7 @@ import graft.dedup.Dedup
 import graft.encoders.{HashTokenEncoder, TableTokenEncoder}
 import graft.relational.PageRank
 import graft.similarity.{Density, Similarity}
+import graft.text.TextAnalysis
 
 /** One cache-lifetime rule for every operator that caches: a call may
   * leave at most ONE persisted RDD behind in the session — its returned
@@ -120,6 +121,8 @@ class CacheLifetimeSpec extends SparkSpec {
     "TableTokenEncoder (sif)" ->
       (() => TableTokenEncoder(vocab, dims = 2, sif = true).encode(text, None)),
     "Blocks.purge" -> (() => blocks.purge()),
+    "TextAnalysis.bpeMerges" -> (() => TextAnalysis.bpeMerges(text.df, "text", 3)),
+    "TextAnalysis.bpeEncode" -> (() => TextAnalysis.bpeEncode(text.df, "id", "text", 3)),
     "Sinkhorn.rescale" ->
       (() => Sinkhorn.rescale(cand.withColumnRenamed("cos", "s"), 3)),
     "EmbeddingKnnBlocker (hubness + sinkhorn)" ->

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{Blocks, EntityFrame}
@@ -63,6 +63,23 @@ trait SparkSpec extends AnyFunSuite {
     names.foreach(Configurator.setLevel(_, Level.OFF))
     try f
     finally saved.foreach { case (n, l) => Configurator.setLevel(n, l) }
+  }
+
+  /** Collects `df`'s `id` and `cols`, ordered by id, twice: under
+    * whole-stage codegen (a compile error fails instead of falling back)
+    * and under the interpreted evaluator. A hand-written expression
+    * writes its loop once per mode, so equal rows pin both copies. */
+  def both(df: DataFrame, cols: Column*): Seq[Seq[Row]] = {
+    def run(conf: (String, String)*): Seq[Row] = {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try df.select(col("id") +: cols: _*).orderBy("id").collect().toSeq
+      finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    Seq(
+      run("spark.sql.codegen.fallback" -> "false",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      run("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
   }
 
   /** Build a Blocks table from a golden map key → (left ids, right ids). */

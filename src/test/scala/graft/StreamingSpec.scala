@@ -1779,6 +1779,15 @@ class StreamingSpec extends SparkSpec {
         Seq(TimedDocRecord("A", T, t0)),
         Seq(TimedDocRecord("B", T, null), TimedDocRecord("C", T, t1))))(
         streamMinHashNearDupWithTtl(_)).distinct == Seq("A,C,1.0"))
+    // the batch rate limiter and the rate-limited join drop them too
+    import sess.implicits._
+    assert(rateLimit(Seq(RateRecord("k", "a", t0), RateRecord("k", "b", null),
+        RateRecord("j", "c", t1)).toDS(), maxPerWindow = 1)
+      .collect().map(r => s"${r.key},${r.id}").sorted.toSeq == Seq("j,c", "k,a"))
+    val clicks = Seq(("u", "c1", t0), ("u", "c2", null)).toDF("user_id", "event_id", "ts")
+    val buys = Seq(("u", "p1", t1), ("u", "p2", null)).toDF("user_id", "event_id", "ts")
+    assert(rateLimitedIntervalJoin(clicks, buys).collect()
+      .map(r => s"${r.getAs[String]("l_id")},${r.getAs[String]("r_id")}").toSeq == Seq("c1,p1"))
   }
 
   test("a TTL horizon longer than the feed: token, near-dup and dedup TTL forms equal their unbounded forms") {

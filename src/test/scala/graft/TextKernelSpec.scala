@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
 import org.apache.spark.sql.functions._
 import graft.functions.Text
@@ -77,22 +77,6 @@ class TextKernelSpec extends SparkSpec {
   private lazy val docs: DataFrame =
     hostile.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
       .repartition(3)
-
-  /** Collects `cols` under whole-stage codegen (a compile error fails
-    * instead of falling back) and under the interpreted evaluator,
-    * ordered by id. */
-  private def both(df: DataFrame, cols: Column*): Seq[Seq[Row]] = {
-    def run(conf: (String, String)*): Seq[Row] = {
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try df.select(col("id") +: cols: _*).orderBy("id").collect().toSeq
-      finally conf.foreach { case (k, _) => spark.conf.unset(k) }
-    }
-    Seq(
-      run("spark.sql.codegen.fallback" -> "false",
-        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
-      run("spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
-  }
 
   private def assertSame(kernel: Column, reference: Column): Unit = {
     val a = docs.select(kernel).schema.head.dataType
