@@ -3,7 +3,6 @@ package graft.blockers
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Blocks, CacheScope, EntityFrame}
 import graft.encoders.FrameEncoder
@@ -107,8 +106,7 @@ final case class EmbeddingKnnBlocker(
         // the rerank checkpoint (if any), the candidate cache and the
         // rescale checkpoint all feed only the sealed NN table below
         cachedFrames ++= Seq(base, cand, scores)
-        val w = Window.partitionBy("left_id").orderBy(col("s").desc, col("right_id").asc)
-        scores.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+        Similarity.topK(scores, k, col("s").desc)
       } else base
     // NN table is output-sized (one row per left entity): materialize it
     // and release whatever this call cached (CacheScope contract); with

@@ -1008,7 +1008,15 @@ object Dedup {
     val wins = tokenWindows(toks, n)
     val dup = wins.groupBy("gram").agg(count(lit(1)).as("_c"))
       .filter(col("_c") >= minCount).select("gram")
-    val covered = wins.join(dup, Seq("gram"), "left_semi")
+    keepUncovered(toks, wins.join(dup, Seq("gram"), "left_semi"), n)
+  }
+
+  /** The rebuild shared by [[spanDedup]] and [[crossDocCut]]: drop every
+    * token position of `toks` covered by a matched (id, p) n-token
+    * window and rejoin the survivors in order. Output: (id, n_tokens,
+    * n_kept, kept_text) for every document of `toks`. */
+  private def keepUncovered(toks: DataFrame, matched: DataFrame, n: Int): DataFrame = {
+    val covered = matched
       .select(col("id"), explode(sequence(col("p"), col("p") + n - 1)).as("pos"))
       .distinct()
     val positions = toks.select(col("id"), posexplode(col("t")).as(Seq("pos", "tok")))
@@ -1080,22 +1088,8 @@ object Dedup {
     * unless some other document also carries it. */
   def crossDocCut(docs: DataFrame, idCol: String, textCol: String,
                   n: Int, maxDocFreq: Long = 0L): DataFrame = {
-    val toks = orderedTokens(docs, idCol, textCol)
-    val covered = crossDocMatchedWindows(docs, idCol, textCol, n, maxDocFreq)
-      .select(col("id"), explode(sequence(col("p"), col("p") + n - 1)).as("pos"))
-      .distinct()
-    val positions = toks.select(col("id"), posexplode(col("t")).as(Seq("pos", "tok")))
-    val kept = positions.join(covered, Seq("id", "pos"), "left_anti")
-      .groupBy("id")
-      .agg(count(lit(1)).as("n_kept"),
-        concat_ws(" ",
-          sort_array(collect_list(struct(col("pos"), col("tok")))).getField("tok"))
-          .as("kept_text"))
-    toks.select(col("id"), size(col("t")).cast("long").as("n_tokens"))
-      .join(kept, Seq("id"), "left")
-      .select(col("id"), col("n_tokens"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("kept_text"), lit("")).as("kept_text"))
+    keepUncovered(orderedTokens(docs, idCol, textCol),
+      crossDocMatchedWindows(docs, idCol, textCol, n, maxDocFreq), n)
   }
 
   /** Benchmark decontamination (the n-gram overlap check of Brown et

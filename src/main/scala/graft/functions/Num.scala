@@ -40,6 +40,12 @@ object Num {
     floor(c * s + lit(0.5)) / s
   }
 
+  /** The order key of a scored top-k: with a non-negative `rankScale` the score
+    * rounded to that many decimals, so summation-order ulp noise cannot
+    * reorder ties between engines; otherwise the raw score. */
+  private[graft] def rankKey(c: Column, rankScale: Int): Column =
+    if (rankScale >= 0) stableRound(c, rankScale) else c
+
   /** DuckDB SQL mirror of [[stableRound]], kept in lockstep. */
   def stableRoundSql(expr: String, d: Int): String =
     s"floor(($expr) * 1e$d + 0.5) / 1e$d"

@@ -22,7 +22,16 @@ object Vectors {
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (l2Norm(a) * l2Norm(b))
+    cosineFromNorms(a, b, l2Norm(a), l2Norm(b))
+
+  /** cos(a, b) from precomputed norms `na` = ‖a‖₂, `nb` = ‖b‖₂ — the one
+    * zero-norm guard of the similarity layer: a zero vector (or a zero
+    * centroid) scores 0.0 instead of raising ANSI `DIVIDE_BY_ZERO`.
+    * `try_divide` is null only on a zero divisor or a null input, so a
+    * nonzero pair computes the norm product once; under a CASE WHEN
+    * Spark would compute it in the condition and again in the quotient. */
+  private[graft] def cosineFromNorms(a: Column, b: Column, na: Column, nb: Column): Column =
+    coalesce(try_divide(dot(a, b), na * nb), when(na * nb === 0, lit(0.0)))
 
   /** Squared euclidean distance. */
   def sqDist(a: Column, b: Column): Column =

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.blockers._
 import graft.core.{Blocks, EntityFrame}
@@ -399,9 +398,7 @@ object EncoderQueries {
         val (l, r) = SimilarityQueries.evenOdd(table(s, dir, "embeddings"))
         val cand = graft.similarity.Similarity.topKCosine(l, r, 3)
           .select(col("left_id"), col("right_id"), ((col("cos") + 1.0) / 2.0).as("s"))
-        val scaled = Sinkhorn.rescale(cand, 2)
-        val w = Window.partitionBy("left_id").orderBy(col("s").desc, col("right_id").asc)
-        scaled.withColumn("rank", row_number().over(w))
+        graft.similarity.Similarity.topK(Sinkhorn.rescale(cand, 2), 3, col("s").desc)
           .select(col("left_id"), col("rank"), col("right_id"),
             // round-2 on the 1e5-magnitude value: round-6 demanded 12
             // significant digits of cross-engine float reproducibility,

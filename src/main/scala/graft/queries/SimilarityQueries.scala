@@ -7,7 +7,7 @@ import graft.core.{Blocks, EntityFrame}
 import graft.encoders.HashTokenEncoder
 import graft.functions.{MinHash, Num, Text}
 import graft.similarity.{IndexStore, Similarity}
-import QueryDef.{blockRows, duckTokens, table}
+import QueryDef.{blockRows, docTokenSidesSql, duckTokens, table}
 
 /** Similarity layer (SURVEY.md §2.8): MinHash-LSH, TF-IDF filtering,
   * token overlap, vector kNN (brute/IVF/sign-LSH), cluster blocking,
@@ -31,12 +31,6 @@ object SimilarityQueries {
   private def docTokensParitySql(parity: Int) =
     duckTokens("cast(doc_id AS varchar)", "text",
       s"(SELECT * FROM documents WHERE doc_id % 10 = $parity)")
-
-  /** `lt`/`rt`: the distinct (id, key) tokens of the even/odd document
-    * sides, as the opening of a WITH chain. */
-  private val docTokenSidesCtes: String =
-    s"""WITH lt AS (SELECT DISTINCT * FROM (${docTokensSql(0)})),
-       |rt AS (SELECT DISTINCT * FROM (${docTokensSql(1)}))""".stripMargin
 
   private def embs(s: SparkSession, dir: String): DataFrame =
     table(s, dir, "embeddings")
@@ -529,10 +523,11 @@ object SimilarityQueries {
             col("rid").cast("string").as("right_id"), col("overlap"))
           .orderBy("left_id", "right_id")
       },
-      Some(s"""$docTokenSidesCtes
-              |SELECT lt.id AS left_id, rt.id AS right_id, count(*) AS overlap
-              |FROM lt JOIN rt USING (key)
-              |GROUP BY 1, 2 HAVING count(*) >= 10 ORDER BY 1, 2""".stripMargin),
+      Some(s"""$docTokenSidesSql
+              |ov AS (SELECT lt.id AS left_id, rt.id AS right_id, count(*) AS overlap
+              |  FROM lt JOIN rt USING (key)
+              |  GROUP BY 1, 2 HAVING count(*) >= 10)
+              |SELECT * FROM ov ORDER BY 1, 2""".stripMargin),
       api = "PartitioningTokenBlocker.assign",
       desc = "Sparse token-overlap product (M2/J10): candidates from the token equi-join, overlap counted per pair; size-switched broadcast vs shuffle join with hot-token cap."),
 
@@ -788,7 +783,7 @@ object SimilarityQueries {
       },
       Some(ivfPqTopkSql),
       api = "Similarity.ivfPqTopK",
-      desc = "IVF+PQ: coarse cells prune the corpus, PQ ADC ranks inside cells — the billion-scale ANN layout."),
+      desc = "IVF+PQ: coarse cells prune the corpus, PQ ADC ranks inside cells — the billion-scale ANN layout; one call of IndexStore build + search."),
 
     // ---- persisted IVF-PQ index: build -> save -> load -> search ----------
     // the serving contract: corpus-side work (centroids + PQ codes) is
@@ -810,7 +805,7 @@ object SimilarityQueries {
       },
       Some(ivfPqTopkSql),
       api = "IndexStore.save/load/search",
-      desc = "Persisted IVF-PQ index round-trip: centroids+codes built once, saved as parquet, reloaded and searched — bit-identical to the direct operator (shared oracle).",
+      desc = "Persisted IVF-PQ index round-trip: the direct operator's build + search with a parquet save/load between them — bit-identical to it (shared oracle).",
       auditAllow = Some("loaded centroid table broadcast (one row per IVF bucket, tiny by construction)")),
 
     // ---- incremental ingest: assignBuckets -> appendIvfPq -> search -------
@@ -1294,7 +1289,7 @@ object SimilarityQueries {
         val lab = TokenClustering.labelsSql(
           s"SELECT key AS v FROM lt UNION SELECT key FROM rt",
           HashBucketClusterAssigner(16), 3, NoiseHandling.Token)
-        s"""$docTokenSidesCtes,
+        s"""$docTokenSidesSql
            |lab AS ($lab),
            |lk AS (SELECT DISTINCT id, lab.key FROM lt JOIN lab ON lt.key = lab.v),
            |rk AS (SELECT DISTINCT id, lab.key FROM rt JOIN lab ON rt.key = lab.v),
@@ -1316,7 +1311,7 @@ object SimilarityQueries {
           val keyed = s"SELECT DISTINCT id, lab.key FROM $tok JOIN lab ON $tok.key = lab.v"
           MinHash.bandBucketsSql(MinHash.signatureSql(keyed, 16), 4, 4)
         }
-        s"""$docTokenSidesCtes,
+        s"""$docTokenSidesSql
            |lab AS ($lab),
            |${blockJoinSql(s"(${side("lt")})", s"(${side("rt")})")}""".stripMargin
       },

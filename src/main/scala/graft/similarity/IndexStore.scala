@@ -1,7 +1,6 @@
 package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PqOps
 
@@ -10,9 +9,9 @@ import graft.functions.{Num, Vectors}
 /** Persisted ANN index: build the IVF-PQ corpus-side artifacts ONCE,
   * save them as parquet, and serve every later query batch from the
   * saved index — the production "index once, query many" contract.
-  * [[Similarity.ivfPqTopK]] recomputes centroids and codes per call
+  * [[Similarity.ivfPqTopK]] is [[buildIvfPq]] + [[search]] in one call
   * (fine for one-shot analytics); a serving pipeline at 100 TB amortizes
-  * that corpus-sized work across query batches and ships the index, not
+  * the corpus-sized build across query batches and ships the index, not
   * the vectors:
   *
   *   - `centroids.parquet` — one row per IVF bucket (tiny, broadcast at
@@ -28,12 +27,11 @@ import graft.functions.{Num, Vectors}
   * The PQ codebook itself is the deterministic md5 family
   * ([[Similarity.pqComponent]]) — a pure function of (subspaces,
   * codebookSize, width), so it is regenerated from meta rather than
-  * stored. Search reproduces [[Similarity.ivfPqTopK]]'s expression
-  * shapes exactly (zero-norm guard, probe ranking tie-breaks, residual
-  * score reconstruction, rounded rank key), so a saved-and-loaded index
-  * returns bit-identical results to the direct operator — hash-checked
-  * end-to-end by the `ann_ivf_pq_saved` query, which shares
-  * `ann_ivf_pq_topk`'s DuckDB oracle.
+  * stored. The direct operator runs this same build and search, so a
+  * saved-and-loaded index returns bit-identical results to it (parquet
+  * keeps doubles exactly) — hash-checked end-to-end by the
+  * `ann_ivf_pq_saved` query, which shares `ann_ivf_pq_topk`'s DuckDB
+  * oracle.
   */
 object IndexStore {
 
@@ -44,22 +42,33 @@ object IndexStore {
 
   /** Corpus-side build: centroids + PQ codes from a bucketed corpus
     * (`bucketed`: (bucket, id, vec) — any bucketing: label column,
-    * KMeans cells, sign-LSH). Residual mode quantizes v − centroid
-    * (Jégou et al. §IV-A), same trade as [[Similarity.ivfPqTopK]]. */
+    * KMeans cells, sign-LSH). */
   def buildIvfPq(bucketed: DataFrame, dims: Int = 64, subspaces: Int = 8,
                  codebookSize: Int = 16, residual: Boolean = false): IvfPqIndex = {
     val members = bucketed.select(col("bucket"), col("id"), col("vec"))
     val cents = Similarity.centroids(members.select(col("bucket"), col("vec")))
+    IvfPqIndex(cents, encode(members, cents, dims, subspaces, codebookSize, residual),
+      dims, subspaces, codebookSize, residual)
+  }
+
+  /** PQ codes (bucket, right_id, codes) of (bucket, id, vec) members.
+    * Residual mode (the production IVF-PQ layout, Jégou et al. §IV-A)
+    * quantizes r = v − centroid(bucket) instead of v, and [[search]]
+    * reconstructs the score as ⟨q, c⟩ + ADC(q, r̂) — residuals are
+    * smaller than raw vectors, so the same codebook budget spends its
+    * resolution on what the coarse quantizer missed. The centroid table
+    * is per-bucket tiny → broadcast; the encode stays row-local. */
+  private def encode(members: DataFrame, cents: DataFrame, dims: Int, subspaces: Int,
+                     codebookSize: Int, residual: Boolean): DataFrame = {
     val codeInput =
       if (residual)
         members.join(broadcast(cents), Seq("bucket"))
           .select(col("id"),
             zip_with(col("vec"), col("centroid"), (a, b) => a - b).as("vec"))
       else members.select(col("id"), col("vec"))
-    val codes = Similarity.pqEncode(codeInput, dims, subspaces, codebookSize)
+    Similarity.pqEncode(codeInput, dims, subspaces, codebookSize)
       .join(members.select(col("id"), col("bucket")), Seq("id"))
       .select(col("bucket"), col("id").as("right_id"), col("codes"))
-    IvfPqIndex(cents, codes, dims, subspaces, codebookSize, residual)
   }
 
   /** Write the index under `path`. Codes are repartitioned by bucket so
@@ -105,21 +114,12 @@ object IndexStore {
     * (id, vec) rows and leaves as (bucket, id, vec) rows compatible
     * with the index geometry. Centroids broadcast (tiny); one window
     * per delta row. */
-  def assignBuckets(vectors: DataFrame, index: IvfPqIndex): DataFrame = {
-    val cents = index.centroids.withColumn("_cn", Vectors.l2Norm(col("centroid")))
-    val w = Window.partitionBy("id")
-      .orderBy(col("_ccos").desc, col("bucket").asc)
-    vectors.select(col("id"), col("vec"),
-        Vectors.l2Norm(col("vec")).as("_ln"))
-      .crossJoin(broadcast(cents))
-      .select(col("bucket"), col("id"), col("vec"),
-        when(col("_ln") * col("_cn") === 0, lit(0.0))
-          .otherwise(Vectors.dot(col("vec"), col("centroid")) / (col("_ln") * col("_cn")))
-          .as("_ccos"))
-      .withColumn("_rn", row_number().over(w))
+  def assignBuckets(vectors: DataFrame, index: IvfPqIndex): DataFrame =
+    Similarity.probeRanking(
+        vectors.select(col("id"), col("vec"), Vectors.l2Norm(col("vec")).as("_ln")),
+        "id", "vec", index.centroids)
       .filter(col("_rn") === 1)
       .select(col("bucket"), col("id"), col("vec"))
-  }
 
   /** Incremental ingest: encode a bucketed delta with the index's
     * EXISTING geometry — centroids stay fixed (no re-clustering; in
@@ -139,54 +139,33 @@ object IndexStore {
     require(unknown.isEmpty,
       s"delta references buckets with no centroid (${unknown.map(_.get(0)).mkString(", ")}…); " +
         "assign deltas with assignBuckets() or rebuild the index")
-    val codeInput =
-      if (index.residual)
-        members.join(broadcast(index.centroids), Seq("bucket"))
-          .select(col("id"),
-            zip_with(col("vec"), col("centroid"), (a, b) => a - b).as("vec"))
-      else members.select(col("id"), col("vec"))
-    val newCodes = Similarity.pqEncode(
-        codeInput, index.dims, index.subspaces, index.codebookSize)
-      .join(members.select(col("id"), col("bucket")), Seq("id"))
-      .select(col("bucket"), col("id").as("right_id"), col("codes"))
-    index.copy(codes = index.codes.unionByName(newCodes))
+    index.copy(codes = index.codes.unionByName(encode(members, index.centroids,
+      index.dims, index.subspaces, index.codebookSize, index.residual)))
   }
 
-  /** IVF-PQ top-k against a prebuilt index — [[Similarity.ivfPqTopK]]'s
-    * query side verbatim, minus all corpus-sized work: centroids arrive
+  /** IVF-PQ top-k against a prebuilt index: queries probe their
+    * `probes` nearest centroids ([[Similarity.probeRanking]]), and only
+    * the probed buckets' codes are scored by ADC — centroids arrive
     * broadcast-tiny from the index, codes join on the probed buckets.
     * Per query batch the cost is |Q|·|buckets| centroid ranking + the
     * probed buckets' ADC lookups; nothing corpus-wide is recomputed. */
   def search(queries: DataFrame, index: IvfPqIndex, k: Int,
              probes: Int = 1, rankScale: Int = -1): DataFrame = {
-    val spark = queries.sparkSession
-    val cents = index.centroids
-      .withColumn("_cn", Vectors.l2Norm(col("centroid")))
     val q = queries.select(col("id").as("left_id"), col("vec"),
       Vectors.l2Norm(col("vec")).as("_ln"))
-      .repartition(spark.sparkContext.defaultParallelism)
-    val assignW = Window.partitionBy("left_id")
-      .orderBy(col("_ccos").desc, col("bucket").asc)
-    val assigned = q.crossJoin(broadcast(cents))
-      .select(col("left_id"), col("vec"), col("bucket"),
-        when(col("_ln") * col("_cn") === 0, lit(0.0))
-          .otherwise(Vectors.dot(col("vec"), col("centroid")) / (col("_ln") * col("_cn")))
-          .as("_ccos"),
-        Vectors.dot(col("vec"), col("centroid")).as("_qc"))
-      .withColumn("_rn", row_number().over(assignW))
-      .filter(col("_rn") <= probes)
-      .select(col("left_id"), col("vec"), col("bucket"), col("_qc"))
+      .repartition(queries.sparkSession.sparkContext.defaultParallelism)
     val book = Similarity.pqCodebook(
       index.subspaces, index.codebookSize, index.dims / index.subspaces)
-    val lut = assigned.select(col("left_id"), col("bucket"), col("_qc"),
-      PqOps.pqLut(col("vec"), book).as("_lut"))
+    val lut = Similarity.probeRanking(q, "left_id", "vec", index.centroids)
+      .filter(col("_rn") <= probes)
+      .select(col("left_id"), col("bucket"), col("_qc"),
+        PqOps.pqLut(col("vec"), book).as("_lut"))
+    // probed-bucket equi-join on the compressed codes + 8-lookup ADC
+    // kernel per surviving pair — the IVF scoping is what bounds pairs
     val adcExpr = PqOps.pqAdc(col("_lut"), col("codes"), index.codebookSize)
     val scored = lut.join(index.codes, Seq("bucket"))
       .select(col("left_id"), col("right_id"),
         (if (index.residual) col("_qc") + adcExpr else adcExpr).as("adc"))
-    val rankKey =
-      if (rankScale >= 0) Num.stableRound(col("adc"), rankScale) else col("adc")
-    val win = Window.partitionBy("left_id").orderBy(rankKey.desc, col("right_id").asc)
-    scored.withColumn("rank", row_number().over(win)).filter(col("rank") <= k)
+    Similarity.topK(scored, k, Num.rankKey(col("adc"), rankScale).desc)
   }
 }

@@ -12,15 +12,23 @@ import graft.functions.Vectors
   * blockbuilder.py:51-206; generalized here into the engine's
   * similarity-search charter).
   *
-  * Three strategies, in increasing scale-fitness:
+  * Strategies, in increasing scale-fitness:
   *   - [[topKCosine]]: exact brute force — the correctness baseline.
   *     O(|L|·|R|); broadcast the right side when it fits.
   *   - [[ivfTopK]]: IVF — right side pre-bucketed (any label/cluster
   *     column), queries probe only the nearest centroid's bucket.
   *     Search cost drops by ~#buckets; recall depends on bucketing.
-  *   - [[hyperplaneBuckets]]: sign-LSH — deterministic pseudo-random
+  *   - [[lshTopK]]: sign-LSH — deterministic pseudo-random
   *     hyperplanes hash vectors into 2^p buckets; candidates share a
   *     bucket. Fully shuffle-based, no centroids needed.
+  *   - [[ivfPqTopK]]: IVF over PQ codes — [[IndexStore.buildIvfPq]] +
+  *     [[IndexStore.search]], the one IVF-PQ path.
+  *
+  * Each shared rule has one home: the zero-norm cosine guard is
+  * [[graft.functions.Vectors.cosineFromNorms]], the rounded rank key
+  * [[graft.functions.Num.rankKey]], the per-left-id top-k tail [[topK]],
+  * the centroid probe ranking [[probeRanking]] and the hubness
+  * side-scale prologue `sideScaled`.
   */
 object Similarity {
 
@@ -38,10 +46,16 @@ object Similarity {
       Vectors.l2Norm(col("vec")).as("_ln")).repartition(par)
     val r = broadcast(right.select(col("id").as("right_id"), col("vec").as("_rv"),
       Vectors.l2Norm(col("vec")).as("_rn")))
-    val scored = l.crossJoin(r)
-      .select(col("left_id"), col("right_id"),
-        (Vectors.dot(col("_lv"), col("_rv")) / (col("_ln") * col("_rn"))).as("cos"))
-    val w = Window.partitionBy("left_id").orderBy(col("cos").desc, col("right_id").asc)
+    topK(l.crossJoin(r).select(col("left_id"), col("right_id"),
+      Vectors.cosineFromNorms(col("_lv"), col("_rv"), col("_ln"), col("_rn")).as("cos")),
+      k, col("cos").desc)
+  }
+
+  /** The per-`left_id` top-k tail every scored search shares: each left
+    * id's rows numbered by `keys`, ties on `right_id` ascending, as
+    * `rank`, kept while `rank <= k`. */
+  private[graft] def topK(scored: DataFrame, k: Int, keys: Column*): DataFrame = {
+    val w = Window.partitionBy("left_id").orderBy(keys :+ col("right_id").asc: _*)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
@@ -69,11 +83,10 @@ object Similarity {
     val assigned = ranked.filter(col("_rn") <= probes)
       .select(col("left_id"), col("_lv"), col("_ln"), col("bucket"))
     val joined = assigned.join(members, Seq("bucket"))
-    val scored = (if (excludeSelf) joined.filter(col("left_id") =!= col("right_id")) else joined)
+    topK((if (excludeSelf) joined.filter(col("left_id") =!= col("right_id")) else joined)
       .select(col("left_id"), col("bucket"), col("right_id"),
-        (Vectors.dot(col("_lv"), col("_rv")) / (col("_ln") * col("_rn2"))).as("cos"))
-    val w = Window.partitionBy("left_id").orderBy(col("cos").desc, col("right_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+        Vectors.cosineFromNorms(col("_lv"), col("_rv"), col("_ln"), col("_rn2")).as("cos")),
+      k, col("cos").desc)
   }
 
   /** Shared IVF prologue — ONE definition for [[ivfTopK]] and
@@ -94,18 +107,31 @@ object Similarity {
       queries: DataFrame, bucketed: DataFrame): (DataFrame, DataFrame) = {
     val members = bucketed.select(col("bucket"), col("id").as("right_id"),
       col("vec").as("_rv"), Vectors.l2Norm(col("vec")).as("_rn2"))
-    val cents = centroids(members.select(col("bucket"), col("_rv").as("vec")))
-      .withColumn("_cn", Vectors.l2Norm(col("centroid")))
     val q = queries.select(col("id").as("left_id"), col("vec").as("_lv"),
       Vectors.l2Norm(col("vec")).as("_ln"))
       .repartition(queries.sparkSession.sparkContext.defaultParallelism)
-    val assignW = Window.partitionBy("left_id")
-      .orderBy(col("_ccos").desc, col("bucket").asc)
-    val ranked = q.crossJoin(broadcast(cents))
-      .select(col("left_id"), col("_lv"), col("_ln"), col("bucket"),
-        (Vectors.dot(col("_lv"), col("centroid")) / (col("_ln") * col("_cn"))).as("_ccos"))
-      .withColumn("_rn", row_number().over(assignW))
-    (members, ranked)
+    (members, probeRanking(q, "left_id", "_lv",
+      centroids(members.select(col("bucket"), col("_rv").as("vec")))))
+  }
+
+  /** The one centroid probe ranking of the IVF family ([[ivfTopK]],
+    * [[IndexStore.search]], [[IndexStore.assignBuckets]]): every (query,
+    * bucket) pair with `_ccos` the guarded query–centroid cosine, `_qc`
+    * the raw query–centroid dot and `_rn` the bucket's rank for its
+    * query — cosine desc, ties on bucket asc. `q` carries the query id
+    * column `id`, its vector column `vec` and its norm `_ln`, all passed
+    * through; `cents` is (bucket, centroid), one row per bucket, so it
+    * is broadcast. */
+  private[similarity] def probeRanking(q: DataFrame, id: String, vec: String,
+                                       cents: DataFrame): DataFrame = {
+    val c = cents.select(col("bucket"), col("centroid"),
+      Vectors.l2Norm(col("centroid")).as("_cn"))
+    val w = Window.partitionBy(id).orderBy(col("_ccos").desc, col("bucket").asc)
+    q.crossJoin(broadcast(c))
+      .select(q.columns.map(col).toSeq ++ Seq(col("bucket"),
+        Vectors.cosineFromNorms(col(vec), col("centroid"), col("_ln"), col("_cn")).as("_ccos"),
+        Vectors.dot(col(vec), col("centroid")).as("_qc")): _*)
+      .withColumn("_rn", row_number().over(w))
   }
 
   /** Recall@k-vs-probes sweep — the approximation-quality curve for the
@@ -138,7 +164,7 @@ object Similarity {
     // exclusion would understate recall by 1/k per overlapping query.
     val scored = assigned.join(members, Seq("bucket"))
       .select(col("probes"), col("left_id"), col("right_id"),
-        (Vectors.dot(col("_lv"), col("_rv")) / (col("_ln") * col("_rn2"))).as("cos"))
+        Vectors.cosineFromNorms(col("_lv"), col("_rv"), col("_ln"), col("_rn2")).as("cos"))
     val w = Window.partitionBy("probes", "left_id")
       .orderBy(col("cos").desc, col("right_id").asc)
     val ivf = scored.withColumn("rank", row_number().over(w))
@@ -203,11 +229,9 @@ object Similarity {
         Vectors.l2Norm(col("vec")).as(nAs))
     val q = withBucket(queries, "left_id", "_lv", "_ln")
     val c = withBucket(corpus, "right_id", "_rv", "_rn")
-    val scored = q.join(c, Seq("_b"))
-      .select(col("left_id"), col("right_id"),
-        (Vectors.dot(col("_lv"), col("_rv")) / (col("_ln") * col("_rn"))).as("cos"))
-    val w = Window.partitionBy("left_id").orderBy(col("cos").desc, col("right_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(q.join(c, Seq("_b")).select(col("left_id"), col("right_id"),
+      Vectors.cosineFromNorms(col("_lv"), col("_rv"), col("_ln"), col("_rn")).as("cos")),
+      k, col("cos").desc)
   }
 
   /** M13: CSLS hubness-reduced re-rank (reference: kiez hubness
@@ -240,21 +264,32 @@ object Similarity {
     * Output keeps raw `cos` alongside `csls`
     * and re-ranks per left id by csls (tie-break right id). */
   def cslsRerank(candidates: DataFrame, k: Int, scaleK: Int): DataFrame = {
+    val (cand, scaled) = sideScaled(candidates, col("cos").desc, scaleK)(
+      (top, id, _) => top.groupBy(id).agg(avg("cos").as("_s")))
+    val scored = scaled.select(col("left_id"), col("right_id"), col("cos"),
+      (lit(2.0) * col("cos") - col("_sq") - col("_st")).as("csls"))
+    CacheScope.seal(topK(scored, k, col("csls").desc), cand)
+  }
+
+  /** The hubness prologue of [[cslsRerank]], [[nicdmRerank]],
+    * [[localScalingRerank]] and [[dslRerank]]: the candidate stream
+    * `cand` (left_id, right_id, cos), persisted because every subplan
+    * reads it, and the same stream with each endpoint's local scale.
+    * Per side, each id's top-`scaleK` candidates by `key` (ties on the
+    * other side's id) go to `scale(top, id, otherId)`, which reduces
+    * them to one (id, `_s`) row per id; the left scale joins back as
+    * `_sq`, the right one (the reverse view) as `_st`. The caller seals
+    * `cand`. */
+  private def sideScaled(candidates: DataFrame, key: Column, scaleK: Int)(
+      scale: (DataFrame, String, String) => DataFrame): (DataFrame, DataFrame) = {
     val cand = candidates.select("left_id", "right_id", "cos").persist()
-    val wL = Window.partitionBy("left_id").orderBy(col("cos").desc, col("right_id").asc)
-    val wR = Window.partitionBy("right_id").orderBy(col("cos").desc, col("left_id").asc)
-    val rL = cand.withColumn("_r", row_number().over(wL))
-      .filter(col("_r") <= scaleK)
-      .groupBy("left_id").agg(avg("cos").as("_rq"))
-    val rR = cand.withColumn("_r", row_number().over(wR))
-      .filter(col("_r") <= scaleK)
-      .groupBy("right_id").agg(avg("cos").as("_rt"))
-    val scored = cand.join(rL, Seq("left_id")).join(rR, Seq("right_id"))
-      .select(col("left_id"), col("right_id"), col("cos"),
-        (lit(2.0) * col("cos") - col("_rq") - col("_rt")).as("csls"))
-    val w = Window.partitionBy("left_id").orderBy(col("csls").desc, col("right_id").asc)
-    CacheScope.seal(scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k), cand)
+    def side(id: String, other: String, as: String): DataFrame = {
+      val w = Window.partitionBy(id).orderBy(key, col(other).asc)
+      scale(cand.withColumn("_r", row_number().over(w)).filter(col("_r") <= scaleK),
+        id, other).withColumnRenamed("_s", as)
+    }
+    (cand, cand.join(side("left_id", "right_id", "_sq"), Seq("left_id"))
+      .join(side("right_id", "left_id", "_st"), Seq("right_id")))
   }
 
   /** NICDM hubness reduction (non-iterative contextual dissimilarity
@@ -274,27 +309,13 @@ object Similarity {
     * output re-ranks per left id by ascending `nicdm`. */
   def nicdmRerank(candidates: DataFrame, k: Int, scaleK: Int,
                   rankScale: Int = -1): DataFrame = {
-    val cand = candidates.select(col("left_id"), col("right_id"), col("cos"),
-      (lit(1.0) - col("cos")).as("_d")).persist()
-    val wL = Window.partitionBy("left_id").orderBy(col("_d").asc, col("right_id").asc)
-    val wR = Window.partitionBy("right_id").orderBy(col("_d").asc, col("left_id").asc)
-    val muL = cand.withColumn("_r", row_number().over(wL))
-      .filter(col("_r") <= scaleK)
-      .groupBy("left_id").agg(avg("_d").as("_mq"))
-    val muR = cand.withColumn("_r", row_number().over(wR))
-      .filter(col("_r") <= scaleK)
-      .groupBy("right_id").agg(avg("_d").as("_mt"))
-    val scored = cand.join(muL, Seq("left_id")).join(muR, Seq("right_id"))
-      .select(col("left_id"), col("right_id"), col("cos"),
-        when(col("_mq") * col("_mt") <= 0, col("_d"))
-          .otherwise(col("_d") / sqrt(col("_mq") * col("_mt"))).as("nicdm"))
-    val rankKey =
-      if (rankScale >= 0) Num.stableRound(col("nicdm"), rankScale)
-      else col("nicdm")
-    val w = Window.partitionBy("left_id")
-      .orderBy(rankKey.asc, col("right_id").asc)
-    CacheScope.seal(scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k), cand)
+    val d = lit(1.0) - col("cos")
+    val (cand, scaled) = sideScaled(candidates, d.asc, scaleK)(
+      (top, id, _) => top.groupBy(id).agg(avg(d).as("_s")))
+    val scored = scaled.select(col("left_id"), col("right_id"), col("cos"),
+      when(col("_sq") * col("_st") <= 0, d)
+        .otherwise(d / sqrt(col("_sq") * col("_st"))).as("nicdm"))
+    CacheScope.seal(topK(scored, k, Num.rankKey(col("nicdm"), rankScale).asc), cand)
   }
 
   /** Local-scaling hubness reduction (Zelnik-Manor & Perona NIPS 2004 —
@@ -304,7 +325,8 @@ object Similarity {
     *   s'(q,x) = exp(−d(q,x)² / (σ(q) · σ(x))),   d = 1 − cos,
     *
     * σ = the `scaleK`-th smallest candidate distance (NOT the mean —
-    * that's [[nicdmRerank]]); an endpoint with FEWER than `scaleK`
+    * that's [[nicdmRerank]]), i.e. the largest distance among the
+    * top-`scaleK`; an endpoint with FEWER than `scaleK`
     * candidates uses its farthest available one (Zelnik-Manor's usual
     * sparse-neighborhood fallback) — without it, every pair touching a
     * sparse endpoint (an unpopular right id in the reverse view, or
@@ -314,33 +336,16 @@ object Similarity {
     * Output re-ranks per left id by descending `ls`. */
   def localScalingRerank(candidates: DataFrame, k: Int, scaleK: Int,
                          rankScale: Int = -1): DataFrame = {
-    val cand = candidates.select(col("left_id"), col("right_id"), col("cos"),
-      (lit(1.0) - col("cos")).as("_d")).persist()
-    val wL = Window.partitionBy("left_id").orderBy(col("_d").asc, col("right_id").asc)
-    val wR = Window.partitionBy("right_id").orderBy(col("_d").asc, col("left_id").asc)
-    val sigL = cand.withColumn("_r", row_number().over(wL))
-      .withColumn("_n", count(lit(1)).over(Window.partitionBy("left_id")))
-      .filter(col("_r") === least(lit(scaleK), col("_n")))
-      .select(col("left_id"), col("_d").as("_sq"))
-    val sigR = cand.withColumn("_r", row_number().over(wR))
-      .withColumn("_n", count(lit(1)).over(Window.partitionBy("right_id")))
-      .filter(col("_r") === least(lit(scaleK), col("_n")))
-      .select(col("right_id"), col("_d").as("_st"))
-    // inner joins now always find a σ row: every endpoint has ≥ 1
-    // candidate by construction, and the least(scaleK, n) rank picks the
-    // farthest available when the neighborhood is sparse
-    val scored = cand.join(sigL, Seq("left_id")).join(sigR, Seq("right_id"))
-      .select(col("left_id"), col("right_id"), col("cos"),
-        when(col("_sq") * col("_st") <= 0,
-          when(col("_d") <= 0, lit(1.0)).otherwise(lit(0.0)))
-          .otherwise(exp(-(col("_d") * col("_d")) / (col("_sq") * col("_st"))))
-          .as("ls"))
-    val rankKey =
-      if (rankScale >= 0) Num.stableRound(col("ls"), rankScale) else col("ls")
-    val w = Window.partitionBy("left_id")
-      .orderBy(rankKey.desc, col("right_id").asc)
-    CacheScope.seal(scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k), cand)
+    val d = lit(1.0) - col("cos")
+    // the inner joins always find a σ row: every endpoint has ≥ 1
+    // candidate, and the max over its top-scaleK is the farthest
+    // available when the neighborhood is sparse
+    val (cand, scaled) = sideScaled(candidates, d.asc, scaleK)(
+      (top, id, _) => top.groupBy(id).agg(max(d).as("_s")))
+    val scored = scaled.select(col("left_id"), col("right_id"), col("cos"),
+      when(col("_sq") * col("_st") <= 0, when(d <= 0, lit(1.0)).otherwise(lit(0.0)))
+        .otherwise(exp(-(d * d) / (col("_sq") * col("_st")))).as("ls"))
+    CacheScope.seal(topK(scored, k, Num.rankKey(col("ls"), rankScale).desc), cand)
   }
 
   /** Empiric mutual proximity (Schnitzer et al. JMLR 2012 — kiez's "mp"
@@ -361,7 +366,7 @@ object Similarity {
     * MP is a product of two small rationals, so EXACT ties between pairs
     * are common (3/10·1 = 1/2·6/10); the floating-point product only
     * breaks them by ulp noise, which depends on operation order. With
-    * `rankScale >= 0` the order key is `mp` rounded to that many decimals
+    * a non-negative `rankScale` the order key is `mp` rounded to that many decimals
     * (the [[nicdmRerank]] knob), so an exact tie falls through to cos as
     * documented instead of to the last ulp. */
   def mutualProximityRerank(candidates: DataFrame, k: Int,
@@ -378,12 +383,8 @@ object Similarity {
           count(lit(1)).over(Window.partitionBy("right_id")))
       .select(col("left_id"), col("right_id"), col("cos"),
         (col("_fq") * col("_ft")).as("mp"))
-    val rankKey =
-      if (rankScale >= 0) Num.stableRound(col("mp"), rankScale) else col("mp")
-    val w = Window.partitionBy("left_id")
-      .orderBy(rankKey.desc, col("cos").desc, col("right_id").asc)
-    CacheScope.seal(scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k), cand)
+    CacheScope.seal(
+      topK(scored, k, Num.rankKey(col("mp"), rankScale).desc, col("cos").desc), cand)
   }
 
   /** DisSimLocal hubness reduction (Hara et al. AAAI 2016 — kiez's
@@ -417,35 +418,19 @@ object Similarity {
                 k: Int, scaleK: Int, rankScale: Int = -1): DataFrame = {
     val lv = left.select(col("id").as("left_id"), col("vec").as("_qv"))
     val rv = right.select(col("id").as("right_id"), col("vec").as("_xv"))
-    val cand = candidates.select("left_id", "right_id", "cos").persist()
-    val wL = Window.partitionBy("left_id").orderBy(col("cos").desc, col("right_id").asc)
-    val wR = Window.partitionBy("right_id").orderBy(col("cos").desc, col("left_id").asc)
-    val selfL = cand.withColumn("_r", row_number().over(wL))
-      .filter(col("_r") <= scaleK)
-      .join(rv, Seq("right_id"))
-      .groupBy("left_id").agg(collect_list(col("_xv")).as("_vs"))
-      .join(lv, Seq("left_id"))
-      .select(col("left_id"),
-        Vectors.sqDist(col("_qv"), Vectors.meanVec(col("_vs"))).as("_sq"))
-    val selfR = cand.withColumn("_r", row_number().over(wR))
-      .filter(col("_r") <= scaleK)
-      .join(lv, Seq("left_id"))
-      .groupBy("right_id").agg(collect_list(col("_qv")).as("_vs"))
-      .join(rv, Seq("right_id"))
-      .select(col("right_id"),
-        Vectors.sqDist(col("_xv"), Vectors.meanVec(col("_vs"))).as("_st"))
-    val scored = cand
-      .join(lv, Seq("left_id")).join(rv, Seq("right_id"))
-      .join(selfL, Seq("left_id")).join(selfR, Seq("right_id"))
+    // self-term: squared distance to the mean of the top-scaleK
+    // neighbors' vectors, which come from the other side
+    val (cand, scaled) = sideScaled(candidates, col("cos").desc, scaleK) { (top, id, other) =>
+      val ((own, v), (far, fv)) =
+        if (id == "left_id") ((lv, "_qv"), (rv, "_xv")) else ((rv, "_xv"), (lv, "_qv"))
+      top.join(far, Seq(other)).groupBy(id).agg(collect_list(col(fv)).as("_vs"))
+        .join(own, Seq(id))
+        .select(col(id), Vectors.sqDist(col(v), Vectors.meanVec(col("_vs"))).as("_s"))
+    }
+    val scored = scaled.join(lv, Seq("left_id")).join(rv, Seq("right_id"))
       .select(col("left_id"), col("right_id"), col("cos"),
-        (Vectors.sqDist(col("_qv"), col("_xv")) - col("_sq") - col("_st"))
-          .as("dsl"))
-    val rankKey =
-      if (rankScale >= 0) Num.stableRound(col("dsl"), rankScale) else col("dsl")
-    val w = Window.partitionBy("left_id")
-      .orderBy(rankKey.asc, col("right_id").asc)
-    CacheScope.seal(scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k), cand)
+        (Vectors.sqDist(col("_qv"), col("_xv")) - col("_sq") - col("_st")).as("dsl"))
+    CacheScope.seal(topK(scored, k, Num.rankKey(col("dsl"), rankScale).asc), cand)
   }
 
   /** Named hubness-reduction method over a (left_id, right_id, cos)
@@ -509,18 +494,25 @@ object Similarity {
   def bucketedNearDup(
       df: DataFrame, threshold: Double,
       numPlanes: Int = 6, planeDims: Int = 16): DataFrame = {
-    val withBucket = df.select(col("id"), col("vec"),
+    pairsWithin(df.select(col("id"), col("vec"),
       hyperplaneBucket(slice(col("vec"), 1, planeDims), numPlanes, planeDims).as("_b"),
-      Vectors.l2Norm(col("vec")).as("_n"))
-    val a = withBucket.select(col("_b"), col("id").as("id_a"),
-      col("vec").as("_va"), col("_n").as("_na"))
-    val b = withBucket.select(col("_b"), col("id").as("id_b"),
-      col("vec").as("_vb"), col("_n").as("_nb"))
-    a.join(b, Seq("_b")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (Vectors.dot(col("_va"), col("_vb")) / (col("_na") * col("_nb"))).as("cos"))
-      .filter(col("cos") >= threshold)
+      Vectors.l2Norm(col("vec")).as("_n")), "_b", threshold)
   }
+
+  /** (id_a < id_b, cos) pairs with cos ≥ threshold among the rows of
+    * `keyed` (key, id, vec, `_n` = ‖vec‖₂) that share `key`. */
+  private def pairsWithin(keyed: DataFrame, key: String, threshold: Double): DataFrame = {
+    def side(s: String) = keyed.select(col(key), col("id").as(s"id_$s"),
+      col("vec").as(s"_v$s"), col("_n").as(s"_n$s"))
+    nearDupCos(side("a").join(side("b"), Seq(key)).filter(col("id_a") < col("id_b")),
+      threshold)
+  }
+
+  /** Scores (id_a, _va, _na) × (id_b, _vb, _nb) pairs and keeps cos ≥ threshold. */
+  private def nearDupCos(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.select(col("id_a"), col("id_b"),
+        Vectors.cosineFromNorms(col("_va"), col("_vb"), col("_na"), col("_nb")).as("cos"))
+      .filter(col("cos") >= threshold)
 
   /** SemDeDup-style semantic near-duplicate pairs (Abbas et al. 2023,
     * "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -547,14 +539,7 @@ object Similarity {
           .filter(col("_c") > maxClusterSize).select("cluster")
         base.join(hot, Seq("cluster"), "left_anti")
       }
-    val a = pruned.select(col("cluster"), col("id").as("id_a"),
-      col("vec").as("_va"), col("_n").as("_na"))
-    val b = pruned.select(col("cluster"), col("id").as("id_b"),
-      col("vec").as("_vb"), col("_n").as("_nb"))
-    a.join(b, Seq("cluster")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (Vectors.dot(col("_va"), col("_vb")) / (col("_na") * col("_nb"))).as("cos"))
-      .filter(col("cos") >= threshold)
+    pairsWithin(pruned, "cluster", threshold)
   }
 
   /** All pairs (a < b) with cosine ≥ threshold — exact O(n²) self-join;
@@ -565,10 +550,7 @@ object Similarity {
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
     val b = df.select(col("id").as("id_b"), col("vec").as("_vb"),
       Vectors.l2Norm(col("vec")).as("_nb"))
-    a.join(b, col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (Vectors.dot(col("_va"), col("_vb")) / (col("_na") * col("_nb"))).as("cos"))
-      .filter(col("cos") >= threshold)
+    nearDupCos(a.join(b, col("id_a") < col("id_b")), threshold)
   }
 
   /** Embedding-space benchmark decontamination — the semantic sibling of
@@ -598,8 +580,7 @@ object Similarity {
         Vectors.l2Norm(col("vec")).as("_na"))
       .crossJoin(broadcast(b))
       .select(col("id"), col("_bid"),
-        (Vectors.dot(col("_va"), col("_vb")) / (col("_na") * col("_nb")))
-          .as("_cos"))
+        Vectors.cosineFromNorms(col("_va"), col("_vb"), col("_na"), col("_nb")).as("_cos"))
       .groupBy("id")
       .agg(max(struct(col("_cos").as("c"), (-col("_bid")).as("nb"))).as("_m"))
       .select(col("id"),
@@ -619,70 +600,22 @@ object Similarity {
     * lookups; no full-vector corpus reads anywhere.
     *
     * `bucketed`: (bucket, id, vec) — any bucketing (label column,
-    * KMeans via [[graft.blockers.AnnStrategy.Ivf]], …). Codes are
-    * computed here from the same md5 codebook family as [[pqEncode]]. */
+    * KMeans via [[graft.blockers.AnnStrategy.Ivf]], …). There is one
+    * IVF-PQ path: this call is [[IndexStore.buildIvfPq]] over its own
+    * members followed by [[IndexStore.search]], the same two steps a
+    * persisted index splits across jobs. */
   def ivfPqTopK(queries: DataFrame, bucketed: DataFrame, k: Int, dims: Int = 64,
                 subspaces: Int = 8, codebookSize: Int = 16,
                 probes: Int = 1, rankScale: Int = -1,
                 residual: Boolean = false): DataFrame = {
-    val w = dims / subspaces
-    val spark = queries.sparkSession
-    import spark.implicits._
-    // persist: feeds the centroid aggregate AND the code encode
+    // persist: feeds the centroid aggregate AND the code encode; the
+    // top-k is output-sized, so it is materialized and the member cache
+    // released (CacheScope contract — the persist must not outlive the call)
     val members = bucketed.select(col("bucket"), col("id"), col("vec")).persist()
-    val cents = centroids(members.select(col("bucket"), col("vec")))
-      .withColumn("_cn", Vectors.l2Norm(col("centroid")))
-    val q = queries.select(col("id").as("left_id"), col("vec"),
-      Vectors.l2Norm(col("vec")).as("_ln"))
-      .repartition(spark.sparkContext.defaultParallelism)
-    val assignW = Window.partitionBy("left_id")
-      .orderBy(col("_ccos").desc, col("bucket").asc)
-    val assigned = q.crossJoin(broadcast(cents))
-      .select(col("left_id"), col("vec"), col("bucket"),
-        // zero-norm guard: a degenerate (e.g. symmetric) bucket has a
-        // zero centroid — rank it at cosine 0 instead of ANSI-throwing
-        when(col("_ln") * col("_cn") === 0, lit(0.0))
-          .otherwise(Vectors.dot(col("vec"), col("centroid")) / (col("_ln") * col("_cn")))
-          .as("_ccos"),
-        Vectors.dot(col("vec"), col("centroid")).as("_qc"))
-      .withColumn("_rn", row_number().over(assignW))
-      .filter(col("_rn") <= probes)
-      .select(col("left_id"), col("vec"), col("bucket"), col("_qc"))
-    import org.apache.spark.sql.graft.PqOps
-    val book = pqCodebook(subspaces, codebookSize, w)
-    // residual mode (the production IVF-PQ layout, Jégou et al. §IV-A):
-    // quantize r = v − centroid(bucket) instead of v, and reconstruct
-    // the score as ⟨q, c⟩ + ADC(q, r̂) — residual magnitudes are smaller
-    // than raw vectors, so the same codebook budget spends its
-    // resolution on the part the coarse quantizer missed. The centroid
-    // table is per-bucket tiny → broadcast; the encode stays row-local.
-    val codeInput =
-      if (residual)
-        members.join(broadcast(cents.select(col("bucket"), col("centroid"))), Seq("bucket"))
-          .select(col("id"),
-            zip_with(col("vec"), col("centroid"), (a, b) => a - b).as("vec"))
-      else members.select(col("id"), col("vec"))
-    val codes = pqEncode(codeInput, dims, subspaces, codebookSize)
-      .join(members.select(col("id"), col("bucket")), Seq("id"))
-      .select(col("bucket"), col("id").as("right_id"), col("codes"))
-    // probed-bucket equi-join on the compressed codes + 8-lookup ADC
-    // kernel per surviving pair — the IVF scoping is what bounds pairs
-    val lut = assigned.select(col("left_id"), col("bucket"), col("_qc"),
-      PqOps.pqLut(col("vec"), book).as("_lut"))
-    val adcExpr = PqOps.pqAdc(col("_lut"), col("codes"), codebookSize)
-    val scored = lut.join(codes, Seq("bucket"))
-      .select(col("left_id"), col("right_id"),
-        (if (residual) col("_qc") + adcExpr else adcExpr).as("adc"))
-    val rankKey = if (rankScale >= 0) Num.stableRound(col("adc"), rankScale) else col("adc")
-    val win = Window.partitionBy("left_id").orderBy(rankKey.desc, col("right_id").asc)
-    // top-k is output-sized: materialize it and release the member cache
-    // (CacheScope contract — the persist must not outlive the call)
-    CacheScope.seal(
-      scored.withColumn("rank", row_number().over(win)).filter(col("rank") <= k),
-      members)
+    CacheScope.seal(IndexStore.search(queries,
+      IndexStore.buildIvfPq(members, dims, subspaces, codebookSize, residual),
+      k, probes, rankScale), members)
   }
-
-
 
   /** Deterministic pseudo-random PQ codebook component (same md5 family
     * as [[planeComponent]], namespaced): value ∈ [-1, 1]. */
@@ -748,11 +681,6 @@ object Similarity {
     val scored = lut.crossJoin(broadcast(codes.select(col("id").as("right_id"), col("codes"))))
       .select(col("left_id"), col("right_id"),
         PqOps.pqAdc(col("_lut"), col("codes"), codebookSize).as("adc"))
-    // rankScale >= 0: rank on the ROUNDED score — summation order
-    // differs between engines, so raw doubles differ by ±ulp; rounding
-    // + the right_id tie-break pins the ranking for oracle comparison
-    val rankKey = if (rankScale >= 0) Num.stableRound(col("adc"), rankScale) else col("adc")
-    val win = Window.partitionBy("left_id").orderBy(rankKey.desc, col("right_id").asc)
-    scored.withColumn("rank", row_number().over(win)).filter(col("rank") <= k)
+    topK(scored, k, Num.rankKey(col("adc"), rankScale).desc)
   }
 }

@@ -69,11 +69,11 @@ object AnnServing {
     }.toIndexedSeq: _*)
     val ln = Vectors.l2Norm(col("vec"))
     // rank buckets row-locally: struct sort on (negcos, bucket) — cos
-    // desc with bucket-asc ties, the batch path's exact ordering
+    // desc with bucket-asc ties, the batch path's exact ordering (a
+    // zero-norm -0.0 sorts equal to 0.0)
     val ranked = array_sort(transform(centsLit, c => struct(
-      when(ln * c.getField("cn") === 0, lit(0.0))
-        .otherwise(-(Vectors.dot(col("vec"), c.getField("cvec")) /
-          (ln * c.getField("cn")))).as("negcos"),
+      (-Vectors.cosineFromNorms(col("vec"), c.getField("cvec"), ln, c.getField("cn")))
+        .as("negcos"),
       c.getField("bucket").as("bucket"),
       Vectors.dot(col("vec"), c.getField("cvec")).as("qc"))))
     val book = Similarity.pqCodebook(
@@ -91,8 +91,7 @@ object AnnServing {
         col("_p.bucket").as("bucket"), col("_p.qc").as("_qc"))
     val adcExpr = PqOps.pqAdc(col("_lut"), col("codes"), index.codebookSize)
     val adc = (if (index.residual) col("_qc") + adcExpr else adcExpr).as("adc")
-    val rankKey =
-      (if (rankScale >= 0) Num.stableRound(adc, rankScale) else adc).as("rankKey")
+    val rankKey = Num.rankKey(adc, rankScale).as("rankKey")
     val cands = lut
       .join(index.codes.select(col("bucket"),
         col("right_id").cast("long").as("rightId"), col("codes")), Seq("bucket"))

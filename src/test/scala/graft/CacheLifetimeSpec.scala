@@ -116,6 +116,9 @@ class CacheLifetimeSpec extends SparkSpec {
     "Similarity.localScalingRerank" -> (() => Similarity.localScalingRerank(cand, 2, 2)),
     "Similarity.mutualProximityRerank" -> (() => Similarity.mutualProximityRerank(cand, 2)),
     "Similarity.dslRerank" -> (() => Similarity.dslRerank(cand, lvec, rvec, 2, 2)),
+    "Similarity.ivfPqTopK" -> (() => Similarity.ivfPqTopK(lvec,
+      rvec.withColumn("bucket", ($"id" < "r3").cast("int")),
+      2, dims = 2, subspaces = 1, codebookSize = 4, probes = 2)),
     "HashTokenEncoder (sif)" ->
       (() => HashTokenEncoder(dims = 4, sif = true).encode(text, None)),
     "TableTokenEncoder (sif)" ->

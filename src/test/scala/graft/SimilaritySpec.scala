@@ -84,6 +84,43 @@ class SimilaritySpec extends SparkSpec {
     assert(got(12L) == ((1L, true)))
   }
 
+  test("a zero vector scores cosine 0.0 in every cosine operator instead of throwing") {
+    // ANSI mode raises DIVIDE_BY_ZERO on x / 0.0; the zero vector 0 and
+    // its single-member bucket (a zero centroid) hit every norm divide.
+    // a and -a guarantee 0 shares a sign-LSH bucket with some vector.
+    val vecs = Seq(0L -> Seq(0.0, 0.0), 1L -> Seq(1.0, 0.0), 2L -> Seq(-1.0, 0.0),
+      3L -> Seq(0.6, 0.8)).toDF("id", "vec")
+    val bucketed = vecs.select(col("id").as("bucket"), col("id"), col("vec"))
+    val clustered = vecs.select(lit(1).as("cluster"), col("id"), col("vec"))
+    val pairs = Seq("left_id", "right_id")
+    val near = Seq("id_a", "id_b")
+    // (operator, output, id columns; a row naming id 0 must have cos 0.0)
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame, Seq[String])] = Seq(
+      ("topKCosine", () => Similarity.topKCosine(vecs, vecs, 4), pairs),
+      ("ivfTopK", () => Similarity.ivfTopK(vecs, bucketed, 4, excludeSelf = false,
+        probes = 4), pairs),
+      ("lshTopK", () => Similarity.lshTopK(vecs, vecs, 4, numPlanes = 1, planeDims = 2),
+        pairs),
+      ("bucketedNearDup", () => Similarity.bucketedNearDup(vecs, -1.0, numPlanes = 1,
+        planeDims = 2), near),
+      ("clusterNearDup", () => Similarity.clusterNearDup(clustered, -1.0), near),
+      ("selfJoinNearDup", () => Similarity.selfJoinNearDup(vecs, -1.0), near),
+      ("embeddingDecontam", () => Similarity.embeddingDecontam(vecs, vecs, 0.5),
+        Seq("id")))
+    val bad = cases.flatMap { case (name, run, ids) =>
+      scala.util.Try(run().filter(ids.map(c => col(c) === 0L).reduce(_ || _))
+          .select("cos").collect().map(_.getDouble(0)).toSeq) match {
+        case scala.util.Success(zero) if zero.nonEmpty && zero.forall(_ == 0.0) => None
+        case other => Some(s"$name: $other")
+      }
+    }
+    // the IVF curve ranks like its brute baseline, zero vector included
+    val curve = scala.util.Try(Similarity.ivfRecallCurve(vecs, bucketed, 2, Seq(1, 4))
+      .collect().map(r => r.getInt(0) -> r.getDouble(2)).toMap)
+    assert(bad.isEmpty && curve.map(_(4)).toOption.contains(1.0),
+      (bad :+ s"ivfRecallCurve: $curve").mkString("\n"))
+  }
+
   test("topKCosine: exact ranking on a hand vector set") {
     val l = Seq(("q", Seq(1.0f, 0.0f))).toDF("id", "vec")
     val r = Seq(
